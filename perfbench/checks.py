@@ -27,7 +27,23 @@ import time
 
 import pyarrow.parquet as pq
 
-from corpus import write_atomic_json
+from corpus import source_hash, write_atomic_json
+
+# Sources the cached expected outputs are computed with (see
+# corpus.source_hash). The oracle crawl calls the engine's pure functions
+# for URL canonicalization, extraction, politeness budgets and robots
+# rules. The feeds contract check calls extraction and canonicalization
+# only: it is independent of plans/feeds by design, so a change there must
+# not change what it expects.
+_EXTRACT = ("opps_feedcrawler_spark/functions/extract.py", "opps_feedcrawler_spark/schemas.py")
+_URLNORM = ("opps_feedcrawler_spark/functions/urlnorm.py",)
+ORACLE_SOURCES = _URLNORM + _EXTRACT + (
+    "opps_feedcrawler_spark/operators/politeness.py",
+    "opps_feedcrawler_spark/operators/robots.py",
+    "tests/oracle_crawler.py",
+    "perfbench/checks.py",
+)
+FEEDS_SOURCES = _URLNORM + _EXTRACT + ("perfbench/checks.py",)
 
 
 def _sha(lines) -> str:
@@ -50,7 +66,10 @@ def crawl_digest(order: list[str], seen, texts: dict[str, str]) -> dict:
 def oracle_file(rounds: int) -> str:
     from opps_feedcrawler_spark.operators.politeness import BUDGET_BASE, MAX_BUDGET
 
-    return f"oracle-crawl-b{BUDGET_BASE:g}-m{MAX_BUDGET}-r{rounds}.json"
+    return (
+        f"oracle-crawl-b{BUDGET_BASE:g}-m{MAX_BUDGET}-r{rounds}"
+        f"-{source_hash(ORACLE_SOURCES)}.json"
+    )
 
 
 def _extract_chunk(chunk):
@@ -180,13 +199,18 @@ def _entry_line(feed_id, slug, group, guid, title, link, ts, summary, pos) -> st
     )
 
 
+def feeds_file() -> str:
+    return f"expected-feeds-{source_hash(FEEDS_SOURCES)}.json"
+
+
 def expected_feeds(meta: dict, pages_pdf) -> dict:
     """Per registry variant: the digest and counts of the published entries
-    a correct ``process_feeds`` pass must return. Cached per corpus."""
+    a correct ``process_feeds`` pass must return. Cached per corpus and
+    ``FEEDS_SOURCES``."""
     from opps_feedcrawler_spark.functions.extract import extract_entries_py
     from opps_feedcrawler_spark.functions.urlnorm import canonicalize_url
 
-    path = os.path.join(meta["dir"], "expected-feeds.json")
+    path = os.path.join(meta["dir"], feeds_file())
     if os.path.exists(path):
         with open(path) as f:
             return json.load(f)

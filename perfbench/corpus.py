@@ -41,6 +41,24 @@ ROBOTS_SCHEMA = (
 
 GENERATOR_VERSION = 3
 
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# Engine sources each cached derivative is computed with. Their content is
+# part of the derivative's cache key, so a change to any of them regenerates
+# it instead of feeding the engine inputs (or checking it against digests)
+# made by the old code.
+PREPARED_SOURCES = ("opps_feedcrawler_spark/functions/urlnorm.py",)
+
+
+def source_hash(paths) -> str:
+    """Digest of the named files (relative to the repository root)."""
+    h = hashlib.sha256()
+    for rel in paths:
+        h.update(rel.encode())
+        with open(os.path.join(ROOT, rel), "rb") as f:
+            h.update(hashlib.sha256(f.read()).digest())
+    return h.hexdigest()[:12]
+
 
 def cache_key(profile: dict, seed: int) -> str:
     """Identity of one generated corpus: generator version, the corpus
@@ -294,7 +312,6 @@ def ensure_raw(cache_dir: str, profile: dict, seed: int, nfiles: int) -> dict:
         "key": key,
         "dir": cdir,
         "raw": raw,
-        "prepared": os.path.join(cdir, "prepared"),
         "pages": n,
         "html_bytes": sum(len(h) for h in c["html"]),
         "seeds": c["seeds"],
@@ -314,7 +331,9 @@ def read_raw(meta: dict):
 
 def ensure_prepared(meta: dict, nfiles: int) -> None:
     """The prepared corpus, cached: ``prepare_pages``' output contract,
-    one (url_norm, html) row per canonical URL, as zstd Parquet.
+    one (url_norm, html) row per canonical URL, as zstd Parquet. Its
+    directory, keyed by the hash of ``PREPARED_SOURCES``, is set as
+    ``meta["prepared"]``.
 
     It is computed here with the engine's own ``canonicalize_url`` rather
     than by a Spark job. The generator gives every page a distinct
@@ -327,6 +346,9 @@ def ensure_prepared(meta: dict, nfiles: int) -> None:
 
     from opps_feedcrawler_spark.functions.urlnorm import canonicalize_url
 
+    meta["prepared"] = os.path.join(
+        meta["dir"], f"prepared-{source_hash(PREPARED_SOURCES)}"
+    )
     done = os.path.join(meta["prepared"], "_SUCCESS")
     if os.path.exists(done):
         return

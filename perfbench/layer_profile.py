@@ -5,7 +5,7 @@
 
 Runs the workload twice on the same seed, untraced and traced, and writes
 perfbench/profiles/<workload>.json with the traced run's per-layer metrics,
-the share of the layer time each layer group takes, the attributed share of
+the share of the layer time each layer group takes, the attributed shares of
 task time and the tracing overhead (traced over untraced first-operation
 time, minus one).
 """
@@ -70,10 +70,13 @@ def main() -> None:
         "op_s_traced": op_traced,
         "tracing_overhead": op_traced / op_plain - 1,
         "attributed_ratio": layers["round.attributed_ratio"],
+        "materialize_task_share": layers["round.materialize_task_share"],
+        "span_task_share": layers["round.span_task_share"],
         "shares": {
-            "note": "share of the summed layer seconds (staged replay for "
-                    "the layers inside materialize, traced round for the "
-                    "sinks and checkpoint calls)",
+            "note": "share of the summed layer seconds of one round: the "
+                    "staged replay for the layers inside materialize, the "
+                    "committed round it was reconciled with for the sinks "
+                    "and checkpoint calls",
             "parse_side": parse / total if total else 0.0,
             "fixed_cost": fixed / total if total else 0.0,
             "stages_per_1k_pages": layers["round.stages"]
@@ -83,6 +86,8 @@ def main() -> None:
         "replay": traced["detail"]["replay"],
         "ops_untraced": plain["detail"]["ops"],
         "ops_traced": traced["detail"]["ops"],
+        "extra_ops_traced": traced["detail"]["extra_ops"],
+        "ref_op": traced["detail"]["ref_op"],
     }
     os.makedirs(os.path.join(HERE, "profiles"), exist_ok=True)
     path = os.path.join(HERE, "profiles", f"{args.workload}.json")

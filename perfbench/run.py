@@ -33,7 +33,6 @@ BASE_PROFILES = {
     # every timed round is round 0 of a new warehouse and schedules ~15.4k
     # pages, so parse, fetch and link canonicalization dominate.
     "crawl_head": {
-        "kind": "crawl",
         "corpus_hosts": 2000,
         "corpus_pages": 17000,
         "corpus_seeds": 16000,
@@ -49,7 +48,6 @@ BASE_PROFILES = {
     # round 0 is the warmup and the timed round 1 schedules ~1k pages
     # against a frontier over 5x larger, so per-round fixed cost dominates.
     "crawl_tail": {
-        "kind": "crawl",
         "corpus_hosts": 800,
         "corpus_pages": 10000,
         "corpus_seeds": 5000,
@@ -64,27 +62,15 @@ BASE_PROFILES = {
         "min_ops": 1,
         "max_ops": 2,
     },
-    # process_feeds passes over every RSS/Atom page of crawl_head's corpus,
-    # cycling through registry variants with mixed processor, max_entries
-    # and publish values. Not listed in BENCHMARK.json (the run budget fits
-    # two workloads); crawl_head's traced run makes one pass per variant.
-    "feeds_pass": {
-        "kind": "feeds",
-        "corpus_hosts": 2000,
-        "corpus_pages": 17000,
-        "corpus_seeds": 16000,
-        "corpus_links": [2, 6],
-        "corpus_registries": 4,
-        "budget_base": 10000,
-        "max_budget": 100000,
-        "min_ops": 10,
-        "max_ops": 40,
-    },
 }
 
-FEED_OPS = 1000  # span index of the first feeds pass in a traced crawl run
+# crawl_head's traced run makes one process_feeds pass per registry variant,
+# up to FEED_PASSES, over the same corpus; FEED_OPS is the first's span index.
+FEED_OPS = 1000
 FEED_PASSES = 3
-COMPACT_SEEN_EVERY = 2
+# run_crawl compacts after round r when r > 0 and (r + 1) % k == 0: with
+# k = 1 every round after round 0, timed or traced, pays compaction
+COMPACT_SEEN_EVERY = 1
 VACUUM_KEEP = 1
 BYTES_PER_PAGE = 4 * 1100  # raw + prepared copy + snapshot text, with slack
 
@@ -216,6 +202,10 @@ class CrawlWorkload:
         snap = self.log.read_snapshot(r)
         m = snap["metrics"]
         written = sum(f["bytes"] for t in snap["tables"].values() for f in t["files"])
+        counts = {c: m[c] for c in (
+            "schedule_rows", "fetched_ok", "text_rows", "seen_delta_rows",
+            "bloom_rows", "frontier_rows",
+        )}
         base = os.path.join(self.log.data_dir, f"seen_base={r}")
         if os.path.isdir(base):
             written += _dir_bytes(base)
@@ -227,38 +217,25 @@ class CrawlWorkload:
         return {
             "round": r, "s": dt, "ok": ok, "pages": m["schedule_rows"], "urls": urls,
             "entries": m["entries_rows"], "bytes": written,
-            "frontier": m["frontier_rows"], "tables": {
+            "frontier": m["frontier_rows"], "counts": counts, "tables": {
                 t: sum(f["bytes"] for f in v["files"]) for t, v in snap["tables"].items()
             },
         }
 
 
-class FeedsWorkload:
-    def __init__(self, spark, profile: dict, meta: dict, expected: dict, run_dir: str):
+class FeedsPasses:
+    """Traced ``register_feeds`` + ``process_feeds`` passes, one registry
+    variant per pass, each output written as zstd Parquet and checked."""
+
+    def __init__(self, spark, meta: dict, expected: dict, pages, tracer, run_dir: str):
         from opps_feedcrawler_spark.plans.feeds import FEEDS_SCHEMA
 
-        self.spark, self.profile, self.run_dir = spark, profile, run_dir
+        self.pages, self.tracer, self.run_dir = pages, tracer, run_dir
         self.expected = expected["variants"]
         self.registries = [
             spark.createDataFrame(_registry_rows(reg), FEEDS_SCHEMA)
             for reg in meta["registries"]
         ]
-        self.pages = None
-        self.done = False
-        self.tracer = None
-
-    def warmup(self, warm_meta: dict) -> None:
-        from opps_feedcrawler_spark.plans.feeds import (
-            FEEDS_SCHEMA, process_feeds, register_feeds,
-        )
-
-        out = os.path.join(self.run_dir, "warmup")
-        reg = self.spark.createDataFrame(_registry_rows(warm_meta["registries"][0]), FEEDS_SCHEMA)
-        pages = self.spark.read.parquet(warm_meta["prepared"])
-        process_feeds(register_feeds(reg), pages).write.mode("overwrite").option(
-            "compression", "zstd"
-        ).parquet(out)
-        shutil.rmtree(out, ignore_errors=True)
 
     def op(self, k: int) -> dict:
         from checks import engine_feeds_digest
@@ -267,20 +244,14 @@ class FeedsWorkload:
         v = k % len(self.registries)
         out = os.path.join(self.run_dir, f"feeds-{k}")
         t0 = time.monotonic()
-        if self.tracer is None:
-            registered = register_feeds(self.registries[v])
+        with self.tracer.span("feeds.register"):
+            registered = register_feeds(self.registries[v]).cache()
+            registered.count()
+        with self.tracer.span("feeds.process"):
             process_feeds(registered, self.pages).write.mode("overwrite").option(
                 "compression", "zstd"
             ).parquet(out)
-        else:
-            with self.tracer.span("feeds.register"):
-                registered = register_feeds(self.registries[v]).cache()
-                registered.count()
-            with self.tracer.span("feeds.process"):
-                process_feeds(registered, self.pages).write.mode("overwrite").option(
-                    "compression", "zstd"
-                ).parquet(out)
-            registered.unpersist()
+        registered.unpersist()
         dt = time.monotonic() - t0
         exp = self.expected[v]
         digest, n = engine_feeds_digest(out)
@@ -288,9 +259,7 @@ class FeedsWorkload:
         shutil.rmtree(out, ignore_errors=True)
         return {
             "variant": v, "s": dt, "ok": digest == exp["digest"],
-            "pages": exp["fetched"], "entries": n,
-            "urls": exp["registered"] + exp["fetched"] + n, "bytes": written,
-            "entries_raw": exp["entries_raw"],
+            "entries": n, "bytes": written, "entries_raw": exp["entries_raw"],
         }
 
 
@@ -298,6 +267,23 @@ def _registry_rows(registry: list[dict]) -> list[tuple]:
     cols = ("feed_id", "title", "slug", "source_url", "group_name", "processor",
             "max_entries", "publish")
     return [tuple(r[c] for c in cols) for r in registry]
+
+
+def _attempt(wl, k: int) -> dict:
+    """Operation k, timed and checked; one that raises counts as failed
+    and ends the run's operations."""
+    t0 = time.time()
+    try:
+        res = wl.op(k)
+    except Exception as e:
+        traceback.print_exc()
+        print(f"perfbench: operation {k} failed: {e!r}", file=sys.stderr)
+        res = {"s": 0.0, "ok": False, "pages": 0, "urls": 0,
+               "entries": 0, "bytes": 0, "error": repr(e)}
+        wl.done = True
+    res["op"] = k
+    res["window"] = (t0, time.time())
+    return res
 
 
 # -- main ------------------------------------------------------------------------
@@ -332,6 +318,7 @@ def main() -> int:
     run_dir = os.path.join(CACHE, "runs", f"{args.workload}-{os.getpid()}")
     shutil.rmtree(run_dir, ignore_errors=True)
     os.makedirs(run_dir)
+    fresh = profile["fresh_each_op"]
 
     probe_pre = sysprobe.hardware_probe(nproc)
 
@@ -343,23 +330,18 @@ def main() -> int:
     for m in (meta, warm_meta):
         corpus.ensure_prepared(m, nfiles=nproc)
     pages_pdf = None
-    if profile["kind"] == "crawl":
-        # crawl_tail's timed rounds follow its round-0 warmup
-        tag_rounds = 1 if profile["fresh_each_op"] else profile["max_ops"] + 1
-        if not os.path.exists(os.path.join(meta["dir"], checks.oracle_file(tag_rounds))):
-            pages_pdf = corpus.read_raw(meta)
-        expected = checks.oracle_crawl_digests(
-            meta, pages_pdf, tag_rounds, nproc if profile["fresh_each_op"] else 1
-        )
-    # Feeds passes: the feeds workload's operations, and the plans.feeds
-    # layer of crawl_head's traced run (same corpus).
+    # crawl_tail: round 0 is the warmup, then the timed rounds, then the
+    # round a traced run commits after its replay
+    tag_rounds = 1 if fresh else profile["max_ops"] + 2
+    if not os.path.exists(os.path.join(meta["dir"], checks.oracle_file(tag_rounds))):
+        pages_pdf = corpus.read_raw(meta)
+    expected = checks.oracle_crawl_digests(meta, pages_pdf, tag_rounds, nproc if fresh else 1)
+    # the plans.feeds layer of crawl_head's traced run
     feeds_expected = None
-    if profile["kind"] == "feeds" or (args.trace and profile["corpus_registries"]):
-        if not os.path.exists(os.path.join(meta["dir"], "expected-feeds.json")):
+    if args.trace and profile["corpus_registries"]:
+        if not os.path.exists(os.path.join(meta["dir"], checks.feeds_file())):
             pages_pdf = pages_pdf if pages_pdf is not None else corpus.read_raw(meta)
         feeds_expected = checks.expected_feeds(meta, pages_pdf)
-    if profile["kind"] == "feeds":
-        expected = feeds_expected
     del pages_pdf
     inputs_s = time.monotonic() - t0
 
@@ -370,8 +352,7 @@ def main() -> int:
     spark = sparkctl.start_spark(run_dir, args.workload, nproc, event_dir)
     session_s = time.monotonic() - t0
     try:
-        wl_cls = CrawlWorkload if profile["kind"] == "crawl" else FeedsWorkload
-        wl = wl_cls(spark, profile, meta, expected, run_dir)
+        wl = CrawlWorkload(spark, profile, meta, expected, run_dir)
         t0 = time.monotonic()
         from pyspark.sql import functions as F
 
@@ -389,11 +370,8 @@ def main() -> int:
 
             tracer = tracing.Tracer(spark)
             tracer.install()
-            wl.tracer = tracer
         ops: list[dict] = []
-        feed_ops: list[dict] = []
         timed = 0.0
-        win0 = time.time()
         with sysprobe.RssSampler() as rss:
             # a traced run needs one operation per layer sample; fewer keep
             # it well inside the per-run time limit
@@ -403,36 +381,38 @@ def main() -> int:
             ):
                 if tracer is not None:
                     tracer.op = len(ops)
-                try:
-                    res = wl.op(len(ops))
-                except Exception as e:  # an operation that raises counts as failed
-                    traceback.print_exc()
-                    print(f"perfbench: operation {len(ops)} failed: {e!r}", file=sys.stderr)
-                    res = {"s": 0.0, "ok": False, "pages": 0, "urls": 0,
-                           "entries": 0, "bytes": 0, "error": repr(e)}
-                    wl.done = True
-                res["op"] = len(ops)
-                ops.append(res)
-                timed += res["s"]
-        win1 = time.time()
-        replay = None
-        if args.trace:
-            tracer.uninstall()
-            if profile["kind"] == "crawl" and not wl.done:
-                # head: round 0 again from the seeds; tail: the round after
-                # the last timed one, from the last committed snapshot
-                r = 0 if profile["fresh_each_op"] else ops[-1]["round"] + 1
-                tracer.op = -1
-                rw0 = time.time()
-                replay = tracing.replay_round(
-                    tracer, spark, wl.log, r, wl.pages, wl.seeds, wl.robots
-                )
-                replay_window = (rw0, time.time())
-            if profile["kind"] == "crawl" and feeds_expected is not None:
-                # traced passes over the same corpus, one per registry
-                # variant up to FEED_PASSES; the median skips the cold first
-                fw = FeedsWorkload(spark, profile, meta, feeds_expected, run_dir)
-                fw.pages, fw.tracer = wl.pages, tracer
+                ops.append(_attempt(wl, len(ops)))
+                timed += ops[-1]["s"]
+        replay = ref = None
+        extra_ops: list[dict] = []
+        feed_ops: list[dict] = []
+        if args.trace and not wl.done:
+            # The staged replay splits one round's fused materialize step.
+            # Its counts are reconciled with the round the engine committed
+            # from the same state, and every round-level metric comes from
+            # that one round. crawl_head: round 0 again from the seeds, as
+            # the last timed round committed it. crawl_tail: the round after
+            # the last timed one (the state before that is vacuumed), which
+            # the engine then commits, traced.
+            ref = ops[-1]
+            r = ref["round"] + (0 if fresh else 1)
+            tracer.op = tracing.REPLAY_OP
+            rw0 = time.time()
+            replay = tracing.replay_round(
+                tracer, spark, wl.log, r, wl.pages, wl.seeds, wl.robots
+            )
+            replay_window = (rw0, time.time())
+            if not fresh:
+                tracer.op = len(ops)
+                ref = _attempt(wl, len(ops))
+                extra_ops.append(ref)
+            replay["mismatch"] = tracing.reconcile(replay, ref.get("counts"))
+            if replay["mismatch"]:
+                print(f"perfbench: replay of round {r} does not match the committed "
+                      f"round: {replay['mismatch']}", file=sys.stderr)
+            if feeds_expected is not None:
+                # one traced pass per registry variant, over the same corpus
+                fw = FeedsPasses(spark, meta, feeds_expected, wl.pages, tracer, run_dir)
                 feeds_window = [time.time()]
                 for k in range(min(FEED_PASSES, len(fw.registries))):
                     tracer.op = FEED_OPS + k
@@ -440,36 +420,41 @@ def main() -> int:
                     res["op"] = FEED_OPS + k
                     feed_ops.append(res)
                 feeds_window.append(time.time())
+        if tracer is not None:
+            tracer.uninstall()
     finally:
         t0 = time.monotonic()
         sparkctl.stop_spark(spark)
         stop_s = time.monotonic() - t0
     layers = None
-    if args.trace:
+    if args.trace and replay is not None and not replay["mismatch"]:
         # the event log is complete once the session has stopped
         layers = tracing.layer_metrics(
-            ops + feed_ops, tracer.spans,
-            tracing.fold_event_log(event_dir, (win0, win1)),
+            ref, tracer.spans,
+            tracing.fold_event_log(event_dir, ref["window"]),
             replay,
-            tracing.fold_event_log(event_dir, replay_window) if replay else None,
+            tracing.fold_event_log(event_dir, replay_window),
             session_s,
             rss.peak / 2**20,
+            feed_ops,
             tracing.fold_event_log(event_dir, tuple(feeds_window)) if feed_ops else None,
         )
 
     probe_post = sysprobe.hardware_probe(nproc)
-    checked = ops + feed_ops
-    failed = sum(not o["ok"] for o in checked)
+    # a traced run whose replay could not run or disagrees with the
+    # committed round fails as one more operation
+    oks = [o["ok"] for o in ops + extra_ops + feed_ops]
+    if args.trace:
+        oks.append(layers is not None)
+    failed = sum(not ok for ok in oks)
     secs = sum(o["s"] for o in ops) or float("nan")
-    op_p50 = statistics.median(o["s"] for o in ops)
     urls = sum(o["urls"] for o in ops)
     metrics = {
         "setup_s": (setup_s, "s"),
         "pages_per_s": (sum(o["pages"] for o in ops) / secs, "1/s"),
         "urls_per_s": (urls / secs, "1/s"),
         "entries_per_s": (sum(o["entries"] for o in ops) / secs, "1/s"),
-        "round_s_p50": (op_p50, "s"),
-        "pass_s_p50": (op_p50, "s"),
+        "round_s_p50": (statistics.median(o["s"] for o in ops), "s"),
         "bytes_per_url": (sum(o["bytes"] for o in ops) / max(urls, 1), "B"),
     }
     detail = {
@@ -478,15 +463,18 @@ def main() -> int:
         "trace": args.trace,
         "profile": profile,
         "corpus_key": meta["key"],
+        "prepared": os.path.basename(meta["prepared"]),
+        "oracle_file": checks.oracle_file(tag_rounds),
         "corpus_pages": meta["pages"],
         "corpus_html_bytes": meta["html_bytes"],
         "hosts": profile["corpus_hosts"],
         "seeds": len(meta["seeds"]),
         "budgets": {"base": profile["budget_base"], "max": profile["max_budget"]},
-        "rounds": [o.get("round", o.get("variant")) for o in ops],
+        "rounds": [o.get("round") for o in ops],
         "ops": ops,
+        "extra_ops": extra_ops,
         "feed_ops": feed_ops,
-        "error_rate": failed / len(checked),
+        "error_rate": failed / len(oks),
         "setup": {"session_s": session_s, "warmup_s": warmup_s, "read_s": read_s},
         "untimed": {"inputs_s": inputs_s, "stop_s": stop_s},
         "oracle_s": expected.get("oracle_s"),
@@ -498,9 +486,11 @@ def main() -> int:
     }
     if args.trace:
         detail["replay"] = replay
+        detail["ref_op"] = ref["op"] if ref else None
         detail["spans"] = tracer.spans
         out_metrics = {
-            k: {"value": v, "unit": tracing.LAYER_METRICS[k]} for k, v in layers.items()
+            k: {"value": v, "unit": tracing.LAYER_METRICS[k]}
+            for k, v in (layers or {}).items()
         }
     else:
         out_metrics = {k: {"value": v, "unit": u} for k, (v, u) in metrics.items()}
@@ -513,7 +503,7 @@ def main() -> int:
     print(json.dumps(detail, default=str))
     print(json.dumps({
         "correct": failed == 0,
-        "attempted": len(checked),
+        "attempted": len(oks),
         "failed": failed,
         "metrics": out_metrics,
     }))

@@ -11,8 +11,11 @@ Three sources, all recorded from the benchmark's side of the API:
 2. ``fold_event_log`` sums task time, executor CPU, Python-worker init and
    run time, shuffle, spill and output bytes per job description.
 3. ``replay_round`` splits the fused materialize step: it re-runs one round
-   from its committed snapshot through the layer functions one at a time,
+   from the state before it through the layer functions one at a time,
    each step persisted and materialized once under its own description.
+   ``reconcile`` then checks the replay's row counts against the snapshot
+   the engine committed for the same round from the same state, so a
+   replay that no longer follows ``crawl_round`` fails the traced run.
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ import time
 
 DESC = "spark.job.description"
 PREFIX = "perfbench"
+REPLAY_OP = -1  # span index of the staged replay
 
 ROUND_TABLES = (
     "frontier", "seen_delta", "bloom", "schedule", "fetch_log", "text", "entries",
@@ -34,7 +38,7 @@ ROUND_TABLES = (
 
 class Tracer:
     """Spans keyed by operation index: ``op`` is set by the runner before
-    each timed operation (-1 during the replay)."""
+    each operation (REPLAY_OP during the replay)."""
 
     def __init__(self, spark) -> None:
         self.sc = spark.sparkContext
@@ -180,12 +184,22 @@ def by_span(folded: dict) -> dict[tuple[str, int], dict]:
     return {p: agg for desc, agg in folded.items() if (p := _parse_desc(desc))}
 
 
-def attributed_ratio(folded: dict) -> float:
-    """Share of the task time inside the folded window whose job ran under
-    a span's description; the rest ran untagged."""
-    tagged = sum(a["task_ms"] for d, a in folded.items() if _parse_desc(d))
+def task_shares(folded: dict) -> tuple[float, float]:
+    """Shares of the task time inside the folded window that ran under the
+    fused ``materialize`` span and under the other, layer-specific spans
+    (sinks, commit, compaction, vacuum, loads, frontier build); the rest
+    ran untagged. Only the replay splits ``materialize`` into layers."""
+    fused = spans = 0
+    for desc, a in folded.items():
+        p = _parse_desc(desc)
+        if p is None:
+            continue
+        if p[0] == "materialize":
+            fused += a["task_ms"]
+        else:
+            spans += a["task_ms"]
     total = sum(a["task_ms"] for a in folded.values())
-    return tagged / total if total else 0.0
+    return (fused / total, spans / total) if total else (0.0, 0.0)
 
 
 def op_phases(spans: list[dict], op: int) -> dict[str, float]:
@@ -213,7 +227,8 @@ def replay_round(tracer: Tracer, spark, log, round_no: int, pages, seeds, robots
     seeds for round 0) one layer at a time. Every step is persisted and
     materialized exactly once, under the description ``replay.<layer>``,
     so its wall time and its jobs' task metrics belong to that layer
-    alone. Counts are read from the cached steps afterwards."""
+    alone. Counts are read from the cached steps afterwards; ``counts``
+    holds the ones ``reconcile`` compares with the committed round."""
     from pyspark.sql import functions as F
     from pyspark.storagelevel import StorageLevel
 
@@ -228,7 +243,7 @@ def replay_round(tracer: Tracer, spark, log, round_no: int, pages, seeds, robots
         exact_new_urls, merge_blooms, probe_seen_broadcast,
     )
     from opps_feedcrawler_spark.plans.crawl import (
-        _min_depth_frontier, load_seen, seeds_to_frontier,
+        FRONTIER_COLS, _min_depth_frontier, load_seen, seeds_to_frontier,
     )
 
     cached = []
@@ -293,13 +308,13 @@ def replay_round(tracer: Tracer, spark, log, round_no: int, pages, seeds, robots
     canon, n_canon = step("urlnorm", with_url_cols(links, "url").select("url_norm", "depth"))
     cand, n_cand = step("dedup", _min_depth_frontier(canon))
 
-    seen_delta, _ = step(
+    seen_delta, n_delta = step(
         "seen_delta", scheduled.select("url_norm", "url_hash").unionByName(disallowed)
     )
-    delta_bloom, _ = step("bloom_build", build_seen_bloom(seen_delta))
+    delta_bloom, n_bloom = step("bloom_build", build_seen_bloom(seen_delta))
     merged = delta_bloom
     if bloom is not None:
-        merged, _ = step("bloom_merge", merge_blooms(bloom, delta_bloom))
+        merged, n_bloom = step("bloom_merge", merge_blooms(bloom, delta_bloom))
     t0 = time.monotonic()
     with tracer.span("replay.bloom_broadcast"):
         bcast = bloom_to_broadcast(spark, merged)
@@ -309,7 +324,12 @@ def replay_round(tracer: Tracer, spark, log, round_no: int, pages, seeds, robots
     maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
     n_maybe = agg(maybe, F.count(F.lit(1)))[0]
     new_seen = seen.unionByName(seen_delta)
-    _, n_exact_new = step("anti_join", exact_new_urls(maybe, new_seen))
+    exact_new, n_exact_new = step("anti_join", exact_new_urls(maybe, new_seen))
+    fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen").unionByName(exact_new)
+    remainder = frontier.join(seen_delta.select("url_norm"), "url_norm", "left_anti")
+    _, n_frontier = step("frontier", _min_depth_frontier(
+        remainder.select(*FRONTIER_COLS).unionByName(fresh.select(*FRONTIER_COLS))
+    ))
 
     out = {
         "round": round_no,
@@ -335,12 +355,29 @@ def replay_round(tracer: Tracer, spark, log, round_no: int, pages, seeds, robots
         "seen.probe_maybe_seen": n_maybe,
         "seen.exact_dropped": n_maybe - n_exact_new,
         "seen.useful_ratio": (n_cand - n_maybe) / n_cand if n_cand else 0.0,
+        "counts": {
+            "schedule_rows": n_sched, "fetched_ok": n_hits, "text_rows": n_hits,
+            "seen_delta_rows": n_delta, "bloom_rows": n_bloom,
+            "frontier_rows": n_frontier,
+        },
     }
     bcast.unpersist()
     unpersist_seq()
     for df in cached:
         df.unpersist()
     return out
+
+
+def reconcile(replay: dict, committed: dict | None) -> dict:
+    """Replay counts that differ from the committed round's snapshot
+    metrics, as {name: [replay, committed]}; empty when they all agree."""
+    if committed is None:
+        return {"committed": [None, None]}
+    return {
+        k: [v, committed.get(k)]
+        for k, v in replay["counts"].items()
+        if v != committed.get(k)
+    }
 
 
 # -- per-layer metrics -----------------------------------------------------------
@@ -369,7 +406,8 @@ LAYER_METRICS = {
     "round.materialize_s": "s", "round.writes_s": "s", "round.jobs": "count",
     "round.stages": "count", "round.tasks": "count", "round.task_s": "s",
     "round.cpu_s": "s", "round.shuffle_bytes": "B", "round.spill_bytes": "B",
-    "round.attributed_ratio": "ratio",
+    "round.attributed_ratio": "ratio", "round.materialize_task_share": "ratio",
+    "round.span_task_share": "ratio",
     "feeds.register_s": "s", "feeds.process_s": "s", "feeds.entries_raw": "count",
     "feeds.entries_published": "count", "feeds.shuffle_bytes": "B",
 }
@@ -382,51 +420,59 @@ REPLAY_SECONDS = {
 }
 
 
-def layer_metrics(ops: list[dict], spans: list[dict], folded_ops: dict,
-                  replay: dict | None, folded_replay: dict | None,
+def layer_metrics(ref: dict, spans: list[dict], folded_ref: dict,
+                  replay: dict, folded_replay: dict,
                   session_s: float, peak_rss_mb: float,
-                  folded_feeds: dict | None = None) -> dict[str, float]:
+                  passes: list[dict], folded_feeds: dict | None) -> dict[str, float]:
     """Every LAYER_METRICS entry; layers a run does not exercise read 0.
-    ``ops`` are the traced operations (crawl rounds carry "round", feeds
-    passes "variant"; both carry their span index "op") and ``folded_ops``
-    the event log over the rounds' window, or over the passes' window when
-    a run has only passes; ``folded_feeds`` covers passes run after the
-    rounds. Per-operation figures are medians."""
+
+    Everything but ``session.*`` and ``feeds.*`` describes one round:
+    ``ref``, the committed round the replay was reconciled with (its span
+    index is "op"), with ``folded_ref`` the event log over its window.
+    ``passes`` are the traced feeds passes and ``folded_feeds`` the event
+    log over them; their figures are medians."""
     m = {k: 0.0 for k in LAYER_METRICS}
     m["session.start_s"] = session_s
     m["session.peak_rss_mb"] = peak_rss_mb
     med = statistics.median
-    spans_by = by_span(folded_ops)
-    rounds = [o for o in ops if "round" in o]
-    passes = [o for o in ops if "variant" in o]
 
-    def op_sum(op: int) -> dict:
-        acc = _zero()
-        for (_, o), agg in spans_by.items():
-            if o == op:
-                for k in acc:
-                    acc[k] += agg[k]
-        return acc
+    phases = op_phases(spans, ref["op"])
+    acc = _zero()
+    for (_, o), agg in by_span(folded_ref).items():
+        if o == ref["op"]:
+            for k in acc:
+                acc[k] += agg[k]
+    for t in ROUND_TABLES:
+        m[f"checkpoint.write_s.{t}"] = phases.get(f"write.{t}", 0.0)
+        m[f"checkpoint.bytes.{t}"] = ref["tables"].get(t, 0)
+    for key, ph in (("checkpoint.commit_s", "commit"), ("checkpoint.compact_s", "compact"),
+                    ("checkpoint.vacuum_s", "vacuum"), ("checkpoint.load_s", "load"),
+                    ("round.materialize_s", "materialize"), ("round.writes_s", "writes")):
+        m[key] = phases.get(ph, 0.0)
+    for key, field, scale in (("round.jobs", "jobs", 1), ("round.stages", "stages", 1),
+                              ("round.tasks", "tasks", 1), ("round.task_s", "task_ms", 1e-3),
+                              ("round.cpu_s", "cpu_ns", 1e-9),
+                              ("round.shuffle_bytes", "shuffle_write", 1),
+                              ("round.spill_bytes", "spill", 1)):
+        m[key] = acc[field] * scale
+    fused, other = task_shares(folded_ref)
+    m["round.materialize_task_share"] = fused
+    m["round.span_task_share"] = other
+    m["round.attributed_ratio"] = fused + other
 
-    if rounds:
-        phases = [op_phases(spans, o["op"]) for o in rounds]
-        sums = [op_sum(o["op"]) for o in rounds]
-        for t in ROUND_TABLES:
-            m[f"checkpoint.write_s.{t}"] = med(p.get(f"write.{t}", 0.0) for p in phases)
-            m[f"checkpoint.bytes.{t}"] = med(o["tables"].get(t, 0) for o in rounds)
-        for key, ph in (("checkpoint.commit_s", "commit"), ("checkpoint.compact_s", "compact"),
-                        ("checkpoint.vacuum_s", "vacuum"), ("checkpoint.load_s", "load"),
-                        ("round.materialize_s", "materialize"), ("round.writes_s", "writes")):
-            m[key] = med(p.get(ph, 0.0) for p in phases)
-        for key, field, scale in (("round.jobs", "jobs", 1), ("round.stages", "stages", 1),
-                                  ("round.tasks", "tasks", 1), ("round.task_s", "task_ms", 1e-3),
-                                  ("round.cpu_s", "cpu_ns", 1e-9),
-                                  ("round.shuffle_bytes", "shuffle_write", 1),
-                                  ("round.spill_bytes", "spill", 1)):
-            m[key] = med(s[field] * scale for s in sums)
-        m["round.attributed_ratio"] = attributed_ratio(folded_ops)
+    for key in LAYER_METRICS:
+        if key in replay:
+            m[key] = replay[key]
+    for key, step in REPLAY_SECONDS.items():
+        m[key] = replay["secs"].get(step, 0.0)
+    rs = by_span(folded_replay)
+    ex = rs.get(("replay.extract", REPLAY_OP), _zero())
+    m["extract.py_init_s"] = ex["py_init_ms"] / 1000
+    m["extract.py_run_s"] = ex["py_run_ms"] / 1000
+    m["dedup.shuffle_bytes"] = rs.get(("replay.dedup", REPLAY_OP), _zero())["shuffle_write"]
+
     if passes:
-        feeds_by = by_span(folded_feeds) if folded_feeds is not None else spans_by
+        feeds_by = by_span(folded_feeds)
         phases = [op_phases(spans, o["op"]) for o in passes]
         m["feeds.register_s"] = med(p.get("feeds.register", 0.0) for p in phases)
         m["feeds.process_s"] = med(p.get("feeds.process", 0.0) for p in phases)
@@ -435,15 +481,4 @@ def layer_metrics(ops: list[dict], spans: list[dict], folded_ops: dict,
         m["feeds.shuffle_bytes"] = med(
             feeds_by.get(("feeds.process", o["op"]), _zero())["shuffle_write"] for o in passes
         )
-    if replay is not None:
-        for key in LAYER_METRICS:
-            if key in replay:
-                m[key] = replay[key]
-        for key, step in REPLAY_SECONDS.items():
-            m[key] = replay["secs"].get(step, 0.0)
-        rs = by_span(folded_replay)
-        ex = rs.get(("replay.extract", -1), _zero())
-        m["extract.py_init_s"] = ex["py_init_ms"] / 1000
-        m["extract.py_run_s"] = ex["py_run_ms"] / 1000
-        m["dedup.shuffle_bytes"] = rs.get(("replay.dedup", -1), _zero())["shuffle_write"]
     return m
