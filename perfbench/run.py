@@ -17,6 +17,7 @@ import argparse
 import json
 import os
 import shutil
+import signal
 import statistics
 import sys
 import time
@@ -41,7 +42,6 @@ BASE_PROFILES = {
         "budget_base": 10000,
         "max_budget": 100000,
         "fresh_each_op": True,
-        "min_ops": 2,
         "max_ops": 4,
     },
     # One or two pages per host per round on a small, link-dense corpus:
@@ -59,7 +59,6 @@ BASE_PROFILES = {
         "budget_base": 1,
         "max_budget": 4,
         "fresh_each_op": False,
-        "min_ops": 1,
         "max_ops": 2,
     },
 }
@@ -307,7 +306,6 @@ def main() -> int:
     os.makedirs(CACHE, exist_ok=True)
     profile = size_profile(args.workload, nproc, shutil.disk_usage(CACHE).free)
     _environment(profile)
-    sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
     import checks
     import corpus
@@ -373,11 +371,9 @@ def main() -> int:
         ops: list[dict] = []
         timed = 0.0
         with sysprobe.RssSampler() as rss:
-            # a traced run needs one operation per layer sample; fewer keep
-            # it well inside the per-run time limit
-            min_ops = 1 if args.trace else profile["min_ops"]
+            # at least one operation; more only while the window lasts
             while len(ops) < profile["max_ops"] and not wl.done and (
-                len(ops) < min_ops or timed < args.seconds
+                not ops or timed < args.seconds
             ):
                 if tracer is not None:
                     tracer.op = len(ops)
@@ -510,5 +506,22 @@ def main() -> int:
     return 0
 
 
+def run() -> int:
+    """``main``, then stop every process it started, on every way out of it
+    (a result, an exception, SIGTERM), and wait until each has ended."""
+    import sparkctl  # perfbench/ is on sys.path as the script's directory
+
+    sparkctl.adopt_orphans()
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(128 + signal.SIGTERM))
+    try:
+        return main()
+    finally:
+        left = sparkctl.reap_all()
+        if left:
+            print(f"perfbench: processes {left} did not end", file=sys.stderr)
+            sys.stdout.flush()
+            os._exit(1)
+
+
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(run())

@@ -1,11 +1,19 @@
 """Start and stop the benchmark's local Spark session: the engine's own
 ``get_spark`` with every scratch path inside the checkout, and a teardown
-that waits until the JVM and its Python workers have exited."""
+that waits until the JVM and its Python workers have exited. Also the
+process-wide teardown: the benchmark adopts every process it starts,
+directly or not, and waits until each has ended before it exits."""
 
 from __future__ import annotations
 
 import os
+import signal
 import time
+
+# reap_all: SIGTERM first, SIGKILL after REAP_GRACE_S, give up after
+# REAP_LIMIT_S (only a process stuck in the kernel outlasts that)
+REAP_GRACE_S = 10.0
+REAP_LIMIT_S = 40.0
 
 
 def start_spark(run_dir: str, app: str, nproc: int, event_dir: str | None = None):
@@ -53,11 +61,8 @@ def stop_spark(spark) -> None:
 
     from pyspark import SparkContext
 
-    from sysprobe import descendants
-
     gateway = SparkContext._gateway
     proc = getattr(gateway, "proc", None)
-    tree = [proc.pid, *descendants(proc.pid)] if proc is not None else []
     spark.stop()
     if gateway is not None:
         gateway.shutdown()
@@ -70,11 +75,55 @@ def stop_spark(spark) -> None:
         except subprocess.TimeoutExpired:
             proc.kill()
             proc.wait()
-    deadline = time.monotonic() + 30
-    while any(map(_alive, tree)) and time.monotonic() < deadline:
-        time.sleep(0.1)
-    for pid in filter(_alive, tree):
-        try:
-            os.kill(pid, 9)
-        except ProcessLookupError:
+    reap_all()
+
+
+def adopt_orphans() -> None:
+    """Make this process the Linux child subreaper of everything it starts:
+    a descendant whose parent exits first (the PySpark daemon's workers once
+    the JVM has gone, multiprocessing's resource tracker) is re-parented
+    here instead of to init, so ``reap_all`` can still wait for it."""
+    import ctypes
+
+    PR_SET_CHILD_SUBREAPER = 36
+    try:
+        ctypes.CDLL(None, use_errno=True).prctl(PR_SET_CHILD_SUBREAPER, 1, 0, 0, 0)
+    except (OSError, AttributeError):
+        pass
+
+
+def _reap_exited() -> None:
+    try:
+        while os.waitpid(-1, os.WNOHANG)[0]:
             pass
+    except ChildProcessError:
+        pass
+
+
+def reap_all() -> list[int]:
+    """Stop every process this one started, directly or not, and wait until
+    each has ended: multiprocessing's resource tracker first (it outlives
+    its parent by design), then the rest by signal. Returns the pids still
+    present at the limit."""
+    from multiprocessing import resource_tracker
+
+    from sysprobe import descendants
+
+    try:
+        resource_tracker._resource_tracker._stop()
+    except Exception:
+        pass
+    me = os.getpid()
+    t0 = time.monotonic()
+    while True:
+        _reap_exited()
+        left = descendants(me)
+        if not left or time.monotonic() - t0 > REAP_LIMIT_S:
+            return left
+        sig = signal.SIGKILL if time.monotonic() - t0 > REAP_GRACE_S else signal.SIGTERM
+        for pid in filter(_alive, left):
+            try:
+                os.kill(pid, sig)
+            except ProcessLookupError:
+                pass
+        time.sleep(0.1)
