@@ -29,6 +29,7 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import ArrayType, StringType, StructField, StructType
 
 from ..schemas import ENTRY_STRUCT
+from .urlnorm import canonicalize_fast
 
 _FEED_SNIFF = re.compile(rb"<\s*(rss|feed|rdf:rdf)[\s>]", re.IGNORECASE)
 _ATOM_NS = "{http://www.w3.org/2005/Atom}"
@@ -393,12 +394,26 @@ EXTRACT_ALL_STRUCT = StructType(
 )
 
 
+def _canonical_links(links: list[str]) -> list[str]:
+    """Links in canonical form, document order kept; links that do not
+    canonicalize (mailto:, javascript:, unparseable) are dropped."""
+    return [c for c in map(canonicalize_fast, links) if c is not None]
+
+
 @pandas_udf(EXTRACT_ALL_STRUCT)
 def extract_all_udf(html: pd.Series, base_url: pd.Series) -> pd.DataFrame:
-    """The crawl hot path: ONE parse per page yielding text+links+entries
-    (plans/crawl.py persists its output so each round parses each fetched
-    page exactly once, regardless of how many tables derive from it)."""
-    rows = [extract_all_py(h, b) for h, b in zip(html, base_url)]
+    """The crawl hot path: ONE parse per page yielding text, links and
+    entries (plans/crawl.py persists its output so each round parses each
+    fetched page exactly once, regardless of how many tables derive from
+    it). ``links`` are canonical url_norm values — extract_all_py's
+    resolved links through canonicalize_fast, None dropped — so the
+    round's frontier path needs no second Python stage. Distinct raw links
+    that canonicalize alike stay as separate entries; the min-depth
+    dedup collapses them."""
+    rows = []
+    for h, b in zip(html, base_url):
+        text, links, entries = extract_all_py(h, b)
+        rows.append((text, _canonical_links(links), entries))
     return pd.DataFrame(rows, columns=["text", "links", "entries"])
 
 

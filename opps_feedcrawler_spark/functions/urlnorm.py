@@ -167,7 +167,8 @@ def host_of(url_norm: str | None) -> str | None:
 #   - no query (query rules involve sorting/tracking-param drops), no
 #     fragment.
 # Link extraction output is dominated by already-canonical URLs, so this
-# one str.match turns the crawl's hottest UDF mostly into a memcpy.
+# one match turns most of the link canonicalization in the fused parse
+# (extract_all_udf) into a pass-through.
 import re as _re
 
 _FAST_CANONICAL = _re.compile(
@@ -177,16 +178,22 @@ _FAST_CANONICAL = _re.compile(
 )
 
 
+def canonicalize_fast(url: str | None) -> str | None:
+    """canonicalize_url with the _FAST_CANONICAL pass-through: a URL the
+    match proves canonical is returned untouched; only the remainder runs
+    the full RFC 3986 path. The one canonicalization rule of the engine's
+    Python stages (canonicalize_udf, extract_all_udf)."""
+    if url is not None and _FAST_CANONICAL.match(url):
+        return url
+    return canonicalize_url(url)
+
+
 @pandas_udf(StringType())
 def canonicalize_udf(urls: pd.Series) -> pd.Series:
     """Arrow-batched canonicalization (B32). URL parsing is not expressible
     in native Spark SQL functions with RFC 3986 fidelity; this is one of the
-    sanctioned Python boundaries (BASELINE.json:16). Rows proven canonical
-    by the vectorized _FAST_CANONICAL match pass through untouched; only the
-    remainder runs the full per-row RFC 3986 path."""
-    fast = urls.str.match(_FAST_CANONICAL, na=False)
-    out = urls.where(fast, urls[~fast].map(canonicalize_url, na_action="ignore"))
-    return out
+    sanctioned Python boundaries (BASELINE.json:16)."""
+    return urls.map(canonicalize_fast, na_action="ignore")
 
 
 # Pure but flagged nondeterministic: stops Catalyst from duplicating the
@@ -215,9 +222,8 @@ def with_url_cols(
     The UDF is marked nondeterministic (it is pure — this is a plan-shape
     pin): otherwise Catalyst pushes the isNotNull filter beneath the
     projection and the Python UDF runs TWICE per row (one ArrowEvalPython
-    for the filter, another for the projection) — 2x the Arrow traffic on
-    the crawl's hottest column. Call sites only project/filter, where
-    nondeterminism is legal.
+    for the filter, another for the projection). Call sites only
+    project/filter, where nondeterminism is legal.
     """
     out = (
         df.withColumn("url_norm", _canonicalize_udf_once(F.col(url_col)))

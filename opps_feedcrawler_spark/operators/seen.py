@@ -25,10 +25,13 @@ so it persists/checkpoints like any other table.
 
 from __future__ import annotations
 
+from typing import Callable, Tuple
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 NBUCKETS = 64
 BITS_PER_BUCKET = 1 << 17  # 16 KiB per bucket at test scale
@@ -209,33 +212,49 @@ def probe_seen_broadcast(
     return candidates.withColumn("maybe_seen", _probe(F.col("url_hash")))
 
 
+def _split_probed(
+    probed: DataFrame, seen: DataFrame, drop: tuple[str, ...]
+) -> Tuple[DataFrame, Callable[[], None]]:
+    """Probe once, split twice: persist the probed candidates and fill the
+    cache with one job, then read both branches from it — definite-new
+    rows skip the anti-join entirely, only bloom-positives probe the seen
+    table. Unpersisted, the union would run the probe once per branch, and
+    Catalyst is free to push each branch's maybe_seen filter (a function of
+    url_hash alone) below the candidates' dedup aggregate, probing every
+    raw candidate row instead of the distinct ones. Returns
+    ``(new_rows, unpersist)``: the caller releases the cache once the
+    result has been consumed."""
+    probed = probed.persist(StorageLevel.MEMORY_AND_DISK)
+    probed.count()
+    definite_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen", *drop)
+    maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen", *drop)
+    return (
+        definite_new.unionByName(exact_new_urls(maybe, seen)),
+        lambda: probed.unpersist(),
+    )
+
+
 def filter_new_urls_broadcast(
     candidates: DataFrame,
     seen: DataFrame,
     bloom_bcast,
     nbuckets: int = NBUCKETS,
     bits: int = BITS_PER_BUCKET,
-) -> DataFrame:
-    """Composed A5+A6+A7 on the broadcast path: definite-new rows skip the
-    anti-join shuffle entirely; only bloom-positives probe the seen table."""
+) -> Tuple[DataFrame, Callable[[], None]]:
+    """Composed A5+A6+A7 on the broadcast path (see _split_probed):
+    ``(new_rows, unpersist)``."""
     probed = probe_seen_broadcast(candidates, bloom_bcast, nbuckets, bits)
-    definite_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-    return definite_new.unionByName(exact_new_urls(maybe, seen))
+    return _split_probed(probed, seen, ())
 
 
 def filter_new_urls(
     candidates: DataFrame,
     seen: DataFrame,
-    bloom: DataFrame | None = None,
+    bloom: DataFrame,
     nbuckets: int = NBUCKETS,
     bits: int = BITS_PER_BUCKET,
-) -> DataFrame:
-    """Composed A5+A6+A7: bloom pre-filter (if provided) then exact anti-join
-    on the maybe-seen slice; definite-new rows bypass the join entirely."""
-    if bloom is None:
-        return exact_new_urls(candidates, seen)
+) -> Tuple[DataFrame, Callable[[], None]]:
+    """Composed A5+A6+A7 on the cogrouped path, for blooms too large to
+    broadcast (see _split_probed): ``(new_rows, unpersist)``."""
     probed = probe_seen_bloom(candidates, bloom, nbuckets, bits)
-    definite_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen", "bucket")
-    maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen", "bucket")
-    return definite_new.unionByName(exact_new_urls(maybe, seen))
+    return _split_probed(probed, seen, ("bucket",))

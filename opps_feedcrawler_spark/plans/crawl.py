@@ -27,9 +27,10 @@ URL-seen set and extracted text match exactly — BASELINE.json:6,14):
      warehouse table (schedules too large to broadcast — zero blob
      exchange, see prepare_pages_bucketed), "http" mapInPandas fetcher
      with per-partition connection pools (sources/httpfetch.py)
- R7  extract: ONE fused parse (A12+A13+A14) — text, links, entries
- R8  new candidates = canonicalize(links), depth=parent+1, dedup by
-     url_norm keeping MIN depth, anti-join seen (bloom pre-filtered)
+ R7  extract: ONE fused parse (A12+A13+A14) — text, canonical links
+     (url_norm; links that do not canonicalize are dropped), entries
+ R8  new candidates = links, depth=parent+1, dedup by url_norm keeping
+     MIN depth, anti-join seen (bloom pre-filtered, probed once)
  R9  frontier' = (frontier - scheduled - disallowed) ∪ new candidates,
      dedup by url_norm keeping MIN depth
  R10 commit snapshot(round): frontier, seen_delta, bloom, schedule,
@@ -39,6 +40,10 @@ Scale design decisions (the 100 TB story, each one load-bearing):
 - ONE parse per fetched page: the fused extract_all_udf output is persisted
   for the round, so the 4 tables derived from it (fetch_log/text/entries/
   frontier candidates) never re-trigger the join or the Python worker.
+  More generally every Python stage of a round runs once over its input:
+  the parse also canonicalizes the links, the bloom probe is persisted
+  and split into its two branches (operators/seen.py), and run_crawl
+  canonicalizes the seeds once for all of round 0's consumers.
 - `seen` is stored as PER-ROUND DELTAS, never rewritten: the cumulative
   seen set at 10^10 URLs is the biggest table in the system; each snapshot
   appends only that round's scheduled∪disallowed rows (provably disjoint
@@ -56,6 +61,9 @@ k+1..K bit-for-bit (BASELINE.json:6; tests/test_resume.py).
 """
 
 from __future__ import annotations
+
+import logging
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -77,6 +85,8 @@ from ..operators.seen import (
     merge_blooms,
 )
 from .checkpoint import SnapshotLog
+
+logger = logging.getLogger(__name__)
 
 MAX_ENTRIES_PER_PAGE = 100  # the reference caps entries per feed [PK]
 
@@ -377,22 +387,26 @@ def crawl_round(
     # the probe reads cached bitset blocks, so the frontier write can run
     # CONCURRENTLY with the bloom's own sink. Keeps crawl_round fully
     # lazy: no collect/job happens while the round plan is being built.
-    links = hits.select(
-        F.explode("ex.links").alias("url"), (F.col("depth") + 1).alias("depth")
-    )
-    # only (url_norm, depth) feed the dedup shuffle; Catalyst prunes the
-    # other with_url_cols projections, and _min_depth_frontier re-derives
-    # them post-aggregation (once per distinct URL)
+    # ex.links are already canonical (the fused parse canonicalizes), so
+    # only (url_norm, depth) feed the dedup shuffle and _min_depth_frontier
+    # re-derives the rest post-aggregation (once per distinct URL)
     cand = _min_depth_frontier(
-        with_url_cols(links, "url").select("url_norm", "depth")
+        hits.select(
+            F.explode("ex.links").alias("url_norm"),
+            (F.col("depth") + 1).alias("depth"),
+        )
     )
     # scheduled ∪ disallowed = seen_delta, so one anti-join removes both
     remainder = frontier.join(seen_delta.select("url_norm"), "url_norm", "left_anti")
+    releases: list[Callable[[], None]] = []
 
     def build_frontier(round_bloom: DataFrame) -> DataFrame:
         """Bloom probe via the broadcast path (one narrow Arrow stage) when
         the bitset table fits the driver; cogrouped shuffle path otherwise
-        (a 10^10-URL bloom is ~12 GiB — see operators/seen.py)."""
+        (a 10^10-URL bloom is ~12 GiB — see operators/seen.py). Either way
+        the probed candidates are persisted and filled by one job HERE,
+        before the caller submits the sinks, so the frontier sink only
+        reads cached rows; cleanup() releases them."""
         from ..operators.seen import (
             BITS_PER_BUCKET,
             BROADCAST_BLOOM_MAX_BYTES,
@@ -403,9 +417,11 @@ def crawl_round(
 
         if NBUCKETS * (BITS_PER_BUCKET // 8) <= BROADCAST_BLOOM_MAX_BYTES:
             bcast = bloom_to_broadcast(spark, round_bloom)
-            fresh = filter_new_urls_broadcast(cand, new_seen, bcast)
+            releases.append(bcast.unpersist)
+            fresh, unpersist = filter_new_urls_broadcast(cand, new_seen, bcast)
         else:
-            fresh = filter_new_urls(cand, new_seen, round_bloom)
+            fresh, unpersist = filter_new_urls(cand, new_seen, round_bloom)
+        releases.append(unpersist)
         return _min_depth_frontier(
             remainder.select(*FRONTIER_COLS).unionByName(fresh.select(*FRONTIER_COLS))
         )
@@ -418,6 +434,8 @@ def crawl_round(
         new_bloom.unpersist()
         if http_fetched is not None:
             http_fetched.unpersist()
+        for release in releases:
+            release()
 
     def materialize() -> None:
         """Fill the round's shared caches with ONE pass each. Must run
@@ -426,25 +444,6 @@ def crawl_round(
         same partition across jobs, so N racing sinks would each re-run
         the corpus scan + fused parse (measured: the writes phase collapses
         from sum-of-jobs to max-of-jobs once the cache is pre-built)."""
-        import os as _os
-        import time as _t
-
-        if _os.environ.get("OFS_CRAWL_DEBUG") == "1":
-            t0 = _t.monotonic()
-            scheduled.count()
-            t1 = _t.monotonic()
-            enriched.count()
-            t2 = _t.monotonic()
-            seen_delta.count()
-            t3 = _t.monotonic()
-            new_bloom.count()
-            t4 = _t.monotonic()
-            print(
-                f"[crawl r{round_no}]   sched {t1 - t0:.1f}s"
-                f" enrich {t2 - t1:.1f}s seen {t3 - t2:.1f}s"
-                f" bloom {t4 - t3:.1f}s"
-            )
-            return
         enriched.count()  # persists scheduled's blocks as a side effect
         seen_delta.count()  # scheduled already cached; adds only robots
         new_bloom.count()  # bloom cache ready for sink + frontier probe
@@ -529,8 +528,15 @@ def run_crawl(
     )
     last = log.latest_snapshot_id()
     first = (last + 1) if last is not None else 0
+    seed_frontier: DataFrame | None = None
     if first == 0:
-        frontier = seeds_to_frontier(seeds)
+        # round 0's frontier feeds the schedule, the seen delta's
+        # disallowed rows and the frontier sink's remainder: persisted so
+        # the seeds are canonicalized once (filled by the round's
+        # materialize, released once round 0 is committed)
+        frontier = seed_frontier = seeds_to_frontier(seeds).persist(
+            StorageLevel.MEMORY_AND_DISK
+        )
         seen = spark.createDataFrame([], "url_norm string, url_hash long")
         bloom: DataFrame | None = None
     else:
@@ -541,10 +547,8 @@ def run_crawl(
     cumulative_seen = 0 if first == 0 else sum(
         log.read_snapshot(r)["metrics"]["seen_delta_rows"] for r in range(first)
     )
-    import os
     import time as _time
 
-    debug = os.environ.get("OFS_CRAWL_DEBUG") == "1"
     for round_no in range(first, rounds):
         _t0 = _round_start = _time.monotonic()
         out = crawl_round(
@@ -555,13 +559,12 @@ def run_crawl(
         # one bloom build — Spark's block manager does not dedupe in-flight
         # computation across jobs), THEN write ALL 7 round tables as
         # CONCURRENT Spark jobs so per-round wall time is max(write), not
-        # sum(write): every sink, including the frontier (whose bloom probe
-        # reads the cached bitsets), only consumes cached narrow rows.
+        # sum(write): every sink, including the frontier (whose probed
+        # candidates build_frontier caches first), only consumes cached
+        # narrow rows and runs no Python.
         out["materialize"]()
         timings: dict[str, float] = {}
         timings["materialize_sec"] = round(_time.monotonic() - _t0, 3)
-        if debug:
-            print(f"[crawl r{round_no}] materialize {timings['materialize_sec']:.1f}s")
         _t0 = _time.monotonic()
         frontier_df = out["build_frontier"](out["bloom"])
         with ThreadPoolExecutor(max_workers=len(ROUND_TABLES)) as pool:
@@ -576,13 +579,9 @@ def run_crawl(
             }
             manifests = {name: f.result() for name, f in futs.items()}
         timings["writes_sec"] = round(_time.monotonic() - _t0, 3)
-        if debug:
-            print(f"[crawl r{round_no}] writes {timings['writes_sec']:.1f}s")
         _t0 = _time.monotonic()
         out["cleanup"]()
         timings["cleanup_sec"] = round(_time.monotonic() - _t0, 3)
-        if debug:
-            print(f"[crawl r{round_no}] frontier {timings['cleanup_sec']:.1f}s")
         # A18 per-round metrics from Parquet footers (no Spark jobs).
         m: dict[str, float] = {
             f"{name}_rows": manifests[name]["rows"] for name in ROUND_TABLES
@@ -593,6 +592,7 @@ def run_crawl(
             manifests["fetch_log"]["path"], "status", 200
         )
         timings["round_sec"] = round(_time.monotonic() - _round_start, 3)
+        logger.debug("crawl round %d timings %s", round_no, timings)
         log.commit(round_no, manifests, m, timings=timings)
         if (
             compact_seen_every
@@ -613,6 +613,9 @@ def run_crawl(
         frontier = log.load_table(spark, round_no, "frontier")
         seen = load_seen(spark, log, round_no)
         bloom = log.load_table(spark, round_no, "bloom")
+        if seed_frontier is not None:
+            seed_frontier.unpersist()
+            seed_frontier = None
         if m["frontier_rows"] == 0:
             break
     if not pages_prepared:

@@ -183,12 +183,15 @@ def parse_http_response_py(payload: bytes | None) -> dict:
         cl_vals = {v.strip() for v in headers["content-length"].split(",")}
         if len(cl_vals) != 1:
             return bad
-        try:
-            declared = int(cl_vals.pop())
-        except ValueError:
+        cl = cl_vals.pop()
+        # RFC 9110 §8.6: Content-Length = 1*DIGIT. int() alone would also
+        # take a sign, '_' separators and non-ASCII digits ('+3', '1_0')
+        if not (cl.isascii() and cl.isdigit()):
             return bad
-        if declared < 0:
-            return bad  # Content-Length is 1*DIGIT; negatives malformed
+        try:
+            declared = int(cl)
+        except ValueError:
+            return bad  # over int()'s digit limit (sys.set_int_max_str_digits)
         if declared > len(body):
             return bad  # torn record
         body = body[:declared]

@@ -88,6 +88,45 @@ def test_extract_all_fused_matches_individual():
         assert entries == extract_entries_py(html)
 
 
+def test_extract_all_udf_links_are_canonical(spark):
+    """The fused UDF's links are canonicalize_url over extract_links_py,
+    in document order, with links that do not canonicalize dropped —
+    the same rule the oracle crawler applies to extract_links_py."""
+    from opps_feedcrawler_spark.functions.extract import extract_all_udf
+    from opps_feedcrawler_spark.functions.urlnorm import canonicalize_url
+
+    alias = (
+        b"<html><body><a href='rel/a'>relative</a>"
+        b"<a href='HTTP://Alias.EXAMPLE:80/x/./y/../z/'>alias</a>"
+        b"<a href='mailto:someone@example.com'>mail</a>"
+        b"<a href='javascript:void(0)'>js</a>"
+        b"<a href='http://plain.example/p/1'>plain</a></body></html>"
+    )
+    samples = [
+        (alias, "http://base.example/dir/page"),
+        (HTML, "http://base.example/dir/page"),
+        (RSS, "http://a.example/feed"),
+        (ATOM, "http://b.example/feed"),
+    ]
+    df = spark.createDataFrame(samples, "html binary, base string")
+    got = [
+        list(r.links)
+        for r in df.select(extract_all_udf("html", "base").alias("ex"))
+        .select("ex.links")
+        .collect()
+    ]
+    want = [
+        [c for c in map(canonicalize_url, extract_links_py(h, b)) if c is not None]
+        for h, b in samples
+    ]
+    assert got == want
+    assert got[0] == [
+        "http://base.example/dir/rel/a",
+        "http://alias.example/x/z",
+        "http://plain.example/p/1",
+    ]
+
+
 def test_text_udf_matches_pure_fn(spark):
     df = spark.createDataFrame([(HTML,), (RSS,), (ATOM,)], "html binary")
     got = {r.text for r in df.select(extract_text_udf("html").alias("text")).collect()}

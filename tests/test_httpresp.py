@@ -222,3 +222,19 @@ def test_repeated_header_lines_merge_per_rfc9110():
             b"HTTP/1.1 200 OK\r\n" + hdrs + b"\r\nabcdef"
         )
         assert r["http_ok"] is False, hdrs
+
+
+def test_content_length_must_be_digits_only():
+    # RFC 9110 §8.6: Content-Length = 1*DIGIT. Python's int() would read
+    # '+3' as 3 and '1_0' as 10; both, and a negative, must quarantine.
+    # So must a digit run past int()'s string-conversion limit
+    for cl in (b"+3", b"1_0", b"-1", b" ", b"3 3", b"\xb2", b"9" * 5000):
+        r = parse_http_response_py(
+            b"HTTP/1.1 200 OK\r\nContent-Length: " + cl + b"\r\n\r\nabcdefghijkl"
+        )
+        assert r["http_ok"] is False and r["body"] is None, cl
+    for cl, body in ((b"0", b""), (b"12", b"abcdefghijkl")):
+        r = parse_http_response_py(
+            b"HTTP/1.1 200 OK\r\nContent-Length: " + cl + b"\r\n\r\nabcdefghijkl"
+        )
+        assert r["http_ok"] and r["body"] == body, cl

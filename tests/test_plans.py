@@ -161,6 +161,107 @@ def test_fetch_join_prunes_html_for_metadata_outputs(spark):
     out["cleanup"]()
 
 
+_PYTHON_NODES = (
+    "ArrowEvalPython",
+    "BatchEvalPython",
+    "MapInPandas",
+    "FlatMapGroupsInPandas",
+    "FlatMapCoGroupsInPandas",
+)
+
+
+def _python_nodes(df) -> list[str]:
+    """Python-evaluating nodes of df's pre-AQE physical plan. children()
+    does not enter cached relations (InMemoryTableScan is a leaf), so only
+    the work the DataFrame's own jobs would run is counted."""
+    out, stack = [], [df._jdf.queryExecution().sparkPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() in _PYTHON_NODES:
+            out.append(node.nodeName())
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return out
+
+
+def test_frontier_sink_runs_no_python(spark):
+    """Every Python stage of a round runs once, before the sinks: the
+    parse emits canonical links and build_frontier fills the probed
+    candidates' cache, so the frontier sink itself evaluates no Python.
+    run_crawl persists the round-0 seed frontier; the test does the same."""
+    from pyspark.storagelevel import StorageLevel
+
+    from opps_feedcrawler_spark.plans.crawl import (
+        crawl_round,
+        prepare_pages,
+        seeds_to_frontier,
+    )
+    from opps_feedcrawler_spark.sources.synth import pages_from_documents
+
+    pages = pages_from_documents(spark, SF_DIR)
+    pp = prepare_pages(pages)
+    seeds = pages.select("url").orderBy("url").limit(50)
+    robots = spark.createDataFrame(
+        [],
+        schema="host string, crawl_delay double, "
+        "rules array<struct<allow:boolean,prefix:string>>",
+    )
+    frontier = seeds_to_frontier(seeds).persist(StorageLevel.MEMORY_AND_DISK)
+    seen = spark.createDataFrame([], "url_norm string, url_hash long")
+    out = crawl_round(spark, frontier, seen, None, pp, robots, 0)
+    out["materialize"]()
+    frontier_df = out["build_frontier"](out["bloom"])
+    assert _python_nodes(frontier_df) == []
+    assert frontier_df.count() > 0
+    out["cleanup"]()
+    frontier.unpersist()
+
+
+def test_run_crawl_frontier_sinks_run_no_python(spark, tmp_path, monkeypatch):
+    """Same property through run_crawl itself: round 0's seed frontier
+    feeds the frontier sink's remainder, so unless run_crawl caches it the
+    sink re-runs the seeds' canonicalize_udf. The cache is released once
+    round 0 is committed."""
+    import opps_feedcrawler_spark.plans.crawl as crawl
+    from opps_feedcrawler_spark.sources.synth import gen_corpus
+
+    real_round = crawl.crawl_round
+    frontiers, sink_python = [], []
+
+    def spy_round(spark, frontier, *args, **kwargs):
+        frontiers.append(frontier)
+        out = real_round(spark, frontier, *args, **kwargs)
+        build = out["build_frontier"]
+
+        def spy_build(round_bloom):
+            df = build(round_bloom)
+            sink_python.append(_python_nodes(df))
+            return df
+
+        out["build_frontier"] = spy_build
+        return out
+
+    monkeypatch.setattr(crawl, "crawl_round", spy_round)
+    pages, seeds, robots_rows = gen_corpus(
+        n_hosts=6, n_pages=80, n_seeds=20, seed=3
+    )
+    robots = spark.createDataFrame(
+        robots_rows,
+        schema="host string, crawl_delay double, "
+        "rules array<struct<allow:boolean,prefix:string>>",
+    )
+    crawl.run_crawl(
+        spark,
+        spark.createDataFrame(pages),
+        spark.createDataFrame(seeds),
+        robots,
+        str(tmp_path / "wh"),
+        rounds=2,
+    )
+    assert sink_python == [[], []]
+    assert not frontiers[0].is_cached
+
+
 def test_global_sequence_no_single_task_data_sort(spark):
     """with_global_sequence must range-partition the schedule (parallel
     sort) — never funnel the round's rows through one task. The only
