@@ -3,12 +3,14 @@
 Reference behavior [PK]: per-entry existence query by link before insert
 (SURVEY.md §1.1 "Seen-set"). North star: "a distributed bloom/cuckoo
 URL-seen filter built via vectorized Arrow UDFs over canonicalized+
-murmur3-hashed URLs" (BASELINE.json:6).
+murmur3-hashed URLs" (BASELINE.json:6). The crawl never un-sees a URL, so
+the deletable (cuckoo) variant has no job here; the bloom is the one filter.
 
 Design: the url_hash space is range-partitioned into NBUCKETS buckets
 (bucket = pmod(url_hash, NBUCKETS)); each bucket owns an m-bit bloom bitset
 built by a grouped-map Arrow UDF (numpy bit ops — vectorized, no per-row
-Python). Probing cogroups candidates with their bucket's bitset.
+Python). The bitset table is collected and broadcast, and candidates are
+probed against it in one narrow Arrow-UDF stage (probe_seen_broadcast).
 
 Exactness contract (SURVEY.md §4.2.3): the final URL-seen set must MATCH the
 reference's exactly (BASELINE.json:6,14), so the bloom is strictly a
@@ -16,11 +18,12 @@ work-skipping PRE-filter — a positive may only route the candidate into the
 exact anti-join (A7); a negative (guaranteed-correct: no false negatives)
 skips the join probe. Membership truth is always the exact anti-join.
 
-Scale note (10^10 URLs): NBUCKETS and BITS_PER_BUCKET are independent knobs;
-at 10^10 URLs with a 1% FP target you want ~12 GiB of bitset total — e.g.
-NBUCKETS=8192 × 16 MiB buckets spread over the cluster, each bucket built
-map-side by its shuffle partition. The bitset table is itself a DataFrame,
-so it persists/checkpoints like any other table.
+Scale note: the table's size is NBUCKETS × BITS_PER_BUCKET/8 bytes whatever
+the input, so the broadcast is bounded by the constants alone, and the
+module refuses to import if they exceed BROADCAST_BLOOM_MAX_BYTES. A crawl
+that needs a larger filter (10^10 URLs at a 1% FP rate want ~12 GiB of
+bitset) means re-deciding these constants and the probe together: a
+broadcast of that size does not fit an executor.
 """
 
 from __future__ import annotations
@@ -56,12 +59,6 @@ def _positions(hashes: np.ndarray, m: int) -> np.ndarray:
     return out
 
 
-def with_bucket(df: DataFrame, nbuckets: int = NBUCKETS) -> DataFrame:
-    return df.withColumn(
-        "bucket", F.pmod(F.col("url_hash"), F.lit(nbuckets)).cast("int")
-    )
-
-
 def build_seen_bloom(
     seen: DataFrame,
     nbuckets: int = NBUCKETS,
@@ -79,47 +76,12 @@ def build_seen_bloom(
         )
 
     return (
-        with_bucket(seen.select("url_hash"), nbuckets)
+        seen.select(
+            "url_hash",
+            F.pmod(F.col("url_hash"), F.lit(nbuckets)).cast("int").alias("bucket"),
+        )
         .groupBy("bucket")
         .applyInPandas(_build, "bucket int, bitset binary")
-    )
-
-
-def probe_seen_bloom(
-    candidates: DataFrame,
-    bloom: DataFrame,
-    nbuckets: int = NBUCKETS,
-    bits: int = BITS_PER_BUCKET,
-) -> DataFrame:
-    """candidates(+url_hash) → candidates + maybe_seen boolean.
-
-    Cogrouped-map join: each bucket's candidate batch meets its single
-    bitset row exactly once (the bitset is NOT replicated per candidate
-    row, which a plain join would do). maybe_seen=False is authoritative
-    (bloom has no false negatives); True only routes into the exact
-    anti-join."""
-    cand = with_bucket(candidates, nbuckets)
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in cand.schema.fields
-    ) + ", maybe_seen boolean"
-
-    def _probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty:
-            return left.assign(maybe_seen=pd.Series([], dtype=bool))
-        if right.empty:
-            return left.assign(maybe_seen=False)
-        arr = np.frombuffer(right["bitset"].iloc[0], dtype=np.uint8)
-        pos = _positions(left["url_hash"].to_numpy(), bits)
-        hit = np.ones(len(left), dtype=bool)
-        for i in range(N_HASHES):
-            p = pos[:, i]
-            hit &= (arr[p >> 3] & (1 << (p & 7)).astype(np.uint8)) != 0
-        return left.assign(maybe_seen=hit)
-
-    return (
-        cand.groupBy("bucket")
-        .cogroup(bloom.groupBy("bucket"))
-        .applyInPandas(_probe, out_schema)
     )
 
 
@@ -157,19 +119,22 @@ def exact_new_urls(candidates: DataFrame, seen: DataFrame) -> DataFrame:
     return candidates.join(seen.select("url_norm"), "url_norm", "left_anti")
 
 
-# Below this total bitset size the bloom is shipped to every task as a
-# broadcast variable and probed in ONE narrow Arrow-UDF stage (no shuffle).
-# Above it (e.g. the ~12 GiB table a 10^10-URL crawl needs) the cogrouped
-# shuffle path probe_seen_bloom() is the scale path. 256 MiB keeps the
-# driver collect + per-executor broadcast copy comfortably inside normal
-# executor memory (a 2 GiB driver-side collect was the round-1 review's
-# "generous" flag); larger filters should shard across the cluster anyway.
+# Bound on the broadcast bloom: the driver collects the whole bitset table
+# and every executor holds a copy. 256 MiB keeps both comfortably inside
+# normal driver and executor memory.
 BROADCAST_BLOOM_MAX_BYTES = 256 << 20
+if NBUCKETS * (BITS_PER_BUCKET // 8) > BROADCAST_BLOOM_MAX_BYTES:
+    raise ValueError(
+        "the bloom no longer fits one broadcast: re-decide NBUCKETS, "
+        "BITS_PER_BUCKET and the probe together"
+    )
 
 
 def bloom_to_broadcast(spark, bloom: DataFrame):
-    """Materialize the (small) bloom table into a driver dict and broadcast.
-    Caller is responsible for checking BROADCAST_BLOOM_MAX_BYTES."""
+    """Materialize the bloom table into a driver dict and broadcast it.
+    Its size is fixed by the bucket count and bits per bucket; the module
+    constants are checked against BROADCAST_BLOOM_MAX_BYTES at import.
+    The caller unpersists the broadcast once the probe has been consumed."""
     return spark.sparkContext.broadcast(
         {int(r.bucket): bytes(r.bitset) for r in bloom.collect()}
     )
@@ -212,49 +177,29 @@ def probe_seen_broadcast(
     return candidates.withColumn("maybe_seen", _probe(F.col("url_hash")))
 
 
-def _split_probed(
-    probed: DataFrame, seen: DataFrame, drop: tuple[str, ...]
-) -> Tuple[DataFrame, Callable[[], None]]:
-    """Probe once, split twice: persist the probed candidates and fill the
-    cache with one job, then read both branches from it — definite-new
-    rows skip the anti-join entirely, only bloom-positives probe the seen
-    table. Unpersisted, the union would run the probe once per branch, and
-    Catalyst is free to push each branch's maybe_seen filter (a function of
-    url_hash alone) below the candidates' dedup aggregate, probing every
-    raw candidate row instead of the distinct ones. Returns
-    ``(new_rows, unpersist)``: the caller releases the cache once the
-    result has been consumed."""
-    probed = probed.persist(StorageLevel.MEMORY_AND_DISK)
-    probed.count()
-    definite_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen", *drop)
-    maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen", *drop)
-    return (
-        definite_new.unionByName(exact_new_urls(maybe, seen)),
-        lambda: probed.unpersist(),
-    )
-
-
-def filter_new_urls_broadcast(
+def filter_new_urls(
     candidates: DataFrame,
     seen: DataFrame,
     bloom_bcast,
     nbuckets: int = NBUCKETS,
     bits: int = BITS_PER_BUCKET,
 ) -> Tuple[DataFrame, Callable[[], None]]:
-    """Composed A5+A6+A7 on the broadcast path (see _split_probed):
-    ``(new_rows, unpersist)``."""
-    probed = probe_seen_broadcast(candidates, bloom_bcast, nbuckets, bits)
-    return _split_probed(probed, seen, ())
-
-
-def filter_new_urls(
-    candidates: DataFrame,
-    seen: DataFrame,
-    bloom: DataFrame,
-    nbuckets: int = NBUCKETS,
-    bits: int = BITS_PER_BUCKET,
-) -> Tuple[DataFrame, Callable[[], None]]:
-    """Composed A5+A6+A7 on the cogrouped path, for blooms too large to
-    broadcast (see _split_probed): ``(new_rows, unpersist)``."""
-    probed = probe_seen_bloom(candidates, bloom, nbuckets, bits)
-    return _split_probed(probed, seen, ("bucket",))
+    """Composed A5+A6+A7. Probe once, split twice: persist the probed
+    candidates and fill the cache with one job, then read both branches
+    from it — definite-new rows skip the anti-join entirely, only
+    bloom-positives probe the seen table. Unpersisted, the union would run
+    the probe once per branch, and Catalyst is free to push each branch's
+    maybe_seen filter (a function of url_hash alone) below the candidates'
+    dedup aggregate, probing every raw candidate row instead of the
+    distinct ones. Returns ``(new_rows, unpersist)``: the caller releases
+    the cache once the result has been consumed."""
+    probed = probe_seen_broadcast(candidates, bloom_bcast, nbuckets, bits).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    probed.count()
+    definite_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
+    maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
+    return (
+        definite_new.unionByName(exact_new_urls(maybe, seen)),
+        lambda: probed.unpersist(),
+    )

@@ -191,9 +191,11 @@ class SnapshotLog:
         Product tables (text/entries/fetch_log) and seen deltas are never
         touched (deltas feed load_seen until compacted; product is the
         point of the crawl). Each vacuumed snapshot's JSON is atomically
-        rewritten with the pruned tables recorded under "expired_tables",
-        so time travel fails loudly (KeyError) rather than reading
-        half-deleted data. Resume only ever reads the LATEST snapshot's
+        rewritten with the pruned tables recorded under "expired_tables"
+        BEFORE their data is deleted, so time travel fails loudly
+        (KeyError) rather than reading half-deleted data, and a crash
+        mid-vacuum can only orphan files, never leave a snapshot naming a
+        missing path. Resume only ever reads the LATEST snapshot's
         state, so vacuuming older rounds is resume-transparent
         (tests/test_resume.py). Returns the vacuumed snapshot ids."""
         import shutil
@@ -212,9 +214,7 @@ class SnapshotLog:
             ]
             if not pruned:
                 continue
-            for t in pruned:
-                shutil.rmtree(snap["tables"][t]["path"], ignore_errors=True)
-                del snap["tables"][t]
+            paths = [snap["tables"].pop(t)["path"] for t in pruned]
             snap["expired_tables"] = sorted(
                 set(snap.get("expired_tables", [])) | set(pruned)
             )
@@ -225,6 +225,9 @@ class SnapshotLog:
                 f.flush()
                 os.fsync(f.fileno())
             os.rename(tmp, final)
+            # only now: a crash before this line orphans files, no more
+            for path in paths:
+                shutil.rmtree(path, ignore_errors=True)
             vacuumed.append(sid)
         return vacuumed
 

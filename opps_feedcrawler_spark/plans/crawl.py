@@ -30,7 +30,8 @@ URL-seen set and extracted text match exactly — BASELINE.json:6,14):
  R7  extract: ONE fused parse (A12+A13+A14) — text, canonical links
      (url_norm; links that do not canonicalize are dropped), entries
  R8  new candidates = links, depth=parent+1, dedup by url_norm keeping
-     MIN depth, anti-join seen (bloom pre-filtered, probed once)
+     MIN depth, anti-join seen, pre-filtered by the broadcast bloom
+     (probed once; only bloom-positives reach the anti-join)
  R9  frontier' = (frontier - scheduled - disallowed) ∪ new candidates,
      dedup by url_norm keeping MIN depth
  R10 commit snapshot(round): frontier, seen_delta, bloom, schedule,
@@ -80,6 +81,7 @@ from ..operators.politeness import (
 )
 from ..operators.robots import with_robots
 from ..operators.seen import (
+    bloom_to_broadcast,
     build_seen_bloom,
     filter_new_urls,
     merge_blooms,
@@ -401,26 +403,14 @@ def crawl_round(
     releases: list[Callable[[], None]] = []
 
     def build_frontier(round_bloom: DataFrame) -> DataFrame:
-        """Bloom probe via the broadcast path (one narrow Arrow stage) when
-        the bitset table fits the driver; cogrouped shuffle path otherwise
-        (a 10^10-URL bloom is ~12 GiB — see operators/seen.py). Either way
-        the probed candidates are persisted and filled by one job HERE,
-        before the caller submits the sinks, so the frontier sink only
-        reads cached rows; cleanup() releases them."""
-        from ..operators.seen import (
-            BITS_PER_BUCKET,
-            BROADCAST_BLOOM_MAX_BYTES,
-            NBUCKETS,
-            bloom_to_broadcast,
-            filter_new_urls_broadcast,
-        )
-
-        if NBUCKETS * (BITS_PER_BUCKET // 8) <= BROADCAST_BLOOM_MAX_BYTES:
-            bcast = bloom_to_broadcast(spark, round_bloom)
-            releases.append(bcast.unpersist)
-            fresh, unpersist = filter_new_urls_broadcast(cand, new_seen, bcast)
-        else:
-            fresh, unpersist = filter_new_urls(cand, new_seen, round_bloom)
+        """Broadcast the round's bloom and probe the candidates with it in
+        one narrow Arrow stage (operators/seen.py). The probed candidates
+        are persisted and filled by one job HERE, before the caller submits
+        the sinks, so the frontier sink only reads cached rows; cleanup()
+        releases them and the broadcast."""
+        bcast = bloom_to_broadcast(spark, round_bloom)
+        releases.append(bcast.unpersist)
+        fresh, unpersist = filter_new_urls(cand, new_seen, bcast)
         releases.append(unpersist)
         return _min_depth_frontier(
             remainder.select(*FRONTIER_COLS).unionByName(fresh.select(*FRONTIER_COLS))

@@ -120,7 +120,7 @@ def stream_seed_ingest(spark: SparkSession, seed_dir: str) -> DataFrame:
     Scale note: unbounded dropDuplicates state is the streaming
     equivalent of the exact seen set and is the right tool at seed-feed
     rates (operations feed thousands of seeds, not billions); the
-    crawl's own 10^10-URL dedup stays on the batch bloom/cuckoo path
+    crawl's own 10^10-URL dedup stays on the batch bloom path
     (operators/seen.py), which this stream FEEDS, not replaces."""
     from ..functions.urlnorm import with_url_cols
 

@@ -137,6 +137,52 @@ def test_vacuum_engine_state_resume_transparent(spark, corpus_dfs, tmp_path):
             _table_fingerprint(spark, log_b, ROUNDS - 1, name), name
 
 
+def test_vacuum_crash_between_rewrite_and_delete(
+    spark, corpus_dfs, tmp_path, monkeypatch
+):
+    """A crash inside vacuum_engine_state, right after it deletes a pruned
+    table's data, must leave no committed snapshot pointing at a missing
+    path, and a resume must still reproduce the uninterrupted run."""
+    import shutil
+
+    import pytest
+
+    from opps_feedcrawler_spark.plans.crawl import ROUND_TABLES
+
+    pages, seeds, robots = corpus_dfs
+    wh_a = str(tmp_path / "a")
+    wh_b = str(tmp_path / "b")
+    log_a = run_crawl(spark, pages, seeds, robots, wh_a, rounds=ROUNDS)
+    log_b = run_crawl(spark, pages, seeds, robots, wh_b, rounds=2)
+
+    real_rmtree = shutil.rmtree
+
+    def rmtree_then_crash(path, *args, **kwargs):
+        real_rmtree(path, *args, **kwargs)
+        raise RuntimeError("crash after deleting " + path)
+
+    monkeypatch.setattr(shutil, "rmtree", rmtree_then_crash)
+    with pytest.raises(RuntimeError, match="crash after deleting"):
+        log_b.vacuum_engine_state(keep_last=1)
+    monkeypatch.undo()
+
+    for sid in log_b.snapshot_ids():
+        for name, table in log_b.read_snapshot(sid)["tables"].items():
+            assert os.path.exists(table["path"]), (sid, name, table["path"])
+
+    log_b = run_crawl(spark, pages, seeds, robots, wh_b, rounds=ROUNDS)
+    assert log_a.snapshot_ids() == log_b.snapshot_ids()
+    for r in log_a.snapshot_ids():
+        assert log_a.read_snapshot(r)["metrics"] == \
+            log_b.read_snapshot(r)["metrics"], r
+        for name in ("text", "entries", "fetch_log", "seen_delta"):
+            assert _table_fingerprint(spark, log_a, r, name) == \
+                _table_fingerprint(spark, log_b, r, name), (r, name)
+    for name in ROUND_TABLES:
+        assert _table_fingerprint(spark, log_a, ROUNDS - 1, name) == \
+            _table_fingerprint(spark, log_b, ROUNDS - 1, name), name
+
+
 def test_compact_every_in_engine_loop(spark, corpus_dfs, tmp_path):
     """run_crawl(compact_seen_every=2) must produce identical output to an
     uncompacted run and leave a committed base behind."""

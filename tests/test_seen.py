@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from opps_feedcrawler_spark.operators.seen import (
@@ -7,8 +8,7 @@ from opps_feedcrawler_spark.operators.seen import (
     build_seen_bloom,
     exact_new_urls,
     filter_new_urls,
-    filter_new_urls_broadcast,
-    probe_seen_bloom,
+    probe_seen_broadcast,
 )
 
 
@@ -20,53 +20,38 @@ def _urls(spark, urls):
 def test_bloom_no_false_negatives(spark):
     seen = _urls(spark, [f"http://h{i % 7}.example/p/{i}" for i in range(500)])
     bloom = build_seen_bloom(seen, nbuckets=8, bits=1 << 14)
-    probed = probe_seen_bloom(seen, bloom, nbuckets=8, bits=1 << 14)
-    assert probed.filter(~F.col("maybe_seen")).count() == 0
-
-
-def test_bloom_prefilter_matches_exact_antijoin(spark):
-    seen = _urls(spark, [f"http://h{i % 5}.example/s/{i}" for i in range(300)])
-    cand = _urls(
-        spark,
-        [f"http://h{i % 5}.example/s/{i}" for i in range(200, 400)]
-        + [f"http://h{i % 5}.example/new/{i}" for i in range(100)],
-    )
-    bloom = build_seen_bloom(seen, nbuckets=8, bits=1 << 14)
-    fresh, unpersist = filter_new_urls(cand, seen, bloom, nbuckets=8, bits=1 << 14)
-    with_bloom = {r.url_norm for r in fresh.collect()}
-    unpersist()
-    exact = {r.url_norm for r in exact_new_urls(cand, seen).collect()}
-    assert with_bloom == exact
-    assert len(exact) == 200  # 100 unseen /s/ + 100 /new/
-
-
-def test_both_probe_paths_return_exact_new_rows(spark):
-    """The broadcast and the cogrouped path each probe once and split the
-    probed rows in two; together the branches must give exactly
-    exact_new_urls' rows. A 128-bit-per-bucket bloom over 300 seen URLs
-    is dense enough that the new candidates include bloom positives, so
-    all three kinds of candidate are present: definite-new, bloom-positive
-    but new, and already seen."""
-    nb, bits = 8, 1 << 7
-    seen = _urls(spark, [f"http://h{i % 5}.example/s/{i}" for i in range(300)])
-    cand = _urls(
-        spark,
-        [f"http://h{i % 5}.example/s/{i}" for i in range(200, 400)]
-        + [f"http://h{i % 5}.example/new/{i}" for i in range(100)],
-    )
-    bloom = build_seen_bloom(seen, nbuckets=nb, bits=bits)
-    exact = sorted(exact_new_urls(cand, seen).collect())
-    exact_urls = {r.url_norm for r in exact}
-    probed = probe_seen_bloom(cand, bloom, nbuckets=nb, bits=bits).collect()
-    kinds = {(r.url_norm in exact_urls, r.maybe_seen) for r in probed}
-    assert kinds == {(True, False), (True, True), (False, True)}
-
     bcast = bloom_to_broadcast(spark, bloom)
-    for fresh, unpersist in (
-        filter_new_urls(cand, seen, bloom, nbuckets=nb, bits=bits),
-        filter_new_urls_broadcast(cand, seen, bcast, nbuckets=nb, bits=bits),
-    ):
-        assert fresh.columns == cand.columns
-        assert sorted(fresh.collect()) == exact
-        unpersist()
+    probed = probe_seen_broadcast(seen, bcast, nbuckets=8, bits=1 << 14)
+    assert probed.filter(~F.col("maybe_seen")).count() == 0
+    bcast.unpersist()
+
+
+@pytest.mark.parametrize("bits", [1 << 7, 1 << 14])
+def test_bloom_prefilter_matches_exact_antijoin(spark, bits):
+    """filter_new_urls probes once and splits the probed rows in two;
+    together the branches must give exactly exact_new_urls' rows. At 128
+    bits per bucket, a bloom over 300 seen URLs is dense enough that the
+    new candidates include bloom positives, so all three kinds of
+    candidate are present: definite-new, bloom-positive but new, and
+    already seen."""
+    nb = 8
+    seen = _urls(spark, [f"http://h{i % 5}.example/s/{i}" for i in range(300)])
+    cand = _urls(
+        spark,
+        [f"http://h{i % 5}.example/s/{i}" for i in range(200, 400)]
+        + [f"http://h{i % 5}.example/new/{i}" for i in range(100)],
+    )
+    bcast = bloom_to_broadcast(spark, build_seen_bloom(seen, nbuckets=nb, bits=bits))
+    exact = sorted(exact_new_urls(cand, seen).collect())
+    assert len(exact) == 200  # 100 unseen /s/ + 100 /new/
+    if bits == 1 << 7:
+        exact_urls = {r.url_norm for r in exact}
+        probed = probe_seen_broadcast(cand, bcast, nbuckets=nb, bits=bits).collect()
+        kinds = {(r.url_norm in exact_urls, r.maybe_seen) for r in probed}
+        assert kinds == {(True, False), (True, True), (False, True)}
+
+    fresh, unpersist = filter_new_urls(cand, seen, bcast, nbuckets=nb, bits=bits)
+    assert fresh.columns == cand.columns
+    assert sorted(fresh.collect()) == exact
+    unpersist()
     bcast.unpersist()
