@@ -27,10 +27,29 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
+
+
+_NULLABLE_KEYS = ("nullable", "containsNull", "valueContainsNull")
+
+
+def _as_nullable(schema):
+    """Spark's DataType.asNullable on a jsonValue() schema: a Parquet read
+    makes every column nullable, so this is the schema a reader of the
+    written files sees (and what footer inference would return)."""
+    if isinstance(schema, dict):
+        return {
+            k: True if k in _NULLABLE_KEYS else _as_nullable(v)
+            for k, v in schema.items()
+        }
+    if isinstance(schema, list):
+        return [_as_nullable(v) for v in schema]
+    return schema
 
 
 class SnapshotLog:
@@ -60,7 +79,9 @@ class SnapshotLog:
         """Write one table's Parquet and return its lineage manifest: the
         per-partition file list with row counts and byte sizes, read from the
         Parquet FOOTERS (no Spark job — the metrics/lineage path costs zero
-        cluster work per round)."""
+        cluster work per round), and the schema a reader of the written files
+        sees, which every later read of the table uses instead of inferring
+        it."""
         import pyarrow.parquet as pq
 
         path = self.table_path(round_no, name)
@@ -77,7 +98,12 @@ class SnapshotLog:
                 files.append(
                     {"file": fn, "bytes": os.path.getsize(full), "rows": nrows}
                 )
-        return {"path": path, "files": files, "rows": total_rows}
+        return {
+            "path": path,
+            "files": files,
+            "rows": total_rows,
+            "schema": _as_nullable(df.schema.jsonValue()),
+        }
 
     @staticmethod
     def count_where(path: str, column: str, value) -> int:
@@ -113,14 +139,18 @@ class SnapshotLog:
             "metrics": metrics,
             "timings": timings or {},
         }
+        self._publish(f"snap-{snapshot_id:08d}.json", doc)  # the commit point
+        return snapshot_id
+
+    def _publish(self, name: str, doc: dict) -> None:
+        """Write `doc` to a temp file in snapshots/ and atomically rename it
+        to `name`: readers see the whole document or nothing."""
         tmp = os.path.join(self.snap_dir, f".tmp-{uuid.uuid4().hex}.json")
-        final = os.path.join(self.snap_dir, f"snap-{snapshot_id:08d}.json")
         with open(tmp, "w") as f:
             json.dump(doc, f, indent=1, sort_keys=True)
             f.flush()
             os.fsync(f.fileno())
-        os.rename(tmp, final)  # the commit point
-        return snapshot_id
+        os.rename(tmp, os.path.join(self.snap_dir, name))
 
     # -- seen-delta compaction ----------------------------------------------
     #
@@ -135,44 +165,39 @@ class SnapshotLog:
     # exactly their union) — resume and oracle equality are unaffected,
     # which tests/test_resume.py asserts end-to-end.
 
-    def compact_seen(
-        self, spark: SparkSession, upto_round: int, partitions: int = 64
-    ) -> dict:
+    def compact_seen(self, spark: SparkSession, upto_round: int) -> dict:
         """Fold seen deltas of rounds 0..upto_round into one base table,
-        hash-partitioned by url_norm (so the per-round anti-join reads a
-        well-bucketed layout). Idempotent per upto_round. Old delta files
-        are retained for time travel to rounds < upto_round; a deployment
-        that expires old snapshots can vacuum them with the snapshots."""
-        paths = [
-            self.read_snapshot(r)["tables"]["seen_delta"]["path"]
+        written as read: one Spark job, one file per scan split (Spark sizes
+        the splits from the input bytes), no shuffle. Idempotent per
+        upto_round. Old delta files are retained for time travel to rounds
+        < upto_round; vacuum_engine_state drops superseded bases."""
+        deltas = [
+            self.read_snapshot(r)["tables"]["seen_delta"]
             for r in range(upto_round + 1)
         ]
+        schema = deltas[-1]["schema"]
         out = os.path.join(self.data_dir, f"seen_base={upto_round}")
         (
-            spark.read.parquet(*paths)
-            .repartition(partitions, "url_norm")
+            self.read(spark, schema, *(d["path"] for d in deltas))
             .write.mode("overwrite")
             .option("compression", self.codec)
             .parquet(out)
         )
-        doc = {"upto": upto_round, "path": out}
-        tmp = os.path.join(self.snap_dir, f".tmp-{uuid.uuid4().hex}.json")
-        final = os.path.join(self.snap_dir, f"base-{upto_round:08d}.json")
-        with open(tmp, "w") as f:
-            json.dump(doc, f, indent=1, sort_keys=True)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, final)  # the commit point
+        doc = {"upto": upto_round, "path": out, "schema": schema}
+        self._publish(f"base-{upto_round:08d}.json", doc)  # the commit point
         return doc
+
+    def _seen_base_uptos(self) -> list[int]:
+        return sorted(
+            int(fn[len("base-") : -len(".json")])
+            for fn in os.listdir(self.snap_dir)
+            if fn.startswith("base-") and fn.endswith(".json")
+        )
 
     def latest_seen_base(self, max_round: int) -> dict | None:
         """Newest committed base with upto ≤ max_round, else None."""
-        best = None
-        for fn in os.listdir(self.snap_dir):
-            if fn.startswith("base-") and fn.endswith(".json"):
-                upto = int(fn[len("base-") : -len(".json")])
-                if upto <= max_round and (best is None or upto > best):
-                    best = upto
+        uptos = [u for u in self._seen_base_uptos() if u <= max_round]
+        best = max(uptos, default=None)
         if best is None:
             return None
         with open(os.path.join(self.snap_dir, f"base-{best:08d}.json")) as f:
@@ -197,9 +222,13 @@ class SnapshotLog:
         mid-vacuum can only orphan files, never leave a snapshot naming a
         missing path. Resume only ever reads the LATEST snapshot's
         state, so vacuuming older rounds is resume-transparent
-        (tests/test_resume.py). Returns the vacuumed snapshot ids."""
-        import shutil
+        (tests/test_resume.py).
 
+        Every seen base older than the newest committed one is dropped too
+        (each compaction writes a full copy of the seen set): its marker
+        first, its data second, so a crash in between only orphans files.
+        load_seen for older rounds then reads the retained deltas.
+        Returns the vacuumed snapshot ids."""
         if keep_last < 1:
             raise ValueError(
                 "keep_last must be >= 1: the newest snapshot's engine "
@@ -218,17 +247,17 @@ class SnapshotLog:
             snap["expired_tables"] = sorted(
                 set(snap.get("expired_tables", [])) | set(pruned)
             )
-            tmp = os.path.join(self.snap_dir, f".tmp-{uuid.uuid4().hex}.json")
-            final = os.path.join(self.snap_dir, f"snap-{sid:08d}.json")
-            with open(tmp, "w") as f:
-                json.dump(snap, f, indent=1, sort_keys=True)
-                f.flush()
-                os.fsync(f.fileno())
-            os.rename(tmp, final)
+            self._publish(f"snap-{sid:08d}.json", snap)
             # only now: a crash before this line orphans files, no more
             for path in paths:
                 shutil.rmtree(path, ignore_errors=True)
             vacuumed.append(sid)
+        for upto in self._seen_base_uptos()[:-1]:
+            marker = os.path.join(self.snap_dir, f"base-{upto:08d}.json")
+            with open(marker) as f:
+                path = json.load(f)["path"]
+            os.remove(marker)
+            shutil.rmtree(path, ignore_errors=True)
         return vacuumed
 
     # -- read path ----------------------------------------------------------
@@ -252,5 +281,13 @@ class SnapshotLog:
         self, spark: SparkSession, snapshot_id: int, name: str
     ) -> DataFrame:
         """Time travel: read table `name` exactly as of snapshot_id."""
-        snap = self.read_snapshot(snapshot_id)
-        return spark.read.parquet(snap["tables"][name]["path"])
+        table = self.read_snapshot(snapshot_id)["tables"][name]
+        return self.read(spark, table["schema"], table["path"])
+
+    @staticmethod
+    def read(spark: SparkSession, schema: dict, *paths: str) -> DataFrame:
+        """Read Parquet `paths` with the schema their manifest recorded
+        (jsonValue form). Nothing is inferred from footers, so building the
+        DataFrame submits no Spark job. There is no fallback to inference:
+        a manifest without a schema fails with KeyError at its caller."""
+        return spark.read.schema(StructType.fromJson(schema)).parquet(*paths)

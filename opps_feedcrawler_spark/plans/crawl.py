@@ -48,8 +48,8 @@ Scale design decisions (the 100 TB story, each one load-bearing):
 - `seen` is stored as PER-ROUND DELTAS, never rewritten: the cumulative
   seen set at 10^10 URLs is the biggest table in the system; each snapshot
   appends only that round's scheduled∪disallowed rows (provably disjoint
-  from all prior deltas). load_seen() unions delta files — a metadata-only
-  operation for Parquet.
+  from all prior deltas). load_seen() unions delta files with the schema
+  their manifests recorded — a metadata-only operation, no Spark job.
 - the bloom filter is maintained INCREMENTALLY (merge_blooms ORs the
   round-delta bitsets into the running table) and is itself snapshotted,
   so resume never rebuilds it from the full seen set.
@@ -457,17 +457,18 @@ ROUND_TABLES = ("frontier", "seen_delta", "bloom", "schedule", "fetch_log", "tex
 def load_seen(spark: SparkSession, log: SnapshotLog, round_no: int) -> DataFrame:
     """Cumulative seen set as of round_no = newest compacted base (≤
     round_no, if any — SnapshotLog.compact_seen) plus the per-round delta
-    files after it (metadata-only: one multi-path Parquet read, no
-    shuffle). Row multiset is identical with or without a base (deltas
-    are disjoint), so every consumer — anti-joins, bloom probes, resume —
-    is unaffected by when compaction runs."""
+    files after it (metadata-only: one multi-path Parquet read with the
+    manifests' schema, no Spark job). Row multiset is identical with or
+    without a base (deltas are disjoint), so every consumer — anti-joins,
+    bloom probes, resume — is unaffected by when compaction runs."""
     base = log.latest_seen_base(round_no)
     start = base["upto"] + 1 if base else 0
-    paths = ([base["path"]] if base else []) + [
-        log.read_snapshot(r)["tables"]["seen_delta"]["path"]
+    deltas = [
+        log.read_snapshot(r)["tables"]["seen_delta"]
         for r in range(start, round_no + 1)
     ]
-    return spark.read.parquet(*paths)
+    parts = ([base] if base else []) + deltas
+    return log.read(spark, parts[0]["schema"], *(p["path"] for p in parts))
 
 
 def run_crawl(
@@ -519,27 +520,30 @@ def run_crawl(
     last = log.latest_snapshot_id()
     first = (last + 1) if last is not None else 0
     seed_frontier: DataFrame | None = None
-    if first == 0:
-        # round 0's frontier feeds the schedule, the seen delta's
-        # disallowed rows and the frontier sink's remainder: persisted so
-        # the seeds are canonicalized once (filled by the round's
-        # materialize, released once round 0 is committed)
-        frontier = seed_frontier = seeds_to_frontier(seeds).persist(
-            StorageLevel.MEMORY_AND_DISK
-        )
-        seen = spark.createDataFrame([], "url_norm string, url_hash long")
-        bloom: DataFrame | None = None
-    else:
-        frontier = log.load_table(spark, first - 1, "frontier")
-        seen = load_seen(spark, log, first - 1)
-        bloom = log.load_table(spark, first - 1, "bloom")
-
     cumulative_seen = 0 if first == 0 else sum(
         log.read_snapshot(r)["metrics"]["seen_delta_rows"] for r in range(first)
     )
     import time as _time
 
     for round_no in range(first, rounds):
+        if round_no == 0:
+            # round 0's frontier feeds the schedule, the seen delta's
+            # disallowed rows and the frontier sink's remainder: persisted
+            # so the seeds are canonicalized once (filled by the round's
+            # materialize, released once round 0 is committed)
+            frontier = seed_frontier = seeds_to_frontier(seeds).persist(
+                StorageLevel.MEMORY_AND_DISK
+            )
+            seen = spark.createDataFrame([], "url_norm string, url_hash long")
+            bloom: DataFrame | None = None
+        else:
+            # Every later round reads from the committed snapshot (the
+            # materialization barrier that makes every round a pure
+            # function of the previous snapshot — no recomputation drift,
+            # no lineage blowup); after the last round nothing is loaded.
+            frontier = log.load_table(spark, round_no - 1, "frontier")
+            seen = load_seen(spark, log, round_no - 1)
+            bloom = log.load_table(spark, round_no - 1, "bloom")
         _t0 = _round_start = _time.monotonic()
         out = crawl_round(
             spark, frontier, seen, bloom, prepared, robots, round_no,
@@ -597,12 +601,6 @@ def run_crawl(
             # rounds. Resume-transparent: only the latest snapshot's engine
             # state is ever read back (tests/test_resume.py).
             log.vacuum_engine_state(keep_last=vacuum_keep)
-        # Next round reads from the committed snapshot (the materialization
-        # barrier that makes every round a pure function of the previous
-        # snapshot — no recomputation drift, no lineage blowup).
-        frontier = log.load_table(spark, round_no, "frontier")
-        seen = load_seen(spark, log, round_no)
-        bloom = log.load_table(spark, round_no, "bloom")
         if seed_frontier is not None:
             seed_frontier.unpersist()
             seed_frontier = None

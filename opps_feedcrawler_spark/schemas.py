@@ -1,9 +1,13 @@
-"""Fixed StructType schemas for every engine table (SURVEY.md §1.2).
+"""Fixed StructType schemas for the engine's input and output tables
+(SURVEY.md §1.2).
 
 Schema-first by design: the reference relies on ORM migrations (behavior-level,
-SURVEY.md §1.1 [PK]); this engine declares every table once, here, and every
-module imports from this file. Shapes bound by BASELINE.json:6 (north_star)
-and BASELINE.json:16 (input_hint: pages table is exactly
+SURVEY.md §1.1 [PK]); this engine declares its input and extraction shapes
+here. The frontier, seen-delta and bloom tables are not declared here: their
+shape is whatever the round's plan writes, and each snapshot manifest
+records every table's schema as written (plans/checkpoint.SnapshotLog.
+write_table), which is what every later read of the table uses. Shapes bound by BASELINE.json:6
+(north_star) and BASELINE.json:16 (input_hint: pages table is exactly
 (url string, warc_ts timestamp, html binary, text string, lang string)).
 """
 
@@ -36,38 +40,6 @@ PAGES = StructType(
 )
 
 SEEDS = StructType([StructField("url", StringType())])
-
-# ---------------------------------------------------------------------------
-# Engine-internal tables — BASELINE.json:6.
-# ---------------------------------------------------------------------------
-FRONTIER = StructType(
-    [
-        StructField("url_norm", StringType()),
-        StructField("host", StringType()),
-        StructField("url_hash", LongType()),   # xxhash64(url_norm)
-        StructField("host_hash", IntegerType()),  # murmur3 (F.hash) of host
-        StructField("salt", IntegerType()),    # pmod(url_hash, NSALTS): spreads
-        #                                        a hot host across partitions
-        StructField("depth", IntegerType()),
-        StructField("priority", DoubleType()),
-        StructField("discovered_round", IntegerType()),
-    ]
-)
-
-SEEN = StructType(
-    [
-        StructField("url_norm", StringType()),
-        StructField("url_hash", LongType()),
-    ]
-)
-
-# Per-bucket bloom bitsets built by vectorized Arrow UDFs (BASELINE.json:6).
-SEEN_BLOOM = StructType(
-    [
-        StructField("bucket", IntegerType()),
-        StructField("bitset", BinaryType()),
-    ]
-)
 
 ROBOTS = StructType(
     [

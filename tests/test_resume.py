@@ -7,8 +7,12 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
-from opps_feedcrawler_spark.plans.crawl import run_crawl
+import pytest
+
+from opps_feedcrawler_spark.plans.checkpoint import SnapshotLog
+from opps_feedcrawler_spark.plans.crawl import ROUND_TABLES, load_seen, run_crawl
 
 ROUNDS = 3
 
@@ -72,7 +76,7 @@ def test_seen_compaction_is_transparent(spark, corpus_dfs, tmp_path):
     log_a = run_crawl(spark, pages, seeds, robots, wh_a, rounds=ROUNDS)
 
     log_b = run_crawl(spark, pages, seeds, robots, wh_b, rounds=2)
-    base = log_b.compact_seen(spark, upto_round=1, partitions=4)
+    base = log_b.compact_seen(spark, upto_round=1)
     assert base["upto"] == 1
     # compacted base == union of deltas 0..1, exactly
     base_rows = sorted(
@@ -238,3 +242,134 @@ def test_vacuum_keep_in_engine_loop(spark, corpus_dfs, tmp_path):
         spark, pages, seeds, robots, wh_v, rounds=ROUNDS + 1, vacuum_keep=1
     )
     assert log_v2.latest_snapshot_id() == ROUNDS
+
+
+# -- snapshot-layer cost: loads without jobs, one-job compaction -------------
+
+
+@pytest.fixture(scope="module")
+def plain_log(spark, corpus_dfs, tmp_path_factory):
+    """An uncompacted, unvacuumed ROUNDS-round crawl to compare against."""
+    wh = str(tmp_path_factory.mktemp("plain"))
+    return run_crawl(spark, *corpus_dfs, wh, rounds=ROUNDS)
+
+
+@pytest.fixture(scope="module")
+def compacted_log(spark, corpus_dfs, tmp_path_factory):
+    """A ROUNDS-round crawl with a seen base at upto=1."""
+    wh = str(tmp_path_factory.mktemp("compacted"))
+    return run_crawl(spark, *corpus_dfs, wh, rounds=ROUNDS, compact_seen_every=2)
+
+
+def _jobs_of(spark, fn) -> list[int]:
+    """Ids of the Spark jobs that `fn()` submits from this thread."""
+    sc = spark.sparkContext
+    group = f"test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _seen_rows(df):
+    return sorted(map(repr, ((r.url_norm, r.url_hash) for r in df.collect())))
+
+
+def test_state_loads_submit_no_job(spark, compacted_log):
+    """Loading a table or the seen set reads the schema from the manifest,
+    so building the DataFrame submits no Spark job (no footer inference)."""
+    log = compacted_log
+    last = ROUNDS - 1
+    assert log.latest_seen_base(last)["upto"] == 1
+    assert log.latest_seen_base(0) is None
+
+    def loads():
+        for name in ROUND_TABLES:
+            log.load_table(spark, last, name)
+        load_seen(spark, log, last)  # base + the delta after it
+        load_seen(spark, log, 0)  # deltas only
+
+    assert _jobs_of(spark, loads) == []
+
+
+def test_compact_seen_is_one_job(spark, corpus_dfs, tmp_path):
+    """compact_seen writes the deltas as read: one job, no shuffle."""
+    log = run_crawl(spark, *corpus_dfs, str(tmp_path / "wh"), rounds=2)
+    jobs = _jobs_of(spark, lambda: log.compact_seen(spark, 1))
+    assert len(jobs) == 1, jobs
+    assert log.latest_seen_base(1)["upto"] == 1
+
+
+def test_manifest_schema_matches_inferred(spark, compacted_log):
+    """Every table manifest and seen-base marker records the schema that
+    footer inference returns for the same path."""
+    from pyspark.sql.types import StructType
+
+    log = compacted_log
+    parts = [
+        (sid, name, table)
+        for sid in log.snapshot_ids()
+        for name, table in log.read_snapshot(sid)["tables"].items()
+    ]
+    assert {name for _, name, _ in parts} == set(ROUND_TABLES)
+    parts.append(("base", "seen_base", log.latest_seen_base(ROUNDS - 1)))
+    for sid, name, table in parts:
+        recorded = StructType.fromJson(table["schema"])
+        assert recorded == spark.read.parquet(table["path"]).schema, (sid, name)
+
+
+def test_vacuum_drops_superseded_seen_bases(spark, corpus_dfs, plain_log, tmp_path):
+    """With compaction every round, vacuum keeps only the newest seen base
+    (marker and data); load_seen for older rounds falls back to the
+    retained deltas and still equals an uncompacted run's."""
+    log = run_crawl(
+        spark, *corpus_dfs, str(tmp_path / "v"), rounds=ROUNDS,
+        compact_seen_every=1, vacuum_keep=1,
+    )
+    last = ROUNDS - 1
+    bases = [d for d in os.listdir(log.data_dir) if d.startswith("seen_base=")]
+    markers = [f for f in os.listdir(log.snap_dir) if f.startswith("base-")]
+    assert bases == [f"seen_base={last}"]
+    assert markers == [f"base-{last:08d}.json"]
+    for r in range(ROUNDS):
+        assert _seen_rows(load_seen(spark, log, r)) == \
+            _seen_rows(load_seen(spark, plain_log, r)), r
+
+
+def test_compact_seen_crash_before_marker(
+    spark, corpus_dfs, plain_log, tmp_path, monkeypatch
+):
+    """A crash inside compact_seen after the base data is written but
+    before its marker is renamed leaves a base no reader sees; a resume
+    reproduces the uninterrupted run."""
+    wh = str(tmp_path / "crash")
+    real_rename = os.rename
+
+    def rename(src, dst):
+        if os.path.basename(dst).startswith("base-"):
+            raise RuntimeError("crash before the compaction marker")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(RuntimeError, match="compaction marker"):
+        run_crawl(spark, *corpus_dfs, wh, rounds=2, compact_seen_every=2)
+    monkeypatch.undo()
+
+    log = SnapshotLog(wh)
+    assert log.latest_snapshot_id() == 1  # round 1 committed before the crash
+    unmarked = os.path.join(log.data_dir, "seen_base=1")
+    assert any(f.endswith(".parquet") for f in os.listdir(unmarked))
+    assert log.latest_seen_base(1) is None
+    files = load_seen(spark, log, 1).inputFiles()
+    assert files and not any("seen_base=" in f for f in files)
+
+    log = run_crawl(spark, *corpus_dfs, wh, rounds=ROUNDS, compact_seen_every=2)
+    assert log.snapshot_ids() == plain_log.snapshot_ids()
+    for r in plain_log.snapshot_ids():
+        assert log.read_snapshot(r)["metrics"] == \
+            plain_log.read_snapshot(r)["metrics"], r
+        for name in ROUND_TABLES:
+            assert _table_fingerprint(spark, log, r, name) == \
+                _table_fingerprint(spark, plain_log, r, name), (r, name)
