@@ -68,5 +68,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 def oracle_sql() -> dict[str, str]:
     """DuckDB-equivalent SQL per query (omitted keys → rows-only check)."""
     from opps_feedcrawler_spark.plans.queries import ORACLE_SQL
+    from opps_feedcrawler_spark.sources import fixtures
 
+    # The oracle SQL of multimodal_image_meta, _png_palette and _jpeg_meta
+    # reads these parquet fixtures, and the driver may run an oracle
+    # before its query callable (which writes its own fixture too).
+    fixtures.ensure_png_fixture()
+    fixtures.ensure_png_palette_fixture()
+    fixtures.ensure_jpeg_fixture()
     return dict(ORACLE_SQL)

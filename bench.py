@@ -84,7 +84,6 @@ HEADLINE_QUERIES = [
     "pack_doc_chunks",
     "mix_sources_interleave",
     "sample_stratified_fixed",
-    "multimodal_audio_meta",
     "dedup_simhash",
     # round-3 batch 2/3: discovery + training-data text planes
     "text_c4_filter_chain",
@@ -96,11 +95,10 @@ HEADLINE_QUERIES = [
     # round-3 batch 6: dedup cluster resolution + quantization planes
     "dedup_cluster_canonical",
     "embedding_quantize_int8",
-    # round-4 additions: gzip WARC, paletted/progressive PNG, G.711 audio,
+    # round-4 additions: gzip WARC, paletted/progressive PNG,
     # WET conversion shards, HTTP envelope decode, PSL wildcard/exception
     "crawl_warc_gzip",
     "multimodal_png_palette",
-    "multimodal_audio_g711",
     "crawl_wet_extract",
     "crawl_http_envelope",
     "crawl_host_pld",

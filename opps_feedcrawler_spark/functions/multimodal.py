@@ -1,6 +1,7 @@
-"""Multimodal column plumbing: image/audio/video as opaque binary columns
-with typed metadata, processed through mapInPandas (training-data pipeline
-plane).
+"""Image column plumbing: images as opaque binary columns with typed
+metadata, processed through mapInPandas (training-data pipeline plane),
+plus the codec-free helpers a crawl path calls (``sniff_mime``,
+``byte_histogram_features``).
 
 The Spark-side plumbing is REAL and tested — schema, Arrow batch shape,
 partition-preserving mapInPandas. Codec status per format:
@@ -11,19 +12,6 @@ partition-preserving mapInPandas. Codec status per format:
   (grayscale-8, zlib-deflated filtered scanlines) used by tests and the
   driver fixture. No image library needed — width/height/bit-depth are
   plain big-endian bytes at fixed offsets (PNG spec, RFC 2083 §4.1.1).
-- **WAV: REAL.** ``parse_wav_meta`` is a stdlib-only RIFF/WAVE chunk
-  walker (RIFF+WAVE magic, fmt/data chunk scan, little-endian field
-  extraction per the canonical WAVE format) and ``encode_wav`` a minimal
-  spec-valid PCM encoder used by tests and the driver fixture.
-- **G.711 (a-law/µ-law) WAV: REAL, both directions.** WAVE format tags
-  6/7 carry ITU-T G.711 companded telephony audio (the other payload,
-  besides PCM, that is pure integer arithmetic — no codec library).
-  ``ulaw_to_linear``/``alaw_to_linear`` implement the segment-expansion
-  formulas from G.711 Tables 1a/2a; ``linear_to_ulaw``/``linear_to_alaw``
-  are the matching midpoint quantizers derived BY CONSTRUCTION from the
-  decode tables (single source of truth, so encode∘decode is the
-  identity on codes). ``decode_wav_samples`` expands tags 6/7 to linear
-  int32 samples.
 - **JPEG metadata: REAL.** ``parse_jpeg_meta`` is a stdlib-only marker
   walker (ITU T.81 segment syntax: SOI, length-prefixed segments, SOFn
   frame-header field extraction) and ``encode_jpeg`` a minimal
@@ -31,35 +19,21 @@ partition-preserving mapInPandas. Codec status per format:
   entropy payload) used by tests and the driver fixture. Dimension
   extraction from SOFn is exactly what PIL does for ``Image.size`` — no
   entropy decode needed.
-- **MP3 metadata: REAL.** ``parse_mp3_meta`` walks the MPEG-1 Layer III
-  frame chain (ID3v2 skip, per-frame header validation, frame lengths
-  derived from each frame's own bitrate/samplerate — exact for VBR) and
-  ``encode_mp3`` writes spec-valid CBR frame streams for tests/fixtures.
-- **MP4 metadata: REAL.** ``parse_mp4_meta`` is an ISO 14496-12 box
-  walker (largesize/to-EOF handling, moov→mvhd v0/v1 field layouts,
-  trak counting) and ``encode_mp4`` a minimal exact-size BMFF writer.
 - **PNG pixels: REAL.** ``decode_png_pixels`` zlib-inflates IDAT and
   applies the full RFC 2083 unfilter set (None/Sub/Up/Average/Paeth,
   byte-exact) for 8- and 16-bit gray/RGB/GA/RGBA; ``resize_png`` does real
   nearest-neighbor thumbnails (decode → resample → re-encode).
+- **JPEG pixels: REAL** (``functions/jpegcodec.py``): baseline and
+  progressive, grayscale and YCbCr; the modes it lacks (lossless,
+  arithmetic, hierarchical) raise NotImplementedError.
 - **GIF: REAL, fully** (``functions/gifcodec.py``): GIF89a block walk
   (frame counting, GCE delay summation), variable-width LSB-first LZW
   decode AND encode (width bumps, CLEAR resets, KwKwK), palette lookup,
   nearest-neighbor resize. GIF is lossless, so any content round-trips
   bit-exactly — no codec library involved anywhere.
-- **MP4 sample demux: REAL.** ``parse_mp4_samples`` walks each trak's
-  stts/stsz/stsc/stco (+mdhd timescale, co64) to per-sample absolute
-  offsets/sizes/decode-times — the demuxer traversal ffmpeg performs
-  before codec work — and ``encode_mp4_samples`` writes fragmentless
-  MP4s with genuine sample tables. ``sample_video_frames`` /
-  ``video_frame_stats`` slice the TRUE frame payloads out of mdat and
-  hash/reduce them with real timestamps.
-- **JPEG/MP3 payload decode, codec-level frame pixels: declared
-  stubs.** The container has no libjpeg/ffmpeg; ``decode_image_pixels``
-  raises NotImplementedError for non-PNG, and decoding a demuxed frame's
-  pixels would need the video codec itself. Swapping a stub for a real
-  decoder changes ONE pure function; the distributed plan is already
-  correct.
+
+There is no audio or video decoder: ``sniff_mime`` still labels WAV
+bodies ``audio/wav``, and nothing downstream decodes them.
 
 Design for 100 TB of media: binaries never pass through a shuffle — the
 decode/feature stage is mapInPandas (narrow, partition-local), metadata-only
@@ -859,945 +833,6 @@ def gif_metadata(df: DataFrame, url_col: str = "url", bin_col: str = "blob") -> 
     return df.mapInPandas(_decode, GIF_META_SCHEMA)
 
 
-AUDIO_META_SCHEMA = (
-    "url string, n_bytes long, codec string, sample_rate int, "
-    "n_channels int, duration_ms long"
-)
-
-
-def encode_wav(
-    sample_rate: int,
-    n_channels: int,
-    payload: bytes,
-    bits: int = 16,
-    fmt_tag: int = 1,
-) -> bytes:
-    """REAL minimal RIFF/WAVE encoder (stdlib only): canonical 44-byte
-    header (RIFF size, 'WAVE', 16-byte fmt chunk, data chunk) followed by
-    the sample payload (truncated to whole frames). fmt_tag 1 = linear
-    PCM (8/16-bit); 6 = G.711 a-law, 7 = G.711 µ-law (both 8 bits/sample
-    per the WAVE spec). Spec-valid, independently readable by any WAV
-    reader (e.g. the stdlib `wave` module)."""
-    if fmt_tag in (6, 7):
-        bits = 8  # G.711 is defined as 8 bits/sample
-    if sample_rate <= 0 or n_channels <= 0 or bits % 8 or fmt_tag not in (1, 6, 7):
-        raise ValueError("invalid WAV parameters")
-    block_align = n_channels * bits // 8
-    data = payload[: (len(payload) // block_align) * block_align]
-    byte_rate = sample_rate * block_align
-    fmt = struct.pack(
-        "<HHIIHH", fmt_tag, n_channels, sample_rate, byte_rate, block_align, bits
-    )
-    return (
-        b"RIFF"
-        + struct.pack("<I", 4 + 8 + len(fmt) + 8 + len(data))
-        + b"WAVE"
-        + b"fmt "
-        + struct.pack("<I", len(fmt))
-        + fmt
-        + b"data"
-        + struct.pack("<I", len(data))
-        + data
-    )
-
-
-def parse_wav_meta(blob: bytes) -> dict:
-    """REAL WAV structural parser (stdlib only): validates RIFF/WAVE
-    magic, walks chunks (word-aligned per spec) to the fmt and data
-    chunks, extracts the little-endian PCM fields, and derives
-    duration_ms = whole_frames * 1000 // sample_rate (exact integer
-    arithmetic — mirrored by the SQL oracle). Raises ValueError on
-    malformed input."""
-    if len(blob) < 12 or blob[:4] != b"RIFF" or blob[8:12] != b"WAVE":
-        raise ValueError("not a WAV: bad RIFF/WAVE magic or truncated")
-    pos, fmt, data_len = 12, None, None
-    while pos + 8 <= len(blob):
-        cid, clen = blob[pos : pos + 4], struct.unpack("<I", blob[pos + 4 : pos + 8])[0]
-        body = blob[pos + 8 : pos + 8 + clen]
-        if cid == b"fmt " and clen >= 16:
-            if len(body) < 16:
-                # declared length outruns the blob (torn download) —
-                # struct.error must not escape the ValueError contract
-                raise ValueError("WAV fmt chunk truncated")
-            fmt = struct.unpack("<HHIIHH", body[:16])
-        elif cid == b"data":
-            data_len = len(body)
-        pos += 8 + clen + (clen & 1)  # chunks are word-aligned
-    if fmt is None or data_len is None:
-        raise ValueError("WAV missing fmt or data chunk")
-    tag, n_channels, sample_rate, _brate, block_align, bits = fmt
-    if block_align <= 0 or sample_rate <= 0 or n_channels <= 0:
-        raise ValueError("WAV fmt fields invalid")
-    frames = data_len // block_align
-    return {
-        "sample_rate": sample_rate,
-        "n_channels": n_channels,
-        "bits": bits,
-        "fmt_tag": tag,
-        "n_frames": frames,
-        "duration_ms": frames * 1000 // sample_rate,
-    }
-
-
-def _g711_tables():
-    """Build the 256-entry G.711 decode tables from the segment-expansion
-    formulas (ITU-T G.711 Tables 1a/2a, classic telephony formulation in
-    16-bit linear range). Pure integer arithmetic — the SQL oracle
-    re-derives the exact same expansion per byte.
-
-    µ-law: u = ~b; t = (((u & 0xF) << 3) + 0x84) << ((u >> 4) & 7);
-           value = 0x84 - t if sign bit else t - 0x84   (range ±32124)
-    a-law: a = b ^ 0x55; seg = (a >> 4) & 7; m = a & 0xF;
-           t = m*16+8 if seg==0 else (m*16+264) << (seg-1)
-           value = +t if sign bit else -t               (range ±32256)
-    """
-    import numpy as np
-
-    b = np.arange(256, dtype=np.int64)
-    u = 255 - b  # ~b for a uint8
-    t = (((u & 0xF) << 3) + 0x84) << ((u >> 4) & 7)
-    ulaw = np.where(u >= 128, 0x84 - t, t - 0x84).astype(np.int32)
-    a = b ^ 0x55
-    seg = (a >> 4) & 7
-    m = a & 0xF
-    t = np.where(seg == 0, m * 16 + 8, (m * 16 + 264) << np.maximum(seg - 1, 0))
-    alaw = np.where(a >= 128, t, -t).astype(np.int32)
-    return ulaw, alaw
-
-
-_ULAW_TABLE, _ALAW_TABLE = _g711_tables()
-
-
-def ulaw_to_linear(codes):
-    """REAL G.711 µ-law expansion: uint8 code array -> int32 linear
-    samples (±32124). Vectorized table lookup; the table itself is the
-    spec formula (see _g711_tables)."""
-    import numpy as np
-
-    return _ULAW_TABLE[np.asarray(codes, dtype=np.uint8)]
-
-
-def alaw_to_linear(codes):
-    """REAL G.711 a-law expansion: uint8 code array -> int32 linear
-    samples (±32256)."""
-    import numpy as np
-
-    return _ALAW_TABLE[np.asarray(codes, dtype=np.uint8)]
-
-
-def _g711_encoder(table):
-    """Midpoint quantizer derived from a G.711 decode table: a linear
-    sample maps to the code whose decoded value is nearest (exact G.711
-    segment quantization, since segment decode values ARE the segment
-    midpoints). Built by construction from the decode table, so
-    encode(decode(code)) == code wherever decode is injective (all a-law
-    codes; all µ-law codes except one of the two zero codes 0x7F/0xFF)."""
-    import numpy as np
-
-    order = np.argsort(table, kind="stable")
-    vals = table[order].astype(np.int64)
-    mids = (vals[:-1] + vals[1:]) // 2  # floor-midpoint decision levels
-
-    def encode(samples):
-        s = np.asarray(samples, dtype=np.int64)
-        # every G.711 step is even, so each floor-midpoint is an exact
-        # tie point; side='right' sends a sample ON the decision level to
-        # the HIGHER decoded value — deterministic (this is also what
-        # resolves µ-law's duplicate zero to 0xFF)
-        idx = np.searchsorted(mids, s, side="right")
-        return order[idx].astype(np.uint8)
-
-    return encode
-
-
-linear_to_ulaw = _g711_encoder(_ULAW_TABLE)
-linear_to_alaw = _g711_encoder(_ALAW_TABLE)
-
-
-def decode_wav_samples(blob: bytes):
-    """REAL PCM waveform decode (stdlib+numpy): locate the data chunk via
-    the same RIFF walk as parse_wav_meta and reinterpret it as samples —
-    little-endian int16 (the canonical PCM encoding) or uint8, reshaped
-    to (frames, channels). G.711 payloads (fmt tags 6/7) are expanded to
-    linear through the real a-law/µ-law tables. Raw PCM *is* the
-    waveform, so unlike MP3 this needs no codec library; returns an int32
-    array so downstream reductions can't overflow."""
-    import numpy as np
-
-    meta = parse_wav_meta(blob)
-    bits, chans, tag = meta["bits"], meta["n_channels"], meta["fmt_tag"]
-    if tag not in (1, 6, 7):
-        raise NotImplementedError("only PCM / G.711 a-law / µ-law WAV supported")
-    if tag == 1 and bits not in (8, 16):
-        raise NotImplementedError("only 8/16-bit PCM WAV supported")
-    if tag in (6, 7) and bits != 8:
-        raise ValueError("G.711 WAV must declare 8 bits/sample")
-    pos = 12
-    data = None
-    while pos + 8 <= len(blob):
-        cid = blob[pos : pos + 4]
-        (clen,) = struct.unpack("<I", blob[pos + 4 : pos + 8])
-        if cid == b"data":
-            data = blob[pos + 8 : pos + 8 + clen]
-            break
-        pos += 8 + clen + (clen & 1)
-    if data is None:
-        raise ValueError("WAV missing data chunk")
-    dt = np.dtype("<i2") if bits == 16 else np.uint8
-    width = (bits // 8) * chans
-    usable = (len(data) // width) * width
-    raw = np.frombuffer(data[:usable], dtype=dt)
-    if tag == 7:
-        arr = ulaw_to_linear(raw).astype(np.int32)
-    elif tag == 6:
-        arr = alaw_to_linear(raw).astype(np.int32)
-    else:
-        arr = raw.astype(np.int32)
-        if bits == 8:
-            # 8-bit PCM is UNSIGNED 0..255 per the WAV spec; center at 128
-            # so both bit depths yield zero-centered amplitudes and
-            # downstream sum_abs/peak/dc reductions are amplitude-
-            # meaningful (ADVICE r3)
-            arr -= 128
-    return arr.reshape(-1, chans)
-
-
-WAVEFORM_STATS_SCHEMA = (
-    "url string, sample_rate int, n_samples long, sum_abs long, "
-    "peak int, dc_sum long"
-)
-
-
-def audio_waveform_stats(
-    df: DataFrame, url_col: str = "url", bin_col: str = "blob"
-) -> DataFrame:
-    """mapInPandas REAL-waveform stage: decode_wav_samples per blob, then
-    numpy reductions (total |amplitude|, peak, DC sum) — the shape of any
-    real loudness/silence/clipping scorer over decoded audio. Narrow, no
-    blob shuffle, Arrow-bounded batches."""
-    import numpy as np
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for b in pdf[bin_col]:
-                blob = bytes(b)
-                meta = parse_wav_meta(blob)
-                s = decode_wav_samples(blob).reshape(-1).astype(np.int64)
-                rows.append(
-                    {
-                        "sample_rate": meta["sample_rate"],
-                        "n_samples": int(s.size),
-                        "sum_abs": int(np.abs(s).sum()),
-                        "peak": int(np.abs(s).max()) if s.size else 0,
-                        "dc_sum": int(s.sum()),
-                    }
-                )
-            out = pd.DataFrame(rows)
-            out.insert(0, "url", pdf[url_col].values)
-            yield out
-
-    return df.mapInPandas(_stats, WAVEFORM_STATS_SCHEMA)
-
-
-# MPEG-1 Layer III bitrate table (kbps) and sample rates, ISO 11172-3.
-_MP3_BITRATES_V1L3 = (
-    None, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, None
-)
-_MP3_RATES_V1 = (44100, 48000, 32000, None)
-
-
-def encode_mp3(
-    sample_rate: int, bitrate_kbps: int, n_frames: int, mono: bool = True
-) -> bytes:
-    """REAL minimal MPEG-1 Layer III CBR frame-stream writer (stdlib
-    only): emits `n_frames` frames, each a spec-valid 4-byte header
-    (11-bit sync, version=MPEG1, layer=III, the requested bitrate and
-    sample-rate indices, padding=0, mode=mono/stereo) followed by filler
-    up to the exact Layer III frame length 144*bitrate//sample_rate. Any
-    MP3 frame parser (this module's, mpg123's header scan) reads back the
-    same rate/bitrate/duration; only the audio payload is synthetic."""
-    if sample_rate not in _MP3_RATES_V1[:3]:
-        raise ValueError(f"unsupported MPEG-1 sample rate: {sample_rate}")
-    if bitrate_kbps not in _MP3_BITRATES_V1L3:
-        raise ValueError(f"unsupported MPEG-1 Layer III bitrate: {bitrate_kbps}")
-    br_idx = _MP3_BITRATES_V1L3.index(bitrate_kbps)
-    sr_idx = _MP3_RATES_V1.index(sample_rate)
-    frame_len = 144 * bitrate_kbps * 1000 // sample_rate
-    # byte0: sync hi; byte1: sync lo(3) + version 11 + layer 01 + no-crc 1
-    # byte2: bitrate idx (4) + samplerate idx (2) + padding 0 + private 0
-    # byte3: channel mode (2) + rest zero
-    hdr = bytes(
-        [0xFF, 0xFB, (br_idx << 4) | (sr_idx << 2), (0xC0 if mono else 0x00)]
-    )
-    frame = hdr + bytes((frame_len - 4) * [0x55])
-    return frame * n_frames
-
-
-def parse_mp3_meta(blob: bytes) -> dict:
-    """REAL MP3 structural parser (stdlib only): skips an optional ID3v2
-    tag (syncsafe size per id3.org), then WALKS the MPEG-1 Layer III
-    frame chain — validating each 4-byte header's sync/version/layer,
-    deriving every frame's length from its own bitrate/samplerate fields
-    (so VBR streams are counted exactly, the same walk ffprobe does when
-    there is no Xing header) — and returns rate/channels and the exact
-    duration n_frames*1152*1000//sample_rate. Raises ValueError on
-    malformed input: no sync, reserved indices, zero frames."""
-    pos = 0
-    if blob[:3] == b"ID3" and len(blob) >= 10:
-        sz = (
-            (blob[6] & 0x7F) << 21 | (blob[7] & 0x7F) << 14
-            | (blob[8] & 0x7F) << 7 | (blob[9] & 0x7F)
-        )
-        pos = 10 + sz
-    n_frames = 0
-    sample_rate = n_channels = None
-    while pos + 4 <= len(blob):
-        b0, b1, b2, b3 = blob[pos : pos + 4]
-        if b0 != 0xFF or (b1 & 0xE0) != 0xE0:
-            break  # end of frame chain (trailing tag/garbage)
-        if (b1 & 0x18) != 0x18 or (b1 & 0x06) != 0x02:
-            raise ValueError("only MPEG-1 Layer III frames supported")
-        br = _MP3_BITRATES_V1L3[b2 >> 4]
-        sr = _MP3_RATES_V1[(b2 >> 2) & 3]
-        if br is None or sr is None:
-            raise ValueError("reserved bitrate/samplerate index")
-        if sample_rate is None:
-            sample_rate = sr
-            n_channels = 1 if (b3 >> 6) == 3 else 2
-        padding = (b2 >> 1) & 1
-        pos += 144 * br * 1000 // sr + padding
-        n_frames += 1
-    if not n_frames:
-        raise ValueError("no MP3 frames found")
-    return {
-        "sample_rate": sample_rate,
-        "n_channels": n_channels,
-        "n_frames": n_frames,
-        "duration_ms": n_frames * 1152 * 1000 // sample_rate,
-    }
-
-
-def decode_audio_meta(blob: bytes) -> dict:
-    """Audio metadata decode. WAV and MP3 are REAL (parse_wav_meta —
-    RIFF chunk walk; parse_mp3_meta — MPEG frame-chain walk); unknown
-    formats fall back to a deterministic declared STUB (a real
-    deployment replaces the fallback with soundfile/ffprobe).
-
-    Like decode_image_meta: a blob that sniffs WAV/MP3 but fails its
-    structural parse becomes a codec="invalid" row with zero fields —
-    crawl corpora are full of truncated media, and one bad blob must not
-    raise out of a 100 TB stage."""
-    n = len(blob)
-    sniffed = None
-    if blob[:4] == b"RIFF" and blob[8:12] == b"WAVE":
-        sniffed = ("wav", parse_wav_meta)
-    elif blob[:3] == b"ID3" or (
-        len(blob) >= 2 and blob[0] == 0xFF and (blob[1] & 0xE0) == 0xE0
-    ):
-        sniffed = ("mp3", parse_mp3_meta)
-    if sniffed is not None:
-        codec, parser = sniffed
-        try:
-            meta = parser(blob)
-        except ValueError:
-            return {
-                "n_bytes": n,
-                "codec": "invalid",
-                "sample_rate": 0,
-                "n_channels": 0,
-                "duration_ms": 0,
-            }
-        return {
-            "n_bytes": n,
-            "codec": codec,
-            "sample_rate": meta["sample_rate"],
-            "n_channels": meta["n_channels"],
-            "duration_ms": meta["duration_ms"],
-        }
-    return {
-        "n_bytes": n,
-        "codec": "unknown",
-        "sample_rate": 8000 + (n % 3) * 4000,
-        "n_channels": 1 + (n % 2),
-        "duration_ms": n * 10,
-    }
-
-
-def audio_metadata(df: DataFrame, url_col: str = "url", bin_col: str = "blob") -> DataFrame:
-    """mapInPandas audio feature-extraction stage (same narrow, Arrow-bounded
-    shape as image_metadata; only the pure decode stub differs)."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = [decode_audio_meta(bytes(b)) for b in pdf[bin_col]]
-            out = pd.DataFrame(metas)
-            out.insert(0, "url", pdf[url_col].values)
-            yield out
-
-    return df.mapInPandas(_decode, AUDIO_META_SCHEMA)
-
-
-def encode_mp4(
-    timescale: int, duration: int, n_tracks: int, mdat: bytes = b""
-) -> bytes:
-    """REAL minimal ISO BMFF (MP4) writer (stdlib only): ftyp (major
-    brand isom), moov containing a spec-valid version-0 mvhd (timescale,
-    duration, rate 1.0, identity matrix, next-track-id) and one tkhd-
-    bearing trak box per track, then an mdat with the given payload.
-    Box sizes are exact, so any box walker (this module's, mp4box's)
-    traverses it; only the media data is synthetic."""
-    if timescale <= 0 or duration < 0 or n_tracks < 0:
-        raise ValueError("invalid MP4 parameters")
-
-    def box(typ: bytes, payload: bytes) -> bytes:
-        return struct.pack(">I", 8 + len(payload)) + typ + payload
-
-    mvhd = (
-        b"\x00\x00\x00\x00"                      # version 0 + flags
-        + struct.pack(">II", 0, 0)               # creation, modification
-        + struct.pack(">II", timescale, duration)
-        + struct.pack(">I", 0x00010000)          # rate 1.0
-        + struct.pack(">H", 0x0100)              # volume 1.0
-        + b"\x00" * 10                           # reserved
-        + struct.pack(                            # unity matrix
-            ">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000
-        )
-        + b"\x00" * 24                           # pre_defined
-        + struct.pack(">I", n_tracks + 1)        # next_track_ID
-    )
-    traks = b""
-    for tid in range(1, n_tracks + 1):
-        tkhd = (
-            b"\x00\x00\x00\x07"                  # v0, enabled|in-movie|preview
-            + struct.pack(">II", 0, 0)
-            + struct.pack(">I", tid)
-            + b"\x00" * 4
-            + struct.pack(">I", duration)
-            + b"\x00" * 8
-            + struct.pack(">HHHH", 0, 0, 0, 0)   # layer/group/volume/reserved
-            + struct.pack(
-                ">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000
-            )
-            + struct.pack(">II", 0, 0)           # width, height (16.16)
-        )
-        traks += box(b"trak", box(b"tkhd", tkhd))
-    ftyp = b"isom" + struct.pack(">I", 0x200) + b"isom" + b"mp42"
-    return box(b"ftyp", ftyp) + box(b"moov", box(b"mvhd", mvhd) + traks) + box(
-        b"mdat", mdat
-    )
-
-
-def _walk_mp4_boxes(blob: bytes, lo: int, hi: int):
-    """Yield (type, body_start, box_end) for each ISO 14496-12 box in
-    blob[lo:hi] — u32 size + 4cc, size==1 largesize and size==0 to-EOF
-    handled per §4.2. Shared by the metadata and sample-table parsers."""
-    pos = lo
-    while pos + 8 <= hi:
-        (size,) = struct.unpack(">I", blob[pos : pos + 4])
-        typ = blob[pos + 4 : pos + 8]
-        body = pos + 8
-        if size == 1:
-            if pos + 16 > hi:
-                raise ValueError("MP4 largesize box truncated")
-            (size,) = struct.unpack(">Q", blob[pos + 8 : pos + 16])
-            body = pos + 16
-        elif size == 0:
-            size = hi - pos
-        if size < 8 or pos + size > hi:
-            raise ValueError("MP4 box overruns blob")
-        yield typ, body, pos + size
-        pos += size
-
-
-def parse_mp4_meta(blob: bytes) -> dict:
-    """REAL ISO BMFF structural parser (stdlib only): walks top-level
-    boxes (u32 size + 4cc, size==1 largesize and size==0 to-EOF handled
-    per ISO 14496-12 §4.2), finds moov, walks its children for mvhd
-    (version 0 or 1 field layouts) and counts trak boxes; returns
-    timescale/duration and duration_ms = duration*1000//timescale —
-    the same traversal ffprobe/mp4box perform for container metadata.
-    Raises ValueError on malformed input: no ftyp/moov, truncated box,
-    missing mvhd."""
-    walk = lambda lo, hi: _walk_mp4_boxes(blob, lo, hi)  # noqa: E731
-
-    if len(blob) < 12 or blob[4:8] != b"ftyp":
-        raise ValueError("not an MP4: first box is not ftyp")
-    major_brand = blob[8:12].decode("latin-1")
-    moov = None
-    for typ, body, end in walk(0, len(blob)):
-        if typ == b"moov":
-            moov = (body, end)
-            break
-    if moov is None:
-        raise ValueError("MP4 missing moov box")
-    timescale = duration = None
-    n_tracks = 0
-    for typ, body, end in walk(*moov):
-        if typ == b"mvhd":
-            version = blob[body]
-            if version == 1:
-                timescale, duration = (
-                    struct.unpack(">I", blob[body + 20 : body + 24])[0],
-                    struct.unpack(">Q", blob[body + 24 : body + 32])[0],
-                )
-            else:
-                timescale, duration = struct.unpack(
-                    ">II", blob[body + 12 : body + 20]
-                )
-        elif typ == b"trak":
-            n_tracks += 1
-    if timescale is None or timescale == 0:
-        raise ValueError("MP4 missing or invalid mvhd")
-    return {
-        "major_brand": major_brand,
-        "timescale": timescale,
-        "duration": duration,
-        "duration_ms": duration * 1000 // timescale,
-        "n_tracks": n_tracks,
-    }
-
-
-def encode_mp4_samples(
-    timescale: int, durations: list[int], samples: list[bytes]
-) -> bytes:
-    """REAL fragmentless MP4 writer WITH a sample table (stdlib only):
-    ftyp, then mdat holding the concatenated samples, then moov with a
-    single video trak whose stbl carries the four real sample-table boxes
-    — stts (run-length decode deltas), stsc (samples-per-chunk runs,
-    chunks of ≤3 samples so multi-run stsc is exercised), stsz
-    (per-sample sizes) and stco (absolute chunk offsets). mdat precedes
-    moov (valid per ISO 14496-12, and what streaming-unfriendly muxers
-    emit) so chunk offsets are exact without a patch pass. Any conformant
-    demuxer can locate every sample; parse_mp4_samples round-trips it."""
-    if timescale <= 0 or len(durations) != len(samples) or not samples:
-        raise ValueError("invalid MP4 sample parameters")
-
-    def box(typ: bytes, payload: bytes) -> bytes:
-        return struct.pack(">I", 8 + len(payload)) + typ + payload
-
-    def full(typ: bytes, payload: bytes, version: int = 0, flags: int = 0) -> bytes:
-        return box(typ, struct.pack(">B", version) + flags.to_bytes(3, "big") + payload)
-
-    n = len(samples)
-    mdat_payload = b"".join(samples)
-    ftyp = box(b"ftyp", b"isom" + struct.pack(">I", 0x200) + b"isom" + b"mp42")
-    mdat = box(b"mdat", mdat_payload)
-    data_base = len(ftyp) + 8  # mdat body offset in the file
-
-    # chunking: groups of 3 samples (last chunk may be short)
-    spc = 3
-    chunk_sizes = [min(spc, n - i) for i in range(0, n, spc)]
-    chunk_offsets, acc, si = [], data_base, 0
-    for csz in chunk_sizes:
-        chunk_offsets.append(acc)
-        acc += sum(len(samples[si + j]) for j in range(csz))
-        si += csz
-    # stsc runs: (first_chunk, samples_per_chunk, sample_desc_index)
-    stsc_runs = [(1, spc, 1)]
-    if chunk_sizes[-1] != spc and len(chunk_sizes) > 1:
-        stsc_runs.append((len(chunk_sizes), chunk_sizes[-1], 1))
-    elif chunk_sizes[-1] != spc:  # single short chunk
-        stsc_runs = [(1, chunk_sizes[-1], 1)]
-    # stts runs: run-length encode consecutive equal durations
-    stts_runs: list[tuple[int, int]] = []
-    for d in durations:
-        if stts_runs and stts_runs[-1][1] == d:
-            stts_runs[-1] = (stts_runs[-1][0] + 1, d)
-        else:
-            stts_runs.append((1, d))
-
-    stts = full(b"stts", struct.pack(">I", len(stts_runs))
-                + b"".join(struct.pack(">II", c, d) for c, d in stts_runs))
-    stsc = full(b"stsc", struct.pack(">I", len(stsc_runs))
-                + b"".join(struct.pack(">III", f, s, i) for f, s, i in stsc_runs))
-    stsz = full(b"stsz", struct.pack(">II", 0, n)
-                + b"".join(struct.pack(">I", len(s)) for s in samples))
-    stco = full(b"stco", struct.pack(">I", len(chunk_offsets))
-                + b"".join(struct.pack(">I", o) for o in chunk_offsets))
-    # minimal mp4v visual sample entry (86 bytes) so stsd is spec-shaped
-    entry = (
-        struct.pack(">I", 86) + b"mp4v" + b"\x00" * 6 + struct.pack(">H", 1)
-        + b"\x00" * 16 + struct.pack(">HH", 64, 48)
-        + struct.pack(">II", 0x480000, 0x480000) + b"\x00" * 4
-        + struct.pack(">H", 1) + b"\x00" * 32 + struct.pack(">Hh", 24, -1)
-    )
-    stsd = full(b"stsd", struct.pack(">I", 1) + entry)
-    stbl = box(b"stbl", stsd + stts + stsc + stsz + stco)
-    dref = full(b"dref", struct.pack(">I", 1) + full(b"url ", b"", flags=1))
-    minf = box(b"minf", full(b"vmhd", struct.pack(">HHHH", 0, 0, 0, 0), flags=1)
-               + box(b"dinf", dref) + stbl)
-    total_dur = sum(durations)
-    mdhd = full(b"mdhd", struct.pack(">IIII", 0, 0, timescale, total_dur)
-                + struct.pack(">HH", 0x55C4, 0))  # lang 'und'
-    hdlr = full(b"hdlr", struct.pack(">I", 0) + b"vide" + b"\x00" * 12 + b"\x00")
-    mdia = box(b"mdia", mdhd + hdlr + minf)
-    tkhd = full(
-        b"tkhd",
-        struct.pack(">III", 0, 0, 1) + b"\x00" * 4 + struct.pack(">I", total_dur)
-        + b"\x00" * 8 + struct.pack(">HHHH", 0, 0, 0, 0)
-        + struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-        + struct.pack(">II", 64 << 16, 48 << 16),
-        flags=7,
-    )
-    trak = box(b"trak", tkhd + mdia)
-    mvhd = full(
-        b"mvhd",
-        struct.pack(">IIII", 0, 0, timescale, total_dur)
-        + struct.pack(">I", 0x00010000) + struct.pack(">H", 0x0100)
-        + b"\x00" * 10
-        + struct.pack(">9I", 0x10000, 0, 0, 0, 0x10000, 0, 0, 0, 0x40000000)
-        + b"\x00" * 24 + struct.pack(">I", 2),
-    )
-    return ftyp + mdat + box(b"moov", mvhd + trak)
-
-
-def parse_mp4_samples(blob: bytes) -> list[dict]:
-    """REAL ISO BMFF sample-table demux (stdlib only): for every trak in
-    moov, reads mdhd (media timescale, v0/v1), then the stbl tables —
-    stts expanded to per-sample decode times, stsz (uniform or
-    per-sample) to sizes, stsc runs + stco/co64 to per-sample absolute
-    file offsets — exactly the traversal a demuxer performs to locate
-    frame payloads. Returns one dict per track with a sample table:
-    {"timescale": int, "samples": [(offset, size, dts), ...]}. Tracks
-    without a complete stbl are skipped; malformed boxes raise
-    ValueError."""
-    if len(blob) < 12 or blob[4:8] != b"ftyp":
-        raise ValueError("not an MP4: first box is not ftyp")
-    moov = None
-    for typ, body, end in _walk_mp4_boxes(blob, 0, len(blob)):
-        if typ == b"moov":
-            moov = (body, end)
-            break
-    if moov is None:
-        raise ValueError("MP4 missing moov box")
-
-    def find(lo, hi, want):
-        for typ, body, end in _walk_mp4_boxes(blob, lo, hi):
-            if typ == want:
-                return body, end
-        return None
-
-    tracks = []
-    for typ, t_body, t_end in _walk_mp4_boxes(blob, *moov):
-        if typ != b"trak":
-            continue
-        mdia = find(t_body, t_end, b"mdia")
-        if mdia is None:
-            continue
-        mdhd = find(*mdia, b"mdhd")
-        minf = find(*mdia, b"minf")
-        if mdhd is None or minf is None:
-            continue
-        version = blob[mdhd[0]]
-        ts_off = mdhd[0] + (20 if version == 1 else 12)
-        (media_ts,) = struct.unpack(">I", blob[ts_off : ts_off + 4])
-        stbl = find(*minf, b"stbl")
-        if stbl is None:
-            continue
-        tables: dict[bytes, tuple[int, int]] = {}
-        for bt, bb, be in _walk_mp4_boxes(blob, *stbl):
-            tables[bt] = (bb, be)
-        if not all(k in tables for k in (b"stts", b"stsz")) or not (
-            b"stco" in tables or b"co64" in tables
-        ) or b"stsc" not in tables:
-            continue
-
-        def u32s(count, at):
-            return struct.unpack(f">{count}I", blob[at : at + 4 * count])
-
-        def bounded(count, entry_bytes, table, fixed=4):
-            # a stream-supplied count must fit inside its enclosing box:
-            # a corrupted count (e.g. 0x7FFFFFFF) would otherwise drive a
-            # multi-billion-entry Python list build / parser hang
-            # (ADVICE r3). fixed = bytes of count field(s) between the
-            # version/flags word and the entries.
-            lo, hi = tables[table]
-            if count < 0 or count * entry_bytes > (hi - lo) - 4 - fixed:
-                raise ValueError(
-                    f"{table.decode()} declares {count} entries but box "
-                    f"holds {hi - lo} bytes"
-                )
-            return count
-
-        # no table can describe more samples than the file has bytes —
-        # every sample occupies file bytes; caps the uniform-stsz and
-        # stts run-expansion paths, which have no per-entry table bytes
-        max_samples = len(blob)
-
-        # stts -> per-sample dts
-        b0 = tables[b"stts"][0] + 4
-        (n_runs,) = struct.unpack(">I", blob[b0 : b0 + 4])
-        bounded(n_runs, 8, b"stts")
-        dts, t = [], 0
-        pos = b0 + 4
-        for _ in range(n_runs):
-            cnt, delta = struct.unpack(">II", blob[pos : pos + 8])
-            if cnt > max_samples - len(dts):
-                raise ValueError(
-                    f"stts run declares {cnt} samples in a {len(blob)}-byte file"
-                )
-            for _ in range(cnt):
-                dts.append(t)
-                t += delta
-            pos += 8
-        # stsz -> sizes
-        b0 = tables[b"stsz"][0] + 4
-        uniform, n_samples = struct.unpack(">II", blob[b0 : b0 + 8])
-        if uniform:
-            if n_samples > max_samples:
-                raise ValueError(
-                    f"stsz declares {n_samples} samples in a {len(blob)}-byte file"
-                )
-            sizes = [uniform] * n_samples
-        else:
-            bounded(n_samples, 4, b"stsz", fixed=8)
-            sizes = list(u32s(n_samples, b0 + 8))
-        # stco / co64 -> chunk offsets
-        if b"stco" in tables:
-            b0 = tables[b"stco"][0] + 4
-            (n_chunks,) = struct.unpack(">I", blob[b0 : b0 + 4])
-            bounded(n_chunks, 4, b"stco")
-            chunk_offs = list(u32s(n_chunks, b0 + 4))
-        else:
-            b0 = tables[b"co64"][0] + 4
-            (n_chunks,) = struct.unpack(">I", blob[b0 : b0 + 4])
-            bounded(n_chunks, 8, b"co64")
-            chunk_offs = list(
-                struct.unpack(f">{n_chunks}Q", blob[b0 + 4 : b0 + 4 + 8 * n_chunks])
-            )
-        # stsc runs -> samples-per-chunk per chunk index
-        b0 = tables[b"stsc"][0] + 4
-        (n_sc,) = struct.unpack(">I", blob[b0 : b0 + 4])
-        bounded(n_sc, 12, b"stsc")
-        runs = [
-            struct.unpack(">III", blob[b0 + 4 + 12 * i : b0 + 16 + 12 * i])
-            for i in range(n_sc)
-        ]
-        per_chunk = []
-        for i, (first, spc, _sdi) in enumerate(runs):
-            last = runs[i + 1][0] - 1 if i + 1 < len(runs) else n_chunks
-            per_chunk.extend([spc] * (last - first + 1))
-        # per-sample absolute offsets
-        samples, si = [], 0
-        for ci, coff in enumerate(chunk_offs):
-            off = coff
-            for _ in range(per_chunk[ci] if ci < len(per_chunk) else 0):
-                if si >= n_samples:
-                    break
-                samples.append((off, sizes[si], dts[si] if si < len(dts) else 0))
-                off += sizes[si]
-                si += 1
-        if samples:
-            tracks.append({"timescale": media_ts, "samples": samples})
-    return tracks
-
-
-VIDEO_META_SCHEMA = (
-    "url string, n_bytes long, container string, timescale int, "
-    "duration_ms long, n_tracks int"
-)
-
-
-def video_metadata(df: DataFrame, url_col: str = "url", bin_col: str = "blob") -> DataFrame:
-    """mapInPandas container-metadata stage for video (same narrow,
-    Arrow-bounded shape as image/audio_metadata). MP4/ISO-BMFF is REAL
-    (parse_mp4_meta); other containers report 'unknown' with
-    deterministic stub fields (frame/pixel decode stays a declared stub
-    — see sample_video_frames)."""
-
-    def _decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for b in pdf[bin_col]:
-                blob = bytes(b)
-                n = len(blob)
-                if len(blob) >= 12 and blob[4:8] == b"ftyp":
-                    try:
-                        m = parse_mp4_meta(blob)
-                    except (ValueError, struct.error, IndexError):
-                        # truncated/mislabeled container: quarantine row,
-                        # never an exception out of a crawl-scale stage
-                        rows.append(
-                            {
-                                "n_bytes": n,
-                                "container": "invalid",
-                                "timescale": 0,
-                                "duration_ms": 0,
-                                "n_tracks": 0,
-                            }
-                        )
-                        continue
-                    rows.append(
-                        {
-                            "n_bytes": n,
-                            "container": "mp4",
-                            "timescale": m["timescale"],
-                            "duration_ms": m["duration_ms"],
-                            "n_tracks": m["n_tracks"],
-                        }
-                    )
-                else:
-                    rows.append(
-                        {
-                            "n_bytes": n,
-                            "container": "unknown",
-                            "timescale": 0,
-                            "duration_ms": n * 40,
-                            "n_tracks": 1,
-                        }
-                    )
-            out = pd.DataFrame(rows)
-            out.insert(0, "url", pdf[url_col].values)
-            yield out
-
-    return df.mapInPandas(_decode, VIDEO_META_SCHEMA)
-
-
-VIDEO_FRAME_SCHEMA = "url string, frame_idx int, frame_ms long, frame_hash long"
-
-
-def _uniform_indices(n: int, k: int) -> list[int]:
-    """k indices uniformly spread over 0..n-1 (all of them when n <= k) —
-    the standard deterministic frame-sampling policy."""
-    if n <= k:
-        return list(range(n))
-    return [j * (n - 1) // (k - 1) for j in range(k)]
-
-
-def sample_video_frames(
-    df: DataFrame,
-    url_col: str = "url",
-    bin_col: str = "blob",
-    max_frames: int = 5,
-) -> DataFrame:
-    """mapInPandas frame-sampling stage: one OUTPUT ROW PER SAMPLED FRAME
-    (a 1→N expansion inside the Python worker — the shape a real
-    ffmpeg-based sampler has).
-
-    For MP4 blobs carrying a sample table this is REAL demuxing
-    (parse_mp4_samples): the stts/stsz/stsc/stco walk locates each frame
-    payload, up to ``max_frames`` frames are picked uniformly across the
-    first video track, frame_ms comes from the real decode timestamps at
-    the track's media timescale, and frame_hash is the CRC-32 of the
-    actual frame bytes sliced out of mdat. Blobs without a sample table
-    (non-MP4, metadata-only MP4s) keep the deterministic declared stub
-    (count/ms/hash derived from length — a real deploy swaps in ffmpeg
-    for the codec decode those need). Either way the binary never leaves
-    its partition."""
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls: list[str] = []
-            idxs: list[int] = []
-            mss: list[int] = []
-            hashes: list[int] = []
-            for url, b in zip(pdf[url_col], pdf[bin_col]):
-                blob = bytes(b)
-                tracks = []
-                if len(blob) >= 12 and blob[4:8] == b"ftyp":
-                    try:
-                        tracks = parse_mp4_samples(blob)
-                    except (ValueError, struct.error, IndexError):
-                        tracks = []
-                if tracks:
-                    ts = tracks[0]["timescale"] or 1
-                    samples = tracks[0]["samples"]
-                    for i in _uniform_indices(len(samples), max_frames):
-                        off, size, dts = samples[i]
-                        urls.append(url)
-                        idxs.append(i)
-                        mss.append(dts * 1000 // ts)
-                        hashes.append(zlib.crc32(blob[off : off + size]))
-                    continue
-                n = len(blob)
-                n_frames = 1 + n % 5
-                for i in range(n_frames):
-                    urls.append(url)
-                    idxs.append(i)
-                    mss.append(i * 1000)
-                    # stub frame hash: position-salted content length
-                    hashes.append((n * 1000003 + i * 8191) % (1 << 62))
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "frame_idx": pd.array(idxs, dtype="int32"),
-                    "frame_ms": pd.array(mss, dtype="int64"),
-                    "frame_hash": pd.array(hashes, dtype="int64"),
-                }
-            )
-
-    return df.mapInPandas(_sample, VIDEO_FRAME_SCHEMA)
-
-
-FRAME_STATS_SCHEMA = (
-    "url string, frame_idx int, frame_ms long, frame_size int, "
-    "frame_sum long, first_byte int, last_byte int"
-)
-
-
-def video_frame_stats(
-    df: DataFrame,
-    url_col: str = "url",
-    bin_col: str = "blob",
-    max_frames: int = 8,
-) -> DataFrame:
-    """REAL-demux frame statistics: parse_mp4_samples locates every frame
-    payload via the sample table, up to ``max_frames`` frames per blob are
-    sliced out of mdat (uniform policy), and per-frame byte reductions
-    (size/sum/first/last) plus the real decode timestamp are emitted —
-    SQL-expressible outputs so an independent oracle can verify that the
-    demux found the true payload bytes at the true offsets. Blobs without
-    a sample table produce no rows (strict: this stage is only for real
-    demuxable video). mapInPandas, narrow, blobs never shuffle."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url, b in zip(pdf[url_col], pdf[bin_col]):
-                blob = bytes(b)
-                if len(blob) < 12 or blob[4:8] != b"ftyp":
-                    continue
-                try:
-                    tracks = parse_mp4_samples(blob)
-                except (ValueError, struct.error, IndexError):
-                    continue
-                if not tracks:
-                    continue
-                ts = tracks[0]["timescale"] or 1
-                samples = tracks[0]["samples"]
-                for i in _uniform_indices(len(samples), max_frames):
-                    off, size, dts = samples[i]
-                    payload = blob[off : off + size]
-                    rows.append(
-                        {
-                            "url": url,
-                            "frame_idx": i,
-                            "frame_ms": dts * 1000 // ts,
-                            "frame_size": size,
-                            "frame_sum": int(sum(payload)),
-                            "first_byte": payload[0] if size else 0,
-                            "last_byte": payload[-1] if size else 0,
-                        }
-                    )
-            out = pd.DataFrame(
-                rows,
-                columns=[
-                    "url", "frame_idx", "frame_ms", "frame_size",
-                    "frame_sum", "first_byte", "last_byte",
-                ],
-            )
-            for c, t in (
-                ("frame_idx", "int32"), ("frame_ms", "int64"),
-                ("frame_size", "int32"), ("frame_sum", "int64"),
-                ("first_byte", "int32"), ("last_byte", "int32"),
-            ):
-                out[c] = out[c].astype(t)
-            yield out
-
-    return df.mapInPandas(_stats, FRAME_STATS_SCHEMA)
-
-
 FEATURE_SCHEMA = "url string, n_bytes long, feature array<float>"
 N_BYTE_BINS = 16
 
@@ -1888,8 +923,8 @@ def sniff_mime(blob) -> "Column":
     """Magic-byte content-type sniffing over an opaque binary column —
     the routing step a crawler runs on every fetched body BEFORE parsing
     (Content-Type headers lie; WHATWG MIME-sniffing exists because of
-    it). Detects the formats the engine has downstream paths for: PNG
-    (image pipeline), WAV/RIFF (audio), PDF, gzip, XML/feeds, HTML;
+    it). Detects PNG, JPEG and GIF (the image pipeline), WAV/RIFF (labelled
+    only: no audio decoder exists), PDF, gzip, XML/feeds and HTML;
     everything else falls to application/octet-stream.
 
     Pure JVM expressions: binary signatures compare hex prefixes, the

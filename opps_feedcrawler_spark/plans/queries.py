@@ -2804,22 +2804,6 @@ def multimodal_feature_ann(spark, sf_dir):
     return ann_bruteforce_topk(queries_side, corpus.unionByName(queries_side), k=3)
 
 
-def _duck_le_from_hex(hx_col: str, byte_off: int, n_bytes: int) -> str:
-    """SQL expression parsing a little-endian unsigned int of `n_bytes`
-    from a hex()'d blob at 0-based byte offset `byte_off`. Same
-    independent digit-arithmetic approach as _duck_be32_from_hex, with
-    the byte order reversed (RIFF/WAVE fields are little-endian)."""
-    terms = []
-    for j in range(n_bytes):
-        hi = 2 * (byte_off + j) + 1
-        terms.append(
-            f"(strpos('123456789ABCDEF', substr({hx_col}, {hi}, 1)) * 16"
-            f" + strpos('123456789ABCDEF', substr({hx_col}, {hi + 1}, 1)))"
-            f" * {256 ** j}"
-        )
-    return " + ".join(terms)
-
-
 def _duck_be32_from_hex(hx_col: str, start: int) -> str:
     """SQL expression parsing a big-endian uint32 from 8 hex chars of a
     hex()'d blob, starting at 1-based char offset `start`. Pure SQL digit
@@ -2844,20 +2828,15 @@ def _duck_be_from_hex(hx_col: str, start: int, ndigits: int) -> str:
 
 
 from ..sources.fixtures import (
-    G711_FIXTURE_PATH,
     GIF_ANIM_FIXTURE_PATH,
     GIF_FIXTURE_PATH,
     JPEG_COLOR_FIXTURE_PATH,
     JPEG_EXIF_FIXTURE_PATH,
     JPEG_FIXTURE_PATH,
     JPEG_PX_FIXTURE_PATH,
-    MP3_FIXTURE_PATH,
-    MP4_FIXTURE_PATH,
-    MP4_FRAMES_FIXTURE_PATH,
     PNG_FIXTURE_PATH,
     PNG_PALETTE_FIXTURE_PATH,
     PNG16_FIXTURE_PATH,
-    WAV_FIXTURE_PATH,
 )
 
 
@@ -3361,339 +3340,6 @@ def multimodal_gif_meta(spark, sf_dir):
         "url", F.col("gif").alias("blob")
     )
     return gif_metadata(joined, "url", "blob")
-
-
-@_q(
-    "multimodal_mp3_meta",
-    f"""
-    WITH f AS (
-      SELECT doc_id, mp3, hex(mp3) AS hx
-      FROM read_parquet('{MP3_FIXTURE_PATH}'))
-    SELECT {_DOC_URL_SQL} AS url,
-           CAST(octet_length(mp3) AS BIGINT) AS n_bytes,
-           CASE WHEN substr(hx, 1, 4) = 'FFFB' THEN 'mp3'
-                ELSE 'unknown' END AS codec,
-           CAST(CASE substr(hx, 6, 1) WHEN '0' THEN 44100
-                                      WHEN '4' THEN 48000
-                                      ELSE 32000 END AS INT) AS sample_rate,
-           CAST(CASE WHEN substr(hx, 7, 1) = 'C' THEN 1 ELSE 2 END AS INT)
-             AS n_channels,
-           CAST((octet_length(mp3)
-                 // (144000 * (CASE substr(hx, 5, 1) WHEN '5' THEN 64
-                                                     WHEN '9' THEN 128
-                                                     WHEN 'B' THEN 192
-                                                     ELSE 320 END)
-                     // (CASE substr(hx, 6, 1) WHEN '0' THEN 44100
-                                               WHEN '4' THEN 48000
-                                               ELSE 32000 END)))
-                * 1152 * 1000
-                // (CASE substr(hx, 6, 1) WHEN '0' THEN 44100
-                                          WHEN '4' THEN 48000
-                                          ELSE 32000 END)
-             AS BIGINT) AS duration_ms
-    FROM f JOIN documents USING (doc_id)
-    """,
-)
-def multimodal_mp3_meta(spark, sf_dir):
-    """B35 fourth media leg with a REAL decoder: the deterministic
-    MPEG-1 Layer III fixture (sources/fixtures.py — spec-valid CBR frame
-    streams via the real encode_mp3, no ID3 so the first header is at
-    byte 0) is parsed by parse_mp3_meta, which WALKS the frame chain
-    deriving each frame's length from its own header (the ffprobe
-    no-Xing algorithm, exact for VBR too). The oracle re-decodes the
-    header nibbles in SQL — bitrate index (hex digit 5), sample-rate
-    index (digit 6), channel mode (digit 7) — recomputes the Layer III
-    frame length 144000*kbps//rate, counts frames by integer division
-    (valid because the fixture is CBR: every frame length equals the
-    first — the walker itself proves per-frame lengths elsewhere), and
-    rederives duration by the same exact integer formula. Blob rule
-    holds: broadcast metadata side, no blob shuffle."""
-    from ..functions.multimodal import audio_metadata
-    from ..sources.fixtures import ensure_mp3_fixture
-
-    d = _doc_urls(spark, sf_dir).select("doc_id", "url")
-    mp3 = spark.read.parquet(ensure_mp3_fixture())
-    joined = mp3.join(F.broadcast(d), "doc_id").select(
-        "url", F.col("mp3").alias("blob")
-    )
-    return audio_metadata(joined, "url", "blob")
-
-
-@_q(
-    "multimodal_audio_waveform",
-    f"""
-    WITH p AS (
-      SELECT doc_id,
-             CASE doc_id % 4 WHEN 0 THEN 8000 WHEN 1 THEN 16000
-                  WHEN 2 THEN 22050 ELSE 44100 END AS rate,
-             (1 + doc_id % 2) * (50 + (doc_id * 13) % 400) AS n
-      FROM read_parquet('{WAV_FIXTURE_PATH}')),
-    s AS (
-      SELECT doc_id, rate, n,
-             list_transform(range(0, n), j ->
-               CASE WHEN ((doc_id * 2654435761 + (2*j) * 40503) % 256)
-                       + 256 * ((doc_id * 2654435761 + (2*j+1) * 40503) % 256)
-                       >= 32768
-                    THEN ((doc_id * 2654435761 + (2*j) * 40503) % 256)
-                       + 256 * ((doc_id * 2654435761 + (2*j+1) * 40503) % 256)
-                       - 65536
-                    ELSE ((doc_id * 2654435761 + (2*j) * 40503) % 256)
-                       + 256 * ((doc_id * 2654435761 + (2*j+1) * 40503) % 256)
-               END) AS vals
-      FROM p)
-    SELECT {_DOC_URL_SQL} AS url,
-           CAST(rate AS INT) AS sample_rate,
-           CAST(n AS BIGINT) AS n_samples,
-           CAST(list_sum(list_transform(vals, v -> abs(v))) AS BIGINT)
-             AS sum_abs,
-           CAST(list_max(list_transform(vals, v -> abs(v))) AS INT) AS peak,
-           CAST(list_sum(vals) AS BIGINT) AS dc_sum
-    FROM s JOIN documents USING (doc_id)
-    """,
-)
-def multimodal_audio_waveform(spark, sf_dir):
-    """REAL waveform decode through the engine: raw PCM is the one audio
-    coding that needs no codec library — decode_wav_samples walks the
-    RIFF chunks to the data payload and reinterprets it as little-endian
-    int16 frames x channels, and audio_waveform_stats numpy-reduces the
-    amplitudes (total |amplitude|, peak, DC sum) — the loudness/silence/
-    clipping scorer shape of a real audio pipeline. Non-circular check:
-    the oracle never reads the RIFF layout — it recomputes every int16
-    sample from the fixture's generative byte formula (two Knuth-hash
-    bytes -> signed LE int16) in exact BIGINT SQL. The routes agree only
-    if the chunk walk finds the true payload and the sign/endianness
-    reinterpretation is right. Blob rule holds: mapInPandas, no blob
-    shuffle."""
-    from ..functions.multimodal import audio_waveform_stats
-    from ..sources.fixtures import ensure_wav_fixture
-
-    d = _doc_urls(spark, sf_dir).select("doc_id", "url")
-    wav = spark.read.parquet(ensure_wav_fixture())
-    joined = wav.join(F.broadcast(d), "doc_id").select(
-        "url", F.col("wav").alias("blob")
-    )
-    return audio_waveform_stats(joined, "url", "blob")
-
-
-@_q(
-    "multimodal_audio_g711",
-    f"""
-    WITH lut AS (
-      SELECT b,
-        CASE WHEN (255 - b) >= 128
-             THEN 132 - (((255 - b) % 16) * 8 + 132)
-                  * (1 << (((255 - b) // 16) % 8))
-             ELSE (((255 - b) % 16) * 8 + 132)
-                  * (1 << (((255 - b) // 16) % 8)) - 132
-        END AS ulaw,
-        CASE WHEN xor(b, 85) >= 128
-             THEN CASE WHEN (xor(b, 85) // 16) % 8 = 0
-                       THEN (xor(b, 85) % 16) * 16 + 8
-                       ELSE ((xor(b, 85) % 16) * 16 + 264)
-                            * (1 << ((xor(b, 85) // 16) % 8 - 1)) END
-             ELSE -(CASE WHEN (xor(b, 85) // 16) % 8 = 0
-                       THEN (xor(b, 85) % 16) * 16 + 8
-                       ELSE ((xor(b, 85) % 16) * 16 + 264)
-                            * (1 << ((xor(b, 85) // 16) % 8 - 1)) END)
-        END AS alaw
-      FROM range(0, 256) t(b)),
-    tabs AS (
-      SELECT list(ulaw ORDER BY b) AS utab, list(alaw ORDER BY b) AS atab
-      FROM lut),
-    p AS (
-      SELECT doc_id,
-             CASE doc_id % 4 WHEN 0 THEN 8000 WHEN 1 THEN 16000
-                  WHEN 2 THEN 22050 ELSE 44100 END AS rate,
-             (1 + (doc_id // 2) % 2) * (40 + (doc_id * 11) % 300) AS n,
-             doc_id % 2 = 0 AS is_ulaw
-      FROM read_parquet('{G711_FIXTURE_PATH}')),
-    s AS (
-      SELECT doc_id, rate, n,
-             list_transform(range(0, n), j ->
-               CASE WHEN is_ulaw
-                    THEN utab[CAST((doc_id * 2654435761 + j * 40503) % 256
-                              AS INT) + 1]
-                    ELSE atab[CAST((doc_id * 2654435761 + j * 40503) % 256
-                              AS INT) + 1]
-               END) AS vals
-      FROM p, tabs)
-    SELECT {_DOC_URL_SQL} AS url,
-           CAST(rate AS INT) AS sample_rate,
-           CAST(n AS BIGINT) AS n_samples,
-           CAST(list_sum(list_transform(vals, v -> abs(v))) AS BIGINT)
-             AS sum_abs,
-           CAST(list_max(list_transform(vals, v -> abs(v))) AS INT) AS peak,
-           CAST(list_sum(vals) AS BIGINT) AS dc_sum
-    FROM s JOIN documents USING (doc_id)
-    """,
-)
-def multimodal_audio_g711(spark, sf_dir):
-    """REAL G.711 (a-law/µ-law) decode through the engine: WAVE fmt tags
-    6/7 carry companded telephony audio whose expansion to linear is pure
-    integer arithmetic (ITU-T G.711 segment formulas) — the second audio
-    coding after raw PCM that needs no codec library. decode_wav_samples
-    reads the fmt tag and expands each payload byte through the real
-    decode tables; audio_waveform_stats reduces as for PCM. Non-circular
-    check: the oracle never touches the decoder or the RIFF layout — it
-    rebuilds the 256-entry expansion tables from the G.711 formulas in
-    SQL and re-derives every sample from the fixture's generative byte
-    formula. The routes agree only if the tag dispatch, the table
-    construction, and the chunk walk are all right. Blob rule holds:
-    mapInPandas, no blob shuffle."""
-    from ..functions.multimodal import audio_waveform_stats
-    from ..sources.fixtures import ensure_g711_fixture
-
-    d = _doc_urls(spark, sf_dir).select("doc_id", "url")
-    wav = spark.read.parquet(ensure_g711_fixture())
-    joined = wav.join(F.broadcast(d), "doc_id").select(
-        "url", F.col("wav").alias("blob")
-    )
-    return audio_waveform_stats(joined, "url", "blob")
-
-
-@_q(
-    "multimodal_video_meta",
-    f"""
-    WITH f AS (
-      SELECT doc_id, mp4, hex(mp4) AS hx
-      FROM read_parquet('{MP4_FIXTURE_PATH}'))
-    SELECT {_DOC_URL_SQL} AS url,
-           CAST(octet_length(mp4) AS BIGINT) AS n_bytes,
-           CASE WHEN substr(hx, 9, 8) = '66747970' THEN 'mp4'
-                ELSE 'unknown' END AS container,
-           CAST({_duck_be_from_hex('hx', 105, 8)} AS INT) AS timescale,
-           CAST(CAST({_duck_be_from_hex('hx', 113, 8)} AS BIGINT) * 1000
-                // ({_duck_be_from_hex('hx', 105, 8)}) AS BIGINT)
-             AS duration_ms,
-           CAST((length(hx) - length(replace(hx, '7472616B', ''))) // 8 AS INT)
-             AS n_tracks
-    FROM f JOIN documents USING (doc_id)
-    """,
-)
-def multimodal_video_meta(spark, sf_dir):
-    """B35 video leg with a REAL container decoder: the deterministic
-    ISO BMFF fixture (sources/fixtures.py — exact-size boxes via the
-    real encode_mp4, v0 mvhd, tkhd-bearing traks, constant-0xAA mdat) is
-    parsed by parse_mp4_meta, a 14496-12 box walker (largesize/to-EOF
-    arms included) that finds moov→mvhd, reads timescale/duration, and
-    counts trak children — the traversal ffprobe does for container
-    metadata. The oracle re-extracts ftyp magic and the big-endian
-    timescale/duration at the writer's canonical offsets (ftyp 24 bytes
-    → moov at 24 → mvhd payload at byte 40: timescale at 52, duration
-    at 56) and counts traks by substring arithmetic over the hex (safe:
-    the only 0x61-0x74-range bytes in the fixture are the box 4CCs, and
-    the mdat payload is constant 0xAA). Frame DEMUX is real too — see
-    multimodal_video_frames; only codec-level pixel decode of a demuxed
-    frame stays a declared stub. Blob rule holds: broadcast metadata
-    side, no shuffle."""
-    from ..functions.multimodal import video_metadata
-    from ..sources.fixtures import ensure_mp4_fixture
-
-    d = _doc_urls(spark, sf_dir).select("doc_id", "url")
-    mp4 = spark.read.parquet(ensure_mp4_fixture())
-    joined = mp4.join(F.broadcast(d), "doc_id").select(
-        "url", F.col("mp4").alias("blob")
-    )
-    return video_metadata(joined, "url", "blob")
-
-
-@_q(
-    "multimodal_video_frames",
-    f"""
-    WITH f AS (
-      SELECT doc_id,
-             CASE doc_id % 3 WHEN 0 THEN 600 WHEN 1 THEN 1000
-                  ELSE 90000 END AS ts,
-             2 + doc_id % 6 AS n
-      FROM read_parquet('{MP4_FRAMES_FIXTURE_PATH}')),
-    fr AS (
-      SELECT doc_id, ts, unnest(range(0, n)) AS i FROM f),
-    calc AS (
-      SELECT doc_id, ts, i,
-             8 + ((doc_id + 3 * i) % 24) AS L,
-             COALESCE(list_sum(list_transform(range(0, i),
-                 x -> 100 + ((doc_id * 7 + x * 13) % 400))), 0) AS dts
-      FROM fr)
-    SELECT {_DOC_URL_SQL} AS url,
-           CAST(i AS INT) AS frame_idx,
-           CAST(dts * 1000 // ts AS BIGINT) AS frame_ms,
-           CAST(L AS INT) AS frame_size,
-           CAST(list_sum(list_transform(range(0, L),
-                j -> (doc_id * 2654435761 + i * 1000003 + j * 40503) % 256))
-             AS BIGINT) AS frame_sum,
-           CAST((doc_id * 2654435761 + i * 1000003) % 256 AS INT)
-             AS first_byte,
-           CAST((doc_id * 2654435761 + i * 1000003 + (L - 1) * 40503) % 256
-             AS INT) AS last_byte
-    FROM calc JOIN documents USING (doc_id)
-    """,
-)
-def multimodal_video_frames(spark, sf_dir):
-    """REAL video demux through the engine: each fixture MP4 carries a
-    genuine ISO 14496-12 sample table (encode_mp4_samples — stts decode
-    deltas, stsc chunking runs, stsz sizes, stco absolute offsets into
-    mdat), and video_frame_stats locates every frame by WALKING those
-    tables — the same traversal ffmpeg's demuxer performs before any
-    codec work — then slices the true payload bytes and reduces them
-    (size/sum/first/last) with the real decode timestamp rescaled to ms.
-    Non-circular check: the oracle never opens the container; it
-    recomputes every expected value from the fixture's generative
-    formulas (sources/fixtures.py mp4_frame_params/mp4_frame_payload) in
-    exact BIGINT SQL. The routes agree only if the demux finds the true
-    offsets/sizes/timestamps. Blob rule holds: mapInPandas, no blob
-    shuffle; frame sampling policy (uniform k-of-n) is pytest-covered
-    separately — max_frames=8 ≥ the fixture's max 7 samples, so both
-    sides enumerate ALL frames here."""
-    from ..functions.multimodal import video_frame_stats
-    from ..sources.fixtures import ensure_mp4_frames_fixture
-
-    d = _doc_urls(spark, sf_dir).select("doc_id", "url")
-    mp4 = spark.read.parquet(ensure_mp4_frames_fixture())
-    joined = mp4.join(F.broadcast(d), "doc_id").select(
-        "url", F.col("mp4").alias("blob")
-    )
-    return video_frame_stats(joined, "url", "blob", max_frames=8)
-
-
-@_q(
-    "multimodal_audio_meta",
-    f"""
-    SELECT {_DOC_URL_SQL} AS url,
-           CAST(octet_length(wav) AS BIGINT) AS n_bytes,
-           CASE WHEN substr(hex(wav), 1, 8) = '52494646'
-                 AND substr(hex(wav), 17, 8) = '57415645'
-                THEN 'wav' ELSE 'unknown' END AS codec,
-           CAST({_duck_le_from_hex('hex(wav)', 24, 4)} AS INT) AS sample_rate,
-           CAST({_duck_le_from_hex('hex(wav)', 22, 2)} AS INT) AS n_channels,
-           CAST(({_duck_le_from_hex('hex(wav)', 40, 4)})
-                // ({_duck_le_from_hex('hex(wav)', 32, 2)})
-                * 1000
-                // ({_duck_le_from_hex('hex(wav)', 24, 4)})
-             AS BIGINT) AS duration_ms
-    FROM documents
-    JOIN read_parquet('{WAV_FIXTURE_PATH}') USING (doc_id)
-    """,
-)
-def multimodal_audio_meta(spark, sf_dir):
-    """B35 audio leg with a REAL decoder: the deterministic WAV fixture
-    (sources/fixtures.py — one spec-valid canonical-header PCM WAV per
-    doc_id, real RIFF sizes and little-endian fmt fields) is parsed by
-    parse_wav_meta, a structural RIFF chunk walker
-    (functions/multimodal.py). The oracle reads the SAME parquet bytes
-    and extracts magic/rate/channels/duration independently in SQL
-    (hex() + little-endian digit arithmetic at the canonical WAVE
-    offsets; duration via the same exact integer formula
-    frames*1000//rate) — a genuine binary decode check on a second
-    media format, same non-circular pattern as multimodal_image_meta."""
-    from ..functions.multimodal import audio_metadata
-    from ..sources.fixtures import ensure_wav_fixture
-
-    d = _doc_urls(spark, sf_dir).select("doc_id", "url")
-    wav = spark.read.parquet(ensure_wav_fixture())
-    joined = wav.join(F.broadcast(d), "doc_id").select(
-        "url", F.col("wav").alias("blob")
-    )
-    return audio_metadata(joined, "url", "blob")
 
 
 # =========================================================================
@@ -6741,7 +6387,6 @@ _FRONT_ORDER = [
     "dedup_title_levenshtein",
     "text_bpe_token_count",
     "embedding_quantize_int8",
-    "multimodal_mp3_meta",
     "multimodal_image_meta",
     "distinct_flag_pairs",
     "streaming_seed_ingest",
@@ -6783,29 +6428,3 @@ def _apply_registration_order() -> None:
 
 
 _apply_registration_order()
-
-# The PNG fixture must exist before the DuckDB oracle can read it, and the
-# driver's Spark-vs-oracle execution order is unspecified — materialize at
-# import (idempotent, atomic; ~5k tiny blobs, sub-second). The query
-# callable also ensures it, so a failure here only matters if the oracle
-# runs first.
-try:
-    from ..sources.fixtures import ensure_jpeg_fixture as _ensure_jpeg_fixture
-    from ..sources.fixtures import ensure_mp3_fixture as _ensure_mp3_fixture
-    from ..sources.fixtures import ensure_mp4_fixture as _ensure_mp4_fixture
-    from ..sources.fixtures import ensure_png_fixture as _ensure_png_fixture
-    from ..sources.fixtures import (
-        ensure_png_palette_fixture as _ensure_png_palette_fixture,
-    )
-    from ..sources.fixtures import ensure_g711_fixture as _ensure_g711_fixture
-    from ..sources.fixtures import ensure_wav_fixture as _ensure_wav_fixture
-
-    _ensure_png_fixture()
-    _ensure_png_palette_fixture()
-    _ensure_wav_fixture()
-    _ensure_g711_fixture()
-    _ensure_jpeg_fixture()
-    _ensure_mp3_fixture()
-    _ensure_mp4_fixture()
-except Exception:  # pragma: no cover - degraded envs regenerate lazily
-    pass

@@ -12,10 +12,11 @@ and the oracle parses them independently in SQL (octet_length + hex()
 big-endian field extraction) — no shared decode code, which is what
 makes the driver row non-circular.
 
-Generation is import-time, idempotent (exists-check) and atomic
-(tmp + os.replace), so the fixture exists before either engine runs
-regardless of which side the driver executes first. ~5k tiny PNGs,
-<1 s, a few MB. Derived only from doc_id ranges of the local testdata
+Generation is lazy, idempotent (exists-check) and atomic (tmp +
+os.replace): each query callable ensures its own fixture, and
+``__spark_entry__.oracle_sql()`` ensures the ones an oracle may read
+before its query runs. Importing this module writes nothing. ~5k tiny
+PNGs, <1 s, a few MB. Derived only from doc_id ranges of the local testdata
 tables — no external data.
 """
 
@@ -30,20 +31,8 @@ import numpy as np
 PNG_FIXTURE_PATH = os.path.join(
     tempfile.gettempdir(), "ofs-png-fixture-v1.parquet"
 )
-WAV_FIXTURE_PATH = os.path.join(
-    tempfile.gettempdir(), "ofs-wav-fixture-v1.parquet"
-)
 JPEG_FIXTURE_PATH = os.path.join(
     tempfile.gettempdir(), "ofs-jpeg-fixture-v1.parquet"
-)
-MP3_FIXTURE_PATH = os.path.join(
-    tempfile.gettempdir(), "ofs-mp3-fixture-v1.parquet"
-)
-MP4_FIXTURE_PATH = os.path.join(
-    tempfile.gettempdir(), "ofs-mp4-fixture-v1.parquet"
-)
-MP4_FRAMES_FIXTURE_PATH = os.path.join(
-    tempfile.gettempdir(), "ofs-mp4-frames-fixture-v1.parquet"
 )
 JPEG_PX_FIXTURE_PATH = os.path.join(
     tempfile.gettempdir(), "ofs-jpeg-px-fixture-v1.parquet"
@@ -53,9 +42,6 @@ GIF_FIXTURE_PATH = os.path.join(
 )
 PNG_PALETTE_FIXTURE_PATH = os.path.join(
     tempfile.gettempdir(), "ofs-png-palette-fixture-v1.parquet"
-)
-G711_FIXTURE_PATH = os.path.join(
-    tempfile.gettempdir(), "ofs-g711-fixture-v1.parquet"
 )
 PNG16_FIXTURE_PATH = os.path.join(
     tempfile.gettempdir(), "ofs-png16-fixture-v1.parquet"
@@ -67,18 +53,6 @@ JPEG_EXIF_FIXTURE_PATH = os.path.join(
     tempfile.gettempdir(), "ofs-jpeg-exif-fixture-v1.parquet"
 )
 
-_WAV_RATES = (8000, 16000, 22050, 44100)
-
-
-def wav_params(doc_id: int) -> tuple[int, int, int]:
-    """Fixture audio parameters (sample_rate, n_channels, n_frames): a
-    pure function of doc_id sweeping the common rates, mono/stereo, and
-    frame counts that exercise the duration integer arithmetic."""
-    return (
-        _WAV_RATES[doc_id % len(_WAV_RATES)],
-        1 + doc_id % 2,
-        50 + (doc_id * 13) % 400,
-    )
 
 _TESTDATA_ROOT = "/root/testdata"
 _FALLBACK_MAX_DOC_ID = 4999
@@ -120,94 +94,6 @@ def _max_doc_id() -> int:
         except Exception:
             continue
     return best if best >= 0 else _FALLBACK_MAX_DOC_ID
-
-
-def ensure_wav_fixture() -> str:
-    """Create WAV_FIXTURE_PATH if missing; return the path. One canonical
-    44-byte-header PCM WAV per doc_id (real encode_wav — RIFF sizes,
-    little-endian fmt fields), payload derived from doc_id via the same
-    Knuth-hash stream the PNG fixture uses. Atomic like the PNG path."""
-    if os.path.exists(WAV_FIXTURE_PATH):
-        return WAV_FIXTURE_PATH
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ..functions.multimodal import encode_wav
-
-    n_docs = _max_doc_id() + 1
-    ids, blobs = [], []
-    for doc_id in range(n_docs):
-        rate, chans, frames = wav_params(doc_id)
-        payload = png_payload(doc_id, frames * chans * 2)
-        ids.append(doc_id)
-        blobs.append(encode_wav(rate, chans, payload))
-    table = pa.table(
-        {"doc_id": pa.array(ids, type=pa.int64()),
-         "wav": pa.array(blobs, type=pa.binary())}
-    )
-    fd, tmp = tempfile.mkstemp(
-        dir=os.path.dirname(WAV_FIXTURE_PATH), suffix=".parquet.tmp"
-    )
-    os.close(fd)
-    try:
-        pq.write_table(table, tmp)
-        os.replace(tmp, WAV_FIXTURE_PATH)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-    return WAV_FIXTURE_PATH
-
-
-def g711_params(doc_id: int) -> tuple[int, int, int, int]:
-    """Fixture G.711 parameters (fmt_tag, sample_rate, n_channels,
-    n_frames): even doc_ids carry µ-law (tag 7), odd a-law (tag 6) —
-    both telephony codings, rates swept like the PCM fixture."""
-    return (
-        7 if doc_id % 2 == 0 else 6,
-        _WAV_RATES[doc_id % len(_WAV_RATES)],
-        1 + (doc_id // 2) % 2,
-        40 + (doc_id * 11) % 300,
-    )
-
-
-def ensure_g711_fixture() -> str:
-    """Create G711_FIXTURE_PATH if missing; return the path. One G.711
-    WAV per doc_id (real encode_wav with fmt tag 6/7), payload bytes from
-    the shared Knuth-hash stream — every byte value is a valid G.711
-    code, so the whole byte space is exercised and the DuckDB oracle can
-    re-derive every decoded sample from the generative formula through
-    the exact segment-expansion arithmetic. Atomic like the PNG path."""
-    if os.path.exists(G711_FIXTURE_PATH):
-        return G711_FIXTURE_PATH
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ..functions.multimodal import encode_wav
-
-    n_docs = _max_doc_id() + 1
-    ids, blobs = [], []
-    for doc_id in range(n_docs):
-        tag, rate, chans, frames = g711_params(doc_id)
-        payload = png_payload(doc_id, frames * chans)
-        ids.append(doc_id)
-        blobs.append(encode_wav(rate, chans, payload, fmt_tag=tag))
-    table = pa.table(
-        {"doc_id": pa.array(ids, type=pa.int64()),
-         "wav": pa.array(blobs, type=pa.binary())}
-    )
-    fd, tmp = tempfile.mkstemp(
-        dir=os.path.dirname(G711_FIXTURE_PATH), suffix=".parquet.tmp"
-    )
-    os.close(fd)
-    try:
-        pq.write_table(table, tmp)
-        os.replace(tmp, G711_FIXTURE_PATH)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-    return G711_FIXTURE_PATH
 
 
 def jpeg_dims(doc_id: int) -> tuple[int, int]:
@@ -254,108 +140,6 @@ def ensure_jpeg_fixture() -> str:
         if os.path.exists(tmp):
             os.unlink(tmp)
     return JPEG_FIXTURE_PATH
-
-
-_MP3_RATES = (44100, 48000, 32000)
-_MP3_BITRATES = (64, 128, 192, 320)
-
-
-def mp3_params(doc_id: int) -> tuple[int, int, int, bool]:
-    """Fixture MP3 parameters (sample_rate, bitrate_kbps, n_frames,
-    mono): a pure function of doc_id sweeping the MPEG-1 rates, common
-    CBR bitrates, frame counts, and both channel modes."""
-    return (
-        _MP3_RATES[doc_id % len(_MP3_RATES)],
-        _MP3_BITRATES[doc_id % len(_MP3_BITRATES)],
-        3 + (doc_id * 5) % 40,
-        doc_id % 2 == 0,
-    )
-
-
-def ensure_mp3_fixture() -> str:
-    """Create MP3_FIXTURE_PATH if missing; return the path. One spec-valid
-    MPEG-1 Layer III CBR frame stream per doc_id (real encode_mp3; no
-    ID3 tag, so the first frame header sits at byte 0 — what lets the
-    DuckDB oracle decode rate/bitrate indices and count frames by pure
-    integer arithmetic). Atomic like the PNG path."""
-    if os.path.exists(MP3_FIXTURE_PATH):
-        return MP3_FIXTURE_PATH
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ..functions.multimodal import encode_mp3
-
-    n_docs = _max_doc_id() + 1
-    ids, blobs = [], []
-    for doc_id in range(n_docs):
-        rate, kbps, frames, mono = mp3_params(doc_id)
-        ids.append(doc_id)
-        blobs.append(encode_mp3(rate, kbps, frames, mono))
-    table = pa.table(
-        {"doc_id": pa.array(ids, type=pa.int64()),
-         "mp3": pa.array(blobs, type=pa.binary())}
-    )
-    fd, tmp = tempfile.mkstemp(
-        dir=os.path.dirname(MP3_FIXTURE_PATH), suffix=".parquet.tmp"
-    )
-    os.close(fd)
-    try:
-        pq.write_table(table, tmp)
-        os.replace(tmp, MP3_FIXTURE_PATH)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-    return MP3_FIXTURE_PATH
-
-
-def mp4_params(doc_id: int) -> tuple[int, int, int]:
-    """Fixture MP4 parameters (timescale, duration, n_tracks): pure
-    function of doc_id; durations exercise the integer-division ms
-    arithmetic, track counts sweep 1..3."""
-    return (
-        (600, 1000, 90000)[doc_id % 3],
-        1000 + (doc_id * 97) % 500000,
-        1 + doc_id % 3,
-    )
-
-
-def ensure_mp4_fixture() -> str:
-    """Create MP4_FIXTURE_PATH if missing; return the path. One spec-valid
-    ISO BMFF container per doc_id (real encode_mp4 — exact box sizes,
-    v0 mvhd, tkhd-bearing traks, constant-byte mdat so the oracle's
-    trak-count substring scan cannot alias on media bytes). The writer's
-    canonical layout (ftyp 24 bytes, moov at 24, mvhd at 32) pins
-    timescale/duration at fixed offsets for the SQL oracle. Atomic."""
-    if os.path.exists(MP4_FIXTURE_PATH):
-        return MP4_FIXTURE_PATH
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ..functions.multimodal import encode_mp4
-
-    n_docs = _max_doc_id() + 1
-    ids, blobs = [], []
-    for doc_id in range(n_docs):
-        ts, dur, tracks = mp4_params(doc_id)
-        ids.append(doc_id)
-        blobs.append(encode_mp4(ts, dur, tracks, b"\xaa" * (16 + doc_id % 64)))
-    table = pa.table(
-        {"doc_id": pa.array(ids, type=pa.int64()),
-         "mp4": pa.array(blobs, type=pa.binary())}
-    )
-    fd, tmp = tempfile.mkstemp(
-        dir=os.path.dirname(MP4_FIXTURE_PATH), suffix=".parquet.tmp"
-    )
-    os.close(fd)
-    try:
-        pq.write_table(table, tmp)
-        os.replace(tmp, MP4_FIXTURE_PATH)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-    return MP4_FIXTURE_PATH
 
 
 def jpeg_px_blocks(doc_id: int) -> tuple[int, int]:
@@ -503,76 +287,6 @@ def ensure_gif_anim_fixture() -> str:
         if os.path.exists(tmp):
             os.unlink(tmp)
     return GIF_ANIM_FIXTURE_PATH
-
-
-def mp4_frame_params(doc_id: int) -> tuple[int, list[int], list[int]]:
-    """Fixture sample-table parameters: (media timescale, per-sample
-    durations, per-sample payload lengths) — all pure functions of doc_id
-    so the DuckDB oracle can regenerate them in SQL. 2..7 samples per
-    container (exercises short/full/multi-chunk stsc layouts)."""
-    timescale = (600, 1000, 90000)[doc_id % 3]
-    n = 2 + doc_id % 6
-    durations = [100 + ((doc_id * 7 + i * 13) % 400) for i in range(n)]
-    lengths = [8 + ((doc_id + 3 * i) % 24) for i in range(n)]
-    return timescale, durations, lengths
-
-
-def mp4_frame_payload(doc_id: int, i: int, n: int) -> bytes:
-    """Frame i's payload bytes: the shared Knuth-hash stream salted by
-    (doc_id, frame index) — byte j = (doc_id*2654435761 + i*1000003 +
-    j*40503) mod 256, the exact formula the SQL oracle re-evaluates."""
-    idx = np.arange(n, dtype=np.uint64)
-    return (
-        (
-            np.uint64(doc_id) * np.uint64(2654435761)
-            + np.uint64(i) * np.uint64(1000003)
-            + idx * np.uint64(40503)
-        )
-        .astype(np.uint8)
-        .tobytes()
-    )
-
-
-def ensure_mp4_frames_fixture() -> str:
-    """Create MP4_FRAMES_FIXTURE_PATH if missing; return the path. One
-    REAL fragmentless MP4 per doc_id with a full sample table
-    (encode_mp4_samples — stts/stsc/stsz/stco pointing into mdat), frame
-    payloads from mp4_frame_payload. The engine locates the frames by
-    demuxing the container; the oracle recomputes the same per-frame
-    stats from the generative formula — two independent routes to the
-    same bytes. Atomic like the PNG path."""
-    if os.path.exists(MP4_FRAMES_FIXTURE_PATH):
-        return MP4_FRAMES_FIXTURE_PATH
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ..functions.multimodal import encode_mp4_samples
-
-    n_docs = _max_doc_id() + 1
-    ids, blobs = [], []
-    for doc_id in range(n_docs):
-        ts, durations, lengths = mp4_frame_params(doc_id)
-        samples = [
-            mp4_frame_payload(doc_id, i, ln) for i, ln in enumerate(lengths)
-        ]
-        ids.append(doc_id)
-        blobs.append(encode_mp4_samples(ts, durations, samples))
-    table = pa.table(
-        {"doc_id": pa.array(ids, type=pa.int64()),
-         "mp4": pa.array(blobs, type=pa.binary())}
-    )
-    fd, tmp = tempfile.mkstemp(
-        dir=os.path.dirname(MP4_FRAMES_FIXTURE_PATH), suffix=".parquet.tmp"
-    )
-    os.close(fd)
-    try:
-        pq.write_table(table, tmp)
-        os.replace(tmp, MP4_FRAMES_FIXTURE_PATH)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-    return MP4_FRAMES_FIXTURE_PATH
 
 
 def png_palette_rgb(n_colors: int) -> bytes:

@@ -1,19 +1,30 @@
 """Unit tests for round-3 batch-5 primitives: MIME sniffing (including
-arms the oracle query doesn't exercise — gzip, real encode_png/encode_wav
-bytes), hreflang extraction edge cases, span dedup, and mirror detection's
-boilerplate cap."""
+arms the oracle query doesn't exercise — gzip, real encode_png bytes, a
+spec-valid WAV header), hreflang extraction edge cases, span dedup, and
+mirror detection's boilerplate cap."""
 
 from __future__ import annotations
+
+import struct
 
 from pyspark.sql import functions as F
 
 from opps_feedcrawler_spark.functions.extract import extract_hreflang_py
-from opps_feedcrawler_spark.functions.multimodal import (
-    encode_png,
-    encode_wav,
-    sniff_mime,
-)
+from opps_feedcrawler_spark.functions.multimodal import encode_png, sniff_mime
 from opps_feedcrawler_spark.operators.dedup import dup_spans, mirror_host_pairs
+
+# canonical RIFF/WAVE header: 8 kHz mono 16-bit PCM, 4 frames of data
+_PCM = b"\x00\x01" * 4
+WAV = (
+    b"RIFF"
+    + struct.pack("<I", 36 + len(_PCM))
+    + b"WAVE"
+    + b"fmt "
+    + struct.pack("<IHHIIHH", 16, 1, 1, 8000, 16000, 2, 16)
+    + b"data"
+    + struct.pack("<I", len(_PCM))
+    + _PCM
+)
 
 
 class TestSniffMime:
@@ -22,7 +33,7 @@ class TestSniffMime:
 
         blobs = [
             ("png", encode_png(3, 2, b"\x00" * 6)),  # REAL encoder output
-            ("wav", encode_wav(8000, 1, b"\x00\x01" * 4)),
+            ("wav", WAV),
             ("pdf", b"%PDF-1.4 fake"),
             ("gz", gzip.compress(b"payload")),
             ("html_ws", b"\n\t  <!DOCTYPE HTML><html></html>"),

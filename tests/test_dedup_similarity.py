@@ -194,40 +194,6 @@ def test_ann_ivf_recall_planted(spark):
     assert hits >= naive_hits, (hits, naive_hits)
 
 
-def test_multimodal_audio_video_plumbing(spark):
-    from opps_feedcrawler_spark.functions.multimodal import (
-        audio_metadata,
-        sample_video_frames,
-    )
-
-    from opps_feedcrawler_spark.functions.multimodal import encode_wav
-
-    wav = encode_wav(8000, 1, b"\x00" * 1600)  # 800 frames -> 100 ms
-    df = spark.createDataFrame(
-        [("a1", wav), ("a2", b"ID3rest"), ("a3", b"xx")],
-        "url string, blob binary",
-    )
-    rows = {r.url: r for r in audio_metadata(df).collect()}
-    # wav path is REAL (round 3): fields come from the RIFF header;
-    # a blob that sniffs MP3 but fails the real frame-chain parse is
-    # quarantined as codec="invalid" rather than raising
-    assert rows["a1"].codec == "wav" and rows["a2"].codec == "invalid"
-    assert rows["a1"].sample_rate == 8000 and rows["a1"].n_channels == 1
-    assert rows["a1"].duration_ms == 100
-
-    frames = sample_video_frames(df).collect()
-    by_url: dict[str, list] = {}
-    for r in frames:
-        by_url.setdefault(r.url, []).append(r)
-    # 1 + n_bytes % 5 frames per blob, contiguous indices, 1s spacing
-    assert len(by_url["a1"]) == 1 + len(wav) % 5
-    assert len(by_url["a3"]) == 1 + 2 % 5
-    for rs in by_url.values():
-        idxs = sorted(r.frame_idx for r in rs)
-        assert idxs == list(range(len(rs)))
-        assert all(r.frame_ms == r.frame_idx * 1000 for r in rs)
-
-
 def test_byte_histogram_features_real_and_retrieval(spark):
     """byte_histogram_features is a REAL extractor (no stub): histogram
     values verified against a pure-Python reference, and identical blobs

@@ -350,3 +350,23 @@ def test_bucketed_fetch_join_no_blob_exchange(spark, tmp_path):
     assert got_b == got_c
     out_b["cleanup"](), out_c["cleanup"]()
     spark.sql("DROP TABLE IF EXISTS ofs_pages_bucketed_test")
+
+
+def test_importing_queries_writes_no_file(tmp_path):
+    """Importing the registry, as __spark_entry__.queries() does, leaves
+    the temp dir untouched: no entry materializes data at import."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    tmp = tmp_path / "tmpdir"
+    tmp.mkdir()
+    subprocess.run(
+        [sys.executable, "-c", "import opps_feedcrawler_spark.plans.queries"],
+        cwd=Path(__file__).resolve().parents[1],
+        env={**os.environ, "TMPDIR": str(tmp)},
+        check=True,
+        timeout=300,
+    )
+    assert os.listdir(tmp) == []
