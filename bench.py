@@ -105,9 +105,8 @@ HEADLINE_QUERIES = [
     "crawl_wat_extract",
     "crawl_sitemap_gzip",
     "crawl_warc_revisit",
-    # round-5 additions: color-JPEG pixel decode, 16-bit PNG, CDX
+    # round-5 additions: JPEG EXIF orientation, 16-bit PNG, CDX
     # random-access record fetch, foreign-WARC interop walk
-    "multimodal_jpeg_color",
     "multimodal_jpeg_exif",
     "multimodal_png16",
     "crawl_cdx_fetch",

@@ -14,25 +14,26 @@ partition-preserving mapInPandas. Codec status per format:
   plain big-endian bytes at fixed offsets (PNG spec, RFC 2083 §4.1.1).
 - **JPEG metadata: REAL.** ``parse_jpeg_meta`` is a stdlib-only marker
   walker (ITU T.81 segment syntax: SOI, length-prefixed segments, SOFn
-  frame-header field extraction) and ``encode_jpeg`` a minimal
-  structurally-valid JFIF writer (APP0/DQT/SOF0/DHT/SOS with byte-stuffed
-  entropy payload) used by tests and the driver fixture. Dimension
-  extraction from SOFn is exactly what PIL does for ``Image.size`` — no
-  entropy decode needed.
+  frame-header field extraction, APP1 Exif orientation) and
+  ``encode_jpeg`` a minimal structurally-valid JFIF writer
+  (APP0/DQT/SOF0/DHT/SOS with byte-stuffed entropy payload) used by
+  tests and the driver fixture. Dimension extraction from SOFn is exactly
+  what PIL does for ``Image.size`` — no entropy decode needed.
 - **PNG pixels: REAL.** ``decode_png_pixels`` zlib-inflates IDAT and
   applies the full RFC 2083 unfilter set (None/Sub/Up/Average/Paeth,
   byte-exact) for 8- and 16-bit gray/RGB/GA/RGBA; ``resize_png`` does real
   nearest-neighbor thumbnails (decode → resample → re-encode).
-- **JPEG pixels: REAL** (``functions/jpegcodec.py``): baseline and
-  progressive, grayscale and YCbCr; the modes it lacks (lossless,
-  arithmetic, hierarchical) raise NotImplementedError.
-- **GIF: REAL, fully** (``functions/gifcodec.py``): GIF89a block walk
-  (frame counting, GCE delay summation), variable-width LSB-first LZW
-  decode AND encode (width bumps, CLEAR resets, KwKwK), palette lookup,
-  nearest-neighbor resize. GIF is lossless, so any content round-trips
-  bit-exactly — no codec library involved anywhere.
+- **GIF: REAL** (``functions/gifcodec.py``): GIF89a block walk (frame
+  counting, GCE delay summation), variable-width LSB-first LZW decode
+  AND encode (width bumps, CLEAR resets, KwKwK), nearest-neighbor
+  resize. The pixel decoder returns one channel: the palette's RED
+  channel per index, so a color GIF decodes to its red plane only;
+  grayscale palettes (R = G = B, what ``encode_gif`` writes) are exact.
 
-There is no audio or video decoder: ``sniff_mime`` still labels WAV
+There is no JPEG pixel decoder and no audio or video decoder: a JPEG's
+header is parsed (``"jpeg"`` metadata, EXIF orientation) but its entropy
+stream is not, so its pixel-stats row is the all-zero quarantine row of
+any format without a pixel decoder; ``sniff_mime`` still labels WAV
 bodies ``audio/wav``, and nothing downstream decodes them.
 
 Design for 100 TB of media: binaries never pass through a shuffle — the
@@ -421,12 +422,13 @@ def parse_jpeg_meta(blob: bytes) -> dict:
 
 
 def decode_image_meta(blob: bytes) -> dict:
-    """Image metadata decode. PNG and JPEG are REAL (parse_png_meta —
+    """Image metadata decode. PNG, JPEG and GIF are REAL (parse_png_meta —
     structural parse with CRC check; parse_jpeg_meta — T.81 marker walk
-    to SOFn); unknown formats fall back to a deterministic declared STUB
-    (a real deployment replaces the fallback with PIL.Image.open(...)).
+    to SOFn; parse_gif_meta — block walk); unknown formats fall back to a
+    deterministic declared STUB (a real deployment replaces the fallback
+    with PIL.Image.open(...)).
 
-    A blob that *sniffs* as PNG/JPEG but fails its structural parse is
+    A blob that *sniffs* as PNG/JPEG/GIF but fails its structural parse is
     reported as format "invalid" with zero dimensions instead of raising:
     on a crawl corpus, truncated and mislabeled media are routine and one
     bad blob must not fail a 100 TB stage — the row-level error surface
@@ -664,19 +666,14 @@ def decode_png_pixels(blob: bytes):
 def decode_image_pixels(blob: bytes):
     """Pixel decode. PNG is REAL (decode_png_pixels — inflate + full
     unfilter; gray 1/2/4/8/16-bit, paletted, GA/RGB/RGBA at 8 and 16
-    bits, Adam7), JPEG is REAL (functions/jpegcodec.decode_jpeg_pixels —
-    baseline AND progressive, grayscale and 3-component YCbCr with
-    chroma upsample + BT.601 convert, restart intervals), and GIF first
-    frames are REAL (gifcodec). Output is (H, W, C): uint8, or uint16
-    for 16-bit PNGs. Formats without a decoder here (and the remaining
-    JPEG modes: lossless, arithmetic, hierarchical) raise
+    bits, Adam7) and GIF first frames are REAL (gifcodec). Output is
+    (H, W, C): uint8, or uint16 for 16-bit PNGs. A GIF decodes to
+    (H, W, 1) holding the palette's red channel, so a color GIF yields
+    its red plane only; grayscale palettes are exact. Every other format
+    (JPEG included: only its header is parsed) and interlaced GIFs raise
     NotImplementedError (a real deploy swaps in PIL/libvips)."""
     if blob[:8] == _PNG_SIG:
         return decode_png_pixels(blob)
-    if blob[:2] == b"\xff\xd8":
-        from .jpegcodec import decode_jpeg_pixels
-
-        return decode_jpeg_pixels(blob)
     if blob[:4] == b"GIF8":
         from .gifcodec import decode_gif_pixels
 
@@ -724,16 +721,16 @@ def image_pixel_stats(
     df: DataFrame, url_col: str = "url", bin_col: str = "blob"
 ) -> DataFrame:
     """mapInPandas REAL-pixel stage: decode_image_pixels per blob (PNG
-    inflate+unfilter or baseline-JPEG Huffman+IDCT), then numpy
-    reductions — the shape of any real brightness/NSFW/quality scorer
-    over decoded pixels. Narrow, no blob shuffle, Arrow-bounded batches.
-    Strict by contract: feed it blobs already routed/validated by
-    image_metadata (format not in {unknown, invalid}) — the metadata
-    stage is the crawl-corpus quarantine layer; here a parse error is a
-    pipeline bug and raises. Declared CAPABILITY limits are different:
-    a CMYK/12-bit/arithmetic-coded JPEG has a perfectly valid SOF, so it
-    sails through the metadata gate as format 'jpeg' and only the pixel
-    decoder can discover it's outside the supported envelope
+    inflate+unfilter or GIF LZW+palette lookup), then numpy reductions —
+    the shape of any real brightness/NSFW/quality scorer over decoded
+    pixels. Narrow, no blob shuffle, Arrow-bounded batches. Strict by
+    contract: feed it blobs already routed/validated by image_metadata
+    (format not in {unknown, invalid}) — the metadata stage is the
+    crawl-corpus quarantine layer; here a parse error is a pipeline bug
+    and raises. Declared CAPABILITY limits are different: a JPEG has a
+    perfectly valid SOF, so it passes the metadata gate as format 'jpeg'
+    (likewise an interlaced GIF as 'gif'), and only the pixel decoder,
+    which has no JPEG arm, finds it outside the supported envelope
     (NotImplementedError). Real corpora contain those, so they
     quarantine to an all-zero stats row (n_px = 0 is unreachable for any
     decoded image — the row-level filter) instead of failing a 100 TB
@@ -878,12 +875,11 @@ def byte_histogram_features(
 
 
 def resize_image(blob: bytes, width: int, height: int) -> bytes:
-    """Thumbnail resize. PNG (all decoded shapes, 8- and 16-bit), JPEG
-    (grayscale and color — color thumbnails re-encode through the RGB
-    arm of encode_jpeg_pixels) and GIF are REAL (decode →
-    nearest-neighbor resample → re-encode with the real encoders);
-    other formats need a pixel decoder absent from this container (same
-    swap point as decode_image_pixels)."""
+    """Thumbnail resize. PNG (all decoded shapes, 8- and 16-bit) and GIF
+    are REAL (decode → nearest-neighbor resample → re-encode with the
+    real encoders); other formats, JPEG included, have no pixel decoder
+    here and raise NotImplementedError (same swap point as
+    decode_image_pixels)."""
     if blob[:8] == _PNG_SIG:
         return resize_png(blob, width, height)
     if blob[:4] == b"GIF8":
@@ -898,21 +894,6 @@ def resize_image(blob: bytes, width: int, height: int) -> bytes:
         rows = (np.arange(height) * src_h) // height
         cols = (np.arange(width) * src_w) // width
         return encode_gif(width, height, px[rows][:, cols, 0].tobytes())
-    if blob[:2] == b"\xff\xd8":
-        import numpy as np
-
-        from .jpegcodec import decode_jpeg_pixels, encode_jpeg_pixels
-
-        if width <= 0 or height <= 0:
-            raise ValueError("resize dimensions must be positive")
-        px = decode_jpeg_pixels(blob)
-        src_h, src_w = px.shape[:2]
-        rows = (np.arange(height) * src_h) // height
-        cols = (np.arange(width) * src_w) // width
-        # keep the channel axis: (H, W, 1) re-encodes grayscale,
-        # (H, W, 3) re-encodes color — slicing channel 0 here would
-        # silently thumbnail the RED plane of a color photo
-        return encode_jpeg_pixels(px[rows][:, cols])
     raise NotImplementedError(
         "resize for this format requires PIL/libvips; "
         "not available in this environment"
@@ -923,9 +904,10 @@ def sniff_mime(blob) -> "Column":
     """Magic-byte content-type sniffing over an opaque binary column —
     the routing step a crawler runs on every fetched body BEFORE parsing
     (Content-Type headers lie; WHATWG MIME-sniffing exists because of
-    it). Detects PNG, JPEG and GIF (the image pipeline), WAV/RIFF (labelled
-    only: no audio decoder exists), PDF, gzip, XML/feeds and HTML;
-    everything else falls to application/octet-stream.
+    it). Detects PNG, JPEG and GIF (the image pipeline; a JPEG gets
+    header metadata only, no pixel decode), WAV/RIFF (labelled only: no
+    audio decoder exists), PDF, gzip, XML/feeds and HTML; everything else
+    falls to application/octet-stream.
 
     Pure JVM expressions: binary signatures compare hex prefixes, the
     text-ish checks decode a bounded 256-byte head as ISO-8859-1 (total —

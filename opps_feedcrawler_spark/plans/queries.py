@@ -2830,10 +2830,8 @@ def _duck_be_from_hex(hx_col: str, start: int, ndigits: int) -> str:
 from ..sources.fixtures import (
     GIF_ANIM_FIXTURE_PATH,
     GIF_FIXTURE_PATH,
-    JPEG_COLOR_FIXTURE_PATH,
     JPEG_EXIF_FIXTURE_PATH,
     JPEG_FIXTURE_PATH,
-    JPEG_PX_FIXTURE_PATH,
     PNG_FIXTURE_PATH,
     PNG_PALETTE_FIXTURE_PATH,
     PNG16_FIXTURE_PATH,
@@ -3073,155 +3071,6 @@ def multimodal_png16(spark, sf_dir):
 
 
 @_q(
-    "multimodal_jpeg_pixels",
-    f"""
-    WITH p AS (
-      SELECT doc_id,
-             1 + doc_id % 6 AS bw,
-             1 + (doc_id * 3) % 4 AS bh
-      FROM read_parquet('{JPEG_PX_FIXTURE_PATH}')),
-    calc AS (
-      SELECT doc_id, bw, bh,
-             list_transform(range(0, bw * bh),
-                 k -> (doc_id * 2654435761 + k * 40503) % 256) AS blocks
-      FROM p)
-    SELECT {_DOC_URL_SQL} AS url,
-           CAST(bw * 8 AS INT) AS width,
-           CAST(bh * 8 AS INT) AS height,
-           CAST(bw * bh * 64 AS BIGINT) AS n_px,
-           CAST(64 * list_sum(blocks) AS BIGINT) AS sum_px,
-           CAST(list_min(blocks) AS INT) AS min_px,
-           CAST(list_max(blocks) AS INT) AS max_px
-    FROM calc JOIN documents USING (doc_id)
-    """,
-)
-def multimodal_jpeg_pixels(spark, sf_dir):
-    """REAL JPEG entropy decode through the engine: each fixture blob is
-    a genuine baseline JPEG produced by the full forward pipeline
-    (functions/jpegcodec.encode_jpeg_pixels — DCT, quantization, zigzag,
-    Annex-K.3 Huffman coding, byte stuffing), and image_pixel_stats
-    recovers the pixels with decode_jpeg_pixels — Huffman decode against
-    the STREAM's own DHT, dequantization against the stream's own DQT,
-    inverse DCT, level shift — then numpy-reduces them. The fixture
-    content is block-constant under a flat quantization table, the
-    codec's lossless subspace, so the round-trip is bit-exact (lossy-
-    JPEG tolerance tests live in pytest). Non-circular check: the oracle
-    never touches the blob — it recomputes every stat from the
-    generative block-value formula (sources/fixtures.jpeg_px_blocks /
-    png_payload) in exact BIGINT SQL. The routes agree only if the real
-    entropy decode + IDCT recovers the real pixels. Blob rule holds:
-    mapInPandas, no blob shuffle."""
-    from ..functions.multimodal import image_pixel_stats
-    from ..sources.fixtures import ensure_jpeg_px_fixture
-
-    d = _doc_urls(spark, sf_dir).select("doc_id", "url")
-    jp = spark.read.parquet(ensure_jpeg_px_fixture())
-    joined = jp.join(F.broadcast(d), "doc_id").select(
-        "url", F.col("jpeg").alias("blob")
-    )
-    return image_pixel_stats(joined, "url", "blob")
-
-
-# Oracle-side mirror of the color-JPEG fixture formulas + the decoder's
-# 16-bit fixed-point BT.601 math (jpegcodec.ycc_to_rgb_fixed): the >>16
-# arithmetic shift is floor division, expressed as floor(x / 65536.0)
-# (exact — the dividend is far below 2^53 and /2^16 is a pure exponent
-# change in IEEE doubles).
-_JC_Y = (
-    "((doc_id * 2654435761 + (((i // w) // 8) * (w // 8)"
-    " + ((i % w) // 8)) * 40503) % 256)"
-)
-_JC_CIDX = (
-    "(CASE WHEN arm = 1 THEN ((i // w) // 16) * ((w + 15) // 16)"
-    " + ((i % w) // 16)"
-    " ELSE ((i // w) // 8) * (w // 8) + ((i % w) // 8) END)"
-)
-_JC_CB = f"((doc_id * 2654435761 + {_JC_CIDX} * 48271 + 7) % 256)"
-_JC_CR = f"((doc_id * 2654435761 + {_JC_CIDX} * 69621 + 13) % 256)"
-_JC_R = (
-    f"GREATEST(0, LEAST(255, {_JC_Y} + CAST(floor((91881 * ({_JC_CR}"
-    f" - 128) + 32768) / 65536.0) AS BIGINT)))"
-)
-_JC_G = (
-    f"GREATEST(0, LEAST(255, {_JC_Y} - CAST(floor((22554 * ({_JC_CB}"
-    f" - 128) + 46802 * ({_JC_CR} - 128) + 32768) / 65536.0) AS BIGINT)))"
-)
-_JC_B = (
-    f"GREATEST(0, LEAST(255, {_JC_Y} + CAST(floor((116130 * ({_JC_CB}"
-    f" - 128) + 32768) / 65536.0) AS BIGINT)))"
-)
-
-
-@_q(
-    "multimodal_jpeg_color",
-    f"""
-    WITH p AS (
-      SELECT doc_id,
-             8 * (1 + doc_id % 6) AS w,
-             8 * (1 + (doc_id * 3) % 4) AS h,
-             doc_id % 2 AS arm
-      FROM read_parquet('{JPEG_COLOR_FIXTURE_PATH}')),
-    v AS (
-      SELECT doc_id, w, h,
-             flatten(list_transform(range(0, w * h),
-                     i -> [{_JC_R}, {_JC_G}, {_JC_B}])) AS vals
-      FROM p)
-    SELECT {_DOC_URL_SQL} AS url,
-           CAST(w AS INT) AS width,
-           CAST(h AS INT) AS height,
-           CAST(len(vals) AS BIGINT) AS n_px,
-           CAST(list_sum(vals) AS BIGINT) AS sum_px,
-           CAST(list_min(vals) AS INT) AS min_px,
-           CAST(list_max(vals) AS INT) AS max_px
-    FROM v JOIN documents USING (doc_id)
-    """,
-)
-def multimodal_jpeg_color(spark, sf_dir):
-    """COLOR baseline JPEG decode (VERDICT r4 #1 — every real crawled
-    JPEG is color): 3-component YCbCr frames with an interleaved-MCU
-    scan, both classic shapes per doc arm — 4:4:4 and 4:2:0 (2x2 luma
-    sampling, chroma at quarter resolution, upsampled by sample
-    replication) — through the REAL jpegcodec pipeline: stream-carried
-    DQT/DHT pairs (luma + chroma tables), per-component DC prediction,
-    Huffman entropy decode, dequant, inverse DCT, then the 16-bit
-    FIXED-POINT BT.601 YCbCr->RGB (constants 91881/22554/46802/116130,
-    +32768 bias, arithmetic >>16) so the color math is integer-exact.
-    Non-circular lossless-subspace oracle: each plane is constant within
-    its own 8x8 blocks with flat quantization tables, so Spark's route
-    is real bytes -> entropy decode -> IDCT -> upsample -> fixed-point
-    color; the SQL recomputes every RGB sample from the generative
-    per-plane formulas plus the SAME documented integer arithmetic
-    (floor(x/65536.0) = the arithmetic shift) and reduces in exact
-    BIGINT. A mis-ordered MCU, a chroma table applied to luma, a wrong
-    upsample origin, or one fixed-point constant off kills the hash.
-    Every fifth doc is PROGRESSIVE (SOF2 multi-scan successive
-    approximation, decoded by the Annex-G coefficient accumulator) and
-    every third remaining doc carries a DRI restart interval (RSTn
-    markers with per-ECS DC resets) — both alter only the byte stream,
-    so all arms share the same formulas while the decode walks real
-    multi-scan / restart syntax. Blob plan shape: mapInPandas decode,
-    metadata side broadcast. The single-file local fixture packs into
-    ONE input split (a ~20 MB file under the 128 MB maxPartitionBytes),
-    which would serialize the Huffman+IDCT stage on one core — measured
-    6.3 s vs ~0.5 s parallel — so the fixture read is explicitly
-    repartitioned by doc_id before decode. That KB-scale exchange is a
-    fixture artifact only: a production image corpus arrives sharded
-    across many files, where the scan itself yields parallel splits and
-    no blob ever moves."""
-    from ..functions.multimodal import image_pixel_stats
-    from ..sources.fixtures import ensure_jpeg_color_fixture
-
-    d = _doc_urls(spark, sf_dir).select("doc_id", "url")
-    jp = spark.read.parquet(ensure_jpeg_color_fixture()).repartition(
-        spark.sparkContext.defaultParallelism, "doc_id"
-    )
-    joined = jp.join(F.broadcast(d), "doc_id").select(
-        "url", F.col("jpeg").alias("blob")
-    )
-    return image_pixel_stats(joined, "url", "blob")
-
-
-@_q(
     "multimodal_jpeg_exif",
     f"""
     SELECT {_DOC_URL_SQL} AS url,
@@ -3285,8 +3134,7 @@ def multimodal_gif_pixels(spark, sf_dir):
     pixels with decode_gif_pixels — block walk, variable-width LSB-first
     LZW decode (width bumps, CLEAR resets, KwKwK case), palette lookup —
     then numpy-reduces them. GIF is LOSSLESS, so no content restriction
-    is needed (contrast multimodal_jpeg_pixels' lossless-subspace
-    fixture): arbitrary formula pixels must round-trip bit-exactly.
+    is needed: arbitrary formula pixels must round-trip bit-exactly.
     Non-circular check: the oracle never opens the blob — it recomputes
     every stat from the generative pixel formula in exact BIGINT SQL.
     Blob rule holds: mapInPandas, no blob shuffle."""
@@ -6274,28 +6122,21 @@ _FRONT_ORDER = [
     # ------------------------------------------------------------------
     # Round-5 window (VERDICT r4 #7's budget rule: new + changed must
     # fit the 50-slot window, updated in the same commits that add
-    # them). 146/146 cumulative coverage held at r4; this window keeps
-    # it: 5 new entries, 8 implementation-changed, 10 rows-only
-    # (per-round evidence), and 25 rotation slots for the relational
-    # pack whose last green rows date to rounds 1-2. The list above the
-    # marker holds 48 names, so the first two below it also fall inside
-    # the window.
+    # them). The list above the marker holds 46 names, so the first
+    # four below it also fall inside the window.
     # ------------------------------------------------------------------
-    # new round-5 entries (all oracle-paired): color-JPEG pixel decode,
-    # 16-bit PNG, CDX random-access fetch, foreign-WARC interop
-    "multimodal_jpeg_color",
+    # round-5 entries (all oracle-paired): JPEG EXIF orientation, 16-bit
+    # PNG, CDX random-access fetch, foreign-WARC interop
     "multimodal_jpeg_exif",
     "multimodal_png16",
     "crawl_cdx_fetch",
     "crawl_warc_foreign",
-    # implementation changed since last green row: jpegcodec decoder
-    # rework (color scan path), PNG 16-bit depth threading, sitemap
-    # zlib.error quarantine, PSL cross-class rule ordering, HTTP
-    # transfer-coding quarantine + repeated-field-line merge,
-    # image_pixel_stats capability quarantine (gif_pixels shares that
-    # stage — swapped in for distinct_flag_pairs, whose operator class
-    # distinct_agg_segments still represents in-window)
-    "multimodal_jpeg_pixels",
+    # implementation changed since last green row: PNG 16-bit depth
+    # threading, sitemap zlib.error quarantine, PSL cross-class rule
+    # ordering, HTTP transfer-coding quarantine + repeated-field-line
+    # merge, image_pixel_stats capability quarantine (gif_pixels shares
+    # that stage — swapped in for distinct_flag_pairs, whose operator
+    # class distinct_agg_segments still represents in-window)
     "multimodal_png_pixels",
     "multimodal_png_palette",
     "multimodal_gif_pixels",

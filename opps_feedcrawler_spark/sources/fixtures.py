@@ -34,9 +34,6 @@ PNG_FIXTURE_PATH = os.path.join(
 JPEG_FIXTURE_PATH = os.path.join(
     tempfile.gettempdir(), "ofs-jpeg-fixture-v1.parquet"
 )
-JPEG_PX_FIXTURE_PATH = os.path.join(
-    tempfile.gettempdir(), "ofs-jpeg-px-fixture-v1.parquet"
-)
 GIF_FIXTURE_PATH = os.path.join(
     tempfile.gettempdir(), "ofs-gif-fixture-v1.parquet"
 )
@@ -45,9 +42,6 @@ PNG_PALETTE_FIXTURE_PATH = os.path.join(
 )
 PNG16_FIXTURE_PATH = os.path.join(
     tempfile.gettempdir(), "ofs-png16-fixture-v1.parquet"
-)
-JPEG_COLOR_FIXTURE_PATH = os.path.join(
-    tempfile.gettempdir(), "ofs-jpeg-color-fixture-v3.parquet"
 )
 JPEG_EXIF_FIXTURE_PATH = os.path.join(
     tempfile.gettempdir(), "ofs-jpeg-exif-fixture-v1.parquet"
@@ -142,57 +136,6 @@ def ensure_jpeg_fixture() -> str:
     return JPEG_FIXTURE_PATH
 
 
-def jpeg_px_blocks(doc_id: int) -> tuple[int, int]:
-    """Pixel-fixture block grid (blocks_wide, blocks_high): images are
-    8*bw x 8*bh, constant within each 8x8 block — the baseline-JPEG
-    lossless subspace under a flat quantization table, so the REAL
-    encoder/decoder round-trip is bit-exact and the SQL oracle can
-    recompute pixel stats from the block-value formula."""
-    return 1 + doc_id % 6, 1 + (doc_id * 3) % 4
-
-
-def ensure_jpeg_px_fixture() -> str:
-    """Create JPEG_PX_FIXTURE_PATH if missing; return the path. One REAL
-    baseline JPEG per doc_id — full DCT/quant/Huffman pipeline
-    (functions/jpegcodec.encode_jpeg_pixels, flat table) over a
-    block-constant image whose block k value is png_payload(doc_id)[k].
-    The engine recovers the pixels by true entropy decode + IDCT; the
-    oracle recomputes the stats from the formula. Atomic."""
-    if os.path.exists(JPEG_PX_FIXTURE_PATH):
-        return JPEG_PX_FIXTURE_PATH
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ..functions.jpegcodec import FLAT_QT, encode_jpeg_pixels
-
-    n_docs = _max_doc_id() + 1
-    ids, blobs = [], []
-    for doc_id in range(n_docs):
-        bw, bh = jpeg_px_blocks(doc_id)
-        vals = np.frombuffer(
-            png_payload(doc_id, bw * bh), dtype=np.uint8
-        ).reshape(bh, bw)
-        img = np.kron(vals, np.ones((8, 8), dtype=np.uint8))
-        ids.append(doc_id)
-        blobs.append(encode_jpeg_pixels(img, FLAT_QT))
-    table = pa.table(
-        {"doc_id": pa.array(ids, type=pa.int64()),
-         "jpeg": pa.array(blobs, type=pa.binary())}
-    )
-    fd, tmp = tempfile.mkstemp(
-        dir=os.path.dirname(JPEG_PX_FIXTURE_PATH), suffix=".parquet.tmp"
-    )
-    os.close(fd)
-    try:
-        pq.write_table(table, tmp)
-        os.replace(tmp, JPEG_PX_FIXTURE_PATH)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-    return JPEG_PX_FIXTURE_PATH
-
-
 def gif_dims(doc_id: int) -> tuple[int, int]:
     """GIF pixel-fixture dimensions — a third stride so PNG/JPEG/GIF
     blobs never agree by coincidence."""
@@ -203,8 +146,8 @@ def ensure_gif_fixture() -> str:
     """Create GIF_FIXTURE_PATH if missing; return the path. One REAL
     GIF89a per doc_id (encode_gif — real LZW compression, grayscale
     palette), pixels from the shared Knuth-hash stream. GIF is LOSSLESS,
-    so unlike JPEG no content restriction is needed: arbitrary formula
-    pixels round-trip bit-exactly and the SQL oracle recomputes stats
+    so no content restriction is needed: arbitrary formula pixels
+    round-trip bit-exactly and the SQL oracle recomputes stats
     straight from the formula. Atomic."""
     if os.path.exists(GIF_FIXTURE_PATH):
         return GIF_FIXTURE_PATH
@@ -381,96 +324,6 @@ def png16_samples(doc_id: int, n: int) -> bytes:
         .astype(">u2")
         .tobytes()
     )
-
-
-def jpeg_color_planes(doc_id: int):
-    """Fixture YCbCr planes for one color JPEG (VERDICT r4 #1), all in
-    the codec's lossless subspace: whole-block luma dims, each plane
-    constant within its OWN 8x8 blocks, values from per-plane Knuth-hash
-    formulas (strides 40503 / 48271 / 69621, offsets 0 / 7 / 13) shared
-    verbatim with the DuckDB oracle. Arm = doc_id % 2: 0 -> 4:4:4,
-    1 -> 4:2:0 (chroma planes at half resolution). Returns
-    (Y, Cb, Cr, sampling)."""
-    w, h = 8 * (1 + doc_id % 6), 8 * (1 + (doc_id * 3) % 4)
-    arm = doc_id % 2
-    K = np.uint64(2654435761)
-
-    def blocks(nby: int, nbx: int, stride: int, off: int) -> np.ndarray:
-        idx = np.arange(nby * nbx, dtype=np.uint64)
-        vals = (np.uint64(doc_id) * K + idx * np.uint64(stride)
-                + np.uint64(off)) % np.uint64(256)
-        return vals.astype(np.uint8).reshape(nby, nbx)
-
-    nby, nbx = h // 8, w // 8
-    Y = blocks(nby, nbx, 40503, 0).repeat(8, 0).repeat(8, 1)
-    if arm == 1:
-        ch, cw = h // 2, w // 2
-        cby, cbx = (ch + 7) // 8, (cw + 7) // 8
-        sampling = (2, 2)
-    else:
-        ch, cw, cby, cbx = h, w, nby, nbx
-        sampling = (1, 1)
-    CB = blocks(cby, cbx, 48271, 7).repeat(8, 0).repeat(8, 1)[:ch, :cw]
-    CR = blocks(cby, cbx, 69621, 13).repeat(8, 0).repeat(8, 1)[:ch, :cw]
-    return Y, CB, CR, sampling
-
-
-def ensure_jpeg_color_fixture() -> str:
-    """Create JPEG_COLOR_FIXTURE_PATH if missing; return the path. Real
-    baseline COLOR JPEGs (interleaved-MCU YCbCr scan, two DQTs, four
-    DHTs) with flat quantization tables so the decode is bit-exact.
-    Every fifth doc is encoded PROGRESSIVE (SOF2, the full successive
-    approximation + spectral-selection scan script — the layout web
-    optimizers emit); every third remaining doc carries a DRI restart
-    interval of 2 MCUs (RSTn markers + per-ECS DC predictor resets,
-    T.81 E.1.4 — the shape camera/wasm encoders emit). Both change only
-    the BYTE STREAM, never the decoded pixels, so all arms share the
-    same oracle formulas while the Spark route walks real multi-scan /
-    restart-marker syntax."""
-    if os.path.exists(JPEG_COLOR_FIXTURE_PATH):
-        return JPEG_COLOR_FIXTURE_PATH
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from ..functions.jpegcodec import (
-        FLAT_QT,
-        encode_jpeg_progressive,
-        encode_jpeg_ycc,
-    )
-
-    n_docs = _max_doc_id() + 1
-    ids, blobs = [], []
-    for doc_id in range(n_docs):
-        Y, CB, CR, sampling = jpeg_color_planes(doc_id)
-        if doc_id % 5 == 0:
-            blob = encode_jpeg_progressive(
-                Y, CB, CR, sampling=sampling,
-                qtable=FLAT_QT, qtable_chroma=FLAT_QT,
-            )
-        else:
-            blob = encode_jpeg_ycc(
-                Y, CB, CR, sampling=sampling,
-                qtable=FLAT_QT, qtable_chroma=FLAT_QT,
-                restart_interval=2 if doc_id % 3 == 0 else 0,
-            )
-        blobs.append(blob)
-        ids.append(doc_id)
-    table = pa.table(
-        {"doc_id": pa.array(ids, type=pa.int64()),
-         "jpeg": pa.array(blobs, type=pa.binary())}
-    )
-    fd, tmp = tempfile.mkstemp(
-        dir=os.path.dirname(JPEG_COLOR_FIXTURE_PATH), suffix=".parquet.tmp"
-    )
-    os.close(fd)
-    try:
-        pq.write_table(table, tmp)
-        os.replace(tmp, JPEG_COLOR_FIXTURE_PATH)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-    return JPEG_COLOR_FIXTURE_PATH
 
 
 def ensure_png16_fixture() -> str:

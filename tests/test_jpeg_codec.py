@@ -4,7 +4,8 @@ Same independence discipline as test_png_codec: the parser is validated
 against a HAND-SPELLED JPEG byte literal (markers written out below from
 ITU T.81's segment syntax, not produced by encode_jpeg), and the encoder
 is checked field-by-field against the spec offsets its canonical layout
-pins — so neither side's correctness depends on the other."""
+pins — so neither side's correctness depends on the other. There is no
+JPEG pixel decoder: a JPEG's pixel-stats row is the quarantine row."""
 
 from __future__ import annotations
 
@@ -121,508 +122,6 @@ def test_decode_image_meta_dispatches_jpeg_for_real():
 
 
 # ---------------------------------------------------------------------------
-# REAL pixel codec (functions/jpegcodec.py): full baseline pipeline.
-# Decoder independence: one case decodes a HAND-ASSEMBLED entropy segment
-# whose bits were derived on paper from the T.81 canonical-code rules, so
-# decoder correctness is not defined by the encoder.
-# ---------------------------------------------------------------------------
-
-import numpy as np
-
-from opps_feedcrawler_spark.functions.jpegcodec import (
-    FLAT_QT,
-    STD_LUMA_QT,
-    ZIGZAG,
-    decode_jpeg_pixels,
-    encode_jpeg_pixels,
-)
-
-
-def test_block_constant_roundtrip_exact():
-    rng = np.random.default_rng(11)
-    blocks = rng.integers(0, 256, size=(3, 7), dtype=np.uint8)
-    img = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
-    out = decode_jpeg_pixels(encode_jpeg_pixels(img, FLAT_QT))
-    assert out.shape == (24, 56, 1)
-    assert np.array_equal(out[:, :, 0], img)
-
-
-def test_lossy_roundtrip_bounded_error():
-    x = np.linspace(0, 255, 48)
-    img = np.clip(np.add.outer(x, x) / 2, 0, 255).astype(np.uint8)
-    out = decode_jpeg_pixels(encode_jpeg_pixels(img, STD_LUMA_QT))[:, :, 0]
-    err = np.abs(out.astype(int) - img.astype(int))
-    assert err.max() <= 12 and err.mean() < 3
-
-
-def test_flat_qt_near_lossless_on_noise_and_edge_padding():
-    rng = np.random.default_rng(5)
-    img = rng.integers(0, 256, size=(17, 23), dtype=np.uint8)  # ragged dims
-    out = decode_jpeg_pixels(encode_jpeg_pixels(img, FLAT_QT))[:, :, 0]
-    assert out.shape == img.shape
-    assert np.abs(out.astype(int) - img.astype(int)).max() <= 2
-
-
-def test_decoder_on_hand_assembled_stream():
-    """Constant-133 8x8 image, flat table: DC = 8*(133-128) = 40
-    (category 6), all ACs zero. Canonical std-table codes derived by
-    hand: DC cat-6 = '1110' (the single length-4 code after 0 len-1,
-    1 len-2, 5 len-3 codes), 40 = '101000'; AC EOB = '1010' (4th code:
-    len-2 '00','01', len-3 '100', len-4 starts at '1010'). Stream
-    '1110 101000 1010' + two 1-pad bits = 0xEA 0x2B."""
-    entropy = bytes([0xEA, 0x2B])
-    blob = encode_jpeg_pixels(np.full((8, 8), 133, dtype=np.uint8), FLAT_QT)
-    # the encoder must have produced exactly this segment (SOS..EOI)
-    assert blob.endswith(entropy + b"\xff\xd9")
-    out = decode_jpeg_pixels(blob)
-    assert np.array_equal(out[:, :, 0], np.full((8, 8), 133))
-
-
-def test_decoder_trusts_stream_tables_not_constants():
-    """Encode with a custom quantization table; the decoder must read it
-    from the stream's DQT (natural-order reconstruction from zigzag) to
-    reproduce the pixels."""
-    qt = np.full(64, 3, dtype=np.int32)
-    qt[0] = 1  # keep DC exact for block-constant content
-    blocks = np.array([[7, 200], [123, 45]], dtype=np.uint8)
-    img = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
-    out = decode_jpeg_pixels(encode_jpeg_pixels(img, qt))
-    assert np.array_equal(out[:, :, 0], img)
-
-
-def test_zigzag_is_the_spec_permutation():
-    # spot-check the first and last diagonal entries of the T.81 table
-    assert list(ZIGZAG[:10]) == [0, 1, 8, 16, 9, 2, 3, 10, 17, 24]
-    assert list(ZIGZAG[-6:]) == [61, 54, 47, 55, 62, 63]
-
-
-def test_decode_rejects_unsupported_modes():
-    blob = encode_jpeg_pixels(np.zeros((8, 8), dtype=np.uint8), FLAT_QT)
-    # arithmetic-coded sequential (SOF9) stays out of scope; progressive
-    # (SOF2) is now a supported mode — see the Annex-G tests below
-    arith = blob.replace(b"\xff\xc0", b"\xff\xc9", 1)
-    with pytest.raises(NotImplementedError):
-        decode_jpeg_pixels(arith)
-    lossless = blob.replace(b"\xff\xc0", b"\xff\xc3", 1)
-    with pytest.raises(NotImplementedError):
-        decode_jpeg_pixels(lossless)
-    with pytest.raises(ValueError):
-        decode_jpeg_pixels(b"\x89PNG not a jpeg")
-
-
-def test_image_pixel_stats_routes_jpeg(spark):
-    from opps_feedcrawler_spark.functions.multimodal import image_pixel_stats
-
-    blocks = np.array([[10, 250, 3]], dtype=np.uint8)
-    img = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))
-    blob = encode_jpeg_pixels(img, FLAT_QT)
-    df = spark.createDataFrame([("j1", blob)], "url string, blob binary")
-    (r,) = image_pixel_stats(df).collect()
-    assert (r.width, r.height) == (24, 8)
-    assert r.sum_px == 64 * (10 + 250 + 3)
-    assert (r.min_px, r.max_px) == (3, 250)
-
-
-def test_resize_image_jpeg_real():
-    from opps_feedcrawler_spark.functions.multimodal import resize_image
-
-    blocks = np.arange(16, dtype=np.uint8).reshape(2, 8) * 16
-    img = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))  # 16x64
-    thumb = resize_image(encode_jpeg_pixels(img, FLAT_QT), 8, 2)
-    out = decode_jpeg_pixels(thumb)[:, :, 0]
-    # nearest-neighbor floor mapping picks block centers exactly; the
-    # re-encode uses the std table but an 8x2 image of constant 8x8 ...
-    # -> only partial blocks; tolerance bound instead of exactness
-    expect = img[(np.arange(2) * 16) // 2][:, (np.arange(8) * 64) // 8]
-    assert np.abs(out.astype(int) - expect.astype(int)).max() <= 16
-
-
-def test_decoder_skips_standalone_tem_marker():
-    """ADVICE r3: a standalone TEM (FF 01) between header segments is
-    legal in a conformant stream; the skip was off by one (i = j + 2
-    consumed the first byte of the next marker). Insert FF 01 after SOI
-    and decode must still succeed bit-exactly."""
-    img = np.kron(
-        np.array([[10, 250]], dtype=np.uint8), np.ones((8, 8), dtype=np.uint8)
-    )
-    blob = encode_jpeg_pixels(img, FLAT_QT)
-    assert blob[:2] == b"\xff\xd8"
-    patched = blob[:2] + b"\xff\x01" + blob[2:]
-    out = decode_jpeg_pixels(patched)
-    assert np.array_equal(out[:, :, 0], img)
-    # multiple standalone markers in a row (TEM then fill-padded TEM)
-    patched2 = blob[:2] + b"\xff\x01\xff\xff\x01" + blob[2:]
-    assert np.array_equal(decode_jpeg_pixels(patched2)[:, :, 0], img)
-
-
-# ---------------------------------------------------------------------------
-# COLOR (3-component YCbCr) baseline pipeline — VERDICT r4 #1. Same
-# independence discipline: the hand-assembled case derives the interleaved
-# entropy bits on paper from T.81's canonical-code rules and Annex K.3's
-# luma AND chroma tables, so the decoder's MCU interleave / table routing /
-# fixed-point color math are not defined by the encoder.
-# ---------------------------------------------------------------------------
-
-from opps_feedcrawler_spark.functions.jpegcodec import (  # noqa: E402
-    _box_subsample,
-    encode_jpeg_ycc,
-    rgb_to_ycc_fixed,
-    ycc_to_rgb_fixed,
-)
-
-
-def _block_planes(rng, h, w, sampling):
-    """Random planes in the lossless subspace: each plane constant within
-    its OWN 8x8 blocks, chroma already at chroma resolution."""
-    sh, sv = sampling
-    ch, cw = (h + sv - 1) // sv, (w + sh - 1) // sh
-
-    def plane(ph, pw):
-        blocks = rng.integers(
-            0, 256, size=((ph + 7) // 8, (pw + 7) // 8), dtype=np.uint8
-        )
-        return np.kron(blocks, np.ones((8, 8), dtype=np.uint8))[:ph, :pw]
-
-    return plane(h, w), plane(ch, cw), plane(ch, cw)
-
-
-def _expected_rgb(y, cb, cr, sampling):
-    """The documented decode contract: replicate-upsample chroma to luma
-    size, then the 16-bit fixed-point BT.601 convert."""
-    sh, sv = sampling
-    h, w = y.shape
-    cbu = cb.repeat(sv, axis=0).repeat(sh, axis=1)[:h, :w]
-    cru = cr.repeat(sv, axis=0).repeat(sh, axis=1)[:h, :w]
-    return ycc_to_rgb_fixed(y, cbu, cru)
-
-
-@pytest.mark.parametrize("sampling", [(1, 1), (2, 1), (1, 2), (2, 2)])
-def test_color_block_constant_roundtrip_exact(sampling):
-    rng = np.random.default_rng(sum(sampling) * 101)
-    h, w = 8 * 3 * sampling[1], 8 * 2 * sampling[0]
-    y, cb, cr = _block_planes(rng, h, w, sampling)
-    blob = encode_jpeg_ycc(
-        y, cb, cr, sampling=sampling, qtable=FLAT_QT, qtable_chroma=FLAT_QT
-    )
-    out = decode_jpeg_pixels(blob)
-    assert out.shape == (h, w, 3)
-    assert np.array_equal(out, _expected_rgb(y, cb, cr, sampling))
-
-
-def test_color_ragged_dims_constant_exact():
-    # 4:2:0 with dims not multiples of 16: constant planes stay in the
-    # lossless subspace through the edge-replicated MCU padding, and the
-    # decoder must crop back to the exact frame size.
-    h, w = 19, 29
-    y = np.full((h, w), 140, dtype=np.uint8)
-    cb = np.full((10, 15), 90, dtype=np.uint8)
-    cr = np.full((10, 15), 201, dtype=np.uint8)
-    out = decode_jpeg_pixels(
-        encode_jpeg_ycc(y, cb, cr, (2, 2), FLAT_QT, FLAT_QT)
-    )
-    assert out.shape == (h, w, 3)
-    assert np.array_equal(out, _expected_rgb(y, cb, cr, (2, 2)))
-
-
-def test_color_lossy_roundtrip_bounded_error():
-    # Arbitrary smooth content through the REAL lossy path: RGB gradient
-    # -> fixed-point forward color transform -> box-subsampled 4:2:0 ->
-    # std Annex K.1 luma+chroma tables -> decode. JPEG is lossy; bound
-    # the reconstruction error instead of demanding equality.
-    gx = np.linspace(0, 255, 32)
-    r = np.clip(np.add.outer(gx, gx) / 2, 0, 255).astype(np.uint8)
-    g = r[::-1, :]
-    b = r[:, ::-1]
-    px = np.stack([r, g, b], axis=-1)
-    y, cb, cr = rgb_to_ycc_fixed(px)
-    blob = encode_jpeg_ycc(
-        y, _box_subsample(cb, 2, 2), _box_subsample(cr, 2, 2), (2, 2)
-    )
-    out = decode_jpeg_pixels(blob)
-    err = np.abs(out.astype(int) - px.astype(int))
-    assert err.max() <= 40 and err.mean() < 8
-
-
-def test_color_decoder_on_hand_assembled_stream():
-    """8x8 4:4:4 frame, constant Y=133 Cb=135 Cr=120, flat tables: one
-    MCU = Y, Cb, Cr blocks in order, each DC-only (DC = 8*(value-128)).
-    Bits derived on paper from the canonical-code rules:
-      Y:  DC 40, cat 6 -> luma DC '1110' + '101000'; luma AC EOB '1010'
-      Cb: DC 56, cat 6 -> chroma DC '111110' (the single len-6 code
-          after 3 len-2 / one each len-3..5) + '111000'; chroma AC EOB
-          '00' (first len-2 code)
-      Cr: DC -64, cat 7 -> chroma DC '1111110' + (-64 + 127) = '0111111'
-          + EOB '00'
-    44 bits + four 1-pad bits = EA 2B EE 0F CF CF (no 0xFF byte arises,
-    so no stuffing — the replace() below is a no-op kept for the general
-    rule)."""
-    bits = (
-        "1110" + "101000" + "1010"
-        + "111110" + "111000" + "00"
-        + "1111110" + "0111111" + "00"
-    )
-    bits += "1" * (-len(bits) % 8)
-    raw = int(bits, 2).to_bytes(len(bits) // 8, "big")
-    entropy = raw.replace(b"\xff", b"\xff\x00")
-    y = np.full((8, 8), 133, dtype=np.uint8)
-    cb = np.full((8, 8), 135, dtype=np.uint8)
-    cr = np.full((8, 8), 120, dtype=np.uint8)
-    blob = encode_jpeg_ycc(y, cb, cr, (1, 1), FLAT_QT, FLAT_QT)
-    assert blob.endswith(entropy + b"\xff\xd9")
-    out = decode_jpeg_pixels(blob)
-    assert np.array_equal(out, _expected_rgb(y, cb, cr, (1, 1)))
-
-
-def test_color_fixed_point_constants_match_float_reference():
-    # The 16-bit fixed-point BT.601 convert must track the real-valued
-    # BT.601 matrix within 1 LSB everywhere (the libjpeg guarantee the
-    # constants encode); exhaustive over a coarse lattice.
-    v = np.arange(0, 256, 5, dtype=np.int64)
-    y, cb, cr = np.meshgrid(v, v, v, indexing="ij")
-    got = ycc_to_rgb_fixed(y, cb, cr).astype(np.float64)
-    rf = y + 1.402 * (cr - 128)
-    gf = y - 0.344136 * (cb - 128) - 0.714136 * (cr - 128)
-    bf = y + 1.772 * (cb - 128)
-    ref = np.clip(np.stack([rf, gf, bf], axis=-1), 0, 255)
-    assert np.abs(got - ref).max() <= 1.0
-
-
-def test_color_decoder_rejects_unsupported():
-    y = np.zeros((16, 16), dtype=np.uint8)
-    c = np.zeros((8, 8), dtype=np.uint8)
-    blob = encode_jpeg_ycc(y, c, c, (2, 2), FLAT_QT, FLAT_QT)
-    # luma sampling 3x1: patch the SOF0 component spec (id 1 factor byte)
-    sof = blob.index(b"\xff\xc0")
-    patched = bytearray(blob)
-    patched[sof + 2 + 2 + 6 + 1] = 0x31  # comp 1: hi=3, vi=1
-    with pytest.raises(NotImplementedError):
-        decode_jpeg_pixels(bytes(patched))
-    # subsampled CHROMA (2x2 chroma vs 2x2 luma is fine, but 2x2 on a
-    # chroma component with luma 1x1 is the unsupported inverse shape)
-    patched2 = bytearray(blob)
-    patched2[sof + 2 + 2 + 6 + 1] = 0x11   # luma 1x1
-    patched2[sof + 2 + 2 + 6 + 4] = 0x22   # Cb 2x2
-    with pytest.raises(NotImplementedError):
-        decode_jpeg_pixels(bytes(patched2))
-    # restart interval declared on a multi-MCU scan that carries no RSTn
-    # markers: the ECS chunk count can't match -> malformed, ValueError
-    # (restart intervals themselves are supported — see the tests below)
-    gray = encode_jpeg_pixels(np.zeros((8, 32), dtype=np.uint8), FLAT_QT)
-    gsof = gray.index(b"\xff\xc0")
-    dri = b"\xff\xdd" + struct.pack(">H", 4) + struct.pack(">H", 2)
-    with pytest.raises(ValueError):
-        decode_jpeg_pixels(gray[:gsof] + dri + gray[gsof:])
-    # truncated entropy segment -> ValueError, never a silent wrong image
-    with pytest.raises(ValueError):
-        decode_jpeg_pixels(blob[:-12] + b"\xff\xd9")
-
-
-def test_color_encoder_validates_chroma_shape():
-    y = np.zeros((16, 16), dtype=np.uint8)
-    with pytest.raises(ValueError):
-        encode_jpeg_ycc(y, np.zeros((16, 16), dtype=np.uint8),
-                        np.zeros((8, 8), dtype=np.uint8), (2, 2))
-    with pytest.raises(ValueError):
-        encode_jpeg_ycc(y, np.zeros((8, 8), dtype=np.uint8),
-                        np.zeros((8, 8), dtype=np.uint8), (3, 1))
-
-
-def test_image_pixel_stats_routes_color_jpeg(spark):
-    from opps_feedcrawler_spark.functions.multimodal import image_pixel_stats
-
-    y = np.full((8, 8), 133, dtype=np.uint8)
-    cb = np.full((8, 8), 135, dtype=np.uint8)
-    cr = np.full((8, 8), 120, dtype=np.uint8)
-    blob = encode_jpeg_ycc(y, cb, cr, (1, 1), FLAT_QT, FLAT_QT)
-    exp = _expected_rgb(y, cb, cr, (1, 1)).astype(np.int64)
-    df = spark.createDataFrame([("c1", blob)], "url string, blob binary")
-    (r,) = image_pixel_stats(df).collect()
-    assert (r.width, r.height, r.n_px) == (8, 8, 192)
-    assert r.sum_px == int(exp.sum())
-    assert (r.min_px, r.max_px) == (int(exp.min()), int(exp.max()))
-
-
-# ---------------------------------------------------------------------------
-# Restart intervals (DRI/RSTn, T.81 E.1.4) — real camera/wasm encoders emit
-# these routinely; previously a declared NotImplementedError.
-# ---------------------------------------------------------------------------
-
-
-def test_restart_interval_grayscale_roundtrip_exact():
-    rng = np.random.default_rng(23)
-    blocks = rng.integers(0, 256, size=(3, 5), dtype=np.uint8)
-    img = np.kron(blocks, np.ones((8, 8), dtype=np.uint8))  # 15 MCUs
-    blob = encode_jpeg_pixels(img, FLAT_QT, restart_interval=2)
-    # DRI segment present with the declared interval
-    i = blob.index(b"\xff\xdd")
-    assert struct.unpack(">H", blob[i + 4 : i + 6])[0] == 2
-    # 15 MCUs at Ri=2 -> 8 ECS chunks -> 7 restart markers, cycle D0..D6
-    markers = [blob[j + 1] for j in range(i, len(blob) - 1)
-               if blob[j] == 0xFF and 0xD0 <= blob[j + 1] <= 0xD7]
-    assert markers == [0xD0 + (k % 8) for k in range(7)]
-    out = decode_jpeg_pixels(blob)
-    assert np.array_equal(out[:, :, 0], img)
-
-
-@pytest.mark.parametrize("sampling,ri", [((1, 1), 1), ((2, 2), 3)])
-def test_restart_interval_color_roundtrip_exact(sampling, ri):
-    rng = np.random.default_rng(31 + ri)
-    h, w = 8 * 2 * sampling[1], 8 * 3 * sampling[0]
-    y, cb, cr = _block_planes(rng, h, w, sampling)
-    blob = encode_jpeg_ycc(
-        y, cb, cr, sampling=sampling, qtable=FLAT_QT, qtable_chroma=FLAT_QT,
-        restart_interval=ri,
-    )
-    assert b"\xff\xdd" in blob
-    out = decode_jpeg_pixels(blob)
-    assert np.array_equal(out, _expected_rgb(y, cb, cr, sampling))
-
-
-def test_restart_interval_dc_reset_is_load_bearing():
-    """Two constant blocks far apart in value: with Ri=1 the second
-    block's DC is coded ABSOLUTE (predictor reset), so a decoder that
-    failed to reset predictors would reconstruct the wrong value."""
-    img = np.kron(
-        np.array([[250, 5]], dtype=np.uint8), np.ones((8, 8), dtype=np.uint8)
-    )
-    blob = encode_jpeg_pixels(img, FLAT_QT, restart_interval=1)
-    assert np.array_equal(decode_jpeg_pixels(blob)[:, :, 0], img)
-
-
-def test_restart_marker_sequence_validated():
-    img = np.kron(
-        np.arange(6, dtype=np.uint8).reshape(1, 6) * 40,
-        np.ones((8, 8), dtype=np.uint8),
-    )
-    blob = bytearray(encode_jpeg_pixels(img, FLAT_QT, restart_interval=2))
-    # corrupt the first restart marker's modulo index (D0 -> D5)
-    for j in range(len(blob) - 1):
-        if blob[j] == 0xFF and blob[j + 1] == 0xD0:
-            blob[j + 1] = 0xD5
-            break
-    with pytest.raises(ValueError):
-        decode_jpeg_pixels(bytes(blob))
-    # DRI declared but no markers in the scan -> chunk-count mismatch
-    clean = encode_jpeg_pixels(img, FLAT_QT)
-    i = clean.index(b"\xff\xda")
-    dri = b"\xff\xdd" + struct.pack(">H", 4) + struct.pack(">H", 2)
-    with pytest.raises(ValueError):
-        decode_jpeg_pixels(clean[:i] + dri + clean[i:])
-
-
-# ---------------------------------------------------------------------------
-# Progressive mode (SOF2, T.81 Annex G) — spectral selection + successive
-# approximation. Independence argument: the progressive and baseline
-# ENCODERS share only the forward DCT/quantization (_plane_qblocks); their
-# entropy layers are disjoint (multi-scan EOB-run/refinement coding vs
-# single-scan run-length), and the progressive DECODER accumulates
-# coefficients through four distinct scan-type algorithms. Requiring
-# bit-identical pixels from both routes on ARBITRARY content therefore
-# checks the whole Annex-G pipeline against the already-golden baseline
-# path — any mis-read refinement bit, mis-ordered scan, or EOB-run
-# miscount shifts at least one coefficient and breaks equality.
-# ---------------------------------------------------------------------------
-
-from opps_feedcrawler_spark.functions.jpegcodec import (  # noqa: E402
-    encode_jpeg_progressive,
-)
-
-
-@pytest.mark.parametrize("qt_name", ["flat", "std"])
-def test_progressive_equals_baseline_grayscale(qt_name):
-    qt = FLAT_QT if qt_name == "flat" else STD_LUMA_QT
-    rng = np.random.default_rng(41)
-    img = rng.integers(0, 256, size=(21, 37), dtype=np.uint8)  # ragged
-    base = decode_jpeg_pixels(encode_jpeg_pixels(img, qt))
-    prog = decode_jpeg_pixels(encode_jpeg_progressive(img, qtable=qt))
-    assert np.array_equal(base, prog)
-
-
-@pytest.mark.parametrize("sampling", [(1, 1), (2, 1), (1, 2), (2, 2)])
-def test_progressive_equals_baseline_color(sampling):
-    rng = np.random.default_rng(sum(sampling) * 17)
-    h, w = 24, 40  # ragged vs the (2,2) MCU grid -> non-interleaved
-    sh, sv = sampling  # AC scans cover a smaller grid than padded DC
-    y = rng.integers(0, 256, size=(h, w), dtype=np.uint8)
-    ch, cw = (h + sv - 1) // sv, (w + sh - 1) // sh
-    cb = rng.integers(0, 256, size=(ch, cw), dtype=np.uint8)
-    cr = rng.integers(0, 256, size=(ch, cw), dtype=np.uint8)
-    base = decode_jpeg_pixels(
-        encode_jpeg_ycc(y, cb, cr, sampling, FLAT_QT, FLAT_QT)
-    )
-    prog = decode_jpeg_pixels(
-        encode_jpeg_progressive(y, cb, cr, sampling, FLAT_QT, FLAT_QT)
-    )
-    assert np.array_equal(base, prog)
-
-
-def test_progressive_eob_runs_across_many_blocks():
-    # constant image + std table -> every AC band is zero -> the AC
-    # scans collapse to EOBn symbols spanning all 64 blocks (EOBRUN
-    # encode/decode path with appended length bits)
-    img = np.full((64, 64), 170, dtype=np.uint8)
-    blob = encode_jpeg_progressive(img, qtable=STD_LUMA_QT)
-    base = decode_jpeg_pixels(encode_jpeg_pixels(img, STD_LUMA_QT))
-    assert np.array_equal(decode_jpeg_pixels(blob), base)
-
-
-def test_progressive_block_constant_lossless_subspace():
-    rng = np.random.default_rng(59)
-    y, cb, cr = _block_planes(rng, 32, 48, (2, 2))
-    blob = encode_jpeg_progressive(y, cb, cr, (2, 2), FLAT_QT, FLAT_QT)
-    assert np.array_equal(
-        decode_jpeg_pixels(blob), _expected_rgb(y, cb, cr, (2, 2))
-    )
-
-
-def test_progressive_metadata_flag_and_spark_route(spark):
-    from opps_feedcrawler_spark.functions.multimodal import (
-        decode_image_meta,
-        image_pixel_stats,
-    )
-
-    img = np.kron(
-        np.array([[10, 250, 3]], dtype=np.uint8), np.ones((8, 8), np.uint8)
-    )
-    blob = encode_jpeg_progressive(img, qtable=FLAT_QT)
-    assert decode_image_meta(blob)["format"] == "jpeg"
-    assert parse_jpeg_meta(blob)["progressive"] is True
-    df = spark.createDataFrame([("p1", blob)], "url string, blob binary")
-    (r,) = image_pixel_stats(df).collect()
-    assert (r.width, r.height) == (24, 8)
-    assert r.sum_px == 64 * (10 + 250 + 3)
-
-
-def test_progressive_rejects_malformed():
-    img = np.full((16, 16), 100, dtype=np.uint8)
-    blob = encode_jpeg_progressive(img, qtable=FLAT_QT)
-    # truncation inside a later scan -> ValueError (exhausted entropy)
-    with pytest.raises(ValueError):
-        decode_jpeg_pixels(blob[:-10] + b"\xff\xd9")
-    # a progressive AC scan on a 3-component frame must carry exactly
-    # one component: splice a 3-component AC SOS header into a color
-    # stream's first AC scan
-    rng = np.random.default_rng(3)
-    y, cb, cr = _block_planes(rng, 16, 16, (1, 1))
-    cblob = encode_jpeg_progressive(y, cb, cr, (1, 1), FLAT_QT, FLAT_QT)
-    # find the second SOS (first is the DC scan, ns=3)
-    first = cblob.index(b"\xff\xda")
-    second = cblob.index(b"\xff\xda", first + 2)
-    hdr_len = struct.unpack(">H", cblob[second + 2 : second + 4])[0]
-    old = cblob[second : second + 2 + hdr_len]
-    # rebuild: ns=3 header with same band/approx as the original scan
-    ss, se, ahal = old[-3], old[-2], old[-1]
-    bad_hdr = (
-        b"\xff\xda" + struct.pack(">H", 2 + 1 + 6 + 3)
-        + bytes([3, 1, 0x00, 2, 0x00, 3, 0x00, ss, se, ahal])
-    )
-    with pytest.raises(ValueError):
-        decode_jpeg_pixels(
-            cblob[:second] + bad_hdr + cblob[second + 2 + hdr_len :]
-        )
-
-
-# ---------------------------------------------------------------------------
 # EXIF orientation (APP1 / TIFF IFD0) — parsed during the marker walk.
 # The hand-spelled segment below is written out field-by-field from the
 # public TIFF 6.0 layout, so the parser is not defined by encode_app1_exif.
@@ -702,47 +201,6 @@ def test_jpeg_exif_metadata_spark_stage(spark):
     assert (rows["u3"].width, rows["u3"].orientation) == (0, 0)
 
 
-@pytest.mark.parametrize("ri", [1, 3])
-def test_progressive_with_restart_intervals(ri):
-    # E.1.4 applies per scan in progressive mode: predictors, EOB runs
-    # and buffered correction bits reset at every RSTn — all four scan
-    # types walk real restart markers here, and the result must still
-    # equal the baseline decode bit-for-bit.
-    rng = np.random.default_rng(90 + ri)
-    img = rng.integers(0, 256, size=(21, 37), dtype=np.uint8)
-    base = decode_jpeg_pixels(encode_jpeg_pixels(img, STD_LUMA_QT))
-    blob = encode_jpeg_progressive(
-        img, qtable=STD_LUMA_QT, restart_interval=ri
-    )
-    assert b"\xff\xdd" in blob
-    assert np.array_equal(decode_jpeg_pixels(blob), base)
-    # color 4:2:0 with restarts in the interleaved DC scan as well
-    h, w = 24, 40
-    y = rng.integers(0, 256, size=(h, w), dtype=np.uint8)
-    cb = rng.integers(0, 256, size=(12, 20), dtype=np.uint8)
-    cr = rng.integers(0, 256, size=(12, 20), dtype=np.uint8)
-    base = decode_jpeg_pixels(
-        encode_jpeg_ycc(y, cb, cr, (2, 2), FLAT_QT, FLAT_QT)
-    )
-    prog = decode_jpeg_pixels(
-        encode_jpeg_progressive(
-            y, cb, cr, (2, 2), FLAT_QT, FLAT_QT, restart_interval=ri
-        )
-    )
-    assert np.array_equal(prog, base)
-
-
-def test_truncated_sof_raises_valueerror_not_struct_error():
-    # review finding (round 5): _parse_sof unpacked before length-check,
-    # leaking struct.error through the documented ValueError surface
-    blob = (
-        b"\xff\xd8" + b"\xff\xc0" + struct.pack(">H", 7) + b"\x08\x00\x10\x00\x10"
-        + b"\xff\xd9"
-    )
-    with pytest.raises(ValueError):
-        decode_jpeg_pixels(blob)
-
-
 def test_jpeg_exif_stage_null_blob_quarantines(spark):
     from opps_feedcrawler_spark.functions.multimodal import jpeg_exif_metadata
 
@@ -755,45 +213,15 @@ def test_jpeg_exif_stage_null_blob_quarantines(spark):
     assert rows["u-ok"].orientation == 1 and rows["u-ok"].width == 8
 
 
-def test_resize_image_color_jpeg_keeps_channels():
-    """Review r5: once decode_jpeg_pixels learned color, the resize arm's
-    channel-0 slice silently thumbnailed the RED plane of color photos
-    as grayscale. A saturated-red image must thumbnail to red, and the
-    output must stay 3-channel."""
-    from opps_feedcrawler_spark.functions.multimodal import resize_image
-
-    rgb = np.zeros((16, 16, 3), dtype=np.uint8)
-    rgb[:, :, 0] = 200
-    thumb = decode_jpeg_pixels(resize_image(encode_jpeg_pixels(rgb), 8, 8))
-    assert thumb.shape == (8, 8, 3)
-    means = thumb.reshape(-1, 3).mean(axis=0)
-    assert means[0] > 180 and means[1] < 20 and means[2] < 20
-
-
-def test_truncated_segment_length_raises_valueerror():
-    """Review r5: a stream ending inside a marker's 2-byte length field
-    hit struct.unpack with a short buffer and leaked struct.error past
-    the module's 'malformed streams raise ValueError' contract (the
-    same class 314ced6 fixed for truncated SOF payloads)."""
-    for bad in (
-        b"\xff\xd8\xff\xdb",        # ends at the marker code
-        b"\xff\xd8\xff\xdb\x00",    # one length byte present
-        b"\xff\xd8\xff\xc4\x00\x40",  # declared length overruns blob
-    ):
-        with pytest.raises(ValueError):
-            decode_jpeg_pixels(bad)
-
-
 def test_capability_limited_jpeg_quarantines_in_pixel_stage(spark):
-    """Review r5: a CMYK (4-component) JPEG has a perfectly valid SOF, so
-    decode_image_meta reports format='jpeg' and the metadata gate passes
-    it to image_pixel_stats — where the decoder's declared capability
-    limit (NotImplementedError) used to propagate and kill the whole
-    stage. Real corpora contain CMYK/arithmetic JPEGs from print
-    workflows; they must land as an all-zero quarantine row (n_px = 0,
-    unreachable for any decoded image) next to healthy neighbors."""
+    """A JPEG has a perfectly valid SOF, so decode_image_meta reports
+    format='jpeg' and the metadata gate passes it to image_pixel_stats,
+    where decode_image_pixels (which has no JPEG arm) raises
+    NotImplementedError. The stage must turn that into an all-zero
+    quarantine row (n_px = 0, unreachable for any decoded image) next to
+    healthy neighbors, never fail."""
     from opps_feedcrawler_spark.functions.multimodal import (
-        decode_image_meta,
+        encode_png,
         image_pixel_stats,
     )
 
@@ -805,7 +233,7 @@ def test_capability_limited_jpeg_quarantines_in_pixel_stage(spark):
     )
     meta = decode_image_meta(cmyk)
     assert meta["format"] == "jpeg" and meta["width"] == 8  # gate passes it
-    ok = encode_jpeg_pixels(np.full((8, 8), 128, dtype=np.uint8), FLAT_QT)
+    ok = encode_png(8, 8, b"\x80" * 64)
     df = spark.createDataFrame(
         [("u-cmyk", cmyk), ("u-ok", ok)], "url string, blob binary"
     )

@@ -370,3 +370,22 @@ def test_importing_queries_writes_no_file(tmp_path):
         timeout=300,
     )
     assert os.listdir(tmp) == []
+
+
+def test_headline_queries_are_registered():
+    """Every bench.py HEADLINE_QUERIES name is a registry entry, so the
+    query pack cannot hit a KeyError after an entry is deleted. The list
+    is read with ast: importing bench.py would set its politeness-budget
+    env defaults for the whole test process."""
+    import ast
+    from pathlib import Path
+
+    src = (Path(__file__).resolve().parents[1] / "bench.py").read_text()
+    (names,) = [
+        ast.literal_eval(node.value)
+        for node in ast.parse(src).body
+        if isinstance(node, ast.Assign)
+        and any(getattr(t, "id", None) == "HEADLINE_QUERIES" for t in node.targets)
+    ]
+    assert names
+    assert [n for n in names if n not in QUERIES] == []
