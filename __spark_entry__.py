@@ -58,8 +58,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2 (Plane B pack
-    + crawl-plane and training-data-pipeline operators)."""
+    """One entry per implemented operator from SURVEY.md §2 (crawl-plane
+    and training-data-pipeline operators)."""
     from opps_feedcrawler_spark.plans.queries import QUERIES
 
     return dict(QUERIES)
@@ -70,10 +70,14 @@ def oracle_sql() -> dict[str, str]:
     from opps_feedcrawler_spark.plans.queries import ORACLE_SQL
     from opps_feedcrawler_spark.sources import fixtures
 
-    # The oracle SQL of multimodal_image_meta, _png_palette and _jpeg_meta
-    # reads these parquet fixtures, and the driver may run an oracle
-    # before its query callable (which writes its own fixture too).
+    # The multimodal_* oracle SQL reads these parquet fixtures, and the
+    # driver may run an oracle before its query callable (which writes its
+    # own fixture too).
     fixtures.ensure_png_fixture()
     fixtures.ensure_png_palette_fixture()
+    fixtures.ensure_png16_fixture()
     fixtures.ensure_jpeg_fixture()
+    fixtures.ensure_jpeg_exif_fixture()
+    fixtures.ensure_gif_fixture()
+    fixtures.ensure_gif_anim_fixture()
     return dict(ORACLE_SQL)

@@ -54,15 +54,6 @@ os.environ.setdefault("OFS_MAX_BUDGET", "500")
 # modest heap: see session.py — big heaps are kernel-bound on this microVM
 
 HEADLINE_QUERIES = [
-    "q1_pricing_summary",
-    "q3_top_revenue_orders",
-    "broadcast_dim_join",
-    "outer_join_order_counts",
-    "asof_purchase_prev_click",
-    "window_rank_orders",
-    "session_window_events",
-    "json_events",
-    "rollup_region_nation",
     "dedup_exact_docs",
     "dedup_minhash_lsh",
     "ann_bruteforce_topk",
@@ -286,7 +277,7 @@ def query_bench(cores: int, reps: int = 2) -> dict:
     from opps_feedcrawler_spark.plans.queries import QUERIES
 
     spark = _spark(cores)
-    QUERIES["q1_pricing_summary"](spark, SF_DIR).write.format("noop").mode(
+    QUERIES[HEADLINE_QUERIES[0]](spark, SF_DIR).write.format("noop").mode(
         "overwrite"
     ).save()  # warmup
     out = {}
