@@ -1,7 +1,8 @@
 """Physical-plan assertions — the 100 TB hygiene checks (SURVEY.md §4):
-the crawl's seen filter and fetch join plan as anti/semi joins, the fetch
-join streams the corpus and never scans html for metadata-only outputs,
-the dedup sort runs reduce-side, and the frontier sinks run no Python."""
+the crawl's seen filter and fetch join plan as anti/semi joins, the
+frontier dedup aggregates map-side, the fetch join streams the corpus and
+never scans html for metadata-only outputs, the dedup sort runs
+reduce-side, and the frontier sinks run no Python."""
 
 from __future__ import annotations
 
@@ -27,6 +28,22 @@ def test_semi_anti_join_operators(spark):
     as a left-anti join; the fetch semi-join's LeftSemi is asserted by the
     fetch-join tests below."""
     assert "LeftAnti" in _plan(QUERIES["crawl_frontier_antijoin"](spark, SF_DIR))
+
+
+def test_partial_aggregation_map_side(spark):
+    """The frontier's link-candidate dedup (crawl._min_depth_frontier) must
+    shuffle pre-aggregated MIN(depth) partials, not raw candidate rows —
+    at 100 TB this is the difference between shuffling GBs and TBs."""
+    from opps_feedcrawler_spark.plans.crawl import _min_depth_frontier
+
+    cand = spark.createDataFrame(
+        [("http://a.example/x", 2), ("http://a.example/x", 1), ("http://b.example/", 0)],
+        "url_norm string, depth int",
+    )
+    plan = _plan(_min_depth_frontier(cand))
+    assert "partial_min" in plan
+    # exactly one exchange (partial → final), nothing extra
+    assert plan.count("+- Exchange") == 1
 
 
 def test_prepare_pages_dedups_by_content_hash(spark):
