@@ -14,7 +14,7 @@ Layout
 - ``functions``  vectorized URL/HTML/feed/text functions (pandas UDFs + native)
 - ``operators``  seen-filter, politeness, robots, dedup, similarity
 - ``sources``    deterministic synthetic corpus generator + readers
-- ``plans``      crawl-round driver, checkpoint/resume, Plane-B query pack
+- ``plans``      crawl-round driver, checkpoint/resume, the engine's query registry
 - ``streaming``  optional Structured Streaming ingestion variant
 """
 

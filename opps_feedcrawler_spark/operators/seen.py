@@ -6,11 +6,15 @@ URL-seen filter built via vectorized Arrow UDFs over canonicalized+
 murmur3-hashed URLs" (BASELINE.json:6). The crawl never un-sees a URL, so
 the deletable (cuckoo) variant has no job here; the bloom is the one filter.
 
-Design: the url_hash space is range-partitioned into NBUCKETS buckets
+Design: the url_hash space is split into NBUCKETS buckets
 (bucket = pmod(url_hash, NBUCKETS)); each bucket owns an m-bit bloom bitset
-built by a grouped-map Arrow UDF (numpy bit ops — vectorized, no per-row
-Python). The bitset table is collected and broadcast, and candidates are
-probed against it in one narrow Arrow-UDF stage (probe_seen_broadcast).
+(numpy bit ops — vectorized, no per-row Python). A crawl round maintains
+and probes the filter in ONE co-partitioned Arrow stage (bloom_and_probe):
+the round's seen delta, the previous round's bitset rows and the round's
+distinct candidates are co-grouped by bucket, and one grouped-map call per
+bucket ORs the old bitsets, sets the delta's bits, emits the new bitset row
+and probes the bucket's candidates against it. Nothing of the filter
+passes through the driver.
 
 Exactness contract (SURVEY.md §4.2.3): the final URL-seen set must MATCH the
 reference's exactly (BASELINE.json:6,14), so the bloom is strictly a
@@ -18,23 +22,27 @@ work-skipping PRE-filter — a positive may only route the candidate into the
 exact anti-join (A7); a negative (guaranteed-correct: no false negatives)
 skips the join probe. Membership truth is always the exact anti-join.
 
-Scale note: the table's size is NBUCKETS × BITS_PER_BUCKET/8 bytes whatever
-the input, so the broadcast is bounded by the constants alone, and the
-module refuses to import if they exceed BROADCAST_BLOOM_MAX_BYTES. A crawl
-that needs a larger filter (10^10 URLs at a 1% FP rate want ~12 GiB of
-bitset) means re-deciding these constants and the probe together: a
-broadcast of that size does not fit an executor.
+Scale note: a bloom_and_probe task holds one bucket's bitset
+(BITS_PER_BUCKET/8 bytes) plus that bucket's share of the round's
+candidates and seen delta, whatever the total filter size. The filter
+grows by raising NBUCKETS together with BITS_PER_BUCKET (10^10 URLs at a
+1% FP rate want ~12 GiB of bitset: e.g. 2^16 buckets of 2^20 bits), and no
+single process ever holds the whole table.
+
+build_seen_bloom, merge_blooms, bloom_to_broadcast and probe_seen_broadcast
+are the same filter taken one step at a time (build, OR, collect and
+broadcast, probe). No crawl path runs them; they stay for the benchmark's
+staged replay and for tests/test_seen.py, which checks bloom_and_probe's
+bitsets and verdicts against them. Every path sets and tests bits through
+_set_bits/_test_bits, so there is one bit layout.
 """
 
 from __future__ import annotations
-
-from typing import Callable, Tuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 NBUCKETS = 64
 BITS_PER_BUCKET = 1 << 17  # 16 KiB per bucket at test scale
@@ -59,6 +67,22 @@ def _positions(hashes: np.ndarray, m: int) -> np.ndarray:
     return out
 
 
+def _set_bits(arr: np.ndarray, hashes: np.ndarray, bits: int) -> None:
+    """Set the bloom bits of `hashes` in one bucket's bitset, in place."""
+    pos = _positions(hashes, bits).ravel()
+    np.bitwise_or.at(arr, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+
+
+def _test_bits(arr: np.ndarray, hashes: np.ndarray, bits: int) -> np.ndarray:
+    """maybe_seen per hash: all N_HASHES bits set in one bucket's bitset."""
+    pos = _positions(hashes, bits)
+    return ((arr[pos >> 3] >> (pos & 7)) & 1).all(axis=1)
+
+
+def _bucket(nbuckets: int):
+    return F.pmod(F.col("url_hash"), F.lit(nbuckets)).cast("int").alias("bucket")
+
+
 def build_seen_bloom(
     seen: DataFrame,
     nbuckets: int = NBUCKETS,
@@ -69,17 +93,13 @@ def build_seen_bloom(
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
         arr = np.zeros(bits // 8, dtype=np.uint8)
-        pos = _positions(pdf["url_hash"].to_numpy(), bits).ravel()
-        np.bitwise_or.at(arr, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+        _set_bits(arr, pdf["url_hash"].to_numpy(), bits)
         return pd.DataFrame(
             {"bucket": [int(pdf["bucket"].iloc[0])], "bitset": [arr.tobytes()]}
         )
 
     return (
-        seen.select(
-            "url_hash",
-            F.pmod(F.col("url_hash"), F.lit(nbuckets)).cast("int").alias("bucket"),
-        )
+        seen.select("url_hash", _bucket(nbuckets))
         .groupBy("bucket")
         .applyInPandas(_build, "bucket int, bitset binary")
     )
@@ -119,22 +139,11 @@ def exact_new_urls(candidates: DataFrame, seen: DataFrame) -> DataFrame:
     return candidates.join(seen.select("url_norm"), "url_norm", "left_anti")
 
 
-# Bound on the broadcast bloom: the driver collects the whole bitset table
-# and every executor holds a copy. 256 MiB keeps both comfortably inside
-# normal driver and executor memory.
-BROADCAST_BLOOM_MAX_BYTES = 256 << 20
-if NBUCKETS * (BITS_PER_BUCKET // 8) > BROADCAST_BLOOM_MAX_BYTES:
-    raise ValueError(
-        "the bloom no longer fits one broadcast: re-decide NBUCKETS, "
-        "BITS_PER_BUCKET and the probe together"
-    )
-
-
 def bloom_to_broadcast(spark, bloom: DataFrame):
     """Materialize the bloom table into a driver dict and broadcast it.
-    Its size is fixed by the bucket count and bits per bucket; the module
-    constants are checked against BROADCAST_BLOOM_MAX_BYTES at import.
-    The caller unpersists the broadcast once the probe has been consumed."""
+    The caller unpersists the broadcast once the probe has been consumed.
+    Bounded only by the table's size (NBUCKETS × BITS_PER_BUCKET/8 bytes);
+    no crawl path calls it (see the module docstring)."""
     return spark.sparkContext.broadcast(
         {int(r.bucket): bytes(r.bitset) for r in bloom.collect()}
     )
@@ -158,48 +167,96 @@ def probe_seen_broadcast(
         blooms = bloom_bcast.value
         h = url_hash.to_numpy()
         buckets = (h % nbuckets + nbuckets) % nbuckets
-        pos = _positions(h, bits)
-        hit = np.ones(len(h), dtype=bool)
-        arrs = {b: np.frombuffer(v, dtype=np.uint8) for b, v in blooms.items()}
+        hit = np.zeros(len(h), dtype=bool)
         for b in np.unique(buckets):
-            idx = np.where(buckets == b)[0]
-            arr = arrs.get(int(b))
-            if arr is None:
-                hit[idx] = False
-                continue
-            ok = np.ones(len(idx), dtype=bool)
-            for i in range(N_HASHES):
-                p = pos[idx, i]
-                ok &= (arr[p >> 3] & (1 << (p & 7)).astype(np.uint8)) != 0
-            hit[idx] = ok
+            bs = blooms.get(int(b))
+            if bs is not None:
+                idx = np.where(buckets == b)[0]
+                hit[idx] = _test_bits(np.frombuffer(bs, dtype=np.uint8), h[idx], bits)
         return pd.Series(hit)
 
     return candidates.withColumn("maybe_seen", _probe(F.col("url_hash")))
 
 
-def filter_new_urls(
+SEEN_TABLE_SCHEMA = (
+    "bucket int, bitset binary, url_norm string, depth int, url_hash long, "
+    "maybe_seen boolean"
+)
+
+
+def bloom_and_probe(
+    seen_delta: DataFrame,
+    base_bloom: DataFrame | None,
     candidates: DataFrame,
-    seen: DataFrame,
-    bloom_bcast,
     nbuckets: int = NBUCKETS,
     bits: int = BITS_PER_BUCKET,
-) -> Tuple[DataFrame, Callable[[], None]]:
-    """Composed A5+A6+A7. Probe once, split twice: persist the probed
-    candidates and fill the cache with one job, then read both branches
-    from it — definite-new rows skip the anti-join entirely, only
-    bloom-positives probe the seen table. Unpersisted, the union would run
-    the probe once per branch, and Catalyst is free to push each branch's
-    maybe_seen filter (a function of url_hash alone) below the candidates'
-    dedup aggregate, probing every raw candidate row instead of the
-    distinct ones. Returns ``(new_rows, unpersist)``: the caller releases
-    the cache once the result has been consumed."""
-    probed = probe_seen_broadcast(candidates, bloom_bcast, nbuckets, bits).persist(
-        StorageLevel.MEMORY_AND_DISK
+) -> DataFrame:
+    """A5+A6 in one co-partitioned Arrow stage: build the delta's bits, OR
+    them into the previous round's bitsets and probe the candidates, per
+    bucket, in one cogroup(...).applyInPandas call.
+
+    Inputs: seen_delta(url_hash), base_bloom(bucket, bitset) or None, and
+    the round's distinct candidates(url_norm, depth, url_hash). Output: one
+    table (SEEN_TABLE_SCHEMA) holding both halves; split_seen_table
+    separates them. Bitset rows carry a non-null bitset, one per bucket
+    present in base ∪ delta, with the same bytes as
+    merge_blooms(base, build_seen_bloom(delta)). Candidate rows carry a null
+    bitset and the verdict probe_seen_broadcast gives against that table.
+
+    The hash columns never hold a null, on either side of the UDF: pandas
+    turns an int64 column with nulls into float64, which rounds hashes
+    above 2^53 and moves their bits. Base-bitset rows therefore enter with
+    hash 0 and are told apart by their non-null bitset, and bitset rows
+    leave with depth and url_hash 0."""
+
+    def _stage(key, inputs: pd.DataFrame, cand: pd.DataFrame) -> pd.DataFrame:
+        bucket = int(key[0])
+        frames = []
+        hit = np.zeros(len(cand), dtype=bool)
+        if not inputs.empty:
+            old = inputs["bitset"].notna().to_numpy()
+            arr = np.zeros(bits // 8, dtype=np.uint8)
+            for bs in inputs["bitset"][old]:
+                arr |= np.frombuffer(bs, dtype=np.uint8)
+            _set_bits(arr, inputs["hash"].to_numpy()[~old], bits)
+            frames.append(pd.DataFrame({
+                "bucket": [bucket], "bitset": [arr.tobytes()], "url_norm": [None],
+                "depth": [0], "url_hash": [0], "maybe_seen": [False],
+            }))
+            if not cand.empty:
+                hit = _test_bits(arr, cand["url_hash"].to_numpy(), bits)
+        if not cand.empty:
+            frames.append(pd.DataFrame({
+                "bucket": bucket, "bitset": None, "url_norm": cand["url_norm"],
+                "depth": cand["depth"], "url_hash": cand["url_hash"], "maybe_seen": hit,
+            }))
+        return pd.concat(frames, ignore_index=True)
+
+    # the bloom side renames url_hash: when both sides derive from one
+    # DataFrame (candidates drawn from the delta itself) they would share
+    # its attribute, and Spark then prunes it from the candidates' side
+    inputs = seen_delta.select(
+        F.col("url_hash").alias("hash"),
+        F.lit(None).cast("binary").alias("bitset"),
+        _bucket(nbuckets),
     )
-    probed.count()
-    definite_new = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
+    if base_bloom is not None:
+        inputs = inputs.unionByName(
+            base_bloom.select(F.lit(0).cast("long").alias("hash"), "bitset", "bucket")
+        )
+    cand = candidates.select("url_norm", "depth", "url_hash", _bucket(nbuckets))
     return (
-        definite_new.unionByName(exact_new_urls(maybe, seen)),
-        lambda: probed.unpersist(),
+        inputs.groupBy("bucket")
+        .cogroup(cand.groupBy("bucket"))
+        .applyInPandas(_stage, SEEN_TABLE_SCHEMA)
+    )
+
+
+def split_seen_table(table: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(bloom(bucket, bitset), probed(url_norm, depth, url_hash, maybe_seen))
+    halves of a bloom_and_probe table."""
+    has_bits = F.col("bitset").isNotNull()
+    return (
+        table.filter(has_bits).select("bucket", "bitset"),
+        table.filter(~has_bits).select("url_norm", "depth", "url_hash", "maybe_seen"),
     )

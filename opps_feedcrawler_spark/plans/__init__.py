@@ -1,2 +1,3 @@
 """Plans: the deterministic crawl-round driver, Iceberg-style snapshot
-checkpointing, and the Plane-B relational query pack."""
+checkpointing, and the engine's query registry (queries.py: crawl-plane
+and operator entries with their DuckDB oracle SQL)."""

@@ -30,8 +30,9 @@ URL-seen set and extracted text match exactly — BASELINE.json:6,14):
  R7  extract: ONE fused parse (A12+A13+A14) — text, canonical links
      (url_norm; links that do not canonicalize are dropped), entries
  R8  new candidates = links, depth=parent+1, dedup by url_norm keeping
-     MIN depth, anti-join seen, pre-filtered by the broadcast bloom
-     (probed once; only bloom-positives reach the anti-join)
+     MIN depth, anti-join seen, pre-filtered by the bloom (built, merged
+     and probed in one co-partitioned stage; only bloom-positives reach
+     the anti-join)
  R9  frontier' = (frontier - scheduled - disallowed) ∪ new candidates,
      dedup by url_norm keeping MIN depth
  R10 commit snapshot(round): frontier, seen_delta, bloom, schedule,
@@ -42,17 +43,20 @@ Scale design decisions (the 100 TB story, each one load-bearing):
   for the round, so the 4 tables derived from it (fetch_log/text/entries/
   frontier candidates) never re-trigger the join or the Python worker.
   More generally every Python stage of a round runs once over its input:
-  the parse also canonicalizes the links, the bloom probe is persisted
-  and split into its two branches (operators/seen.py), and run_crawl
-  canonicalizes the seeds once for all of round 0's consumers.
+  the parse also canonicalizes the links, the bloom's build, merge and
+  probe run as one persisted stage whose table is split into the bloom
+  sink and the probed candidates (operators/seen.bloom_and_probe), and
+  run_crawl canonicalizes the seeds once for all of round 0's consumers.
 - `seen` is stored as PER-ROUND DELTAS, never rewritten: the cumulative
   seen set at 10^10 URLs is the biggest table in the system; each snapshot
   appends only that round's scheduled∪disallowed rows (provably disjoint
   from all prior deltas). load_seen() unions delta files with the schema
   their manifests recorded — a metadata-only operation, no Spark job.
-- the bloom filter is maintained INCREMENTALLY (merge_blooms ORs the
-  round-delta bitsets into the running table) and is itself snapshotted,
-  so resume never rebuilds it from the full seen set.
+- the bloom filter is maintained INCREMENTALLY (bloom_and_probe ORs the
+  round-delta's bits into the previous round's bitsets, co-partitioned by
+  bucket, so no task holds more than one bucket's bitset and nothing of
+  the filter passes through the driver) and is itself snapshotted, so
+  resume never rebuilds it from the full seen set.
 - per-round metrics/lineage come from Parquet footers (zero Spark jobs).
 
 Determinism: every ordering carries the (priority DESC, url_norm ASC)
@@ -64,7 +68,6 @@ k+1..K bit-for-bit (BASELINE.json:6; tests/test_resume.py).
 from __future__ import annotations
 
 import logging
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -80,12 +83,7 @@ from ..operators.politeness import (
     with_global_sequence,
 )
 from ..operators.robots import with_robots
-from ..operators.seen import (
-    bloom_to_broadcast,
-    build_seen_bloom,
-    filter_new_urls,
-    merge_blooms,
-)
+from ..operators.seen import bloom_and_probe, exact_new_urls, split_seen_table
 from .checkpoint import SnapshotLog
 
 logger = logging.getLogger(__name__)
@@ -370,7 +368,7 @@ def crawl_round(
 
     # R5 seen delta (disjoint from all prior deltas by construction:
     # frontier rows are never in seen, scheduled ∩ disallowed = ∅).
-    # Persisted: its consumers (seen_delta sink, bloom build, frontier
+    # Persisted: its consumers (seen_delta sink, bloom stage, frontier
     # anti-join) would otherwise each re-run the robots join over the
     # frontier to recompute `disallowed`.
     seen_delta = (
@@ -379,41 +377,38 @@ def crawl_round(
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     new_seen = seen.unionByName(seen_delta)
-    delta_bloom = build_seen_bloom(seen_delta)
-    new_bloom = (
-        merge_blooms(bloom, delta_bloom) if bloom is not None else delta_bloom
-    ).persist(StorageLevel.MEMORY_AND_DISK)
 
-    # R8-R9 frontier' — returned as a BUILDER: the caller materializes the
-    # (persisted) bloom first, then builds the frontier plan against it —
-    # the probe reads cached bitset blocks, so the frontier write can run
-    # CONCURRENTLY with the bloom's own sink. Keeps crawl_round fully
-    # lazy: no collect/job happens while the round plan is being built.
-    # ex.links are already canonical (the fused parse canonicalizes), so
-    # only (url_norm, depth) feed the dedup shuffle and _min_depth_frontier
-    # re-derives the rest post-aggregation (once per distinct URL)
+    # R8 candidates: ex.links are already canonical (the fused parse
+    # canonicalizes), so only (url_norm, depth) feed the dedup shuffle and
+    # _min_depth_frontier re-derives url_hash post-aggregation (once per
+    # distinct URL). The bloom is built, merged and probed against them in
+    # ONE co-partitioned Arrow stage, persisted and split into the bloom
+    # sink and the probed candidates.
     cand = _min_depth_frontier(
         hits.select(
             F.explode("ex.links").alias("url_norm"),
             (F.col("depth") + 1).alias("depth"),
         )
     )
+    seen_table = bloom_and_probe(seen_delta, bloom, cand).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
+    new_bloom, probed = split_seen_table(seen_table)
     # scheduled ∪ disallowed = seen_delta, so one anti-join removes both
     remainder = frontier.join(seen_delta.select("url_norm"), "url_norm", "left_anti")
-    releases: list[Callable[[], None]] = []
 
-    def build_frontier(round_bloom: DataFrame) -> DataFrame:
-        """Broadcast the round's bloom and probe the candidates with it in
-        one narrow Arrow stage (operators/seen.py). The probed candidates
-        are persisted and filled by one job HERE, before the caller submits
-        the sinks, so the frontier sink only reads cached rows; cleanup()
-        releases them and the broadcast."""
-        bcast = bloom_to_broadcast(spark, round_bloom)
-        releases.append(bcast.unpersist)
-        fresh, unpersist = filter_new_urls(cand, new_seen, bcast)
-        releases.append(unpersist)
+    def build_frontier() -> DataFrame:
+        """R9 frontier': the remainder, the definite-new candidates and the
+        bloom-positive candidates that survive the exact anti-join, deduped
+        by url_norm keeping MIN depth. Only composes the plan: once
+        materialize() has run, the sink reads the cached seen table and
+        seen delta and runs no Python."""
+        definite_new = probed.filter(~F.col("maybe_seen"))
+        maybe = probed.filter(F.col("maybe_seen"))
         return _min_depth_frontier(
-            remainder.select(*FRONTIER_COLS).unionByName(fresh.select(*FRONTIER_COLS))
+            remainder.select("url_norm", "depth")
+            .unionByName(definite_new.select("url_norm", "depth"))
+            .unionByName(exact_new_urls(maybe, new_seen).select("url_norm", "depth"))
         )
 
     def cleanup() -> None:
@@ -421,11 +416,9 @@ def crawl_round(
         sequenced_unpersist()
         enriched.unpersist()
         seen_delta.unpersist()
-        new_bloom.unpersist()
+        seen_table.unpersist()
         if http_fetched is not None:
             http_fetched.unpersist()
-        for release in releases:
-            release()
 
     def materialize() -> None:
         """Fill the round's shared caches with ONE pass each. Must run
@@ -435,8 +428,9 @@ def crawl_round(
         the corpus scan + fused parse (measured: the writes phase collapses
         from sum-of-jobs to max-of-jobs once the cache is pre-built)."""
         enriched.count()  # persists scheduled's blocks as a side effect
-        seen_delta.count()  # scheduled already cached; adds only robots
-        new_bloom.count()  # bloom cache ready for sink + frontier probe
+        # the bloom stage reads seen_delta and the parsed links, so this
+        # one count also fills seen_delta's cache
+        seen_table.count()
 
     return {
         "materialize": materialize,
@@ -550,17 +544,16 @@ def run_crawl(
             fetch_mode=fetch_mode,
         )
         # Materialize the shared caches first (one corpus scan + one parse +
-        # one bloom build — Spark's block manager does not dedupe in-flight
+        # one bloom stage — Spark's block manager does not dedupe in-flight
         # computation across jobs), THEN write ALL 7 round tables as
         # CONCURRENT Spark jobs so per-round wall time is max(write), not
-        # sum(write): every sink, including the frontier (whose probed
-        # candidates build_frontier caches first), only consumes cached
-        # narrow rows and runs no Python.
+        # sum(write): every sink, including the frontier, only consumes
+        # cached narrow rows and runs no Python.
         out["materialize"]()
         timings: dict[str, float] = {}
         timings["materialize_sec"] = round(_time.monotonic() - _t0, 3)
         _t0 = _time.monotonic()
-        frontier_df = out["build_frontier"](out["bloom"])
+        frontier_df = out["build_frontier"]()
         with ThreadPoolExecutor(max_workers=len(ROUND_TABLES)) as pool:
             futs = {
                 name: pool.submit(

@@ -36,12 +36,7 @@ from ..functions.textstats import (
 from ..functions.urlnorm import canonicalize_udf, host_col
 from ..operators import dedup, similarity
 from ..operators.politeness import schedule_budgeted
-from ..operators.seen import (
-    bloom_to_broadcast,
-    build_seen_bloom,
-    exact_new_urls,
-    probe_seen_broadcast,
-)
+from ..operators.seen import bloom_and_probe, exact_new_urls, split_seen_table
 
 QUERIES: dict = {}
 ORACLE_SQL: dict = {}
@@ -376,23 +371,18 @@ def crawl_frontier_antijoin(spark, sf_dir):
 
 @_q("crawl_seen_bloom")  # rows-only: bloom membership is engine-internal
 def crawl_seen_bloom(spark, sf_dir):
-    """A5/A6 bloom build + broadcast probe, as the crawl round runs them:
-    all seen URLs must probe maybe_seen=true (no false negatives — asserted
-    in pytest; this entry returns the per-verdict counts). The two count
-    rows are collected before the broadcast is released."""
+    """A5/A6 bloom build + probe in one co-partitioned stage
+    (operators/seen.bloom_and_probe), as the crawl round runs them, at 16
+    buckets × 2^14 bits: all seen URLs must probe maybe_seen=true (no
+    false negatives — asserted in pytest; this entry returns the
+    per-verdict counts)."""
     urls = _doc_urls(spark, sf_dir).withColumn("url_hash", F.xxhash64("url"))
     seen = urls.filter(F.col("doc_id") % 3 == 0).select("url_hash")
-    bloom = build_seen_bloom(seen, nbuckets=16, bits=1 << 14)
-    bcast = bloom_to_broadcast(spark, bloom)
-    probed = probe_seen_broadcast(
-        urls.select(F.col("url").alias("url_norm"), "url_hash"),
-        bcast,
-        nbuckets=16,
-        bits=1 << 14,
+    cand = urls.select(F.col("url").alias("url_norm"), F.lit(0).alias("depth"), "url_hash")
+    _, probed = split_seen_table(
+        bloom_and_probe(seen, None, cand, nbuckets=16, bits=1 << 14)
     )
-    rows = probed.groupBy("maybe_seen").agg(F.count(F.lit(1)).alias("n")).collect()
-    bcast.unpersist()
-    return spark.createDataFrame(rows, "maybe_seen boolean, n long")
+    return probed.groupBy("maybe_seen").agg(F.count(F.lit(1)).alias("n"))
 
 
 @_q(

@@ -2,7 +2,8 @@
 the crawl's seen filter and fetch join plan as anti/semi joins, the
 frontier dedup aggregates map-side, the fetch join streams the corpus and
 never scans html for metadata-only outputs, the dedup sort runs
-reduce-side, and the frontier sinks run no Python."""
+reduce-side, the frontier sinks run no Python, and the bloom's build, merge
+and probe run as one Python stage with no broadcast."""
 
 from __future__ import annotations
 
@@ -176,8 +177,8 @@ def _python_nodes(df) -> list[str]:
 
 def test_frontier_sink_runs_no_python(spark):
     """Every Python stage of a round runs once, before the sinks: the
-    parse emits canonical links and build_frontier fills the probed
-    candidates' cache, so the frontier sink itself evaluates no Python.
+    parse emits canonical links and materialize fills the bloom stage's
+    cache, so the frontier sink itself evaluates no Python.
     run_crawl persists the round-0 seed frontier; the test does the same."""
     from pyspark.storagelevel import StorageLevel
 
@@ -200,7 +201,7 @@ def test_frontier_sink_runs_no_python(spark):
     seen = spark.createDataFrame([], "url_norm string, url_hash long")
     out = crawl_round(spark, frontier, seen, None, pp, robots, 0)
     out["materialize"]()
-    frontier_df = out["build_frontier"](out["bloom"])
+    frontier_df = out["build_frontier"]()
     assert _python_nodes(frontier_df) == []
     assert frontier_df.count() > 0
     out["cleanup"]()
@@ -223,8 +224,8 @@ def test_run_crawl_frontier_sinks_run_no_python(spark, tmp_path, monkeypatch):
         out = real_round(spark, frontier, *args, **kwargs)
         build = out["build_frontier"]
 
-        def spy_build(round_bloom):
-            df = build(round_bloom)
+        def spy_build():
+            df = build()
             sink_python.append(_python_nodes(df))
             return df
 
@@ -250,6 +251,37 @@ def test_run_crawl_frontier_sinks_run_no_python(spark, tmp_path, monkeypatch):
     )
     assert sink_python == [[], []]
     assert not frontiers[0].is_cached
+
+
+def test_seen_filter_is_one_python_stage_without_broadcast(
+    spark, corpus_dfs, tmp_path, monkeypatch
+):
+    """The bloom's build, merge and probe run as ONE Python stage per
+    round: the table crawl_round persists for them plans exactly one
+    FlatMapCoGroupsInPandas, on round 0 (no base bloom) and on round 1
+    (base bloom read back from the snapshot). Nothing of the filter is
+    collected to the driver or broadcast: the two rounds run with
+    bloom_to_broadcast raising."""
+    import opps_feedcrawler_spark.operators.seen as seen
+    import opps_feedcrawler_spark.plans.crawl as crawl
+
+    def no_broadcast(*args, **kwargs):
+        raise AssertionError("the crawl round broadcast the bloom")
+
+    monkeypatch.setattr(seen, "bloom_to_broadcast", no_broadcast)
+    real_stage = crawl.bloom_and_probe
+    stage_python = []
+
+    def spy_stage(*args, **kwargs):
+        df = real_stage(*args, **kwargs)
+        stage_python.append(_python_nodes(df))
+        return df
+
+    monkeypatch.setattr(crawl, "bloom_and_probe", spy_stage)
+    pages, seeds, robots = corpus_dfs
+    log = crawl.run_crawl(spark, pages, seeds, robots, str(tmp_path / "wh"), rounds=2)
+    assert log.snapshot_ids() == [0, 1]
+    assert stage_python == [["FlatMapCoGroupsInPandas"]] * 2
 
 
 def test_global_sequence_no_single_task_data_sort(spark):
