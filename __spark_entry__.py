@@ -20,7 +20,9 @@ def entry(spark: SparkSession) -> DataFrame:
     """Flagship: one full crawl round (canonicalize → robots → salted
     politeness top-k → fetch join → Arrow-UDF text extraction) over a
     pages corpus derived from the sf0.001 ``documents`` table
-    (FIXTURES.md §A: documents stands in for the page corpus)."""
+    (FIXTURES.md §A: documents stands in for the page corpus). Returns the
+    round's 80 scheduled rows in ``seq`` order as a local DataFrame and
+    releases every cache the round persisted."""
     from opps_feedcrawler_spark.plans.crawl import (
         crawl_round,
         prepare_pages,
@@ -43,7 +45,7 @@ def entry(spark: SparkSession) -> DataFrame:
     )
     sched = out["schedule"]  # frontier is built lazily via out["build_frontier"]
     text = out["text"]
-    return (
+    df = (
         sched.join(text, sched.url_norm == text.url, "left")
         .select(
             "round",
@@ -55,6 +57,13 @@ def entry(spark: SparkSession) -> DataFrame:
         )
         .orderBy("seq")
     )
+    # The round's caches live until cleanup(), so collect the (small)
+    # schedule first and hand back a local DataFrame that needs none of them.
+    try:
+        rows = df.collect()
+    finally:
+        out["cleanup"]()
+    return spark.createDataFrame(rows, df.schema)
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

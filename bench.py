@@ -5,7 +5,7 @@
 kept under ~1.9 kB so a tail-capture of stdout always contains a
 complete, parseable line (BENCH_r03's full detail overflowed the
 driver's 2000-char tail — VERDICT r3 #2); the complete per-query /
-crawl / ANN / probe detail is written to BENCH/bench_detail.json.
+crawl / probe detail is written to BENCH/bench_detail.json.
 
 Modes:
   python bench.py                  # crawl bench + headline queries (default)
@@ -54,37 +54,27 @@ os.environ.setdefault("OFS_MAX_BUDGET", "500")
 # modest heap: see session.py — big heaps are kernel-bound on this microVM
 
 HEADLINE_QUERIES = [
-    "dedup_exact_docs",
-    "dedup_minhash_lsh",
-    "ann_bruteforce_topk",
     "text_fingerprint",
     "text_repetition_stats",
     "text_rare_word_stats",
     "crawl_robots_wildcard",
     "multimodal_image_meta",
-    "multimodal_feature_ann",
     "crawl_politeness_topk",
     "crawl_rss_entries",
     "feeds_process_capped",
     "udtf_split_sentences",
-    # round-3 additions: iterative graph + training-set assembly planes
-    "graph_bfs_hops",
-    "pagerank_mass_3iter",
-    "connected_components_3iter",
+    # round-3 additions: training-set assembly planes
     "split_train_test_stratified",
     "pack_doc_chunks",
     "mix_sources_interleave",
     "sample_stratified_fixed",
-    "dedup_simhash",
     # round-3 batch 2/3: discovery + training-data text planes
     "text_c4_filter_chain",
     "text_tfidf_topk",
     "text_bigram_lm_score",
     "warc_roundtrip",
     "crawl_url_template_mining",
-    "dedup_within_doc_lines",
-    # round-3 batch 6: dedup cluster resolution + quantization planes
-    "dedup_cluster_canonical",
+    # round-3 batch 6: quantization plane
     "embedding_quantize_int8",
     # round-4 additions: gzip WARC, paletted/progressive PNG,
     # WET conversion shards, HTTP envelope decode, PSL wildcard/exception
@@ -294,93 +284,6 @@ def query_bench(cores: int, reps: int = 2) -> dict:
     return out
 
 
-def ann_scale_bench(cores: int) -> dict:
-    """ANN at scale (VERDICT r2 #6): seeded ~1M-vector clustered corpus,
-    recall@k + wall-time + admitted-candidate counts for LSH and IVF vs
-    the exact distributed brute-force baseline, ground truth from an
-    independent driver-side blocked-numpy pass. Corpus is generated
-    distributed + parquet-cached; re-runs skip generation."""
-    from opps_feedcrawler_spark.operators.similarity import (
-        ann_bruteforce_topk,
-        ann_ivf_topk,
-        ann_lsh_topk,
-        ivf_assign,
-        kmeans_centroids,
-    )
-    from opps_feedcrawler_spark.sources.ann_synth import (
-        ann_queries,
-        ensure_ann_corpus,
-        ground_truth_topk,
-        recall_at_k,
-    )
-
-    n = int(os.environ.get("OFS_ANN_N", "1000000"))
-    dim = int(os.environ.get("OFS_ANN_DIM", "32"))
-    n_q = int(os.environ.get("OFS_ANN_Q", "100"))
-    k = int(os.environ.get("OFS_ANN_K", "10"))
-    n_cells = int(os.environ.get("OFS_ANN_CELLS", "256"))
-    n_probe = int(os.environ.get("OFS_ANN_PROBE", "8"))
-
-    spark = _spark(cores)
-    path = ensure_ann_corpus(spark, n, dim)
-    corpus = spark.read.parquet(path)
-    queries = ann_queries(spark, n, n_q, dim)
-    qpdf = queries.toPandas()
-    truth = ground_truth_topk(path, qpdf, k)
-
-    out: dict = {"n_corpus": n, "dim": dim, "n_queries": n_q, "k": k,
-                 "ivf_cells": n_cells, "ivf_probe": n_probe}
-    # centroid training AND corpus→cell assignment are build-once index
-    # costs, amortized across query batches in production (the inverted
-    # file is a materialized table) — time them separately, pass both in
-    t0 = time.monotonic()
-    cents = kmeans_centroids(corpus, n_cells)
-    cents = cents.cache()
-    cents.count()
-    out["sec_ivf_train"] = round(time.monotonic() - t0, 2)
-    t0 = time.monotonic()
-    assigned = ivf_assign(corpus, cents).persist()
-    assigned.count()
-    out["sec_ivf_assign"] = round(time.monotonic() - t0, 2)
-
-    runs = {
-        "brute": lambda: ann_bruteforce_topk(queries, corpus, k=k),
-        "lsh": lambda: ann_lsh_topk(queries, corpus, k=k),
-        "ivf": lambda: ann_ivf_topk(
-            queries, corpus, k=k, n_cells=n_cells, n_probe=n_probe,
-            centroids=cents, assigned=assigned,
-        ),
-    }
-    # The exact brute-force baseline is ~118 s at 1 M vectors — it proved
-    # the sublinear probe cost in BENCH_r03 and its number is on record;
-    # default OFF in the per-round bench so the driver window spends its
-    # patience on the engine, not on re-measuring an O(n·q) baseline.
-    # Recall is still measured against the independent driver-side numpy
-    # ground truth either way. OFS_ANN_BRUTE=1 re-enables it.
-    if os.environ.get("OFS_ANN_BRUTE", "0") != "1":
-        runs.pop("brute")
-        out["candidates_brute"] = n_q * (n - 1)
-    for name, build in runs.items():
-        t0 = time.monotonic()
-        df = build()
-        pdf = df.toPandas()
-        out[f"sec_{name}"] = round(time.monotonic() - t0, 2)
-        out[f"recall_{name}"] = round(recall_at_k(pdf, truth, k), 4)
-        cand = getattr(df, "ofs_candidates", None)
-        out[f"candidates_{name}"] = (
-            int(cand.count()) if cand is not None else n_q * (n - 1)
-        )
-    out["candidate_fraction_lsh"] = round(
-        out["candidates_lsh"] / out["candidates_brute"], 5
-    )
-    out["candidate_fraction_ivf"] = round(
-        out["candidates_ivf"] / out["candidates_brute"], 5
-    )
-    cents.unpersist()
-    assigned.unpersist()
-    return out
-
-
 def _burn_cpu(_) -> int:
     """3s busy loop — module-level so multiprocessing can pickle it."""
     t0 = time.time()
@@ -428,16 +331,11 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--crawl-only", action="store_true")
     ap.add_argument("--scaling", action="store_true")
-    ap.add_argument("--ann-only", action="store_true")
     ap.add_argument("--cores", type=int, default=DEFAULT_CORES)
     args = ap.parse_args()
 
     if args.crawl_only:
         print(json.dumps(crawl_bench(args.cores)))
-        return
-
-    if args.ann_only:
-        print(json.dumps(ann_scale_bench(args.cores)))
         return
 
     if args.scaling:
@@ -562,11 +460,11 @@ def main() -> None:
         return
 
     # Driver-mode run order: the crawl headline measures FIRST (fresh
-    # box), bracketed by delivered-hardware probes; queries and ANN
-    # follow. The LAST stdout line is a compact JSON the driver's
-    # 2000-char tail capture can always parse (BENCH_r03's full detail
-    # overflowed it — VERDICT r3 #2); the full per-query/ANN/crawl detail
-    # goes to BENCH/bench_detail.json.
+    # box), bracketed by delivered-hardware probes; queries follow. The
+    # LAST stdout line is a compact JSON the driver's 2000-char tail
+    # capture can always parse (BENCH_r03's full detail overflowed it —
+    # VERDICT r3 #2); the full per-query/crawl detail goes to
+    # BENCH/bench_detail.json.
     probe_pre = probe(args.cores)
     crawl = crawl_bench(args.cores)
     probe_post = probe(args.cores)
@@ -574,7 +472,6 @@ def main() -> None:
     query_reps = int(os.environ.get("OFS_QUERY_REPS", "2"))
     queries = query_bench(args.cores, reps=query_reps)
     probe_post_q = probe(args.cores)
-    ann = ann_scale_bench(args.cores)
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     detail = {
         "metric": "URLs scheduled+fetched+extracted per sec "
@@ -584,7 +481,6 @@ def main() -> None:
         "queries": queries,
         "sf": float(sf),
         "crawl": crawl,
-        "ann_scale": ann,
         "probe_before_crawl": probe_pre,
         "probe_after_crawl": probe_post,
         "probe_before_queries": probe_pre_q,
@@ -613,13 +509,6 @@ def main() -> None:
             "rounds": crawl["rounds"],
             "round_walls": crawl["round_walls"],
             "lifecycle_on": crawl["compact_seen_every"] is not None,
-        },
-        "ann": {
-            "sec_ivf": ann.get("sec_ivf"),
-            "recall_ivf": ann.get("recall_ivf"),
-            "sec_lsh": ann.get("sec_lsh"),
-            "recall_lsh": ann.get("recall_lsh"),
-            "n": ann.get("n_corpus"),
         },
         "probe_mem_copies": [
             probe_pre["mem_copies"], probe_post["mem_copies"]

@@ -12,7 +12,7 @@ Layout
 - ``session``    SparkSession factory (UTC, Arrow, AQE, pinned shuffle parts)
 - ``schemas``    all fixed StructType schemas (schema-first, no ORM)
 - ``functions``  vectorized URL/HTML/feed/text functions (pandas UDFs + native)
-- ``operators``  seen-filter, politeness, robots, dedup, similarity
+- ``operators``  seen-filter, politeness, robots, frontier planning
 - ``sources``    deterministic synthetic corpus generator + readers
 - ``plans``      crawl-round driver, checkpoint/resume, the engine's query registry
 - ``streaming``  optional Structured Streaming ingestion variant

@@ -104,9 +104,8 @@ def train_bpe_merges(
     max_docs: int = MAX_TRAIN_DOCS,
 ) -> list[tuple[str, str]]:
     """Draw a deterministic bounded sample (xxhash64(id) order — seedless,
-    partitioning-independent) and train driver-side. The collect is the
-    SAME bounded pattern as similarity.kmeans_centroids: max_docs rows
-    regardless of corpus size."""
+    partitioning-independent) and train driver-side. The collect is
+    bounded: max_docs rows regardless of corpus size."""
     sample = (
         docs.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
         .orderBy(F.xxhash64(F.col("id")).asc(), F.col("id").asc())

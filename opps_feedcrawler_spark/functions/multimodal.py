@@ -1,7 +1,6 @@
 """Image column plumbing: images as opaque binary columns with typed
 metadata, processed through mapInPandas (training-data pipeline plane),
-plus the codec-free helpers a crawl path calls (``sniff_mime``,
-``byte_histogram_features``).
+plus the codec-free helper a crawl path calls (``sniff_mime``).
 
 The Spark-side plumbing is REAL and tested — schema, Arrow batch shape,
 partition-preserving mapInPandas. Codec status per format:
@@ -828,50 +827,6 @@ def gif_metadata(df: DataFrame, url_col: str = "url", bin_col: str = "blob") -> 
             yield out
 
     return df.mapInPandas(_decode, GIF_META_SCHEMA)
-
-
-FEATURE_SCHEMA = "url string, n_bytes long, feature array<float>"
-N_BYTE_BINS = 16
-
-
-def byte_histogram_features(
-    df: DataFrame, url_col: str = "url", bin_col: str = "blob"
-) -> DataFrame:
-    """REAL (non-stub) feature extraction over opaque binary columns: the
-    L2-normalized 16-bin byte histogram (high-nibble distribution) of each
-    blob — computable without codec libraries, discriminative enough for
-    format clustering / exact-dup detection, and shaped exactly like a
-    learned embedding (array<float>), so it composes directly with the
-    ANN operators (operators/similarity.py) for content-based retrieval
-    over media columns. numpy bincount per blob inside mapInPandas; the
-    binary never leaves its partition."""
-    import numpy as np
-
-    def _feat(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, sizes, feats = [], [], []
-            for url, b in zip(pdf[url_col], pdf[bin_col]):
-                blob = bytes(b) if b is not None else b""
-                urls.append(url)
-                sizes.append(len(blob))
-                if blob:
-                    arr = np.frombuffer(blob, dtype=np.uint8)
-                    hist = np.bincount(arr >> 4, minlength=N_BYTE_BINS).astype(
-                        np.float64
-                    )
-                    nrm = np.linalg.norm(hist)
-                    feats.append((hist / nrm).astype(np.float32).tolist())
-                else:
-                    feats.append([0.0] * N_BYTE_BINS)
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "n_bytes": pd.array(sizes, dtype="int64"),
-                    "feature": pd.Series(feats, dtype=object),
-                }
-            )
-
-    return df.mapInPandas(_feat, FEATURE_SCHEMA)
 
 
 def resize_image(blob: bytes, width: int, height: int) -> bytes:

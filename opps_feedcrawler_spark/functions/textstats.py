@@ -381,42 +381,3 @@ def bigram_lm_stats(
             ),
         )
     )
-
-
-def dedup_doc_lines(
-    docs, id_col: str = "doc_id", text_col: str = "text"
-) -> "DataFrame":  # noqa: F821
-    """WITHIN-document repeated-line removal (keep first occurrence,
-    preserve order) — the intra-doc counterpart of paragraph dedup:
-    navigation blocks repeat inside one page just as footers repeat
-    across pages. Output: (id, n_lines, n_unique, cleaned_text).
-    Scale: posexplode is narrow; the (id, line) first-occurrence agg and
-    the per-id reassembly both shuffle on id — same key, so AQE/Catalyst
-    plans ONE exchange; collect_list is per-document (bounded by doc
-    size), never per-corpus."""
-    lines = docs.select(
-        F.col(id_col),
-        F.size(F.split(F.col(text_col), "\n")).alias("n_lines"),
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
-    )
-    first = lines.groupBy(id_col, "line").agg(
-        F.min("pos").alias("pos"), F.min("n_lines").alias("n_lines")
-    )
-    return (
-        first.groupBy(id_col)
-        .agg(
-            F.min("n_lines").alias("n_lines"),
-            F.count(F.lit(1)).alias("n_unique"),
-            F.array_sort(
-                F.collect_list(F.struct("pos", "line"))
-            ).alias("ordered"),
-        )
-        .select(
-            id_col,
-            "n_lines",
-            "n_unique",
-            F.array_join(
-                F.transform("ordered", lambda s: s["line"]), "\n"
-            ).alias("cleaned_text"),
-        )
-    )

@@ -1,2 +1,3 @@
 """Engine operators: URL-seen bloom filter, politeness token buckets,
-robots.txt filtering, dedup family, similarity search."""
+robots.txt filtering, frontier planning (redirects, conditional GET,
+adaptive budgets)."""

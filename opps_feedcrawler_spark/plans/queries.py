@@ -34,7 +34,6 @@ from ..functions.textstats import (
     token_count,
 )
 from ..functions.urlnorm import canonicalize_udf, host_col
-from ..operators import dedup, similarity
 from ..operators.politeness import schedule_budgeted
 from ..operators.seen import bloom_and_probe, exact_new_urls, split_seen_table
 
@@ -59,40 +58,6 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # =========================================================================
 # Spark built-ins over the documents and embeddings tables
 # =========================================================================
-
-
-@_q(
-    "dedup_title_levenshtein",
-    f"""
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           levenshtein(substr(a.text, 1, 32), substr(b.text, 1, 32)) AS dist
-    FROM documents a JOIN documents b
-      ON a.source = b.source AND b.doc_id = a.doc_id + 20
-    WHERE levenshtein(substr(a.text, 1, 32), substr(b.text, 1, 32)) <= 24
-    """,
-)
-def dedup_title_levenshtein(spark, sf_dir):
-    """Edit-distance near-dup signal (the title/prefix fuzzy-match the
-    reference's entry dedup family implies [PK]), CANDIDATE-GATED like
-    every pairwise op here: the pair generator is an equi-join (same
-    source, fixed id offset), never all-pairs; levenshtein runs only on
-    the bounded pair list. Spark's levenshtein == DuckDB's (standard
-    unit-cost edit distance)."""
-    d = T(spark, sf_dir, "documents").select(
-        "doc_id", "source", F.substring("text", 1, 32).alias("prefix")
-    )
-    a = d.alias("a")
-    b = d.alias("b")
-    pairs = a.join(
-        b,
-        (F.col("a.source") == F.col("b.source"))
-        & (F.col("b.doc_id") == F.col("a.doc_id") + 20),
-    ).select(
-        F.col("a.doc_id").alias("id_a"),
-        F.col("b.doc_id").alias("id_b"),
-        F.levenshtein(F.col("a.prefix"), F.col("b.prefix")).alias("dist"),
-    )
-    return pairs.filter(F.col("dist") <= 24)
 
 
 @_q(
@@ -532,11 +497,6 @@ def text_fingerprint(spark, sf_dir):
     return d.select("doc_id", fingerprint(F.col("text")).alias("fp"))
 
 
-# =========================================================================
-# Training-data pipeline: dedup family + similarity search
-# =========================================================================
-
-
 @_q(
     "text_repetition_stats",
     r"""
@@ -642,122 +602,6 @@ def text_rare_word_stats(spark, sf_dir):
     from ..functions.textstats import rare_word_stats
 
     return rare_word_stats(T(spark, sf_dir, "documents"))
-
-
-@_q(
-    "dedup_exact_docs",
-    r"""
-    SELECT md5(lower(trim(regexp_replace(text, '\s+', ' ', 'g')))) AS fp,
-           COUNT(*) AS n_docs, MIN(doc_id) AS keep_id
-    FROM documents GROUP BY 1
-    """,
-)
-def dedup_exact_docs(spark, sf_dir):
-    return dedup.dedup_exact(T(spark, sf_dir, "documents"))
-
-
-@_q(
-    "dedup_ngram_jaccard",
-    r"""
-    WITH ws AS (
-      SELECT DISTINCT doc_id AS id, w.word
-      FROM documents,
-           UNNEST(string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' '))
-             AS w(word)
-      WHERE doc_id < 150 AND length(w.word) > 0),
-    sz AS (SELECT id, COUNT(*) AS sz FROM ws GROUP BY id),
-    inter AS (
-      SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS i
-      FROM ws a JOIN ws b ON a.word = b.word AND a.id < b.id
-      GROUP BY a.id, b.id)
-    SELECT id_a, id_b,
-           CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) AS jaccard
-    FROM inter JOIN sz sa ON sa.id = id_a JOIN sz sb ON sb.id = id_b
-    WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5
-    """,
-)
-def dedup_ngram_jaccard(spark, sf_dir):
-    """Exact word-set Jaccard pairs (gated to doc_id<150 to bound the
-    quadratic verify — the ungated path goes through MinHash+LSH below)."""
-    d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
-    return dedup.jaccard_pairs(d, threshold=0.5)
-
-
-@_q("dedup_minhash_lsh")  # rows-only: LSH recall is probabilistic
-def dedup_minhash_lsh(spark, sf_dir):
-    d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
-    return dedup.minhash_lsh_pairs(d, threshold=0.5)
-
-
-@_q("dedup_simhash")  # rows-only: signature design is engine-specific
-def dedup_simhash(spark, sf_dir):
-    d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
-    return dedup.simhash_pairs(d, max_hamming=8)
-
-
-@_q(
-    "dedup_embedding_cosine",
-    """
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-           round(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                  CAST(b.embedding AS DOUBLE[]))
-                 / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                          CAST(a.embedding AS DOUBLE[])))
-                    * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]),
-                                            CAST(b.embedding AS DOUBLE[])))), 6)
-             AS cos
-    FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id
-    WHERE round(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                 CAST(b.embedding AS DOUBLE[]))
-                / (sqrt(list_dot_product(CAST(a.embedding AS DOUBLE[]),
-                                         CAST(a.embedding AS DOUBLE[])))
-                   * sqrt(list_dot_product(CAST(b.embedding AS DOUBLE[]),
-                                           CAST(b.embedding AS DOUBLE[])))), 6) >= 0.95
-    """,
-)
-def dedup_embedding_cosine(spark, sf_dir):
-    return dedup.embedding_dup_pairs(
-        T(spark, sf_dir, "embeddings"), threshold=0.95
-    )
-
-
-@_q(
-    "ann_bruteforce_topk",
-    """
-    WITH scored AS (
-      SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-             round(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                                    CAST(c.embedding AS DOUBLE[]))
-                   / (sqrt(list_dot_product(CAST(q.embedding AS DOUBLE[]),
-                                            CAST(q.embedding AS DOUBLE[])))
-                      * sqrt(list_dot_product(CAST(c.embedding AS DOUBLE[]),
-                                              CAST(c.embedding AS DOUBLE[])))), 6)
-               AS cos
-      FROM embeddings q JOIN embeddings c ON q.vec_id <> c.vec_id
-      WHERE q.vec_id < 5)
-    SELECT query_id, neighbor_id, CAST(rank AS INT) AS rank, cos FROM (
-      SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-                                   ORDER BY cos DESC, neighbor_id) AS rank
-      FROM scored)
-    WHERE rank <= 3
-    """,
-)
-def ann_bruteforce(spark, sf_dir):
-    e = T(spark, sf_dir, "embeddings")
-    return similarity.ann_bruteforce_topk(
-        e.filter(F.col("vec_id") < 5), e, k=3
-    )
-
-
-@_q("ann_lsh_topk")  # rows-only: approximate by construction
-def ann_lsh(spark, sf_dir):
-    e = T(spark, sf_dir, "embeddings")
-    return similarity.ann_lsh_topk(e.filter(F.col("vec_id") < 5), e, k=3)
-
-
-# =========================================================================
-# Multimodal plumbing (binary columns through mapInPandas)
-# =========================================================================
 
 
 # =========================================================================
@@ -1072,93 +916,6 @@ def udtf_split_sentences(spark, sf_dir):
     )
 
 
-_BFS_MAX_HOPS = 4
-_BFS_SEED_MOD = 97
-
-
-@_q(
-    "graph_bfs_hops",
-    f"""
-    WITH RECURSIVE
-    edges AS (
-      SELECT doc_id AS src,
-             (doc_id + n_chars) % (SELECT COUNT(*) FROM documents) AS dst
-      FROM documents
-      UNION ALL
-      SELECT doc_id,
-             (doc_id * 7 + n_chars) % (SELECT COUNT(*) FROM documents)
-      FROM documents
-    ),
-    bfs AS (
-      SELECT doc_id AS node, 0 AS hop
-      FROM documents WHERE doc_id % {_BFS_SEED_MOD} = 0
-      UNION
-      SELECT e.dst, bfs.hop + 1
-      FROM bfs JOIN edges e ON e.src = bfs.node
-      WHERE bfs.hop < {_BFS_MAX_HOPS}
-    )
-    SELECT node AS doc_id, CAST(MIN(hop) AS INT) AS hop
-    FROM bfs GROUP BY node
-    """,
-)
-def graph_bfs_hops(spark, sf_dir):
-    """Iterative distributed BFS (min-hop from a seed set, 6 hops)
-    over a deterministic synthetic link graph derived from document
-    attributes (each doc links to (doc_id + n_chars) % n and
-    (doc_id*7 + n_chars) % n — both engines derive the same edges from the
-    same data). The classic Pregel-style frontier loop expressed in pure
-    DataFrame ops: per iteration, expand the frontier through the edge
-    join, anti-join out already-visited nodes, union into the distance
-    set. Oracle: DuckDB recursive CTE — the driver cross-checks an
-    ITERATIVE algorithm, not just single-pass SQL.
-
-    Scale design: edges are hash-partitioned by src ONCE and persisted, so
-    every iteration's expand join reuses that layout and only the (small)
-    frontier shuffles; visited/dist stay (node, hop) narrow. At web scale
-    you add localCheckpoint every few hops to cut lineage — 6 bounded
-    iterations here keep plans small without it."""
-    docs = T(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    cnt = docs.count()  # scalar graph parameter, same value the oracle uses
-    edges = (
-        docs.select(
-            F.col("doc_id").alias("src"),
-            ((F.col("doc_id") + F.col("n_chars")) % cnt).alias("dst"),
-        )
-        .unionByName(
-            docs.select(
-                F.col("doc_id").alias("src"),
-                ((F.col("doc_id") * 7 + F.col("n_chars")) % cnt).alias("dst"),
-            )
-        )
-        .repartition("src")
-        .persist()
-    )
-    dist = (
-        docs.filter(F.col("doc_id") % _BFS_SEED_MOD == 0)
-        .select(F.col("doc_id").alias("node"), F.lit(0).alias("hop"))
-    )
-    frontier = dist
-    for hop in range(1, _BFS_MAX_HOPS + 1):
-        # frontier is distinct by construction (seed filter / the distinct
-        # below), so the expand join needs no extra dedup on the src side
-        frontier = (
-            edges.join(frontier.select(F.col("node").alias("src")), "src")
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(dist.select("node"), "node", "left_anti")
-            .withColumn("hop", F.lit(hop))
-            .persist()
-        )
-        dist = dist.unionByName(frontier)
-        # a production loop with max-hops above the graph diameter adds
-        # `if frontier.isEmpty(): break` here (the standard Pregel
-        # termination test); at 4 bounded hops the eager per-hop job
-        # costs more than it saves, so the whole DAG runs as one job
-    return dist.groupBy(F.col("node").alias("doc_id")).agg(
-        F.min("hop").cast("int").alias("hop")
-    )
-
-
 @_q(
     "split_train_test_stratified",
     """
@@ -1197,198 +954,6 @@ def split_train_test_stratified(spark, sf_dir):
             F.count("*").alias("n_docs"),
             F.sum("n_chars").cast("bigint").alias("sum_chars"),
         )
-    )
-
-
-_PR_MASS = 1_000_000
-_PR_ITERS = 3
-
-
-def _pr_edges_sql(cnt_expr: str) -> str:
-    return f"""
-    SELECT doc_id AS src, (doc_id + n_chars) % {cnt_expr} AS dst
-    FROM documents
-    UNION ALL
-    SELECT doc_id, (doc_id * 7 + n_chars) % {cnt_expr} FROM documents
-    """
-
-
-@_q(
-    "pagerank_mass_3iter",
-    f"""
-    WITH edges AS ({_pr_edges_sql('(SELECT COUNT(*) FROM documents)')}),
-    r0 AS (SELECT doc_id AS node, CAST({_PR_MASS} AS BIGINT) AS mass
-           FROM documents),
-    r1 AS (SELECT d.doc_id AS node,
-                  150000 + COALESCE(SUM((p.mass * 85) // 200), 0) AS mass
-           FROM documents d
-           LEFT JOIN edges e ON e.dst = d.doc_id
-           LEFT JOIN r0 p ON p.node = e.src
-           GROUP BY d.doc_id),
-    r2 AS (SELECT d.doc_id AS node,
-                  150000 + COALESCE(SUM((p.mass * 85) // 200), 0) AS mass
-           FROM documents d
-           LEFT JOIN edges e ON e.dst = d.doc_id
-           LEFT JOIN r1 p ON p.node = e.src
-           GROUP BY d.doc_id),
-    r3 AS (SELECT d.doc_id AS node,
-                  150000 + COALESCE(SUM((p.mass * 85) // 200), 0) AS mass
-           FROM documents d
-           LEFT JOIN edges e ON e.dst = d.doc_id
-           LEFT JOIN r2 p ON p.node = e.src
-           GROUP BY d.doc_id)
-    SELECT node AS doc_id, CAST(mass AS BIGINT) AS mass FROM r3
-    """,
-)
-def pagerank_mass_3iter(spark, sf_dir):
-    """PageRank, 3 synchronous iterations, damping 0.85, over the same
-    deterministic synthetic link graph as graph_bfs_hops — the second
-    iterative-algorithm surface, oracle-paired. All arithmetic is INTEGER
-    "mass" (start 1e6 per node; each edge carries floor(mass*85/200) —
-    out-degree is exactly 2 — plus a 150000 teleport constant), so
-    per-edge contributions and their sums are exact and order-independent
-    in both engines: float PageRank would never hash-match across
-    engines; integer mass does, bit for bit.
-
-    Scale design: the per-iteration plan is edges⋈mass (hash join on
-    src, edges pre-partitioned+persisted once) then a groupBy(dst) SUM —
-    partial aggregation map-side, one shuffle per iteration, mass stays
-    a narrow (node, long) table. This is Pregel-on-DataFrames; at 100 TB
-    you checkpoint mass every few iterations to cut lineage."""
-    docs = T(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    cnt = docs.count()
-    edges = (
-        docs.select(
-            F.col("doc_id").alias("src"),
-            ((F.col("doc_id") + F.col("n_chars")) % cnt).alias("dst"),
-        )
-        .unionByName(
-            docs.select(
-                F.col("doc_id").alias("src"),
-                ((F.col("doc_id") * 7 + F.col("n_chars")) % cnt).alias("dst"),
-            )
-        )
-        .repartition("src")
-        .persist()
-    )
-    nodes = docs.select(F.col("doc_id").alias("node"))
-    mass = nodes.withColumn("mass", F.lit(_PR_MASS).cast("bigint"))
-    for _ in range(_PR_ITERS):
-        contrib = (
-            edges.join(mass, edges["src"] == mass["node"])
-            .select("dst", F.expr("(mass * 85) div 200").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_mass"))
-        )
-        mass = (
-            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-            .select(
-                "node",
-                (F.lit(150000) + F.coalesce(F.col("in_mass"), F.lit(0)))
-                .cast("bigint")
-                .alias("mass"),
-            )
-        )
-    return mass.select(F.col("node").alias("doc_id"), "mass")
-
-
-_CC_ITERS = 3
-
-
-@_q(
-    "connected_components_3iter",
-    f"""
-    WITH dedges AS ({_pr_edges_sql('(SELECT COUNT(*) FROM documents)')}),
-    edges AS (
-      SELECT src, dst FROM dedges
-      UNION ALL
-      SELECT dst, src FROM dedges
-    ),
-    l0 AS (SELECT doc_id AS node, doc_id AS label FROM documents),
-    l1 AS (SELECT p.node,
-                  LEAST(p.label, COALESCE(MIN(n.label), p.label)) AS label
-           FROM l0 p
-           LEFT JOIN edges e ON e.dst = p.node
-           LEFT JOIN l0 n ON n.node = e.src
-           GROUP BY p.node, p.label),
-    l2 AS (SELECT p.node,
-                  LEAST(p.label, COALESCE(MIN(n.label), p.label)) AS label
-           FROM l1 p
-           LEFT JOIN edges e ON e.dst = p.node
-           LEFT JOIN l1 n ON n.node = e.src
-           GROUP BY p.node, p.label),
-    l3 AS (SELECT p.node,
-                  LEAST(p.label, COALESCE(MIN(n.label), p.label)) AS label
-           FROM l2 p
-           LEFT JOIN edges e ON e.dst = p.node
-           LEFT JOIN l2 n ON n.node = e.src
-           GROUP BY p.node, p.label)
-    SELECT node AS doc_id, CAST(label AS BIGINT) AS component
-    FROM l3
-    """,
-)
-def connected_components_3iter(spark, sf_dir):
-    """Connected components by synchronous min-label propagation (3
-    iterations, labels init to node id) over the undirected closure of
-    the synthetic link graph — the third iterative-algorithm surface,
-    oracle-paired: integer MIN is exact and order-independent, so the
-    cross-engine hash matches bit-for-bit (3 bounded iterations are the
-    checked contract; production loops to a fixed point with the same
-    per-iteration plan plus an unchanged-count termination test).
-
-    Scale design: per iteration one edges⋈labels hash join (edges
-    pre-partitioned+persisted once, both directions materialized up
-    front) and one groupBy(node) MIN with map-side partial aggregation —
-    the same narrow-state Pregel shape as pagerank_mass_3iter. Label
-    propagation converges in O(diameter) iterations; large-diameter
-    graphs switch to the alternating large/small-star algorithm with
-    the identical join+min building block."""
-    docs = T(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    cnt = docs.count()
-    fwd = docs.select(
-        F.col("doc_id").alias("src"),
-        ((F.col("doc_id") + F.col("n_chars")) % cnt).alias("dst"),
-    ).unionByName(
-        docs.select(
-            F.col("doc_id").alias("src"),
-            ((F.col("doc_id") * 7 + F.col("n_chars")) % cnt).alias("dst"),
-        )
-    )
-    edges = (
-        fwd.unionByName(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition("src")
-        .persist()
-    )
-    labels = docs.select(
-        F.col("doc_id").alias("node"), F.col("doc_id").alias("label")
-    )
-    # Lazy unroll is DELIBERATE here (measured): labels appears twice per
-    # iteration, so the unevaluated state subtree doubles per pass — but
-    # the state source is one cheap projection of a cached table, and at 3
-    # bounded iterations recomputing it inside ONE job costs less than 3
-    # eager materialization jobs (A/B at sf0.1: lazy ~2.1 s vs
-    # persist+count ~4.3 s warm). The opposite trade holds when the state
-    # subtree is expensive — dedup_cluster_canonical's pair generation —
-    # where the loop DOES persist+materialize per pass; a production
-    # fixpoint loop needs the eager form anyway for its termination test.
-    for _ in range(_CC_ITERS):
-        incoming = (
-            edges.join(labels, edges["src"] == labels["node"])
-            .select("dst", "label")
-            .groupBy("dst")
-            .agg(F.min("label").alias("nbr_min"))
-        )
-        labels = (
-            labels.join(incoming, labels["node"] == incoming["dst"], "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))
-                ).alias("label"),
-            )
-        )
-    return labels.select(
-        F.col("node").alias("doc_id"), F.col("label").cast("bigint").alias("component")
     )
 
 
@@ -1550,12 +1115,6 @@ def mix_sources_interleave(spark, sf_dir):
     )
 
 
-@_q("ann_ivf_topk")  # rows-only: approximate by construction
-def ann_ivf(spark, sf_dir):
-    e = T(spark, sf_dir, "embeddings")
-    return similarity.ann_ivf_topk(e.filter(F.col("vec_id") < 5), e, k=3)
-
-
 @_q("streaming_watermark_dedup")  # rows-only: streaming runtime, not SQL
 def streaming_watermark_dedup(spark, sf_dir):
     """B27+B30+B31 through the REAL Structured Streaming pipeline
@@ -1637,35 +1196,6 @@ def streaming_stateful_host_rate(spark, sf_dir):
         .filter(F.col("_rn") == 1)
         .select("host", "n_fetched", "n_violations")
     )
-
-
-@_q("multimodal_feature_ann")  # rows-only: approximate retrieval pipeline
-def multimodal_feature_ann(spark, sf_dir):
-    """End-to-end multimodal similarity pipeline with a REAL feature
-    stage: blob → L2-normalized byte-histogram embedding
-    (functions/multimodal.byte_histogram_features — no codec libs needed)
-    → exact-cosine top-3 retrieval (operators/similarity.py). The planted
-    duplicates (same text bytes re-blobbed under query ids) must retrieve
-    their source with cos ≈ 1."""
-    from ..functions.multimodal import byte_histogram_features
-    from ..operators.similarity import ann_bruteforce_topk
-
-    d = _doc_urls(spark, sf_dir).select(
-        "doc_id", "url", F.encode(F.col("text"), "UTF-8").alias("blob")
-    )
-    feats = (
-        byte_histogram_features(d, "url", "blob")
-        .filter(F.col("n_bytes") > 0)  # zero vectors have no cosine
-        .join(d.select("doc_id", "url"), "url")
-    )
-    corpus = feats.select(
-        F.col("doc_id").alias("vec_id"),
-        F.col("feature").alias("embedding"),
-    )
-    queries_side = corpus.filter(F.col("vec_id") < 5).select(
-        (F.col("vec_id") + 100000).alias("vec_id"), "embedding"
-    )
-    return ann_bruteforce_topk(queries_side, corpus.unionByName(queries_side), k=3)
 
 
 def _duck_be32_from_hex(hx_col: str, start: int) -> str:
@@ -2055,10 +1585,9 @@ def multimodal_gif_meta(spark, sf_dir):
 
 
 # =========================================================================
-# Round-3 batch 2: sitemap discovery, robots directive parsing, anchor-text
-# aggregation, C4 quality filtering, boilerplate-paragraph dedup, inverted
-# index, TF-IDF, snapshot diff — the crawl-discovery + training-data ops a
-# 100 TB pipeline runs between fetch and tokenize.
+# Round-3 batch 2: sitemap discovery, robots directive parsing, C4 quality
+# filtering, inverted index, TF-IDF, snapshot diff — the crawl-discovery +
+# training-data ops a 100 TB pipeline runs between fetch and tokenize.
 # =========================================================================
 
 
@@ -2303,75 +1832,6 @@ def crawl_robots_parse(spark, sf_dir):
 
 
 @_q(
-    "graph_anchor_text",
-    f"""
-    WITH refs AS (
-      SELECT doc_id,
-             'http://' || source || '.example/doc/'
-               || CAST(doc_id + 1 AS VARCHAR) AS link,
-             'doc ' || CAST(doc_id + 1 AS VARCHAR) || ' overview' AS anchor
-      FROM documents
-      UNION ALL
-      SELECT doc_id,
-             'http://' || source || '.example/doc/'
-               || CAST(doc_id + 1 AS VARCHAR) AS link,
-             'doc ' || CAST(doc_id + 1 AS VARCHAR) || ' overview' AS anchor
-      FROM documents
-      UNION ALL
-      SELECT doc_id,
-             'http://' || source || '.example/doc/'
-               || CAST(doc_id + 2 AS VARCHAR) AS link,
-             'click here' AS anchor
-      FROM documents)
-    SELECT link, COUNT(*) AS n_refs,
-           COUNT(DISTINCT doc_id) AS n_docs,
-           COUNT(DISTINCT anchor) AS n_anchor_variants,
-           MIN(anchor) AS top_anchor
-    FROM refs GROUP BY link
-    """,
-)
-def graph_anchor_text(spark, sf_dir):
-    """Per-target anchor-text aggregation — the classic web-graph signal
-    (Brin & Page 1998 §2.2): anchors describe the TARGET page and are a
-    standard retrieval / training-data enrichment input. Each page links
-    twice to /doc/{id+1} with a descriptive anchor (duplicate occurrences
-    must each count) and once to /doc/{id+2} with generic 'click here';
-    relative hrefs resolve against the page's own host. Spark parses the
-    REAL HTML through extract_anchors_udf; the oracle predicts the pairs
-    algebraically and aggregates independently. Scale: one shuffle on the
-    target link; outputs are bounded aggregates (counts + MIN), never
-    collect_list — hot targets (the web's power-law inlinks) cannot blow
-    a partition."""
-    from ..functions.extract import extract_anchors_udf
-
-    d = _doc_urls(spark, sf_dir)
-    nxt1 = (F.col("doc_id") + 1).cast("string")
-    nxt2 = (F.col("doc_id") + 2).cast("string")
-    html = F.concat(
-        F.lit('<html><body><a href="/doc/'),
-        nxt1,
-        F.lit('">doc '),
-        nxt1,
-        F.lit(' overview</a> <a href="/doc/'),
-        nxt2,
-        F.lit('">click here</a> <a href="/doc/'),
-        nxt1,
-        F.lit('">doc '),
-        nxt1,
-        F.lit(" overview</a></body></html>"),
-    )
-    pairs = d.select(
-        "doc_id", F.explode(extract_anchors_udf(html, F.col("url"))).alias("a")
-    ).select("doc_id", F.col("a.link").alias("link"), F.col("a.anchor").alias("anchor"))
-    return pairs.groupBy("link").agg(
-        F.count(F.lit(1)).alias("n_refs"),
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.countDistinct("anchor").alias("n_anchor_variants"),
-        F.min("anchor").alias("top_anchor"),
-    )
-
-
-@_q(
     "text_c4_filter_chain",
     """
     WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws FROM documents),
@@ -2426,69 +1886,6 @@ def text_c4_filter_chain(spark, sf_dir):
     ).otherwise(page)
     return c4_quality_filter(
         d.select("doc_id", page.alias("page")), id_col="doc_id", text_col="page"
-    )
-
-
-@_q(
-    "dedup_exact_paragraphs",
-    """
-    WITH pars AS (
-      SELECT doc_id, 'subscribe to our newsletter for updates' AS par
-      FROM documents
-      UNION ALL
-      SELECT doc_id, 'copyright ' || source || ' all rights reserved' AS par
-      FROM documents
-      UNION ALL
-      SELECT doc_id,
-             array_to_string((string_split(text, ' '))[1:10], ' ') AS par
-      FROM documents),
-    agg AS (
-      SELECT md5(par) AS par_md5, COUNT(*) AS n_occ,
-             COUNT(DISTINCT doc_id) AS n_docs, MIN(doc_id) AS min_doc_id
-      FROM pars GROUP BY md5(par))
-    SELECT * FROM agg WHERE n_occ >= 2
-    """,
-)
-def dedup_exact_paragraphs(spark, sf_dir):
-    """Paragraph-granular exact dedup — the boilerplate-removal primitive
-    (site-wide footers/banners repeat across millions of pages; cf. the
-    paragraph-hash dedup step in C4 §2.2 and CCNet). Each page carries a
-    global boilerplate paragraph (must aggregate to n_docs = corpus), a
-    per-source footer (n_docs = docs-per-source), and its content head
-    (mostly unique, filtered by n_occ >= 2). Group key is md5(par) — the
-    16-byte fingerprint shuffles, never the paragraph text; output is
-    bounded aggregates. At 100 TB this is ONE shuffle on the hash with
-    map-side partial aggregation."""
-    d = T(spark, sf_dir, "documents")
-    ws = F.split(F.col("text"), " ")
-    pars = (
-        d.select(
-            "doc_id",
-            F.lit("subscribe to our newsletter for updates").alias("par"),
-        )
-        .unionAll(
-            d.select(
-                "doc_id",
-                F.concat(
-                    F.lit("copyright "),
-                    F.col("source"),
-                    F.lit(" all rights reserved"),
-                ).alias("par"),
-            )
-        )
-        .unionAll(
-            d.select("doc_id", F.array_join(F.slice(ws, 1, 10), " ").alias("par"))
-        )
-    )
-    return (
-        pars.select("doc_id", F.md5("par").alias("par_md5"))
-        .groupBy("par_md5")
-        .agg(
-            F.count(F.lit(1)).alias("n_occ"),
-            F.countDistinct("doc_id").alias("n_docs"),
-            F.min("doc_id").alias("min_doc_id"),
-        )
-        .filter(F.col("n_occ") >= 2)
     )
 
 
@@ -2650,7 +2047,7 @@ def crawl_snapshot_diff(spark, sf_dir):
 # =========================================================================
 # Round-3 batch 3: head-metadata extraction, charset sniffing, WARC
 # archive roundtrip, crawler-trap template mining, PII scrubbing, hashed
-# linear quality scoring, corpus bigram-LM scoring, within-doc line dedup.
+# linear quality scoring, corpus bigram-LM scoring.
 # =========================================================================
 
 
@@ -3753,65 +3150,6 @@ def text_bigram_lm_score(spark, sf_dir):
 
 
 @_q(
-    "dedup_within_doc_lines",
-    """
-    WITH pages AS (
-      SELECT doc_id,
-             -- COALESCE: DuckDB's array_to_string([]) is NULL where
-             -- Spark's array_join([]) is '' — short docs must not null out
-             'subscribe to our newsletter today.' || chr(10)
-               || 'p1: ' || COALESCE(
-                    array_to_string((string_split(text, ' '))[1:5], ' '), '')
-               || chr(10) || 'subscribe to our newsletter today.' || chr(10)
-               || 'p2: ' || COALESCE(
-                    array_to_string((string_split(text, ' '))[6:10], ' '), '')
-               || chr(10)
-               || 'p3: ' || COALESCE(
-                    array_to_string((string_split(text, ' '))[11:15], ' '), '')
-               || chr(10) || 'subscribe to our newsletter today.' AS page
-      FROM documents),
-    l AS (SELECT doc_id, string_split(page, chr(10)) AS ls FROM pages),
-    lines AS (
-      SELECT doc_id, CAST(len(ls) AS INT) AS n_lines, ls[i] AS line, i AS pos
-      FROM l, UNNEST(range(1, len(ls) + 1)) AS t(i)),
-    first AS (
-      SELECT doc_id, MIN(n_lines) AS n_lines, line, MIN(pos) AS pos
-      FROM lines GROUP BY doc_id, line)
-    SELECT doc_id, MIN(n_lines) AS n_lines, COUNT(*) AS n_unique,
-           string_agg(line, chr(10) ORDER BY pos) AS cleaned_text
-    FROM first GROUP BY doc_id
-    """,
-)
-def dedup_within_doc_lines(spark, sf_dir):
-    """WITHIN-document repeated-line removal (keep first occurrence,
-    preserve document order) — the intra-doc counterpart of
-    dedup_exact_paragraphs: nav blocks repeat inside one page just like
-    footers repeat across pages. The fixture interleaves one boilerplate
-    line three times among content lines; the ORACLE IS GENERAL (it
-    dedups in SQL, not algebraically), so it verifies the operator on any
-    input, including corpus text that happens to collide. Scale: both
-    aggs shuffle on the same key (one exchange after AQE); collect_list
-    is bounded per document."""
-    from ..functions.textstats import dedup_doc_lines
-
-    d = T(spark, sf_dir, "documents")
-    ws = F.split(F.col("text"), " ")
-    boiler = F.lit("subscribe to our newsletter today.")
-    page = F.concat_ws(
-        "\n",
-        boiler,
-        F.concat(F.lit("p1: "), F.array_join(F.slice(ws, 1, 5), " ")),
-        boiler,
-        F.concat(F.lit("p2: "), F.array_join(F.slice(ws, 6, 5), " ")),
-        F.concat(F.lit("p3: "), F.array_join(F.slice(ws, 11, 5), " ")),
-        boiler,
-    )
-    return dedup_doc_lines(
-        d.select("doc_id", page.alias("page")), text_col="page"
-    )
-
-
-@_q(
     "crawl_redirect_resolve",
     """
     WITH f AS (
@@ -4052,137 +3390,6 @@ def crawl_host_pld(spark, sf_dir):
 
 
 @_q(
-    "decontaminate_ngram_overlap",
-    r"""
-    WITH words AS (
-      SELECT doc_id,
-             regexp_split_to_array(lower(trim(text)), '\s+') AS w
-      FROM documents),
-    idx AS (
-      SELECT doc_id, w, unnest(generate_series(1, len(w) - 2)) AS i
-      FROM words WHERE len(w) >= 3),
-    sh AS (
-      SELECT DISTINCT doc_id,
-             array_to_string(list_slice(w, i, i + 2), ' ') AS shingle
-      FROM idx),
-    bench AS (SELECT DISTINCT shingle FROM sh WHERE doc_id % 29 = 0),
-    train AS (SELECT doc_id, shingle FROM sh WHERE doc_id % 29 <> 0)
-    SELECT t.doc_id, COUNT(*) AS n_overlap_shingles
-    FROM train t JOIN bench b USING (shingle)
-    GROUP BY t.doc_id
-    """,
-)
-def decontaminate_ngram_overlap(spark, sf_dir):
-    """Benchmark decontamination — flag training documents sharing any
-    word n-gram with a held-out benchmark set (GPT-3 appendix C / Dodge
-    et al. 2021 use 8-13-grams; the synthetic corpus's tiny vocabulary
-    makes 3-grams exercise the identical plan). Docs with id%29==0 play
-    the benchmark; operators/dedup.contamination_flags returns each
-    contaminated train doc with its overlapping-shingle count. The ORACLE
-    IS GENERAL — it re-shingles and re-joins in SQL, so it verifies the
-    operator on any text. Scale: shingling is whole-stage codegen
-    (split + sequence/slice HOFs, no Python); the benchmark side
-    collapses to a DISTINCT shingle column (eval sets are tiny → AQE
-    broadcast), so corpus cost is one map-side hash join + one
-    partial-aggregated groupBy(doc) — no all-pairs product anywhere."""
-    from ..operators.dedup import contamination_flags
-
-    docs = T(spark, sf_dir, "documents")
-    bench = docs.filter(F.col("doc_id") % 29 == 0)
-    train = docs.filter(F.col("doc_id") % 29 != 0)
-    out = contamination_flags(train, bench, n=3)
-    return out.select(
-        F.col("id").alias("doc_id"), "n_overlap_shingles"
-    )
-
-
-@_q(
-    "graph_hits_2iter",
-    f"""
-    WITH edges AS ({_pr_edges_sql('(SELECT COUNT(*) FROM documents)')}),
-    n0 AS (SELECT doc_id AS node, CAST(1 AS BIGINT) AS h FROM documents),
-    a1 AS (SELECT d.doc_id AS node, COALESCE(SUM(p.h), 0) AS a
-           FROM documents d
-           LEFT JOIN edges e ON e.dst = d.doc_id
-           LEFT JOIN n0 p ON p.node = e.src
-           GROUP BY d.doc_id),
-    h1 AS (SELECT d.doc_id AS node, COALESCE(SUM(p.a), 0) AS h
-           FROM documents d
-           LEFT JOIN edges e ON e.src = d.doc_id
-           LEFT JOIN a1 p ON p.node = e.dst
-           GROUP BY d.doc_id),
-    a2 AS (SELECT d.doc_id AS node, COALESCE(SUM(p.h), 0) AS a
-           FROM documents d
-           LEFT JOIN edges e ON e.dst = d.doc_id
-           LEFT JOIN h1 p ON p.node = e.src
-           GROUP BY d.doc_id),
-    h2 AS (SELECT d.doc_id AS node, COALESCE(SUM(p.a), 0) AS h
-           FROM documents d
-           LEFT JOIN edges e ON e.src = d.doc_id
-           LEFT JOIN a2 p ON p.node = e.dst
-           GROUP BY d.doc_id)
-    SELECT a2.node AS doc_id, CAST(a2.a AS BIGINT) AS auth,
-           CAST(h2.h AS BIGINT) AS hub
-    FROM a2 JOIN h2 ON h2.node = a2.node
-    """,
-)
-def graph_hits_2iter(spark, sf_dir):
-    """HITS hubs & authorities (Kleinberg 1999), 2 synchronous
-    iterations over the same deterministic link graph as
-    pagerank_mass_3iter — the fourth iterative-algorithm surface. The
-    normalization step is dropped so every value stays an exact int64
-    sum (hub state starts at 1; out-degree is exactly 2, so magnitudes
-    stay tiny at 2 iterations) — float HITS would never hash-match
-    across engines; integer HITS does, bit for bit.
-
-    Scale design: each half-iteration is one edges⋈state hash join
-    (edges pre-partitioned+persisted once) + one partial-aggregated
-    groupBy — the same narrow-state Pregel shape as PageRank, except
-    authority and hub updates alternate join sides (dst then src), so
-    persisting edges ONCE serves both directions."""
-    docs = T(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    cnt = docs.count()
-    edges = (
-        docs.select(
-            F.col("doc_id").alias("src"),
-            ((F.col("doc_id") + F.col("n_chars")) % cnt).alias("dst"),
-        )
-        .unionByName(
-            docs.select(
-                F.col("doc_id").alias("src"),
-                ((F.col("doc_id") * 7 + F.col("n_chars")) % cnt).alias("dst"),
-            )
-        )
-        .persist()
-    )
-    nodes = docs.select(F.col("doc_id").alias("node"))
-    h = nodes.withColumn("h", F.lit(1).cast("bigint"))
-    a = None
-    for _ in range(2):
-        a_in = (
-            edges.join(h, edges["src"] == h["node"])
-            .groupBy("dst")
-            .agg(F.sum("h").alias("s"))
-        )
-        a = nodes.join(a_in, nodes["node"] == a_in["dst"], "left").select(
-            "node", F.coalesce("s", F.lit(0)).cast("bigint").alias("a")
-        )
-        h_in = (
-            edges.join(a, edges["dst"] == a["node"])
-            .groupBy("src")
-            .agg(F.sum("a").alias("s"))
-        )
-        h = nodes.join(h_in, nodes["node"] == h_in["src"], "left").select(
-            "node", F.coalesce("s", F.lit(0)).cast("bigint").alias("h")
-        )
-    return a.join(h, "node").select(
-        F.col("node").alias("doc_id"),
-        F.col("a").alias("auth"),
-        F.col("h").alias("hub"),
-    )
-
-
-@_q(
     "crawl_mime_sniff",
     """
     SELECT doc_id,
@@ -4245,154 +3452,6 @@ def crawl_mime_sniff(spark, sf_dir):
         .otherwise(txt)
     )
     return d.select("doc_id", sniff_mime(blob).alias("mime"))
-
-
-@_q(
-    "crawl_mirror_hosts",
-    """
-    WITH pages AS (
-      SELECT source AS host, text FROM documents
-      UNION ALL
-      SELECT source || '-m', text FROM documents WHERE doc_id % 3 = 0),
-    fp AS (SELECT DISTINCT host, md5(text) AS fp FROM pages),
-    keep AS (SELECT fp FROM fp GROUP BY fp
-             HAVING COUNT(DISTINCT host) BETWEEN 2 AND 50),
-    f2 AS (SELECT f.host, f.fp FROM fp f JOIN keep USING (fp))
-    SELECT a.host AS host_a, b.host AS host_b, COUNT(*) AS n_shared
-    FROM f2 a JOIN f2 b ON a.fp = b.fp AND a.host < b.host
-    GROUP BY a.host, b.host
-    HAVING COUNT(*) >= 2
-    """,
-)
-def crawl_mirror_hosts(spark, sf_dir):
-    """Mirror-site detection (operators/dedup.mirror_host_pairs): host
-    pairs sharing ≥2 identical page fingerprints. Every third page is
-    mirrored onto a '<source>-m' twin host, so each source pairs with its
-    mirror; the ORACLE IS GENERAL (it re-fingerprints and re-joins in
-    SQL), so organically colliding hosts would be caught identically.
-    Catching mirrors at the HOST level lets the scheduler drop a whole
-    domain instead of paying fetch+dedup per page. Scale: DISTINCT
-    (host, md5) first; fps on >50 hosts are dropped BEFORE the self-join
-    (boilerplate shells would otherwise pair all hosts quadratically),
-    bounding per-key fan-out."""
-    from ..operators.dedup import mirror_host_pairs
-
-    d = T(spark, sf_dir, "documents")
-    pages = d.select(F.col("source").alias("host"), "text").unionByName(
-        d.filter(F.col("doc_id") % 3 == 0).select(
-            F.concat(F.col("source"), F.lit("-m")).alias("host"), "text"
-        )
-    )
-    return mirror_host_pairs(pages, min_shared=2, max_hosts_per_fp=50)
-
-
-@_q(
-    "dedup_span_fingerprints",
-    """
-    WITH t AS (SELECT doc_id, lower(text) AS t FROM documents
-               WHERE length(text) >= 40),
-    idx AS (SELECT doc_id, t, unnest(generate_series(1, length(t) - 39, 10)) AS i
-            FROM t),
-    spans AS (SELECT doc_id, substr(t, i, 40) AS span FROM idx),
-    dup AS (SELECT span FROM spans GROUP BY span
-            HAVING COUNT(DISTINCT doc_id) >= 2)
-    SELECT doc_id, COUNT(*) AS n_dup_spans
-    FROM spans s JOIN dup USING (span)
-    GROUP BY doc_id
-    """,
-)
-def dedup_span_fingerprints(spark, sf_dir):
-    """Cross-document duplicated char-span detection
-    (operators/dedup.dup_spans) — the stride-sampled fingerprint
-    approximation of ExactSubstr dedup (Lee et al. 2022): 40-char windows
-    every 10 chars; a window in ≥2 distinct docs marks each occurrence.
-    Span-level dedup cuts memorized boilerplate INSIDE documents that
-    doc-level MinHash can only drop whole. The corpus's repetitive
-    synthetic text produces natural cross-doc spans, and the ORACLE IS
-    GENERAL (re-shingles in SQL). Scale: window emission is codegen
-    sequence+substring HOFs; one partial-aggregated groupBy(span) (at
-    production scale group on xxhash64(span) — 8-byte shuffle) + one join
-    back; no pairwise product."""
-    from ..operators.dedup import dup_spans
-
-    out = dup_spans(
-        T(spark, sf_dir, "documents"), span_len=40, stride=10
-    )
-    return out.select(F.col("id").alias("doc_id"), "n_dup_spans")
-
-
-@_q(
-    "graph_triangle_stats",
-    f"""
-    WITH de AS ({_pr_edges_sql('(SELECT COUNT(*) FROM documents)')}),
-    und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-            FROM de WHERE src <> dst),
-    deg AS (SELECT node, COUNT(*) AS d FROM (
-              SELECT a AS node FROM und UNION ALL SELECT b FROM und)
-            GROUP BY node)
-    SELECT (SELECT COUNT(*) FROM und) AS n_edges,
-           (SELECT CAST(SUM(d * (d - 1) // 2) AS BIGINT) FROM deg)
-             AS n_wedges,
-           (SELECT COUNT(*) FROM und ab
-              JOIN und bc ON ab.b = bc.a
-              JOIN und ac ON ac.a = ab.a AND ac.b = bc.b) AS n_triangles
-    """,
-)
-def graph_triangle_stats(spark, sf_dir):
-    """Triangle counting over the undirected closure of the synthetic
-    link graph — the classic graph-analytics benchmark op (clustering
-    coefficient's numerator; web-graph triangles indicate community/spam
-    structure). Edges are oriented low-id→high-id so each triangle is
-    counted exactly once by the two-hop path join + closing-edge join.
-    Integer counts hash-match the oracle exactly.
-
-    Scale design: the node-iterator join shape — und⋈und on the pivot
-    then one closing hash semi-equi-join — shuffles only (a,b) id pairs.
-    At web scale you orient edges by DEGREE (low-degree node first)
-    instead of id, which provably bounds per-key fan-out to O(sqrt(m))
-    (Suri & Vassilvitskii 2011); id-orientation is used here because the
-    synthetic graph is near-regular (out-degree 2), making both
-    orientations equivalent. n_wedges = Σ d(d−1)/2 comes from a degree
-    table, never enumerated."""
-    docs = T(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    cnt = docs.count()
-    de = docs.select(
-        F.col("doc_id").alias("src"),
-        ((F.col("doc_id") + F.col("n_chars")) % cnt).alias("dst"),
-    ).unionByName(
-        docs.select(
-            F.col("doc_id").alias("src"),
-            ((F.col("doc_id") * 7 + F.col("n_chars")) % cnt).alias("dst"),
-        )
-    )
-    und = (
-        de.filter(F.col("src") != F.col("dst"))
-        .select(
-            F.least("src", "dst").alias("a"),
-            F.greatest("src", "dst").alias("b"),
-        )
-        .distinct()
-        .persist()
-    )
-    n_edges = und.agg(F.count(F.lit(1)).alias("n_edges"))
-    deg = (
-        und.select(F.col("a").alias("node"))
-        .unionByName(und.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    n_wedges = deg.agg(
-        F.sum(F.expr("d * (d - 1) div 2")).cast("bigint").alias("n_wedges")
-    )
-    ab = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
-    bc = und.select(F.col("a").alias("y"), F.col("b").alias("z"))
-    ac = und.select(F.col("a").alias("x"), F.col("b").alias("z"))
-    n_tri = (
-        ab.join(bc, "y")
-        .join(ac, ["x", "z"])
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
-    return n_edges.crossJoin(n_wedges).crossJoin(n_tri)
 
 
 @_q(
@@ -4479,130 +3538,10 @@ def text_length_histogram(spark, sf_dir):
 
 
 # =========================================================================
-# Round-3 batch 6: near-dup cluster resolution, unicode normalization,
-# per-language quality gating, corpus n-gram stats, URL shape stats,
-# embedding quantization — the remaining training-data-pipeline surface.
+# Round-3 batch 6: unicode normalization, per-language quality gating,
+# corpus n-gram stats, URL shape stats, embedding quantization — the
+# remaining training-data-pipeline surface.
 # =========================================================================
-
-
-@_q(
-    "dedup_cluster_canonical",
-    r"""
-    WITH ws AS (
-      SELECT DISTINCT doc_id AS id, w.word
-      FROM documents,
-           UNNEST(string_split(lower(trim(regexp_replace(text, '\s+', ' ', 'g'))), ' '))
-             AS w(word)
-      WHERE doc_id < 150 AND length(w.word) > 0),
-    sz AS (SELECT id, COUNT(*) AS sz FROM ws GROUP BY id),
-    inter AS (
-      SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS i
-      FROM ws a JOIN ws b ON a.word = b.word AND a.id < b.id
-      GROUP BY a.id, b.id),
-    pairs AS (
-      SELECT id_a, id_b
-      FROM inter JOIN sz sa ON sa.id = id_a JOIN sz sb ON sb.id = id_b
-      WHERE CAST(i AS DOUBLE) / (sa.sz + sb.sz - i) >= 0.5),
-    edges AS (SELECT id_a AS src, id_b AS dst FROM pairs
-              UNION ALL SELECT id_b AS src, id_a AS dst FROM pairs),
-    l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),
-    l1 AS (SELECT p.node, LEAST(p.label, COALESCE(MIN(n.label), p.label)) AS label
-           FROM l0 p LEFT JOIN edges e ON e.dst = p.node
-           LEFT JOIN l0 n ON n.node = e.src GROUP BY p.node, p.label),
-    l2 AS (SELECT p.node, LEAST(p.label, COALESCE(MIN(n.label), p.label)) AS label
-           FROM l1 p LEFT JOIN edges e ON e.dst = p.node
-           LEFT JOIN l1 n ON n.node = e.src GROUP BY p.node, p.label),
-    l3 AS (SELECT p.node, LEAST(p.label, COALESCE(MIN(n.label), p.label)) AS label
-           FROM l2 p LEFT JOIN edges e ON e.dst = p.node
-           LEFT JOIN l2 n ON n.node = e.src GROUP BY p.node, p.label),
-    canon AS (
-      SELECT label, node AS canonical_id FROM (
-        SELECT l.label, l.node,
-               ROW_NUMBER() OVER (PARTITION BY l.label
-                                  ORDER BY d.n_chars DESC, l.node ASC) AS rn
-        FROM l3 l JOIN documents d ON d.doc_id = l.node) t WHERE rn = 1)
-    SELECT l.node AS doc_id, c.canonical_id AS canonical_id,
-           l.node = c.canonical_id AS is_canonical
-    FROM l3 l JOIN canon c ON c.label = l.label
-    """,
-)
-def dedup_cluster_canonical(spark, sf_dir):
-    """Near-dup CLUSTER RESOLUTION — the step every dedup pipeline needs
-    after pair generation: pairs → connected components → pick ONE
-    canonical document per cluster (longest text, tie-break lowest id),
-    so the keep/drop decision is consistent across the whole cluster
-    rather than per-pair (per-pair keep-lowest breaks on chains A~B~C).
-    Pairs here are exact word-Jaccard ≥ 0.5 (candidate-gated to
-    doc_id<150 like dedup_ngram_jaccard; the ungated scale path feeds
-    MinHash+LSH pairs into the identical CC+canon tail). Components via
-    3 synchronous min-label iterations — integer MIN is exact, so the
-    cross-engine hash matches bit-for-bit; production loops to fixpoint.
-    Scale: per iteration one edges⋈labels join + groupBy MIN (map-side
-    partial); canon is one window over components (skew-free: near-dup
-    clusters are small by construction — a giant component would mean
-    the threshold is wrong, which the cluster-size histogram exposes).
-    Lineage is truncated by materializing every SECOND iteration —
-    ``labels`` appears twice in iteration i+1 (probe side and incoming
-    side), so a fully lazy loop doubles the unevaluated subtree per
-    iteration: 2^k copies of the pair-generation plan by iteration k.
-    But with the edge table persisted+materialized first, ONE lazy hop
-    is safe and cheap: the doubled subtree is a single join+agg over a
-    cached leaf, not the pair-generation plan. Three per-iteration
-    count() barriers (the round-3 shape) cost ~10 s of fixed job-launch
-    latency at toy scale (VERDICT r3 #5); this shape pays exactly two
-    barriers (edges, labels after iteration 2) and folds iteration 3 +
-    canon selection into the caller's single action. Same discipline as
-    pagerank_mass_3iter / connected_components_3iter, with the
-    materialization cadence A/B'd per the recorded
-    lazy-vs-materialized trade for cheap-state iterative loops."""
-    d = T(spark, sf_dir, "documents").filter(F.col("doc_id") < 150)
-    pairs = dedup.jaccard_pairs(d, threshold=0.5).select("id_a", "id_b")
-    edges = (
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-        .unionByName(
-            pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst"))
-        )
-        .repartition("src")
-        .persist()
-    )
-    edges.count()  # barrier 1: pair generation runs exactly once
-    labels = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("label")
-    )
-    for i in range(3):
-        incoming = (
-            edges.join(labels, edges["src"] == labels["node"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("label").alias("nbr"))
-        )
-        labels = labels.join(incoming, "node", "left").select(
-            "node",
-            F.least(F.col("label"), F.coalesce("nbr", "label")).alias("label"),
-        )
-        if i == 1:  # barrier 2: truncate before the subtree doubles again
-            labels = labels.persist()
-            labels.count()
-    # final labels stay lazy-persisted: the caller's one action computes
-    # iteration 3 over the cached iteration-2 labels and cached edges
-    # (labels appears twice in the canon tail; the persist makes the
-    # second occurrence read blocks instead of recomputing the join).
-    labels = labels.persist()
-    stats = labels.join(
-        d.select(F.col("doc_id").alias("node"), "n_chars"), "node"
-    )
-    w = Window.partitionBy("label").orderBy(
-        F.col("n_chars").desc(), F.col("node").asc()
-    )
-    canon = (
-        stats.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("label", F.col("node").alias("canonical_id"))
-    )
-    return labels.join(canon, "label").select(
-        F.col("node").alias("doc_id"),
-        "canonical_id",
-        (F.col("node") == F.col("canonical_id")).alias("is_canonical"),
-    )
 
 
 from pyspark.sql.types import StringType as _StringType
@@ -4877,17 +3816,17 @@ def embedding_quantize_int8(spark, sf_dir):
 # Registration-order curation. The driver samples queries() in dict order
 # (round 1 recorded CORRECTNESS rows for exactly the first 50 entries), so
 # the entries with the least prior driver evidence — the crawl-extraction
-# plane, feeds API, the dedup/ANN family, UDF-surface completions,
-# streaming and multimodal — are moved to the FRONT. Pure reordering:
-# every entry keeps its implementation and oracle.
+# plane, feeds API, UDF-surface completions, streaming and multimodal —
+# are moved to the FRONT. Pure reordering: every entry keeps its
+# implementation and oracle.
 # =========================================================================
 
 _FRONT_ORDER = [
     # ------------------------------------------------------------------
     # Round-5 window (VERDICT r4 #7's budget rule: new + changed must
     # fit the 50-slot window, updated in the same commits that add
-    # them). The list above the marker holds 23 names, so the first
-    # 27 below it also fall inside the window.
+    # them). The list above the marker holds 18 names, so the first
+    # 32 below it also fall inside the window.
     # ------------------------------------------------------------------
     # round-5 entries (all oracle-paired): JPEG EXIF orientation, 16-bit
     # PNG, CDX random-access fetch, foreign-WARC interop
@@ -4911,13 +3850,8 @@ _FRONT_ORDER = [
     # rows-only entries: the oracle can't check them, so a per-round
     # clean driver run is their only driver-side evidence — re-record
     "crawl_seen_bloom",
-    "dedup_minhash_lsh",
-    "dedup_simhash",
-    "ann_lsh_topk",
-    "ann_ivf_topk",
     "streaming_watermark_dedup",
     "streaming_stateful_host_rate",
-    "multimodal_feature_ann",
     "text_bpe_encode",
     # oldest-first rotation: built-in-only entries over embeddings whose
     # last green rows are from rounds 1-2 (implementations unchanged since)
@@ -4934,43 +3868,28 @@ _FRONT_ORDER = [
     "crawl_link_extract",
     "feeds_process_capped",
     "crawl_mime_sniff",
-    "crawl_mirror_hosts",
-    "dedup_span_fingerprints",
-    "graph_triangle_stats",
     "crawl_hreflang_alternates",
     "crawl_redirect_resolve",
     "crawl_conditional_get",
     "crawl_adaptive_budget",
-    "decontaminate_ngram_overlap",
-    "graph_hits_2iter",
     "crawl_html_meta",
     "crawl_charset_decode",
     "crawl_url_template_mining",
     "text_pii_scrub",
     "text_quality_linear_score",
     "text_bigram_lm_score",
-    "dedup_within_doc_lines",
-    "graph_anchor_text",
     "text_c4_filter_chain",
     "text_tfidf_topk",
-    "graph_bfs_hops",
     "split_train_test_stratified",
-    "pagerank_mass_3iter",
-    "connected_components_3iter",
     "pack_doc_chunks",
     "mix_sources_interleave",
     "explode_outer_doc_words",
-    "dedup_title_levenshtein",
     "text_bpe_token_count",
     "embedding_quantize_int8",
     "multimodal_image_meta",
     "streaming_seed_ingest",
     "crawl_robots_wildcard",
-    # dedup/ANN/text pipeline representatives
-    "dedup_exact_docs",
-    "dedup_ngram_jaccard",
-    "dedup_embedding_cosine",
-    "ann_bruteforce_topk",
+    # text pipeline representatives
     "text_token_count",
     "text_quality_score",
     "text_lang_id",

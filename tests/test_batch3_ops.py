@@ -1,7 +1,7 @@
 """Round-3 batch-3 surface: HTML head-metadata extraction, charset
-sniffing, WARC serialize/parse, URL template mining, PII scrubbing and the
-within-doc line dedup operator. Pure functions byte-for-byte; operators
-through live plans (their oracle parity runs in test_oracle_parity.py)."""
+sniffing, WARC serialize/parse, URL template mining and PII scrubbing.
+Pure functions byte-for-byte; operators through live plans (their oracle
+parity runs in test_oracle_parity.py)."""
 
 from __future__ import annotations
 
@@ -237,17 +237,6 @@ def test_pii_scrub_counts_and_order(spark):
     assert got[1].had_pii is True
     assert got[2].scrubbed == "clean text only"
     assert got[2].had_pii is False
-
-
-def test_dedup_doc_lines_order_and_counts(spark):
-    from opps_feedcrawler_spark.functions.textstats import dedup_doc_lines
-
-    df = spark.createDataFrame(
-        [(1, "b\na\nb\nc\na\nb")],  # first-occurrence order: b, a, c
-        "doc_id int, text string",
-    )
-    r = dedup_doc_lines(df).collect()[0]
-    assert (r.n_lines, r.n_unique, r.cleaned_text) == (6, 3, "b\na\nc")
 
 
 def test_warc_sharded_and_cdx_index(spark):

@@ -1,7 +1,6 @@
 """Unit tests for round-3 batch-5 primitives: MIME sniffing (including
 arms the oracle query doesn't exercise — gzip, real encode_png bytes, a
-spec-valid WAV header), hreflang extraction edge cases, span dedup, and
-mirror detection's boilerplate cap."""
+spec-valid WAV header) and hreflang extraction edge cases."""
 
 from __future__ import annotations
 
@@ -11,7 +10,6 @@ from pyspark.sql import functions as F
 
 from opps_feedcrawler_spark.functions.extract import extract_hreflang_py
 from opps_feedcrawler_spark.functions.multimodal import encode_png, sniff_mime
-from opps_feedcrawler_spark.operators.dedup import dup_spans, mirror_host_pairs
 
 # canonical RIFF/WAVE header: 8 kHz mono 16-bit PCM, 4 frames of data
 _PCM = b"\x00\x01" * 4
@@ -82,51 +80,3 @@ class TestHreflang:
     def test_empty_and_binary(self):
         assert extract_hreflang_py(None, "http://x/") == []
         assert extract_hreflang_py(b"", "http://x/") == []
-
-
-class TestDupSpans:
-    def test_shared_span_counted_per_occurrence(self, spark):
-        shared = "z" * 45  # one 40-char window at stride 10 covers pos 1
-        docs = spark.createDataFrame(
-            [
-                (1, shared),
-                (2, shared + " tail that makes it longer than doc one"),
-                (3, "completely different text " * 4),
-            ],
-            "doc_id long, text string",
-        )
-        got = {
-            r["id"]: r["n_dup_spans"]
-            for r in dup_spans(docs, span_len=40, stride=10).collect()
-        }
-        # doc1 has one window ('z'*40); doc2's first window matches it
-        assert got[1] >= 1 and got[2] >= 1
-        assert 3 not in got
-
-    def test_short_docs_emit_nothing(self, spark):
-        docs = spark.createDataFrame(
-            [(1, "short"), (2, "short")], "doc_id long, text string"
-        )
-        assert dup_spans(docs, span_len=40, stride=10).count() == 0
-
-
-class TestMirrorHosts:
-    def test_pair_detection_and_boilerplate_cap(self, spark):
-        rows = []
-        # h1/h2 mirror each other on 3 pages
-        for i in range(3):
-            rows.append(("h1", f"mirrored page {i}"))
-            rows.append(("h2", f"mirrored page {i}"))
-        # h3 shares only ONE page with h1: below min_shared=2
-        rows.append(("h3", "mirrored page 0"))
-        # boilerplate shared by many hosts must not pair them
-        for i in range(10):
-            rows.append((f"b{i}", "empty shell"))
-        docs = spark.createDataFrame(rows, "host string, text string")
-        got = {
-            (r["host_a"], r["host_b"]): r["n_shared"]
-            for r in mirror_host_pairs(
-                docs, min_shared=2, max_hosts_per_fp=5
-            ).collect()
-        }
-        assert got == {("h1", "h2"): 3}

@@ -1,6 +1,6 @@
 """Semantic unit tests for round-3 batch-6 operators — properties the
-DuckDB parity harness can't express (cluster-consistency invariants,
-quantization range bounds, per-language gate coverage)."""
+DuckDB parity harness can't express (quantization range bounds,
+per-language gate coverage, rank and depth invariants)."""
 
 from __future__ import annotations
 
@@ -9,36 +9,6 @@ from pyspark.sql import functions as F
 from opps_feedcrawler_spark.plans.queries import QUERIES
 
 SF = "/root/testdata/sf0.001"
-
-
-class TestDedupClusterCanonical:
-    def test_cluster_invariants(self, spark):
-        out = QUERIES["dedup_cluster_canonical"](spark, SF).toPandas()
-        assert len(out) > 0
-        # every member maps to exactly one canonical
-        assert out["doc_id"].is_unique
-        # each canonical maps to itself and appears as a member
-        canons = set(out["canonical_id"])
-        self_rows = out[out["doc_id"].isin(canons)]
-        assert (self_rows["doc_id"] == self_rows["canonical_id"]).all()
-        assert self_rows["is_canonical"].all()
-        # is_canonical is true exactly once per cluster
-        per = out.groupby("canonical_id")["is_canonical"].sum()
-        assert (per == 1).all()
-
-    def test_canonical_is_longest_member(self, spark):
-        out = QUERIES["dedup_cluster_canonical"](spark, SF).toPandas()
-        docs = (
-            spark.read.parquet(f"{SF}/documents.parquet")
-            .select("doc_id", "n_chars")
-            .toPandas()
-            .set_index("doc_id")["n_chars"]
-        )
-        for cid, grp in out.groupby("canonical_id"):
-            best = max(
-                grp["doc_id"], key=lambda d: (docs[d], -d)
-            )  # max n_chars, tie lowest id
-            assert best == cid
 
 
 class TestEmbeddingQuantizeInt8:

@@ -1,18 +1,13 @@
 """Unit tests for operators/frontier.py (redirect resolution,
-conditional-GET decisions, AIMD budgets), urlnorm.registrable_domain,
-and dedup.word_shingles/contamination_flags — the properties the
-sf0.01 oracle parity sweep can't isolate (loop bounding, absent-host
-branch, PSL fallback, shingle edge cases)."""
+conditional-GET decisions, AIMD budgets) and urlnorm.registrable_domain —
+the properties the sf0.01 oracle parity sweep can't isolate (loop
+bounding, absent-host branch, PSL fallback)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from opps_feedcrawler_spark.functions.urlnorm import registrable_domain
-from opps_feedcrawler_spark.operators.dedup import (
-    contamination_flags,
-    word_shingles,
-)
 from opps_feedcrawler_spark.operators.frontier import (
     adaptive_budget_round,
     recrawl_decisions,
@@ -172,44 +167,3 @@ class TestRegistrableDomain:
         )
         got = {r["host"]: r["pld"] for r in df.collect()}
         assert got == dict(hosts)
-
-
-class TestContamination:
-    def test_shingles_and_flags(self, spark):
-        docs = _df(
-            spark,
-            [
-                (1, "the quick brown fox jumps"),
-                (2, "quick brown fox somewhere else entirely"),
-                (3, "completely different words here now"),
-                (4, "ab"),  # shorter than n tokens -> no shingles
-            ],
-            "doc_id long, text string",
-        )
-        sh = word_shingles(docs, n=3).collect()
-        by_id = {}
-        for r in sh:
-            by_id.setdefault(r["id"], set()).add(r["shingle"])
-        assert by_id[1] == {
-            "the quick brown",
-            "quick brown fox",
-            "brown fox jumps",
-        }
-        assert 4 not in by_id
-        bench = docs.filter(F.col("doc_id") == 1)
-        train = docs.filter(F.col("doc_id") != 1)
-        flags = {
-            r["id"]: r["n_overlap_shingles"]
-            for r in contamination_flags(train, bench, n=3).collect()
-        }
-        # doc 2 shares exactly 'quick brown fox'; docs 3/4 clean
-        assert flags == {2: 1}
-
-    def test_case_and_whitespace_normalization(self, spark):
-        docs = _df(
-            spark,
-            [(1, "  The   QUICK brown   fox  ")],
-            "doc_id long, text string",
-        )
-        got = {r["shingle"] for r in word_shingles(docs, n=4).collect()}
-        assert got == {"the quick brown fox"}

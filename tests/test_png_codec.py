@@ -565,3 +565,30 @@ def test_resize_png_16bit_and_color_preserve_samples():
     got = decode_png_pixels(resize_png(blob, 2, 2))
     assert got.dtype == np.uint16
     assert np.array_equal(got, c16[(np.arange(2) * 4) // 2][:, (np.arange(2) * 4) // 2])
+
+
+def test_multimodal_plumbing(spark):
+    from opps_feedcrawler_spark.functions.multimodal import image_metadata
+
+    from opps_feedcrawler_spark.functions.multimodal import encode_png
+
+    png = encode_png(9, 4, b"\x42" * 36)
+    df = spark.createDataFrame(
+        [("u1", png), ("u2", b"\xff\xd8rest"), ("u3", b"plain")],
+        "url string, blob binary",
+    )
+    rows = {r.url: r for r in image_metadata(df).collect()}
+    assert rows["u1"].format == "png"
+    assert rows["u3"].format == "unknown"
+    assert rows["u1"].n_bytes == len(png)
+    # PNG path is the REAL structural parse, not the stub formula
+    assert (rows["u1"].width, rows["u1"].height) == (9, 4)
+    # a blob that sniffs JPEG but fails the real T.81 parse is quarantined
+    # as an "invalid" row — never an exception out of the stage
+    assert rows["u2"].format == "invalid"
+    assert (rows["u2"].width, rows["u2"].height) == (0, 0)
+
+    from opps_feedcrawler_spark.functions.multimodal import decode_image_pixels
+
+    with pytest.raises(NotImplementedError):
+        decode_image_pixels(b"\x89PNG")
