@@ -63,7 +63,10 @@ HEADLINE_QUERIES = [
     "crawl_rss_entries",
     "feeds_process_capped",
     "udtf_split_sentences",
-    # round-3 additions: training-set assembly planes
+    # round-3 additions: iterative graph + training-set assembly planes
+    "graph_bfs_hops",
+    "pagerank_mass_3iter",
+    "connected_components_3iter",
     "split_train_test_stratified",
     "pack_doc_chunks",
     "mix_sources_interleave",

@@ -516,6 +516,96 @@ def parse_sitemap_udf(xml: pd.Series) -> pd.Series:
 
 
 # ---------------------------------------------------------------------------
+# Anchor-text extraction (round 3) — (link, anchor text) pairs in document
+# order, the input to per-target anchor aggregation (the classic web-graph
+# signal used for retrieval and training-data enrichment; see e.g. Brin &
+# Page 1998 §2.2, public). Unlike extract_links_py this keeps EVERY
+# occurrence (aggregation wants counts) and carries the visible text
+# between <a href> and </a>, whitespace-collapsed like _TextExtractor.
+# ---------------------------------------------------------------------------
+
+ANCHOR_STRUCT = StructType(
+    [
+        StructField("link", StringType()),
+        StructField("anchor", StringType()),
+    ]
+)
+
+
+class _AnchorExtractor(HTMLParser):
+    """Collects (href, anchor-text) pairs. A new <a> implicitly closes an
+    unclosed previous one (browser-like recovery); anchors nested inside
+    _SKIP_TAGS still count (href collection matches _LinkExtractor, which
+    ignores skip depth)."""
+
+    def __init__(self) -> None:
+        super().__init__(convert_charrefs=True)
+        self._href: str | None = None
+        self._chunks: list[str] = []
+        self.pairs: list[tuple[str, str]] = []
+
+    def _flush(self) -> None:
+        if self._href is not None:
+            text = _WS.sub(" ", " ".join(self._chunks)).strip()
+            self.pairs.append((self._href, text))
+        self._href = None
+        self._chunks = []
+
+    def handle_starttag(self, tag: str, attrs) -> None:  # noqa: ANN001
+        if tag == "a":
+            self._flush()
+            for k, v in attrs:
+                if k == "href" and v:
+                    self._href = v
+                    break
+
+    def handle_endtag(self, tag: str) -> None:
+        if tag == "a":
+            self._flush()
+
+    def handle_data(self, data: str) -> None:
+        if self._href is not None and data.strip():
+            self._chunks.append(data)
+
+    def close(self) -> None:
+        super().close()
+        self._flush()
+
+
+def extract_anchors_py(
+    html: bytes | str | None, base_url: str | None
+) -> list[dict]:
+    """(link, anchor) per <a href> occurrence, hrefs resolved against
+    base_url; order = document order, duplicates KEPT (each occurrence is
+    one vote in anchor aggregation)."""
+    doc = _decode(html)
+    if not doc:
+        return []
+    p = _AnchorExtractor()
+    try:
+        p.feed(doc)
+        p.close()
+    except Exception:
+        pass
+    out: list[dict] = []
+    for href, anchor in p.pairs:
+        try:
+            absolute = urljoin(base_url or "", href)
+        except ValueError:
+            continue
+        if absolute:
+            out.append({"link": absolute, "anchor": anchor})
+    return out
+
+
+@pandas_udf(ArrayType(ANCHOR_STRUCT))
+def extract_anchors_udf(html: pd.Series, base_url: pd.Series) -> pd.Series:
+    return pd.Series(
+        [extract_anchors_py(h, b) for h, b in zip(html, base_url)], dtype=object
+    )
+
+
+# ---------------------------------------------------------------------------
 # HTML <head> metadata extraction (round 3) — title / description / robots
 # meta / canonical / og:title / lang. These are the per-page signals a crawl
 # indexes for scheduling (robots meta gates indexing, canonical collapses
@@ -702,7 +792,8 @@ def extract_hreflang_py(
     html: bytes | str | None, base_url: str | None
 ) -> list[dict]:
     """(hreflang, href) per alternate link, hrefs resolved against
-    base_url; document order, duplicates kept."""
+    base_url; document order, duplicates kept (mirrors _AnchorExtractor's
+    occurrence semantics)."""
     doc = _decode(html)
     if not doc:
         return []

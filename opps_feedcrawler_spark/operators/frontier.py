@@ -42,9 +42,9 @@ def resolve_redirects(
 
     Scale: each hop is one hash equi-join of the narrow frontier against
     the narrow redirect map on the current endpoint — `max_hops` joins
-    total, unrolled into a single job. The redirect map is usually ≪
-    frontier (only pages that 3xx'd) so AQE broadcasts it; no page
-    content moves. A loop
+    total, unrolled into a single job (same bounded-iteration shape as
+    graph_bfs_hops). The redirect map is usually ≪ frontier (only pages
+    that 3xx'd) so AQE broadcasts it; no page content moves. A loop
     (a→b→a) never diverges: the walk is hop-bounded by construction.
     """
     r_src = redirects.select(

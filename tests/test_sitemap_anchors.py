@@ -1,13 +1,16 @@
 """Round-3 batch-2 extraction surface: sitemap protocol parsing (urlset +
-sitemapindex), robots.txt Sitemap directives, and the C4 quality-filter
-operator. Pure functions are tested byte-for-byte;
+sitemapindex), anchor-text extraction, robots.txt Sitemap directives, and
+the C4 quality-filter operator. Pure functions are tested byte-for-byte;
 the operator through a live plan."""
 
 from __future__ import annotations
 
 from datetime import datetime
 
-from opps_feedcrawler_spark.functions.extract import parse_sitemap_py
+from opps_feedcrawler_spark.functions.extract import (
+    extract_anchors_py,
+    parse_sitemap_py,
+)
 from opps_feedcrawler_spark.operators.robots import parse_robots_txt
 
 NS_URLSET = (
@@ -100,6 +103,37 @@ def test_sitemap_gzip_transparent_and_torn_gzip_rejected():
     assert len(parse_sitemap_py(gzip.compress(xml))) == 2
     assert parse_sitemap_py(gzip.compress(xml)[:20]) == []  # torn member
     assert parse_sitemap_py(b"\x1f\x8bnot really gzip") == []
+
+
+def test_anchor_pairs_order_duplicates_and_nesting():
+    html = (
+        '<html><body><a href="/x">Click <b>me</b> now</a>'
+        '<a href="http://b.example/">  </a>'  # whitespace-only anchor -> ''
+        '<a href="/x">again</a>'
+        '<a href="/unclosed">tail text'  # implicitly closed at EOF
+        "</body></html>"
+    )
+    got = extract_anchors_py(html, "http://a.example/p")
+    assert got == [
+        {"link": "http://a.example/x", "anchor": "Click me now"},
+        {"link": "http://b.example/", "anchor": ""},
+        {"link": "http://a.example/x", "anchor": "again"},
+        {"link": "http://a.example/unclosed", "anchor": "tail text"},
+    ]
+
+
+def test_anchor_new_a_implicitly_closes_previous():
+    html = '<a href="/one">first <a href="/two">second</a>'
+    got = extract_anchors_py(html, "http://h.example/")
+    assert [(g["link"], g["anchor"]) for g in got] == [
+        ("http://h.example/one", "first"),
+        ("http://h.example/two", "second"),
+    ]
+
+
+def test_anchor_empty_and_hrefless():
+    assert extract_anchors_py(None, "http://h.example/") == []
+    assert extract_anchors_py("<a>no href</a>", "http://h.example/") == []
 
 
 def test_robots_sitemap_directives_are_global():
