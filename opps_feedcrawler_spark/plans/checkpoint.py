@@ -19,6 +19,17 @@ log and the SAME commit semantics:
   every plan in plans/crawl.py is a pure function of the previous snapshot:
   total-order sort keys, pinned shuffle partitioning, pure UDFs, no clock).
 
+URL state is stored narrow. The frontier keeps only (url_norm, depth) and
+the seen deltas and seen bases only url_norm: host, url_hash, salt and
+priority are pure functions of those (DERIVED_COLUMNS), so they cost bytes
+on every write and buy nothing. A manifest's "schema" is the stored
+(footer) schema; its "read_columns" key lists every column a reader gets,
+in order, as [name, Spark SQL expression over the stored columns], and
+every read applies it in JVM codegen. A manifest without the key (product
+tables, and every table of a warehouse written before state was stored
+narrow) is read as stored. A reader with only json.load can recompute a
+dropped column from its expression, e.g. url_hash = xxhash64(url_norm).
+
 On a real cluster this module swaps for an Iceberg catalog
 (`iceberg-spark-runtime`) behind the same commit()/latest_snapshot() API.
 """
@@ -30,9 +41,24 @@ import os
 import shutil
 import time
 import uuid
+from functools import reduce
+from itertools import groupby
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
+
+from ..functions.urlnorm import NSALTS
+
+# The URL-state columns that are pure functions of url_norm and depth, as
+# Spark SQL over those two. The narrow tables drop them on write and every
+# read re-derives them from this text; plans/crawl.py derives the in-memory
+# frontier from the same text, so the two forms cannot drift.
+DERIVED_COLUMNS = {
+    "host": "regexp_extract(url_norm, '^https?://([^/]+)', 1)",
+    "url_hash": "xxhash64(url_norm)",
+    "salt": f"CAST(pmod(xxhash64(url_norm), {NSALTS}) AS INT)",
+    "priority": "1.0D / (1.0D + CAST(depth AS DOUBLE))",
+}
 
 
 _NULLABLE_KEYS = ("nullable", "containsNull", "valueContainsNull")
@@ -75,16 +101,30 @@ class SnapshotLog:
     def table_path(self, round_no: int, name: str) -> str:
         return os.path.join(self.data_dir, f"round={round_no}", name)
 
+    def _narrow(self, df: DataFrame, name: str) -> tuple[DataFrame, dict]:
+        """The columns of table `name` to store, and the manifest keys that
+        give a reader the rest: a NARROW_TABLES table drops its
+        DERIVED_COLUMNS and records them under "read_columns"; any other
+        table is stored whole, with no extra key."""
+        if name not in self.NARROW_TABLES:
+            return df, {}
+        read_columns = [[c, DERIVED_COLUMNS.get(c, c)] for c in df.columns]
+        stored = df.drop(*(c for c in df.columns if c in DERIVED_COLUMNS))
+        return stored, {"read_columns": read_columns}
+
     def write_table(self, df: DataFrame, round_no: int, name: str) -> dict:
         """Write one table's Parquet and return its lineage manifest: the
         per-partition file list with row counts and byte sizes, read from the
         Parquet FOOTERS (no Spark job — the metrics/lineage path costs zero
         cluster work per round), and the schema a reader of the written files
         sees, which every later read of the table uses instead of inferring
-        it."""
+        it. A NARROW_TABLES table is written without its DERIVED_COLUMNS; its
+        manifest's "read_columns" re-derives them on every read, so
+        load_table returns the columns of `df` in the order of `df`."""
         import pyarrow.parquet as pq
 
         path = self.table_path(round_no, name)
+        df, extra = self._narrow(df, name)
         df.write.mode("overwrite").option("compression", self.codec).parquet(
             path
         )
@@ -103,6 +143,7 @@ class SnapshotLog:
             "files": files,
             "rows": total_rows,
             "schema": _as_nullable(df.schema.jsonValue()),
+            **extra,
         }
 
     @staticmethod
@@ -168,22 +209,27 @@ class SnapshotLog:
     def compact_seen(self, spark: SparkSession, upto_round: int) -> dict:
         """Fold seen deltas of rounds 0..upto_round into one base table,
         written as read: one Spark job, one file per scan split (Spark sizes
-        the splits from the input bytes), no shuffle. Idempotent per
+        the splits from the input bytes), no shuffle. The base is stored
+        narrow like a delta (url_norm only) and its marker carries the same
+        "schema" and "read_columns" keys as a delta's manifest, whatever
+        mix of narrow and whole deltas it folds. Idempotent per
         upto_round. Old delta files are retained for time travel to rounds
         < upto_round; vacuum_engine_state drops superseded bases."""
         deltas = [
             self.read_snapshot(r)["tables"]["seen_delta"]
             for r in range(upto_round + 1)
         ]
-        schema = deltas[-1]["schema"]
+        base, extra = self._narrow(self.read_all(spark, deltas), "seen_delta")
         out = os.path.join(self.data_dir, f"seen_base={upto_round}")
-        (
-            self.read(spark, schema, *(d["path"] for d in deltas))
-            .write.mode("overwrite")
-            .option("compression", self.codec)
-            .parquet(out)
+        base.write.mode("overwrite").option("compression", self.codec).parquet(
+            out
         )
-        doc = {"upto": upto_round, "path": out, "schema": schema}
+        doc = {
+            "upto": upto_round,
+            "path": out,
+            "schema": _as_nullable(base.schema.jsonValue()),
+            **extra,
+        }
         self._publish(f"base-{upto_round:08d}.json", doc)  # the commit point
         return doc
 
@@ -207,6 +253,9 @@ class SnapshotLog:
     # carries the whole frontier/bloom/cumulative seen view); PRODUCT
     # tables are the crawl's output and must never be vacuumed.
     ENGINE_STATE_TABLES = ("frontier", "bloom", "schedule")
+    # URL-state tables stored without their DERIVED_COLUMNS (write_table,
+    # compact_seen); every read re-derives them from the manifest.
+    NARROW_TABLES = ("frontier", "seen_delta")
 
     def vacuum_engine_state(self, keep_last: int = 1) -> list[int]:
         """Delete superseded engine-state table data (frontier/bloom/
@@ -281,13 +330,37 @@ class SnapshotLog:
         self, spark: SparkSession, snapshot_id: int, name: str
     ) -> DataFrame:
         """Time travel: read table `name` exactly as of snapshot_id."""
-        table = self.read_snapshot(snapshot_id)["tables"][name]
-        return self.read(spark, table["schema"], table["path"])
+        return self.read(spark, self.read_snapshot(snapshot_id)["tables"][name])
 
     @staticmethod
-    def read(spark: SparkSession, schema: dict, *paths: str) -> DataFrame:
-        """Read Parquet `paths` with the schema their manifest recorded
-        (jsonValue form). Nothing is inferred from footers, so building the
-        DataFrame submits no Spark job. There is no fallback to inference:
-        a manifest without a schema fails with KeyError at its caller."""
-        return spark.read.schema(StructType.fromJson(schema)).parquet(*paths)
+    def read(spark: SparkSession, table: dict, *paths: str) -> DataFrame:
+        """Read Parquet `paths` (default: the table's own "path") as the
+        manifest or seen-base marker `table` describes them: with the
+        stored schema it recorded (jsonValue form), then, if it has
+        "read_columns", projected through those expressions so the derived
+        columns come back in their written order. Nothing is inferred from
+        footers, so building the DataFrame submits no Spark job. There is
+        no fallback to inference: a manifest without a schema fails with
+        KeyError here."""
+        df = spark.read.schema(StructType.fromJson(table["schema"])).parquet(
+            *(paths or (table["path"],))
+        )
+        if "read_columns" not in table:
+            return df
+        return df.selectExpr(*(f"{e} AS {c}" for c, e in table["read_columns"]))
+
+    @classmethod
+    def read_all(cls, spark: SparkSession, tables: list[dict]) -> DataFrame:
+        """Union of `tables` (manifests or markers of one logical table) as
+        read. Consecutive tables stored alike share one multi-path scan, so
+        a warehouse written in one layout is read with one scan however
+        many rounds it spans; one that changed layout mid-crawl unions one
+        scan per run of alike tables."""
+        def layout(t: dict) -> str:
+            return json.dumps([t["schema"], t.get("read_columns")])
+
+        scans = []
+        for _, run in groupby(tables, key=layout):
+            run = list(run)
+            scans.append(cls.read(spark, run[0], *(t["path"] for t in run)))
+        return reduce(DataFrame.unionByName, scans)

@@ -50,8 +50,11 @@ Scale design decisions (the 100 TB story, each one load-bearing):
 - `seen` is stored as PER-ROUND DELTAS, never rewritten: the cumulative
   seen set at 10^10 URLs is the biggest table in the system; each snapshot
   appends only that round's scheduled∪disallowed rows (provably disjoint
-  from all prior deltas). load_seen() unions delta files with the schema
-  their manifests recorded — a metadata-only operation, no Spark job.
+  from all prior deltas). Each delta stores url_norm alone: url_hash is
+  xxhash64(url_norm), re-derived in codegen on read, the same rule as the
+  frontier's (url_norm, depth) (checkpoint.DERIVED_COLUMNS). load_seen()
+  unions delta files with the schema and read columns their manifests
+  recorded — a metadata-only operation, no Spark job.
 - the bloom filter is maintained INCREMENTALLY (bloom_and_probe ORs the
   round-delta's bits into the previous round's bitsets, co-partitioned by
   bucket, so no task holds more than one bucket's bitset and nothing of
@@ -78,13 +81,12 @@ from ..functions.urlnorm import with_url_cols
 from ..operators.politeness import (
     BUDGET_BASE,
     MAX_BUDGET,
-    priority_col,
     schedule_budgeted,
     with_global_sequence,
 )
 from ..operators.robots import with_robots
 from ..operators.seen import bloom_and_probe, exact_new_urls, split_seen_table
-from .checkpoint import SnapshotLog
+from .checkpoint import DERIVED_COLUMNS, SnapshotLog
 
 logger = logging.getLogger(__name__)
 
@@ -180,14 +182,17 @@ def prepare_pages_bucketed(
     return spark.table(table)
 
 
-def seeds_to_frontier(seeds: DataFrame) -> DataFrame:
-    f = with_url_cols(seeds, "url").select("url_norm", "host", "url_hash", "salt")
-    return (
-        f.dropDuplicates(["url_norm"])
-        .withColumn("depth", F.lit(0))
-        .withColumn("priority", priority_col())
-        .select(*FRONTIER_COLS)
+def _frontier_cols(df: DataFrame) -> DataFrame:
+    """(url_norm, depth) rows → FRONTIER_COLS, the derived columns computed
+    from the same SQL text the snapshot's read path applies."""
+    return df.selectExpr(
+        *(f"{DERIVED_COLUMNS.get(c, c)} AS {c}" for c in FRONTIER_COLS)
     )
+
+
+def seeds_to_frontier(seeds: DataFrame) -> DataFrame:
+    f = with_url_cols(seeds, "url").select("url_norm").dropDuplicates(["url_norm"])
+    return _frontier_cols(f.withColumn("depth", F.lit(0)))
 
 
 def _min_depth_frontier(cand: DataFrame) -> DataFrame:
@@ -195,27 +200,21 @@ def _min_depth_frontier(cand: DataFrame) -> DataFrame:
 
     Shuffle-width design (VERDICT r4 #6 bytes-per-URL): host, url_hash,
     salt and priority are all pure JVM-codegen functions of
-    (url_norm, depth) — regexp_extract, xxhash64, pmod, 1/(1+depth) —
-    so the exchange carries ONLY (url_norm, depth) (~70% of a frontier
-    row's width is derived columns) and everything else is recomputed
-    AFTER the aggregation, once per distinct URL instead of once per
-    candidate occurrence. The link-candidate dedup is the widest
-    per-round shuffle after this cut (millions of duplicate link
-    occurrences collapse here); narrower rows also make the map-side
-    partial min() combine denser per shuffle block."""
-    from ..functions.urlnorm import NSALTS, host_col
-
-    return (
+    (url_norm, depth) — regexp_extract, xxhash64, pmod, 1/(1+depth), as
+    the SQL text of checkpoint.DERIVED_COLUMNS — so the exchange carries
+    ONLY (url_norm, depth) (~70% of a frontier row's width is derived
+    columns) and everything else is recomputed AFTER the aggregation,
+    once per distinct URL instead of once per candidate occurrence. The
+    link-candidate dedup is the widest per-round shuffle after this cut
+    (millions of duplicate link occurrences collapse here); narrower rows
+    also make the map-side partial min() combine denser per shuffle block.
+    Storage follows the same rule: the frontier sink writes only
+    (url_norm, depth), and SnapshotLog.read re-derives the rest from the
+    same text, so a loaded frontier equals this one column for column."""
+    return _frontier_cols(
         cand.select("url_norm", "depth")
         .groupBy("url_norm")
         .agg(F.min("depth").alias("depth"))
-        .withColumn("host", host_col(F.col("url_norm")))
-        .withColumn("url_hash", F.xxhash64("url_norm"))
-        .withColumn(
-            "salt", F.pmod(F.col("url_hash"), F.lit(NSALTS)).cast("int")
-        )
-        .withColumn("priority", priority_col())
-        .select(*FRONTIER_COLS)
     )
 
 
@@ -452,17 +451,17 @@ def load_seen(spark: SparkSession, log: SnapshotLog, round_no: int) -> DataFrame
     """Cumulative seen set as of round_no = newest compacted base (≤
     round_no, if any — SnapshotLog.compact_seen) plus the per-round delta
     files after it (metadata-only: one multi-path Parquet read with the
-    manifests' schema, no Spark job). Row multiset is identical with or
-    without a base (deltas are disjoint), so every consumer — anti-joins,
-    bloom probes, resume — is unaffected by when compaction runs."""
+    manifests' schema and read columns, no Spark job; SnapshotLog.read_all).
+    Row multiset is identical with or without a base (deltas are disjoint),
+    so every consumer — anti-joins, bloom probes, resume — is unaffected by
+    when compaction runs."""
     base = log.latest_seen_base(round_no)
     start = base["upto"] + 1 if base else 0
     deltas = [
         log.read_snapshot(r)["tables"]["seen_delta"]
         for r in range(start, round_no + 1)
     ]
-    parts = ([base] if base else []) + deltas
-    return log.read(spark, parts[0]["schema"], *(p["path"] for p in parts))
+    return log.read_all(spark, ([base] if base else []) + deltas)
 
 
 def run_crawl(

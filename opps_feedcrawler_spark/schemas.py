@@ -6,7 +6,12 @@ SURVEY.md §1.1 [PK]); this engine declares its input and extraction shapes
 here. The frontier, seen-delta and bloom tables are not declared here: their
 shape is whatever the round's plan writes, and each snapshot manifest
 records every table's schema as written (plans/checkpoint.SnapshotLog.
-write_table), which is what every later read of the table uses. Shapes bound by BASELINE.json:6
+write_table), which is what every later read of the table uses. The
+frontier is written as (url_norm, depth) and the seen delta as url_norm;
+their manifests also record host, url_hash, salt and priority as SQL over
+those (checkpoint.DERIVED_COLUMNS), which every read re-derives, so a
+loaded frontier is (url_norm, host, url_hash, salt, depth, priority) and a
+loaded seen set (url_norm, url_hash). Shapes bound by BASELINE.json:6
 (north_star) and BASELINE.json:16 (input_hint: pages table is exactly
 (url string, warc_ts timestamp, html binary, text string, lang string)).
 """

@@ -78,15 +78,19 @@ def test_seen_compaction_is_transparent(spark, corpus_dfs, tmp_path):
     log_b = run_crawl(spark, pages, seeds, robots, wh_b, rounds=2)
     base = log_b.compact_seen(spark, upto_round=1)
     assert base["upto"] == 1
-    # compacted base == union of deltas 0..1, exactly
+    # compacted base == union of deltas 0..1, exactly (read through the
+    # marker's and the manifest's read columns: url_hash is not stored)
     base_rows = sorted(
         map(repr, ((r.url_norm, r.url_hash) for r in
-                   spark.read.parquet(base["path"]).collect()))
+                   SnapshotLog.read(spark, base).collect()))
     )
+    delta = log_b.read_snapshot(0)["tables"]["seen_delta"]
     delta_rows = sorted(
         map(repr, ((r.url_norm, r.url_hash) for r in
-                   spark.read.parquet(
-                       log_b.read_snapshot(0)["tables"]["seen_delta"]["path"],
+                   SnapshotLog.read(
+                       spark,
+                       delta,
+                       delta["path"],
                        log_b.read_snapshot(1)["tables"]["seen_delta"]["path"],
                    ).collect()))
     )
@@ -366,6 +370,163 @@ def test_compact_seen_crash_before_marker(
     assert files and not any("seen_base=" in f for f in files)
 
     log = run_crawl(spark, *corpus_dfs, wh, rounds=ROUNDS, compact_seen_every=2)
+    assert log.snapshot_ids() == plain_log.snapshot_ids()
+    for r in plain_log.snapshot_ids():
+        assert log.read_snapshot(r)["metrics"] == \
+            plain_log.read_snapshot(r)["metrics"], r
+        for name in ROUND_TABLES:
+            assert _table_fingerprint(spark, log, r, name) == \
+                _table_fingerprint(spark, plain_log, r, name), (r, name)
+
+
+# -- narrow URL state: derived columns are re-derived on every read ---------
+
+
+def _stored_columns(path: str) -> set[tuple[str, ...]]:
+    """The column names of every Parquet file under `path`, from footers."""
+    import pyarrow.parquet as pq
+
+    return {
+        tuple(pq.read_schema(os.path.join(path, f)).names)
+        for f in os.listdir(path)
+        if f.endswith(".parquet")
+    }
+
+
+def test_narrow_url_state_round_trips(spark, corpus_dfs, tmp_path):
+    """The frontier files store only (url_norm, depth) and the seen delta
+    and seen base files only url_norm. Loading them re-derives the other
+    columns exactly: the loaded frontier equals, row for row,
+    _min_depth_frontier's in-memory columns and the Column-API definitions
+    of host, url_hash, salt and priority. Salt is checked here because no
+    end-to-end check sees a wrong salt: the politeness window's second
+    phase gives the exact per-host top-k whatever the salt is. load_seen's
+    url_hash equals xxhash64(url_norm) computed apart from the read."""
+    from pyspark.sql import functions as F
+
+    from opps_feedcrawler_spark.functions.urlnorm import NSALTS, host_col
+    from opps_feedcrawler_spark.operators.politeness import priority_col
+    from opps_feedcrawler_spark.plans.crawl import (
+        FRONTIER_COLS,
+        _min_depth_frontier,
+    )
+
+    log = run_crawl(
+        spark, *corpus_dfs, str(tmp_path / "wh"), rounds=2, compact_seen_every=2
+    )
+    base = log.latest_seen_base(1)
+    assert base["upto"] == 1
+    for r in (0, 1):
+        tables = log.read_snapshot(r)["tables"]
+        assert _stored_columns(tables["frontier"]["path"]) == {("url_norm", "depth")}
+        assert _stored_columns(tables["seen_delta"]["path"]) == {("url_norm",)}
+    assert _stored_columns(base["path"]) == {("url_norm",)}
+
+    for r in (0, 1):
+        loaded = log.load_table(spark, r, "frontier")
+        assert loaded.columns == FRONTIER_COLS
+        rows = sorted(tuple(x) for x in loaded.collect())
+        assert rows, r
+        # the stored pairs, rebuilt as a fresh DataFrame apart from the read
+        pairs = spark.createDataFrame(
+            [(x[0], x[4]) for x in rows], "url_norm string, depth int"
+        )
+        in_memory = _min_depth_frontier(pairs)
+        assert sorted(tuple(x) for x in in_memory.collect()) == rows, r
+        by_columns = pairs.select(
+            "url_norm",
+            host_col(F.col("url_norm")).alias("host"),
+            F.xxhash64("url_norm").alias("url_hash"),
+            F.pmod(F.xxhash64("url_norm"), F.lit(NSALTS)).cast("int").alias("salt"),
+            "depth",
+            priority_col().alias("priority"),
+        )
+        assert sorted(tuple(x) for x in by_columns.collect()) == rows, r
+
+    seen = load_seen(spark, log, 1)
+    assert seen.columns == ["url_norm", "url_hash"]
+    got = sorted((x.url_norm, x.url_hash) for x in seen.collect())
+    assert len(got) == log.read_snapshot(1)["metrics"]["seen_rows"]
+    urls = spark.createDataFrame([(u,) for u, _ in got], "url_norm string")
+    want = sorted(
+        (x.url_norm, x.url_hash)
+        for x in urls.select("url_norm", F.xxhash64("url_norm").alias("url_hash"))
+        .collect()
+    )
+    assert got == want
+
+
+def test_whole_stored_state_still_loads(
+    spark, corpus_dfs, plain_log, tmp_path, monkeypatch
+):
+    """A warehouse written before URL state was stored narrow has every
+    column stored and no "read_columns" key. It loads the same rows as a
+    narrow one, and a resume from it (which writes narrow deltas after
+    whole ones, then compacts the mix into one base) gives the same tables
+    and metrics as an uninterrupted run."""
+    from opps_feedcrawler_spark.plans.crawl import FRONTIER_COLS
+
+    wh = str(tmp_path / "whole")
+    monkeypatch.setattr(SnapshotLog, "NARROW_TABLES", ())
+    run_crawl(spark, *corpus_dfs, wh, rounds=2)
+    monkeypatch.undo()
+
+    log = SnapshotLog(wh)
+    for r in (0, 1):
+        tables = log.read_snapshot(r)["tables"]
+        assert not any("read_columns" in t for t in tables.values()), r
+        assert _stored_columns(tables["frontier"]["path"]) == {tuple(FRONTIER_COLS)}
+        assert _stored_columns(tables["seen_delta"]["path"]) == {
+            ("url_norm", "url_hash")
+        }
+        for name in ROUND_TABLES:
+            assert _table_fingerprint(spark, log, r, name) == \
+                _table_fingerprint(spark, plain_log, r, name), (r, name)
+        assert _seen_rows(load_seen(spark, log, r)) == \
+            _seen_rows(load_seen(spark, plain_log, r)), r
+
+    log = run_crawl(
+        spark, *corpus_dfs, wh, rounds=ROUNDS, compact_seen_every=ROUNDS
+    )
+    last = ROUNDS - 1
+    assert "read_columns" in log.read_snapshot(last)["tables"]["seen_delta"]
+    assert log.latest_seen_base(last)["upto"] == last
+    assert _stored_columns(log.latest_seen_base(last)["path"]) == {("url_norm",)}
+    assert log.snapshot_ids() == plain_log.snapshot_ids()
+    for r in plain_log.snapshot_ids():
+        assert log.read_snapshot(r)["metrics"] == \
+            plain_log.read_snapshot(r)["metrics"], r
+        for name in ROUND_TABLES:
+            assert _table_fingerprint(spark, log, r, name) == \
+                _table_fingerprint(spark, plain_log, r, name), (r, name)
+    assert _seen_rows(load_seen(spark, log, last)) == \
+        _seen_rows(load_seen(spark, plain_log, last))
+
+
+def test_crash_at_commit_point(spark, corpus_dfs, plain_log, tmp_path, monkeypatch):
+    """A crash in SnapshotLog.commit of round 1, after all seven tables are
+    written and at the rename that publishes the snapshot, leaves round 1
+    invisible; a resume reproduces the uninterrupted run's tables and
+    metrics."""
+    wh = str(tmp_path / "commit")
+    real_rename = os.rename
+
+    def rename(src, dst):
+        if os.path.basename(dst) == "snap-00000001.json":
+            raise RuntimeError("crash at the commit point")
+        real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", rename)
+    with pytest.raises(RuntimeError, match="commit point"):
+        run_crawl(spark, *corpus_dfs, wh, rounds=ROUNDS)
+    monkeypatch.undo()
+
+    log = SnapshotLog(wh)
+    assert log.snapshot_ids() == [0]  # round 1 never happened
+    for name in ROUND_TABLES:  # though all its data was written
+        assert _stored_columns(log.table_path(1, name)), name
+
+    log = run_crawl(spark, *corpus_dfs, wh, rounds=ROUNDS)
     assert log.snapshot_ids() == plain_log.snapshot_ids()
     for r in plain_log.snapshot_ids():
         assert log.read_snapshot(r)["metrics"] == \
